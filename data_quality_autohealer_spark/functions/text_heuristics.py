@@ -24,6 +24,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .rule_ops import SPARK
+
 # Gopher-style required stopwords ("at least 2 distinct of these 8").
 STOPWORDS_REQUIRED = ["the", "be", "to", "of", "and", "that", "have", "with", "a"]
 
@@ -183,54 +185,64 @@ def with_signal_columns(df, text_col: str = "text",
     return df.drop("_words", "_wc")
 
 
-def spark_rule_conditions(th: GopherThresholds = DEFAULT_THRESHOLDS) -> dict[str, Column]:
-    """Reason-code -> fired-condition over the signal columns produced by
-    :func:`spark_signal_exprs`. Pure ``F.when`` material (reference M4/M5,
-    ensemble_classifier.py:91-139)."""
-    c = F.col
+def gopher_rules(o, th: GopherThresholds = DEFAULT_THRESHOLDS) -> dict:
+    """Reason code -> ``(fired, confidence)`` over the signal columns of
+    :func:`spark_signal_exprs`, written once over a ``rule_ops`` namespace
+    (Spark Columns or numpy). Confidence ∈ [0,1] is the normalized distance
+    past the threshold, clamped — the reference's rule-confidence shape
+    ``min(rate/τ, 1)`` (missing_data_rule_based.py:38-53) — and 0.0 ⇔ the
+    rule did not fire."""
+    c = o.col
+    wc, mwl, sym = c("word_count"), c("mean_word_len"), c("symbol_ratio")
+    stops, alpha = c("distinct_stopwords"), c("alpha_word_frac")
+    d2, d3, d4 = (c(f"dup_{n}gram_frac") for n in (2, 3, 4))
+    t2, t3, t4 = (th.max_dup_2gram_frac, th.max_dup_3gram_frac,
+                  th.max_dup_4gram_frac)
+
+    def band(x, lo: float, hi: float):
+        below, above = x < lo, x > hi
+        return below | above, o.past((below, (lo - x) / lo),
+                                     (above, (x - hi) / hi))
+
+    def one_sided(fired, dist):
+        return fired, o.past((fired, dist))
+
+    t_sym, t_alpha = th.max_symbol_to_word_ratio, th.min_alpha_word_frac
+    t_stop = float(th.min_distinct_stopwords)
     return {
-        "gopher.word_count": (c("word_count") < th.min_word_count)
-        | (c("word_count") > th.max_word_count),
-        "gopher.mean_word_length": (c("mean_word_len") < th.min_mean_word_length)
-        | (c("mean_word_len") > th.max_mean_word_length),
-        "gopher.symbol_ratio": c("symbol_ratio") > th.max_symbol_to_word_ratio,
+        "gopher.word_count": band(wc, float(th.min_word_count),
+                                  float(th.max_word_count)),
+        "gopher.mean_word_length": band(mwl, th.min_mean_word_length,
+                                        th.max_mean_word_length),
+        "gopher.symbol_ratio": one_sided(sym > t_sym, (sym - t_sym) / t_sym),
         # stopword rule is English-specific (Gopher's required-word list is
         # English); apply only when the claimed language is English.
-        "gopher.stopwords": (c("lang") == F.lit("en"))
-        & (c("distinct_stopwords") < th.min_distinct_stopwords),
-        "gopher.alpha_ratio": c("alpha_word_frac") < th.min_alpha_word_frac,
-        "gopher.dup_ngram": (c("dup_2gram_frac") > th.max_dup_2gram_frac)
-        | (c("dup_3gram_frac") > th.max_dup_3gram_frac)
-        | (c("dup_4gram_frac") > th.max_dup_4gram_frac),
+        "gopher.stopwords": one_sided((c("lang") == "en") & (stops < t_stop),
+                                      (t_stop - stops) / t_stop),
+        "gopher.alpha_ratio": one_sided(alpha < t_alpha,
+                                        (t_alpha - alpha) / t_alpha),
+        "gopher.dup_ngram": one_sided(
+            (d2 > t2) | (d3 > t3) | (d4 > t4),
+            o.greatest((d2 - t2) / t2, (d3 - t3) / t3, (d4 - t4) / t4)),
     }
+
+
+def spark_rule_conditions(th: GopherThresholds = DEFAULT_THRESHOLDS) -> dict[str, Column]:
+    """Reason-code -> fired-condition Column, from :func:`gopher_rules`."""
+    return {k: fired for k, (fired, _) in gopher_rules(SPARK, th).items()}
 
 
 def spark_confidence_exprs(th: GopherThresholds = DEFAULT_THRESHOLDS
                            ) -> dict[str, Column]:
-    """Per-rule confidence ∈ [0,1]: normalized distance past the threshold,
-    clamped — the reference's rule-confidence shape ``min(rate/τ, 1)``
-    (missing_data_rule_based.py:38-53) applied to the Gopher rule family.
-    0.0 ⇔ the rule did not fire. Native exprs; DuckDB twin below is generated
-    from the same threshold dataclass so they cannot drift."""
-    out = {}
-    for code, sql in _confidence_sql_fragments(th, "spark").items():
-        out[code] = F.expr(sql)
-    return out
+    """Reason-code -> confidence Column, from :func:`gopher_rules`; the
+    DuckDB twin :func:`duckdb_confidence_sql` is written independently."""
+    return {k: conf for k, (_, conf) in gopher_rules(SPARK, th).items()}
 
 
 def duckdb_confidence_sql(th: GopherThresholds = DEFAULT_THRESHOLDS
                           ) -> dict[str, str]:
     """DuckDB twins of :func:`spark_confidence_exprs`, over the aliased
     signal columns produced by ``duckdb_signal_sql``."""
-    return _confidence_sql_fragments(th, "duck")
-
-
-def _confidence_sql_fragments(th: GopherThresholds, engine: str
-                              ) -> dict[str, str]:
-    # identical SQL text works in both engines (case/least/greatest/round and
-    # plain arithmetic over the signal columns); keep fragments engine-split
-    # anyway in case one ever needs to diverge
-    del engine
     lo_wc, hi_wc = float(th.min_word_count), float(th.max_word_count)
     lo_mw, hi_mw = th.min_mean_word_length, th.max_mean_word_length
     t_sym = th.max_symbol_to_word_ratio
@@ -240,9 +252,9 @@ def _confidence_sql_fragments(th: GopherThresholds, engine: str
                   th.max_dup_4gram_frac)
 
     def _d(x: float) -> str:
-        # plain 50.0 parses as DECIMAL in Spark (decimal arithmetic →
-        # Decimal output, which the driver's value hash formats differently
-        # from DuckDB's float64); force double in both engines
+        # plain 50.0 parses as DECIMAL (decimal arithmetic → Decimal
+        # output, which a value hash formats differently from the Spark
+        # twin's double); force double
         return f"cast({x} as double)"
 
     def band(col: str, lo: float, hi: float) -> str:

@@ -31,11 +31,11 @@ from ..functions import langid as _langid
 from ..functions import perplexity as _pplx
 from ..functions.scrub import scrub_series
 
-import math
 import re as _re
 
 from pyspark.sql.types import IntegerType
 
+from ..functions.rule_ops import round6
 from ..functions.text_heuristics import _SYMBOL_CLASS, _WS_CHARS
 
 SCORE_SCHEMA = StructType([
@@ -57,12 +57,6 @@ SCORE_SCHEMA = StructType([
     StructField("n_ip", LongType()),
     StructField("n_tox", LongType()),
 ])
-
-
-def _round6(x: float) -> float:
-    """HALF_UP rounding to 6dp, matching Spark's round() (Python's built-in
-    round is HALF_EVEN and would diverge on exact ties like 1/128)."""
-    return math.floor(x * 1e6 + 0.5) / 1e6
 
 
 _ALPHA_RE = _re.compile(r"[a-zA-Z]")
@@ -106,8 +100,8 @@ def heuristic_signal_batch(text: pd.Series, stopwords: tuple[str, ...]
         wc = len(w)
         cols["word_count"][i] = wc
         nospace = len(t) - sum(1 for ch in t if ch in ascii_ws)
-        cols["mean_word_len"][i] = _round6(nospace / wc)
-        cols["symbol_ratio"][i] = _round6(len(sym_findall(t)) / wc)
+        cols["mean_word_len"][i] = round6(nospace / wc)
+        cols["symbol_ratio"][i] = round6(len(sym_findall(t)) / wc)
         cols["distinct_stopwords"][i] = len(stops.intersection(w))
         n_alpha = 0
         for x in w:
@@ -116,13 +110,13 @@ def heuristic_signal_batch(text: pd.Series, stopwords: tuple[str, ...]
                 n_alpha += 1
             elif alpha_search(x):
                 n_alpha += 1
-        cols["alpha_word_frac"][i] = _round6(n_alpha / wc)
+        cols["alpha_word_frac"][i] = round6(n_alpha / wc)
         for n in (2, 3, 4):
             total = wc - n + 1
             if total < 1:
                 continue
             distinct = len(set(zip(*(w[k:] for k in range(n)))))
-            cols[f"dup_{n}gram_frac"][i] = _round6(1.0 - distinct / total)
+            cols[f"dup_{n}gram_frac"][i] = round6(1.0 - distinct / total)
     out = pd.DataFrame(cols, index=text.index)
     out["word_count"] = out["word_count"].astype("int32")
     out["distinct_stopwords"] = out["distinct_stopwords"].astype("int32")

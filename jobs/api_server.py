@@ -1,16 +1,20 @@
 """Synchronous quality-check HTTP API — the reference's FastAPI service
 (/root/reference/src/api/quality_service.py) rebuilt on Flask (the framework
-available here) over the identical Spark scorer.
+available here) over the identical scorer and rules.
 
 Endpoints (reference parity):
   GET  /            → service banner           (quality_service.py root)
   GET  /health      → model/scorer liveness    (quality_service.py /health)
-  POST /quality/check → score documents NOW; reference-shaped response
+  POST /quality/check → score documents NOW, in the server process (no
+        Spark job); reference-shaped response
         accepts JSON  {"documents": [{"text": ..., "lang": "en"}, ...]}
         or multipart CSV upload (file=<csv with a text[,lang] column>),
-        mirroring the reference's CSV-upload contract.
+        mirroring the reference's CSV-upload contract. Bodies over
+        MAX_CONTENT_LENGTH get 413.
+  GET  /alerts, /alerts/stream, /report → read a warehouse; the only
+        endpoints that need a SparkSession, started on first use.
 
-Run:  python jobs/api_server.py --port 8099 [--master local[8]]
+Run:  [SPARK_GRAFT_MASTER=local[8]] python jobs/api_server.py --port 8099
 """
 
 from __future__ import annotations
@@ -19,16 +23,38 @@ import argparse
 import io
 import os
 import sys
+import threading
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# request body cap: a check is scored in the server process, so an upload's
+# size bounds the memory and time of one request
+MAX_CONTENT_LENGTH = 8 * 1024 * 1024
 
-def create_app(spark):
+
+def create_app(spark=None):
+    """The Flask app. ``spark`` is a SparkSession or None; with None, the
+    warehouse endpoints start one with ``session.get_spark`` on first use."""
     from flask import Flask, jsonify, request
 
     from jobs.check_one import check_documents
 
     app = Flask("dqa-quality-api")
+    app.config["MAX_CONTENT_LENGTH"] = MAX_CONTENT_LENGTH
+    session_lock = threading.Lock()
+
+    def get_session():
+        nonlocal spark
+        with session_lock:
+            if spark is None:
+                from data_quality_autohealer_spark import session
+                spark = session.get_spark(app_name="dqa-api")
+            return spark
+
+    @app.errorhandler(413)
+    def too_large(e):
+        return jsonify({"error": "request body over "
+                                 f"{MAX_CONTENT_LENGTH} bytes"}), 413
 
     @app.get("/")
     def root():
@@ -73,7 +99,7 @@ def create_app(spark):
         wh_path = request.args.get("warehouse")
         if not wh_path:
             return jsonify({"error": "warehouse query param required"}), 400
-        wh = Warehouse(spark, wh_path)
+        wh = Warehouse(get_session(), wh_path)
         try:
             rows = _read_alert_rows(wh)
         except Exception as e:
@@ -101,7 +127,7 @@ def create_app(spark):
             return jsonify({"error": "warehouse query param required"}), 400
         poll_sec = float(request.args.get("poll_sec", 1.0))
         max_ticks = int(request.args.get("max_ticks", 0))  # 0 = forever
-        wh = Warehouse(spark, wh_path)
+        wh = Warehouse(get_session(), wh_path)
 
         def gen():
             # per-connection dedup: keyed on the FULL alert payload (not just
@@ -213,7 +239,7 @@ def create_app(spark):
         wh_path = request.args.get("warehouse")
         if not wh_path:
             return jsonify({"error": "warehouse query param required"}), 400
-        m = Warehouse(spark, wh_path).read_metrics()
+        m = Warehouse(get_session(), wh_path).read_metrics()
         run_id = request.args.get("run_id")
         if run_id:
             m = m.where(SF.col("run_id") == run_id)
@@ -235,24 +261,36 @@ def create_app(spark):
             pipeline_id = (f.filename or "upload.csv").rsplit(".", 1)[0]
             reader = csv.DictReader(
                 io.TextIOWrapper(f.stream, encoding="utf-8"))
-            for row in reader:
-                if row.get("text") is None:
+            try:
+                if "text" not in (reader.fieldnames or ()):
                     return jsonify({"error": "CSV needs a 'text' column"}), 400
-                texts.append(row["text"])
-                langs.append(row.get("lang") or "en")
+                for row in reader:
+                    if row["text"] is None:
+                        return jsonify({"error": "each CSV row needs a "
+                                                 "text value"}), 400
+                    texts.append(row["text"])
+                    langs.append(row.get("lang") or "en")
+            except (UnicodeDecodeError, csv.Error) as e:
+                return jsonify({"error": f"unreadable CSV: {e}"[:500]}), 400
+            if not texts:
+                return jsonify({"error": "CSV has no documents"}), 400
         else:
-            body = request.get_json(silent=True) or {}
-            docs = body.get("documents")
+            body = request.get_json(silent=True)
+            docs = body.get("documents") if isinstance(body, dict) else None
             if not isinstance(docs, list) or not docs:
                 return jsonify({"error": "provide documents: [{text, lang?}] "
                                          "or a multipart CSV 'file'"}), 400
             for d in docs:
-                if not isinstance(d, dict) or "text" not in d:
+                if not isinstance(d, dict) or not isinstance(d.get("text"),
+                                                             str):
                     return jsonify({"error": "each document needs text"}), 400
+                lang = d.get("lang") or "en"
+                if not isinstance(lang, str):
+                    return jsonify({"error": "lang must be a string"}), 400
                 texts.append(d["text"])
-                langs.append(d.get("lang") or "en")
+                langs.append(lang)
             pipeline_id = body.get("pipeline_id", pipeline_id)
-        resp = check_documents(spark, texts, langs, pipeline_id)
+        resp = check_documents(texts, langs, pipeline_id)
         return jsonify(resp)
 
     return app
@@ -262,12 +300,8 @@ def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--port", type=int, default=8099)
     p.add_argument("--host", default="127.0.0.1")
-    p.add_argument("--master", default=None)
     args = p.parse_args()
-
-    from data_quality_autohealer_spark.session import get_spark
-    spark = get_spark(app_name="dqa-api", master=args.master)
-    create_app(spark).run(host=args.host, port=args.port)
+    create_app(None).run(host=args.host, port=args.port)
 
 
 if __name__ == "__main__":

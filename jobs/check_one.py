@@ -1,9 +1,10 @@
 """Synchronous ad-hoc quality check — the batch twin of the reference's
 ``POST /quality/check`` endpoint (/root/reference/src/api/quality_service.py:57-123):
-score a small uploaded document set NOW through the IDENTICAL scorer the
-pipeline uses, and return the reference-shaped response dict
-(detected_issues / scores / severity / recommendations, severity cuts
-0.9/0.8/0.6, ensemble selection threshold 0.7, ['clean'] fallback).
+score a small uploaded document set NOW, in this process and without Spark,
+through the IDENTICAL scorer and rules the pipeline uses, and return the
+reference-shaped response dict (detected_issues / scores / severity /
+recommendations, severity cuts 0.9/0.8/0.6, ensemble selection threshold
+0.7, ['clean'] fallback).
 
 CLI:  python jobs/check_one.py --file docs.txt          # one document per line
       python jobs/check_one.py --text "some document"   # repeatable
@@ -39,33 +40,40 @@ RECOMMENDATION_FOR_REASON = {
 }
 
 
-def check_documents(spark, texts: list[str],
-                    langs: list[str] | None = None,
+def check_documents(texts: list[str], langs: list[str] | None = None,
                     pipeline_id: str = "adhoc") -> dict:
-    """Score ad-hoc documents through the pipeline scorer; return the
-    reference-shaped response plus per-document decisions."""
-    from data_quality_autohealer_spark.plans.pipeline import score_pages
+    """Score ad-hoc documents in this process and return the
+    reference-shaped response plus per-document decisions.
 
-    langs = langs or ["en"] * len(texts)
-    df = spark.createDataFrame(
-        [(f"adhoc://doc/{i}", t, lg) for i, (t, lg) in
-         enumerate(zip(texts, langs))],
-        "url string, text string, lang string")
-    rows = (score_pages(df)
-            .select("url", "keep", "reasons", "confidences", "scrubbed_text")
-            .collect())
-    # numeric index sort — lexicographic url order would put doc/10 before
-    # doc/2 and break the caller's input-order contract past 9 documents
-    rows.sort(key=lambda r: int(r["url"].rsplit("/", 1)[1]))
+    The pipeline's ``score_batch`` runs on chunks of one Arrow batch
+    (``session.ARROW_BATCH_ROWS`` rows, as the Spark UDF sees them), then
+    ``decision.decide_frame`` applies the rule functions that ``with_decision``
+    renders for Spark — so the reply matches ``score_pages`` with no Spark
+    job. The perplexity model is this process's: a drift-retrained artifact
+    reaches the API only through its own ``DQA_PPLX_MODEL`` environment
+    variable, not through ``spark.executorEnv``, which configures the batch
+    pipeline's Python workers.
+    """
+    import pandas as pd
+
+    from data_quality_autohealer_spark.operators.decision import decide_frame
+    from data_quality_autohealer_spark.operators.scoring import score_batch
+    from data_quality_autohealer_spark.session import ARROW_BATCH_ROWS
+
+    text = pd.Series(texts, dtype=object)
+    scored = pd.concat([score_batch(text.iloc[i:i + ARROW_BATCH_ROWS])
+                        for i in range(0, len(text), ARROW_BATCH_ROWS)])
+    scored["lang"] = langs or ["en"] * len(texts)
+    decided = decide_frame(scored)
 
     scores: dict[str, float] = {}
-    for r in rows:
-        for rule, conf in (r["confidences"] or {}).items():
-            scores[rule] = max(scores.get(rule, 0.0), float(conf))
+    for confidences in decided["confidences"]:
+        for rule, conf in confidences.items():
+            scores[rule] = max(scores.get(rule, 0.0), conf)
     detected = sorted(r for r, s in scores.items()
                       if s >= ENSEMBLE_THRESHOLD)
     # any fired rule below the ensemble cut still surfaces via reasons
-    fired = sorted({c for r in rows for c in (r["reasons"] or [])})
+    fired = sorted({c for rs in decided["reasons"] for c in rs})
     if not detected:
         detected = fired or ["clean"]
     max_score = max(scores.values()) if scores else 0.0
@@ -83,10 +91,12 @@ def check_documents(spark, texts: list[str],
         "severity": severity,
         "recommendations": recommendations,
         "documents": [
-            {"url": r["url"], "keep": bool(r["keep"]),
-             "reasons": list(r["reasons"] or []),
-             "scrubbed_text": r["scrubbed_text"]}
-            for r in rows
+            {"url": f"adhoc://doc/{i}", "keep": bool(keep),
+             "reasons": reasons, "confidences": confidences,
+             "scrubbed_text": scrubbed}
+            for i, (keep, reasons, confidences, scrubbed) in enumerate(zip(
+                decided["keep"], decided["reasons"], decided["confidences"],
+                scored["scrubbed_text"]))
         ],
     }
 
@@ -97,7 +107,6 @@ def main() -> None:
     p.add_argument("--file", help="one document per line")
     p.add_argument("--lang", default="en")
     p.add_argument("--pipeline-id", default="adhoc")
-    p.add_argument("--master", default=None)
     args = p.parse_args()
 
     texts = list(args.text)
@@ -107,10 +116,7 @@ def main() -> None:
     if not texts:
         p.error("provide --text or --file")
 
-    from data_quality_autohealer_spark.session import get_spark
-    spark = get_spark(app_name="dqa-check-one", master=args.master)
-    resp = check_documents(spark, texts, [args.lang] * len(texts),
-                           args.pipeline_id)
+    resp = check_documents(texts, [args.lang] * len(texts), args.pipeline_id)
     json.dump(resp, sys.stdout, indent=2)
     print()
 

@@ -15,6 +15,10 @@ import re
 import numpy as np
 import pandas as pd
 
+from data_quality_autohealer_spark.functions.rule_ops import (
+    round6,
+    round6_array,
+)
 from data_quality_autohealer_spark.functions.scrub import scrub_series
 from data_quality_autohealer_spark.functions.text_heuristics import (
     DEFAULT_THRESHOLDS,
@@ -35,17 +39,11 @@ _SYMBOL_RE = re.compile(_SYMBOL_CLASS)
 _WS_RE = re.compile("[" + _WS_CHARS + "]+")
 
 
-def _round6(x: float) -> float:
-    """HALF_UP to 6dp (matches Spark round(); Python round is HALF_EVEN)."""
-    import math
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
-
 def _dup_frac(words: list[str], n: int) -> float:
     if len(words) < n:
         return 0.0
     grams = [" ".join(words[i: i + n]) for i in range(len(words) - n + 1)]
-    return _round6(1.0 - len(set(grams)) / len(grams))
+    return round6(1.0 - len(set(grams)) / len(grams))
 
 
 def heuristic_signals(text: pd.Series,
@@ -58,14 +56,11 @@ def heuristic_signals(text: pd.Series,
     wc = np.array([len(w) for w in word_lists], dtype=np.int64)
     out["word_count"] = wc.astype(np.int32)
 
-    def round6(arr):  # vectorized HALF_UP (matches Spark round())
-        return np.floor(arr * 1e6 + 0.5) / 1e6
-
     nospace = np.array([len(_WS_RE.sub("", t)) for t in s], dtype=np.float64)
-    out["mean_word_len"] = np.where(wc == 0, 0.0, round6(
+    out["mean_word_len"] = np.where(wc == 0, 0.0, round6_array(
         nospace / np.maximum(wc, 1)))
     nsym = np.array([len(_SYMBOL_RE.findall(t)) for t in s], dtype=np.float64)
-    out["symbol_ratio"] = np.where(wc == 0, 0.0, round6(
+    out["symbol_ratio"] = np.where(wc == 0, 0.0, round6_array(
         nsym / np.maximum(wc, 1)))
     stops = set(th.stopwords)
     out["distinct_stopwords"] = np.array(
@@ -74,7 +69,7 @@ def heuristic_signals(text: pd.Series,
     nalpha = np.array(
         [sum(1 for x in w if _ALPHA_RE.search(x)) for w in word_lists],
         dtype=np.float64)
-    out["alpha_word_frac"] = np.where(wc == 0, 0.0, round6(
+    out["alpha_word_frac"] = np.where(wc == 0, 0.0, round6_array(
         nalpha / np.maximum(wc, 1)))
     for n in (2, 3, 4):
         out[f"dup_{n}gram_frac"] = np.array(
@@ -115,6 +110,7 @@ def reference_labels(
         fired["langid"] = (
             (scores["lang_pred"] != out["lang"])
             & (scores["lang_pred"] != "und")
+            & (out["lang"] != "und")
             & (scores["lang_conf"] >= mt.min_lang_conf)
         )
         fired["perplexity"] = scores["log_pplx"] > mt.max_log_pplx

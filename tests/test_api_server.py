@@ -75,6 +75,9 @@ def test_check_error_paths(client):
     assert client.post("/quality/check", json={}).status_code == 400
     assert client.post("/quality/check",
                        json={"documents": [{"lang": "en"}]}).status_code == 400
+    for body in ([{"text": "x"}], {"documents": [{"text": 5}]},
+                 {"documents": [{"text": "x", "lang": ["en"]}]}):
+        assert client.post("/quality/check", json=body).status_code == 400
     bad_csv = b"notext\nfoo\n"
     r = client.post("/quality/check", data={
         "file": (io.BytesIO(bad_csv), "x.csv"),
@@ -157,3 +160,50 @@ def test_dashboard_escapes_reflected_param(client):
     body = r.get_data(as_text=True)
     assert "</script><script>alert(1)" not in body
     assert "\\u003c/script" in body  # escaped form present instead
+
+
+def test_check_rejects_oversized_body(client):
+    from jobs.api_server import MAX_CONTENT_LENGTH
+    big = "x" * MAX_CONTENT_LENGTH
+    r = client.post("/quality/check", json={"documents": [{"text": big}]})
+    assert r.status_code == 413 and "error" in r.get_json()
+    r = client.post("/quality/check", data={
+        "file": (io.BytesIO(b"text\n" + big.encode()), "big.csv"),
+    }, content_type="multipart/form-data")
+    assert r.status_code == 413 and "error" in r.get_json()
+
+
+def test_check_rejects_csv_without_documents(client):
+    for csv_bytes in (b"text,lang\n", b"", b"notext\n", b"\xff\xfe,\n"):
+        r = client.post("/quality/check", data={
+            "file": (io.BytesIO(csv_bytes), "empty.csv"),
+        }, content_type="multipart/form-data")
+        assert r.status_code == 400, csv_bytes
+        assert "error" in r.get_json()
+
+
+def test_check_needs_no_spark_session(monkeypatch, spark):
+    """create_app(None) answers /health and /quality/check without ever
+    starting Spark; the warehouse endpoints start one on first use."""
+    from data_quality_autohealer_spark import session
+    from jobs.api_server import create_app
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    c = create_app(None).test_client()
+    assert c.get("/health").status_code == 200
+    r = c.post("/quality/check", json={"documents": [
+        {"text": "### {} => ~~ @@@", "lang": "und"}]})
+    assert r.status_code == 200 and not r.get_json()["documents"][0]["keep"]
+
+    calls = []
+    monkeypatch.setattr(session, "get_spark",
+                        lambda *a, **k: calls.append(1) or spark)
+    c = create_app(None).test_client()
+    assert c.get("/health").status_code == 200 and not calls
+    for _ in range(2):
+        r = c.get("/alerts", query_string={"warehouse": "/nonexistent/wh"})
+        assert r.status_code == 200
+    assert calls == [1]
