@@ -17,7 +17,7 @@ Common-Crawl-style web pages:
   src/remediation/airflow_dags/outlier_remediation.py:89-107).
 - Per-document keep/drop decision + reason codes (reference analogue:
   multi-label ensemble, src/detectors/ensemble_classifier.py:91-139).
-- Per-partition lineage + rule-hit metrics table with anti-join resume
+- Per-partition lineage + rule-hit metrics table with partition-filter resume
   (reference analogue: Kafka metrics topic + schema registry,
   src/streaming/kafka_producer.py:36-109).
 - Single-pass fused dataset profiler (reference analogue:

@@ -66,6 +66,10 @@ class _Ops:
             [(cond, self.least(dist, 1.0)) for cond, dist in branches], 0.0))
 
 
+def _cols(xs):
+    return [x if isinstance(x, Column) else F.lit(x) for x in xs]
+
+
 class SparkOps(_Ops):
     col = staticmethod(F.col)
 
@@ -79,9 +83,11 @@ class SparkOps(_Ops):
 
     @staticmethod
     def least(*xs):
-        return F.least(*(x if isinstance(x, Column) else F.lit(x) for x in xs))
+        return F.least(*_cols(xs))
 
-    greatest = staticmethod(F.greatest)
+    @staticmethod
+    def greatest(*xs):
+        return F.greatest(*_cols(xs))
 
     @staticmethod
     def round6(x):

@@ -19,7 +19,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text_heuristics as th
@@ -71,42 +71,6 @@ def model_rules(o, claimed_lang_col: str = "lang",
     }
 
 
-def model_rule_conditions(
-    claimed_lang_col: str = "lang",
-    mt: ModelThresholds = DEFAULT_MODEL_THRESHOLDS,
-) -> dict[str, Column]:
-    """Reason-code -> fired-condition Column, from :func:`model_rules`."""
-    return {k: fired for k, (fired, _) in
-            model_rules(SPARK, claimed_lang_col, mt).items()}
-
-
-def model_confidence_exprs(
-    claimed_lang_col: str = "lang",
-    mt: ModelThresholds = DEFAULT_MODEL_THRESHOLDS,
-) -> dict[str, Column]:
-    """Reason-code -> confidence Column, from :func:`model_rules`."""
-    return {k: conf for k, (_, conf) in
-            model_rules(SPARK, claimed_lang_col, mt).items()}
-
-
-def with_confidences(
-    df: DataFrame,
-    gopher: th.GopherThresholds = th.DEFAULT_THRESHOLDS,
-    model: ModelThresholds = DEFAULT_MODEL_THRESHOLDS,
-    claimed_lang_col: str = "lang",
-    include_model_rules: bool = True,
-) -> DataFrame:
-    """Attach ``confidences`` MAP<rule, DOUBLE>: one entry per rule, 0.0 when
-    the rule did not fire (answers "how confident was the drop?")."""
-    confs = dict(th.spark_confidence_exprs(gopher))
-    if include_model_rules:
-        confs.update(model_confidence_exprs(claimed_lang_col, model))
-    m = F.map_from_arrays(
-        F.array(*[F.lit(k) for k in confs]),
-        F.array(*confs.values()))
-    return df.withColumn("confidences", m)
-
-
 def with_decision(
     df: DataFrame,
     gopher: th.GopherThresholds = th.DEFAULT_THRESHOLDS,
@@ -116,21 +80,25 @@ def with_decision(
     include_confidences: bool = True,
 ) -> DataFrame:
     """Attach ``reasons`` (sorted array of codes), ``keep`` (bool) and
-    ``confidences`` (map rule→score).
+    ``confidences`` (map rule→score, 0.0 when the rule did not fire).
 
     Expects heuristic signal columns (text_heuristics.spark_signal_exprs) and,
-    when ``include_model_rules``, scoring-UDF columns to be present.
+    when ``include_model_rules``, scoring-UDF columns to be present. Each
+    rule is rendered once; reasons and confidences share its ``(fired,
+    confidence)`` pair.
     """
-    conditions = dict(th.spark_rule_conditions(gopher))
+    rules = th.gopher_rules(SPARK, gopher)
     if include_model_rules:
-        conditions.update(model_rule_conditions(claimed_lang_col, model))
-    reasons = th.spark_reasons_expr(conditions)
+        rules.update(model_rules(SPARK, claimed_lang_col, model))
+    reasons = th.spark_reasons_expr(
+        {code: fired for code, (fired, _) in rules.items()})
     df = df.withColumn("reasons", reasons).withColumn(
         "keep", F.size("reasons") == 0
     )
     if include_confidences:
-        df = with_confidences(df, gopher, model, claimed_lang_col,
-                              include_model_rules)
+        df = df.withColumn("confidences", F.map_from_arrays(
+            F.array(*[F.lit(code) for code in rules]),
+            F.array(*[conf for _, conf in rules.values()])))
     return df
 
 

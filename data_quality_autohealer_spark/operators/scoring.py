@@ -208,7 +208,7 @@ score_and_scrub_udf = _score_and_scrub.asNondeterministic()
 
 def with_model_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach flattened model-score columns via a single UDF crossing."""
-    df = df.withColumn("_score", score_and_scrub_udf(F.col(text_col)))
-    for name in SCORE_FIELDS:
-        df = df.withColumn(name, F.col(f"_score.{name}"))
-    return df.drop("_score")
+    rest = [c for c in df.columns if c not in SCORE_FIELDS]
+    return (df.select(*rest, score_and_scrub_udf(F.col(text_col))
+                      .alias("_score"))
+            .select(*rest, "_score.*"))

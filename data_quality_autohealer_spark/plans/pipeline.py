@@ -8,17 +8,20 @@ the only shuffle is the per-bucket metrics groupBy. Column pruning matters:
 the scoring path never reads ``html`` (BINARY) — only url/text/lang/warc_ts
 reach the scan.
 
-Resume: before scoring, anti-join against buckets already present in the
-metrics table for this run_id (broadcast left_anti — the completed set is at
-most ``num_buckets`` rows).
+Resume: before scoring, the buckets already present in the metrics table
+for this run_id (at most ``num_buckets`` values, collected to the driver)
+become a partition filter on the pages scan — completed buckets are never
+read, and the plan has no join.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text_heuristics as th
+from ..functions.rule_ops import SPARK, PandasOps
 from ..operators import decision as dec
 from ..operators import scoring
 from ..warehouse import AUDIT_SCHEMA, METRICS_SCHEMA, Warehouse
@@ -47,9 +50,9 @@ def score_pages(
     column pruning drops ``html`` at the scan. ``extra_cols`` ride through
     untouched (e.g. the C4 page flag the caller merges into the decision).
     """
-    cols = [c for c in ["url", "warc_ts", "text", "lang", "bucket"]
-            if c in pages.columns] + [c for c in extra_cols
-                                      if c in pages.columns]
+    have = set(pages.columns)
+    cols = [c for c in ["url", "warc_ts", "text", "lang", "bucket",
+                        *extra_cols] if c in have]
     df = pages.select(*cols)
     if include_model_rules:
         # ALL per-doc text signals ride in the one scoring UDF crossing
@@ -61,9 +64,9 @@ def score_pages(
         df = th.with_signal_columns(df, "text", gopher)
     df = dec.with_decision(df, gopher, model,
                            include_model_rules=include_model_rules)
-    keep_cols = [c for c in SCORED_COLUMNS if c in df.columns]
-    passthrough = [c for c in extra_cols if c in df.columns]
-    return df.select("text", *keep_cols, *passthrough)
+    have = set(df.columns)
+    return df.select("text", *[c for c in [*SCORED_COLUMNS, *extra_cols]
+                               if c in have])
 
 
 def c4_pre_clean(pages: DataFrame) -> DataFrame:
@@ -131,19 +134,26 @@ def bucket_metrics(scored: DataFrame, run_id: str) -> DataFrame:
     )
 
 
+def alert_severity(o):
+    """``(drop_rate, severity)`` of metrics rows over a ``rule_ops``
+    namespace: the reference's severity cuts 0.9/0.8/0.6
+    (kafka_consumer.py:83-94); severity is null below 'medium'. Rendered in
+    Spark by :func:`quality_alerts`, evaluated on the driver's collected
+    metric rows by :func:`run_filter`."""
+    rate = o.col("docs_dropped") / o.greatest(o.col("docs_in"), 1)
+    return rate, o.case([(rate > 0.9, "critical"), (rate > 0.8, "high"),
+                         (rate > 0.6, "medium")], None)
+
+
 def quality_alerts(metrics: DataFrame) -> DataFrame:
     """Alert rows derived from per-bucket metrics.
 
     Reference analogue: the Kafka alert topic + severity mapping
-    (kafka_producer.py:send_quality_alert, kafka_consumer.py:83-94 severity
-    cuts 0.9/0.8/0.6). One alert per bucket whose drop rate crosses the
-    'medium' cut, with a JSON payload (F.to_json) mirroring the reference's
-    event shape.
+    (kafka_producer.py:send_quality_alert). One alert per bucket whose
+    :func:`alert_severity` is set, with a JSON payload (F.to_json)
+    mirroring the reference's event shape.
     """
-    rate = F.col("docs_dropped") / F.greatest(F.col("docs_in"), F.lit(1))
-    sev = (F.when(rate > 0.9, "critical")
-           .when(rate > 0.8, "high")
-           .when(rate > 0.6, "medium"))
+    rate, sev = alert_severity(SPARK)
     return (metrics
             .withColumn("severity", sev)
             .where(F.col("severity").isNotNull())
@@ -221,19 +231,22 @@ def run_filter(
         # the two ⇒ the bucket is rescored on resume and its clean partition
         # rewritten idempotently via dynamic partition overwrite).
         wh.write_clean(kept, clean_table, run_id=run_id)
-        # Collect the ≤num_buckets metric rows to the driver BEFORE appending:
-        # writing to the metrics path would invalidate this cached plan (its
-        # lineage READS that path for resume) and trigger a rescore that then
-        # sees its own checkpoint rows.
+        # The summary and the alert count need the ≤num_buckets metric rows
+        # on the driver; the checkpoint is written from those same rows, so
+        # it holds exactly what the summary reports. One slice: one task
+        # writes one metrics file.
         metrics_rows = bucket_metrics(scored, run_id).collect()
         n_alerts = 0
         if metrics_rows:
-            metrics_df = wh.spark.createDataFrame(metrics_rows, METRICS_SCHEMA)
+            metrics_df = wh.spark.createDataFrame(
+                wh.spark.sparkContext.parallelize(metrics_rows, 1),
+                METRICS_SCHEMA)
             wh.append_metrics(metrics_df)
-            alerts = quality_alerts(metrics_df)
-            n_alerts = alerts.count()
+            _, sev = alert_severity(PandasOps(
+                pd.DataFrame([r.asDict() for r in metrics_rows])))
+            n_alerts = int(pd.notna(sev).sum())
             if n_alerts:
-                wh.append_alerts(alerts)
+                wh.append_alerts(quality_alerts(metrics_df))
         return {"run_id": run_id,
                 "docs_in": sum(r["docs_in"] for r in metrics_rows),
                 "docs_kept": sum(r["docs_kept"] for r in metrics_rows),
@@ -268,7 +281,8 @@ def validate_run(
         F.sum((~F.col("keep")).cast("long")).alias("redropped"),
     ).collect()[0]
     docs = int(row["docs"])
-    drop_rate = round(int(row["redropped"]) / max(docs, 1), 6)
+    # an empty clean table (every document dropped) sums to null
+    drop_rate = round(int(row["redropped"] or 0) / max(docs, 1), 6)
     status = "ok" if drop_rate <= tolerance else "degraded"
     message = (f"revalidated {docs} kept docs; re-drop rate {drop_rate}"
                f" (tolerance {tolerance})")
@@ -299,7 +313,7 @@ def run_filter_in_waves(
     issues waves anyway; this makes one driver invocation do it.
     """
     pages = wh.read_pages(pages_table)
-    done = {r["bucket"] for r in wh.completed_buckets(run_id).collect()}
+    done = set(wh.completed_buckets(run_id))
     todo = sorted({r["bucket"] for r in
                    pages.select("bucket").distinct().collect()} - done)
     total = {"run_id": run_id, "docs_in": 0, "docs_kept": 0, "alerts": 0,

@@ -17,6 +17,10 @@ import os
 from pyspark.sql import SparkSession
 
 ARROW_BATCH_ROWS = 2048  # bound per-batch text bytes inside scoring UDFs
+# list up to this many partition directories on the driver instead of in a
+# Spark job (the default of 32 sends a 64-bucket table through a 64-task
+# listing job on every read); above every bucket count in use
+PARTITION_DISCOVERY_THRESHOLD = 1024
 
 
 def get_spark(
@@ -47,6 +51,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(PARTITION_DISCOVERY_THRESHOLD))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -55,6 +55,16 @@ METRICS_SCHEMA = T.StructType([
     T.StructField("completed_at", T.TimestampType()),
 ])
 
+# the clean table as run_filter writes it; ``bucket`` is the partition column
+CLEAN_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("warc_ts", T.TimestampType()),
+    T.StructField("lang", T.StringType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("reasons_csv", T.StringType()),
+    T.StructField("bucket", T.IntegerType()),
+])
+
 
 def bucket_expr(url_col: str = "url", num_buckets: int = 64):
     """Iceberg-equivalent bucket transform: pmod(xxhash64(url), N)."""
@@ -93,8 +103,32 @@ class Warehouse:
     def _fqn(self, table: str) -> str:
         return f"{self.catalog}.wh.{table}"
 
+    def _exists(self, table: str) -> bool:
+        if self.use_iceberg:
+            return self.spark.catalog.tableExists(self._fqn(table))
+        return os.path.exists(self._path(table))
+
+    def _read_parquet(self, table: str, schema: T.StructType) -> DataFrame:
+        """Parquet fallback read with a pinned schema: no schema-inference
+        job, and a table with no data files (or none at all) reads as empty
+        instead of failing to infer a schema."""
+        if not os.path.exists(self._path(table)):
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(self._path(table))
+
+    @staticmethod
+    def _clustered(df: DataFrame) -> DataFrame:
+        """Each bucket in one task, rows url-sorted: the partitioned write
+        then leaves one url-sorted file per bucket (the sort also satisfies
+        the writer's own ordering on ``bucket``, so it adds no second sort)."""
+        return df.repartition("bucket").sortWithinPartitions("bucket", "url")
+
     def write_pages(self, df: DataFrame, table: str = "pages",
                     mode: str = "overwrite") -> None:
+        """Bucketed pages write. Parquet fallback: one url-sorted file per
+        bucket, so a scan task holds whole buckets and the clean write that
+        follows it also leaves one file per bucket, with no shuffle of its
+        own; sorted urls also shrink the columnar encoding."""
         if self.use_iceberg:
             self.spark.sql(
                 f"CREATE TABLE IF NOT EXISTS {self._fqn(table)} "
@@ -105,7 +139,8 @@ class Warehouse:
             writer = df.writeTo(self._fqn(table))
             (writer.replace() if mode == "overwrite" else writer.append())
         else:
-            out = df.withColumn("bucket", bucket_expr("url", self.num_buckets))
+            out = self._clustered(
+                df.withColumn("bucket", bucket_expr("url", self.num_buckets)))
             (out.write.mode(mode).partitionBy("bucket")
                 .parquet(self._path(table)))
             self._write_manifest(table, {"num_buckets": self.num_buckets,
@@ -120,10 +155,11 @@ class Warehouse:
         unless its urls are spread; content-addressed bucketing means a
         host-focused recrawl stays focused).
 
-        Parquet fallback note: the merged frame is localCheckpoint'ed
-        before the write because the job reads the same path it overwrites
-        (Spark refuses self-overwrite through lineage). The checkpoint is
-        bounded: affected buckets only. On Iceberg this is
+        Parquet fallback note: the merged frame is clustered like
+        :meth:`write_pages` (one file per rewritten bucket) and
+        localCheckpoint'ed before the write because the job reads the same
+        path it overwrites (Spark refuses self-overwrite through lineage).
+        The checkpoint is bounded: affected buckets only. On Iceberg this is
         ``MERGE INTO``/overwritePartitions against a snapshot — no
         checkpoint needed.
         """
@@ -140,10 +176,7 @@ class Warehouse:
             return (df.withColumn("_rn", F.row_number().over(w))
                     .where(F.col("_rn") == 1).drop("_rn", "_src"))
 
-        exists = (self.spark.catalog.tableExists(self._fqn(table))
-                  if self.use_iceberg
-                  else os.path.exists(self._path(table)))
-        if not exists:
+        if not self._exists(table):
             # first delta against an empty warehouse: dedupe the batch
             # itself, then a plain bucketed write
             self.write_pages(_latest(new_df.withColumn("_src", F.lit(1))),
@@ -163,7 +196,7 @@ class Warehouse:
             latest.drop("bucket").writeTo(self._fqn(table)) \
                 .overwritePartitions()
         else:
-            snap = latest.localCheckpoint(eager=True)
+            snap = self._clustered(latest).localCheckpoint(eager=True)
             (snap.write.mode("overwrite")
                  .option("partitionOverwriteMode", "dynamic")
                  .partitionBy("bucket").parquet(self._path(table)))
@@ -204,7 +237,7 @@ class Warehouse:
     def read_clean(self, table: str = "pages_clean") -> DataFrame:
         if self.use_iceberg:
             return self.spark.read.table(self._fqn(table))
-        return self.spark.read.parquet(self._path(table))
+        return self._read_parquet(table, CLEAN_SCHEMA)
 
     # -- metrics / lineage / resume -------------------------------------------
 
@@ -224,10 +257,7 @@ class Warehouse:
     def read_metrics(self) -> DataFrame:
         if self.use_iceberg:
             return self.spark.read.table(self._fqn("metrics"))
-        path = self._path("metrics")
-        if not os.path.exists(path):
-            return self.spark.createDataFrame([], METRICS_SCHEMA)
-        return self.spark.read.parquet(path)
+        return self._read_parquet("metrics", METRICS_SCHEMA)
 
     def append_alerts(self, df: DataFrame) -> None:
         """Alert sink routed through the warehouse abstraction (Iceberg table
@@ -262,23 +292,25 @@ class Warehouse:
     def read_audit(self) -> DataFrame:
         if self.use_iceberg:
             return self.spark.read.table(self._fqn("audit"))
-        path = self._path("audit")
-        if not os.path.exists(path):
-            return self.spark.createDataFrame([], AUDIT_SCHEMA)
-        return self.spark.read.parquet(path)
+        return self._read_parquet("audit", AUDIT_SCHEMA)
 
-    def completed_buckets(self, run_id: str) -> DataFrame:
-        """Buckets already checkpointed for this run (the resume set)."""
-        return (self.read_metrics()
-                .where(F.col("run_id") == run_id)
-                .select("bucket").distinct())
+    def completed_buckets(self, run_id: str) -> list[int]:
+        """Buckets already checkpointed for this run (the resume set,
+        ≤ num_buckets values), sorted. No Spark job while the metrics table
+        does not exist yet."""
+        if not self._exists("metrics"):
+            return []
+        return sorted(r["bucket"] for r in self.read_metrics()
+                      .where(F.col("run_id") == run_id)
+                      .select("bucket").distinct().collect())
 
     def resume_filter(self, pages: DataFrame, run_id: str) -> DataFrame:
-        """Anti-join input buckets against completed buckets. The completed
-        set is tiny (≤ num_buckets rows) → broadcast left_anti join, no
-        shuffle of the big side."""
+        """Drop completed buckets as a partition filter on the scan: the
+        resume set is collected to the driver, so completed buckets are
+        never read and the plan has no join (nor any lineage on the
+        metrics table)."""
         done = self.completed_buckets(run_id)
-        return pages.join(F.broadcast(done), on="bucket", how="left_anti")
+        return pages.where(~F.col("bucket").isin(done)) if done else pages
 
     # -- manifest --------------------------------------------------------------
 

@@ -11,8 +11,8 @@ Local sandbox: python jobs/run_filter.py --warehouse /tmp/wh --run-id r1 \
     --generate 100000
 
 Resume semantics: re-running with the same --run-id skips every bucket whose
-metrics row is already checkpointed (anti-join on the metrics table); a
-killed job therefore resumes without rescoring completed partitions.
+metrics row is already checkpointed (a partition filter on the pages scan);
+a killed job therefore resumes without rescoring completed partitions.
 """
 
 from __future__ import annotations

@@ -50,17 +50,19 @@ def test_single_udf_node(spark):
     assert plan.count("ArrowEvalPython") <= 2  # 1 tree node + 1 detail entry
 
 
-def test_resume_antijoin_is_broadcast(spark, tmp_path):
+def test_resume_is_a_partition_filter(spark, tmp_path):
+    """Completed buckets leave the resumed plan as a scan partition filter:
+    never read, no join, and no lineage on the metrics table."""
+    from data_quality_autohealer_spark.plans.pipeline import bucket_metrics
     from data_quality_autohealer_spark.warehouse import Warehouse
     wh = Warehouse(spark, str(tmp_path / "wh"), num_buckets=8)
     wh.write_pages(synth.gen_pages_df(spark, 500, num_partitions=2))
-    from data_quality_autohealer_spark.plans.pipeline import (
-        bucket_metrics,
-    )
-    scored = score_pages(wh.read_pages().limit(100))
-    wh.append_metrics(bucket_metrics(scored, "r1"))
+    done = score_pages(wh.read_pages().where(F.col("bucket").isin(2, 5)))
+    wh.append_metrics(bucket_metrics(done, "r1"))
     plan = _plan(wh.resume_filter(wh.read_pages(), "r1"))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    m = re.search(r"PartitionFilters: \[(.*)\]", plan)
+    assert m and re.search(r"NOT bucket#\w+ IN \(2,5\)", m.group(1)), plan
+    assert "Join" not in plan and "metrics" not in plan, plan
 
 
 def test_minhash_base_hash_staged_once(spark):

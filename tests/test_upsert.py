@@ -60,6 +60,29 @@ def test_upsert_latest_wins_and_partition_pruning(spark, tmp_path):
     delta.unpersist()
 
 
+def _files_per_bucket(path):
+    return {d: sum(f.endswith(".parquet") for f in os.listdir(
+        os.path.join(path, d))) for d in os.listdir(path)
+        if d.startswith("bucket=")}
+
+
+def test_upsert_leaves_one_file_per_bucket(spark, tmp_path):
+    """write_pages and the merge write both leave one file per bucket."""
+    wh = Warehouse(spark, str(tmp_path / "wh1f"), num_buckets=8)
+    base = synth.gen_pages_df(spark, 400, num_partitions=4).cache()
+    wh.write_pages(base)
+    path = str(tmp_path / "wh1f" / "pages")
+    assert _files_per_bucket(path) == {f"bucket={b}": 1 for b in range(8)}
+    delta = (base.orderBy("url").limit(20)
+             .withColumn("warc_ts",
+                         F.col("warc_ts") + F.expr("interval 1 day")))
+    summary = wh.upsert_pages(delta)
+    assert 0 < summary["affected_buckets"] <= 8
+    assert _files_per_bucket(path) == {f"bucket={b}": 1 for b in range(8)}
+    assert wh.read_pages().count() == 400
+    base.unpersist()
+
+
 def test_upsert_tie_prefers_incoming(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh2"), num_buckets=4)
     base = synth.gen_pages_df(spark, 100, num_partitions=1).cache()

@@ -1,12 +1,15 @@
 """Resume contract (north_rule): a killed job resumes without rescoring
 completed partitions. Mirrors SURVEY §5.2.4."""
 
+import datetime
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
 from data_quality_autohealer_spark import synth
 from data_quality_autohealer_spark.plans.pipeline import (
-    bucket_metrics, run_filter, score_pages,
+    bucket_metrics, run_filter, score_pages, validate_run,
 )
 from data_quality_autohealer_spark.warehouse import Warehouse
 
@@ -74,9 +77,67 @@ def test_validate_and_notify_tail(wh, spark):
     assert audit[0]["completed_at"] is not None
 
 
+def _parquet_files(path):
+    """bucket dir ('.' for an unpartitioned table) -> data file count."""
+    out = {}
+    for root, _, files in os.walk(path):
+        n = sum(f.endswith(".parquet") for f in files)
+        if n:
+            out[os.path.relpath(root, path)] = n
+    return out
+
+
+def _symbol_soup(spark, n):
+    return spark.createDataFrame(
+        [(f"http://bad.test/{i}", datetime.datetime(2026, 1, 1),
+          bytearray(b""), "### {} => ~~ @@ |||| ^^^ " * 10, "en")
+         for i in range(n)],
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+
+
+def test_run_filter_cost(wh, spark):
+    """One run_filter is 6 Spark jobs at most (listing, resume and alert
+    checks run none), leaves one file per bucket in pages and pages_clean,
+    and appends exactly one metrics file."""
+    root = wh.root
+    pages_files = _parquet_files(os.path.join(root, "pages"))
+    assert len(pages_files) == BUCKETS and set(pages_files.values()) == {1}
+    sc = spark.sparkContext
+    sc.setJobGroup("run-filter-cost", "one run_filter")
+    try:
+        summary = run_filter(wh, "cost")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("run-filter-cost")
+    assert summary["docs_in"] == N
+    assert 0 < len(jobs) <= 6, jobs
+    clean_files = _parquet_files(os.path.join(root, "pages_clean"))
+    assert len(clean_files) <= BUCKETS and set(clean_files.values()) == {1}
+    assert _parquet_files(os.path.join(root, "metrics")) == {".": 1}
+    run_filter(wh, "cost-2")
+    assert _parquet_files(os.path.join(root, "metrics")) == {".": 2}
+
+
+def test_all_dropped_run_validates_zero_docs(wh, spark):
+    """A run that drops every document leaves an empty clean table that
+    reads and validates as 0 docs (no schema to infer from)."""
+    wh.write_pages(_symbol_soup(spark, 50), table="pages_soup")
+    summary = run_filter(wh, "soup", pages_table="pages_soup",
+                         clean_table="clean_soup")
+    assert summary["docs_in"] == 50 and summary["docs_kept"] == 0
+    # every bucket dropped everything: the driver-side alert count matches
+    # the rows quality_alerts wrote
+    alerts = wh.read_alerts().where(F.col("run_id") == "soup").collect()
+    assert summary["alerts"] == len(alerts) > 0
+    assert {a["severity"] for a in alerts} == {"critical"}
+    assert wh.read_clean("clean_soup").count() == 0
+    result = validate_run(wh, "soup", clean_table="clean_soup")
+    assert result["docs_validated"] == 0
+    assert result["status"] == "ok"
+
+
 def test_drift_triggered_retrain(wh, spark):
     # reference distribution_shift_remediation.py:69-104: retrain on drift
-    import datetime
     from data_quality_autohealer_spark.functions.perplexity import (
         PerplexityModel,
     )
@@ -90,12 +151,7 @@ def test_drift_triggered_retrain(wh, spark):
     assert r["retrained"] is False and r["drift"] < 0.05
 
     # symbol-soup corpus: drop rate jumps -> retrain fires
-    bad = spark.createDataFrame(
-        [(f"http://bad.test/{i}", datetime.datetime(2026, 1, 1),
-          bytearray(b""), "### {} => ~~ @@ |||| ^^^ " * 10, "en")
-         for i in range(200)],
-        "url string, warc_ts timestamp, html binary, text string, lang string")
-    wh.write_pages(bad, table="pages_bad")
+    wh.write_pages(_symbol_soup(spark, 200), table="pages_bad")
     run_filter(wh, "bad", pages_table="pages_bad")
     r2 = drift_retrain(wh, "bad", "base")
     assert r2["retrained"] is True and r2["drift"] > 0.15
@@ -145,7 +201,6 @@ def test_bucket_assignment_is_stable(wh, spark):
 def test_quality_alerts(spark):
     from data_quality_autohealer_spark.plans.pipeline import quality_alerts
     from data_quality_autohealer_spark.warehouse import METRICS_SCHEMA
-    import datetime
     rows = [
         ("r", 0, 100, 5, 95, {"langid": 90}, {}, datetime.datetime(2026, 1, 1)),
         ("r", 1, 100, 85, 15, {}, {}, datetime.datetime(2026, 1, 1)),
