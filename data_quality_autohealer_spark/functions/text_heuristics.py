@@ -91,15 +91,6 @@ def _spark_ngrams(words: str, n: int) -> str:
     )
 
 
-def _spark_dup_frac(words: str, n: int) -> str:
-    ng = _spark_ngrams(words, n)
-    return (
-        f"case when size({words}) < {n} then cast(0.0 as double) else "
-        f"round(1.0 - cast(size(array_distinct({ng})) as double)"
-        f" / cast(size({ng}) as double), 6) end"
-    )
-
-
 def spark_signal_exprs(text_col: str = "text",
                        th: GopherThresholds = DEFAULT_THRESHOLDS) -> dict[str, Column]:
     """Per-document quality signals as native Column expressions.
@@ -158,31 +149,19 @@ SIGNAL_COLS = [
 
 
 def with_signal_columns(df, text_col: str = "text",
-                        th: GopherThresholds = DEFAULT_THRESHOLDS,
-                        include_dup: bool = True):
+                        th: GopherThresholds = DEFAULT_THRESHOLDS):
     """Attach the signal columns, staging the expensive intermediates
     (words array, per-order n-gram arrays) as separate projections. Temp
-    columns are dropped.
-
-    ``include_dup=False`` skips the dup-n-gram-frac expressions — used by the
-    pipeline hot path, where those three signals come out of the scoring
-    pandas UDF instead (same values; see operators.scoring.dup_ngram_fracs).
-    """
+    columns are dropped."""
     t = text_col
     df = df.withColumn("_words", F.expr(_spark_words(t)))
     df = df.withColumn("_wc", F.expr(
         f"case when {_spark_clean(t)} = '' or {t} is null "
         f"then 0 else size(_words) end"))
-    exprs = spark_signal_exprs(t, th)
-    if include_dup:
-        df = df.withColumns({
-            f"_ng{n}": F.expr(_spark_ngrams("_words", n)) for n in (2, 3, 4)})
-        df = df.withColumns(exprs)
-        return df.drop(*TEMP_SIGNAL_COLS)
-    for n in (2, 3, 4):
-        exprs.pop(f"dup_{n}gram_frac")
-    df = df.withColumns(exprs)
-    return df.drop("_words", "_wc")
+    df = df.withColumns({
+        f"_ng{n}": F.expr(_spark_ngrams("_words", n)) for n in (2, 3, 4)})
+    df = df.withColumns(spark_signal_exprs(t, th))
+    return df.drop(*TEMP_SIGNAL_COLS)
 
 
 def gopher_rules(o, th: GopherThresholds = DEFAULT_THRESHOLDS) -> dict:

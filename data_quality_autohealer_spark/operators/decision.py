@@ -42,9 +42,13 @@ REASON_CODES = [
     "c4.page",   # merged post-decision by run_filter(c4=True)
 ]
 
+# the reference's severity cuts, highest first (kafka_consumer.py:83-94):
+# a score strictly above the cut takes that severity. Bucket alerts
+# (plans.pipeline.alert_severity) and the API check reply share them.
+SEVERITY_CUTS = ((0.9, "critical"), (0.8, "high"), (0.6, "medium"))
 
-def model_rules(o, claimed_lang_col: str = "lang",
-                mt: ModelThresholds = DEFAULT_MODEL_THRESHOLDS) -> dict:
+
+def model_rules(o) -> dict:
     """Reason code -> ``(fired, confidence)`` over scoring-UDF output
     columns, written once over a ``rule_ops`` namespace (Spark Columns or
     numpy). Confidence ∈ [0,1] (reference ensemble's {issue: score} dict,
@@ -52,8 +56,9 @@ def model_rules(o, claimed_lang_col: str = "lang",
     softmax confidence; perplexity/toxicity report normalized distance past
     the threshold, clamped — the same min(x/τ, 1) shape as the heuristic
     rules."""
+    mt = DEFAULT_MODEL_THRESHOLDS
     c = o.col
-    pred, claimed, conf = c("lang_pred"), c(claimed_lang_col), c("lang_conf")
+    pred, claimed, conf = c("lang_pred"), c("lang"), c("lang_conf")
     pplx, tox = c("log_pplx"), c("n_tox")
     # no mismatch when either side is 'und': the model abstaining, or the
     # claim being absent (WARC ingest stamps 'und' — the predicted language
@@ -71,14 +76,8 @@ def model_rules(o, claimed_lang_col: str = "lang",
     }
 
 
-def with_decision(
-    df: DataFrame,
-    gopher: th.GopherThresholds = th.DEFAULT_THRESHOLDS,
-    model: ModelThresholds = DEFAULT_MODEL_THRESHOLDS,
-    claimed_lang_col: str = "lang",
-    include_model_rules: bool = True,
-    include_confidences: bool = True,
-) -> DataFrame:
+def with_decision(df: DataFrame, include_model_rules: bool = True
+                  ) -> DataFrame:
     """Attach ``reasons`` (sorted array of codes), ``keep`` (bool) and
     ``confidences`` (map rule→score, 0.0 when the rule did not fire).
 
@@ -87,19 +86,17 @@ def with_decision(
     rule is rendered once; reasons and confidences share its ``(fired,
     confidence)`` pair.
     """
-    rules = th.gopher_rules(SPARK, gopher)
+    rules = th.gopher_rules(SPARK)
     if include_model_rules:
-        rules.update(model_rules(SPARK, claimed_lang_col, model))
+        rules.update(model_rules(SPARK))
     reasons = th.spark_reasons_expr(
         {code: fired for code, (fired, _) in rules.items()})
-    df = df.withColumn("reasons", reasons).withColumn(
-        "keep", F.size("reasons") == 0
-    )
-    if include_confidences:
-        df = df.withColumn("confidences", F.map_from_arrays(
-            F.array(*[F.lit(code) for code in rules]),
-            F.array(*[conf for _, conf in rules.values()])))
-    return df
+    confidences = F.map_from_arrays(
+        F.array(*[F.lit(code) for code in rules]),
+        F.array(*[conf for _, conf in rules.values()]))
+    return (df.withColumn("reasons", reasons)
+            .withColumn("keep", F.size("reasons") == 0)
+            .withColumn("confidences", confidences))
 
 
 def decide_frame(scored: pd.DataFrame) -> pd.DataFrame:

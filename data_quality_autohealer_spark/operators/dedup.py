@@ -954,6 +954,30 @@ def neardup_against_index(new_df: DataFrame, index_df: DataFrame,
             .where(F.col("jaccard") >= threshold))
 
 
+def decontaminate(pages: DataFrame, index_path: str,
+                  text_col: str = "text", id_col: str = "doc_id",
+                  exclude_wave: str | None = None, shingle_n: int = 3,
+                  jaccard_n: int = 3, threshold: float = 0.5,
+                  max_bucket_size: int | None = DEFAULT_MAX_BUCKET
+                  ) -> DataFrame:
+    """Drop the pages that near-duplicate a stored signature index (a prior
+    corpus): :func:`read_signature_index` (params sidecar verified, loud
+    failure on mismatch; ``exclude_wave`` skips that wave's own partition)
+    → :func:`neardup_against_index` → left-anti join on the flagged ids.
+    The prior corpus's text is never read."""
+    index = read_signature_index(
+        pages.sparkSession, index_path,
+        params=signature_index_params(shingle_n=shingle_n,
+                                      jaccard_n=jaccard_n),
+        exclude_wave=exclude_wave)
+    flagged = neardup_against_index(
+        pages, index, text_col, id_col, shingle_n=shingle_n,
+        jaccard_n=jaccard_n, threshold=threshold,
+        max_bucket_size=max_bucket_size
+    ).select(F.col("new_id").alias(id_col)).distinct()
+    return pages.join(flagged, id_col, "left_anti")
+
+
 DEFAULT_CC_LOCAL_EDGES = int(os.environ.get(
     "SPARK_GRAFT_CC_LOCAL_EDGES", "200000"))
 

@@ -19,21 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# per-document action per reason code (M7)
-ACTION_FOR_REASON = {
-    "gopher.word_count": "drop",
-    "gopher.mean_word_length": "drop",
-    "gopher.symbol_ratio": "drop",
-    "gopher.stopwords": "drop",
-    "gopher.alpha_ratio": "drop",
-    "gopher.dup_ngram": "drop",
-    "langid": "drop",
-    "perplexity": "drop",
-    "toxicity": "drop",       # above threshold; below it the scrub suffices
-    "pii": "scrub",
-    "tox_scrub": "scrub",
-}
-
 
 def with_action(scored: DataFrame) -> DataFrame:
     """Attach the remediation action column: drop if any reason fired,

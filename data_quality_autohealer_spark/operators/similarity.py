@@ -47,28 +47,6 @@ def cosine_topk(df: DataFrame, query: list[float], k: int = 10,
     return scored.orderBy(F.desc("cosine_sim"), F.col(id_col)).limit(k)
 
 
-def duckdb_cosine_topk_sql(query: list[float], k: int = 10,
-                           table: str = "embeddings",
-                           vec_col: str = "embedding",
-                           id_col: str = "vec_id") -> str:
-    """Exact DuckDB twin: same fold order (list_reduce is sequential), same
-    rounding."""
-    q = "[" + ", ".join(f"{x!r}::double" for x in query) + "]"
-    v = f"list_transform({vec_col}, x -> x::double)"
-    dot = (f"list_reduce(list_prepend(0.0::double, "
-           f"list_transform(generate_series(1, len({vec_col})), "
-           f"i -> ({v})[i] * ({q})[i])), (acc, x) -> acc + x)")
-    nv = (f"sqrt(list_reduce(list_prepend(0.0::double, "
-          f"list_transform({v}, x -> x * x)), (acc, x) -> acc + x))")
-    nq = float(np.sqrt(np.dot(query, query)))
-    return f"""
-        select {id_col}, round({dot} / ({nv} * {nq!r}), 6) as cosine_sim
-        from {table}
-        order by cosine_sim desc, {id_col}
-        limit {k}
-    """
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file index: k-means coarse quantizer + probed search)
 # ---------------------------------------------------------------------------

@@ -456,9 +456,8 @@ def build_incremental_crawl_dag() -> DAG:
                 "pages_in": wh.read_pages(f"pages_raw_{run}").count()}
 
     def decontaminate(ctx):
-        from pyspark.sql import functions as F
         from ..operators import dedup
-        spark, wh, run = ctx["spark"], ctx["wh"], ctx["run"]
+        wh, run = ctx["wh"], ctx["run"]
         raw = wh.read_pages(f"pages_raw_{run}").drop("bucket")
         idx_path = _os.path.join(ctx["warehouse_dir"],
                                  ctx.get("index_table", "signatures"))
@@ -469,15 +468,12 @@ def build_incremental_crawl_dag() -> DAG:
             # EXCLUDE this wave's own partition: a re-run (crash after
             # extend_index, or plain replay) must not self-decontaminate
             # against the docs it indexed last time — rerun-safety.
-            # read_signature_index also verifies the params sidecar
-            # (advice-r04: fail loudly, never silently match nothing)
-            index = dedup.read_signature_index(spark, idx_path,
-                                               exclude_wave=run)
-            flagged = dedup.neardup_against_index(
-                raw, index, text_col="text", id_col="url",
-                threshold=ctx.get("jaccard_threshold", 0.5)
-            ).select(F.col("new_id").alias("url")).distinct()
-            kept = raw.join(flagged, "url", "left_anti")
+            # The params sidecar is verified (advice-r04: fail loudly,
+            # never silently match nothing)
+            kept = dedup.decontaminate(
+                raw, idx_path, text_col="text", id_col="url",
+                exclude_wave=run,
+                threshold=ctx.get("jaccard_threshold", 0.5))
         else:
             kept = raw  # wave 1: nothing to decontaminate against
         wh.write_pages(kept, table=f"pages_{run}")

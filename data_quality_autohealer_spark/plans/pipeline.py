@@ -38,8 +38,6 @@ SCORED_COLUMNS = [
 
 def score_pages(
     pages: DataFrame,
-    gopher: th.GopherThresholds = th.DEFAULT_THRESHOLDS,
-    model: dec.ModelThresholds = dec.DEFAULT_MODEL_THRESHOLDS,
     include_model_rules: bool = True,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -61,9 +59,8 @@ def score_pages(
         # asserted equal in tests and used for SQL-oracle-checked queries)
         df = scoring.with_model_scores(df, "text")
     else:
-        df = th.with_signal_columns(df, "text", gopher)
-    df = dec.with_decision(df, gopher, model,
-                           include_model_rules=include_model_rules)
+        df = th.with_signal_columns(df, "text")
+    df = dec.with_decision(df, include_model_rules=include_model_rules)
     have = set(df.columns)
     return df.select("text", *[c for c in [*SCORED_COLUMNS, *extra_cols]
                                if c in have])
@@ -136,13 +133,12 @@ def bucket_metrics(scored: DataFrame, run_id: str) -> DataFrame:
 
 def alert_severity(o):
     """``(drop_rate, severity)`` of metrics rows over a ``rule_ops``
-    namespace: the reference's severity cuts 0.9/0.8/0.6
-    (kafka_consumer.py:83-94); severity is null below 'medium'. Rendered in
-    Spark by :func:`quality_alerts`, evaluated on the driver's collected
-    metric rows by :func:`run_filter`."""
+    namespace, by ``decision.SEVERITY_CUTS``; severity is null below
+    'medium'. Rendered in Spark by :func:`quality_alerts`, evaluated on the
+    driver's collected metric rows by :func:`run_filter`."""
     rate = o.col("docs_dropped") / o.greatest(o.col("docs_in"), 1)
-    return rate, o.case([(rate > 0.9, "critical"), (rate > 0.8, "high"),
-                         (rate > 0.6, "medium")], None)
+    return rate, o.case([(rate > cut, sev) for cut, sev in dec.SEVERITY_CUTS],
+                        None)
 
 
 def quality_alerts(metrics: DataFrame) -> DataFrame:
@@ -171,17 +167,13 @@ def run_filter(
     run_id: str,
     pages_table: str = "pages",
     clean_table: str = "pages_clean",
-    gopher: th.GopherThresholds = th.DEFAULT_THRESHOLDS,
-    model: dec.ModelThresholds = dec.DEFAULT_MODEL_THRESHOLDS,
-    storage_level: str = "MEMORY_AND_DISK",
     bucket_subset: list[int] | None = None,
     c4: bool = False,
 ) -> dict:
     """Full run with resume. Returns summary counters.
 
-    ``storage_level``: cache level for the scored frame shared by the two
-    sinks (clean write + metrics). Use "DISK_ONLY" at cluster scale — the
-    scored text of a whole bucket wave needn't fit executor memory.
+    The scored frame shared by the two sinks (clean write + metrics) is
+    cached MEMORY_AND_DISK.
     ``bucket_subset``: restrict this invocation to the given buckets (the
     wave unit used by :func:`run_filter_in_waves`); partition pruning makes
     the restriction a scan-level filter.
@@ -200,7 +192,7 @@ def run_filter(
     if c4:
         todo = c4_pre_clean(todo)
         extra = ("_c4_keep",)
-    scored = score_pages(todo, gopher, model, extra_cols=extra)
+    scored = score_pages(todo, extra_cols=extra)
     if c4:
         scored = c4_merge_decision(scored)
     # prune columns NEITHER sink reads before materializing the cache —
@@ -210,7 +202,7 @@ def run_filter(
     # reasons/pii counts)
     needed = [c for c in scored.columns if c not in ("confidences",)]
     scored = scored.select(*needed)
-    scored = scored.persist(getattr(StorageLevel, storage_level))
+    scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         # an 'und' CLAIM (WARC ingest: unlabeled pages) adopts the model's
         # predicted language in the clean table, so downstream per-lang
@@ -260,8 +252,6 @@ def validate_run(
     run_id: str,
     clean_table: str = "pages_clean",
     tolerance: float = 0.02,
-    gopher: th.GopherThresholds = th.DEFAULT_THRESHOLDS,
-    model: dec.ModelThresholds = dec.DEFAULT_MODEL_THRESHOLDS,
 ) -> dict:
     """Validate-remediation + completion-notification tail (reference
     schema_drift_remediation.py:143-204: every DAG ends validate → notify).
@@ -275,7 +265,7 @@ def validate_run(
     import datetime
 
     clean = wh.read_clean(clean_table)
-    rescored = score_pages(clean, gopher, model)
+    rescored = score_pages(clean)
     row = rescored.agg(
         F.count(F.lit(1)).alias("docs"),
         F.sum((~F.col("keep")).cast("long")).alias("redropped"),
@@ -300,9 +290,6 @@ def run_filter_in_waves(
     wave_buckets: int = 16,
     pages_table: str = "pages",
     clean_table: str = "pages_clean",
-    gopher: th.GopherThresholds = th.DEFAULT_THRESHOLDS,
-    model: dec.ModelThresholds = dec.DEFAULT_MODEL_THRESHOLDS,
-    storage_level: str = "MEMORY_AND_DISK",
     c4: bool = False,
 ) -> dict:
     """Run the filter in bucket WAVES, checkpointing metrics after each —
@@ -320,10 +307,8 @@ def run_filter_in_waves(
              "waves": 0, "buckets_skipped": len(done)}
     for lo in range(0, len(todo), wave_buckets):
         chunk = todo[lo:lo + wave_buckets]
-        wave_pages_table = pages_table  # resume_filter inside re-checks
-        summary = run_filter(
-            wh, run_id, wave_pages_table, clean_table, gopher, model,
-            storage_level, bucket_subset=chunk, c4=c4)
+        summary = run_filter(wh, run_id, pages_table, clean_table,
+                             bucket_subset=chunk, c4=c4)
         total["docs_in"] += summary["docs_in"]
         total["docs_kept"] += summary["docs_kept"]
         total["alerts"] += summary["alerts"]

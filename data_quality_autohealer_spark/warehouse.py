@@ -66,6 +66,16 @@ CLEAN_SCHEMA = T.StructType([
 ])
 
 
+# quality alerts as plans.pipeline.quality_alerts writes them
+ALERTS_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType()),
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("severity", T.StringType()),
+    T.StructField("drop_rate", T.DoubleType()),
+    T.StructField("payload", T.StringType()),
+])
+
+
 def bucket_expr(url_col: str = "url", num_buckets: int = 64):
     """Iceberg-equivalent bucket transform: pmod(xxhash64(url), N)."""
     return F.pmod(F.xxhash64(F.col(url_col)), F.lit(num_buckets)).cast("int")
@@ -108,10 +118,12 @@ class Warehouse:
             return self.spark.catalog.tableExists(self._fqn(table))
         return os.path.exists(self._path(table))
 
-    def _read_parquet(self, table: str, schema: T.StructType) -> DataFrame:
-        """Parquet fallback read with a pinned schema: no schema-inference
-        job, and a table with no data files (or none at all) reads as empty
-        instead of failing to infer a schema."""
+    def read_table(self, table: str, schema: T.StructType) -> DataFrame:
+        """Read a table; the Parquet fallback pins ``schema``: no
+        schema-inference job, and a table with no data files (or none at
+        all) reads as empty instead of failing to infer a schema."""
+        if self.use_iceberg:
+            return self.spark.read.table(self._fqn(table))
         if not os.path.exists(self._path(table)):
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(self._path(table))
@@ -235,9 +247,7 @@ class Warehouse:
                 .partitionBy("bucket").parquet(self._path(table)))
 
     def read_clean(self, table: str = "pages_clean") -> DataFrame:
-        if self.use_iceberg:
-            return self.spark.read.table(self._fqn(table))
-        return self._read_parquet(table, CLEAN_SCHEMA)
+        return self.read_table(table, CLEAN_SCHEMA)
 
     # -- metrics / lineage / resume -------------------------------------------
 
@@ -255,9 +265,7 @@ class Warehouse:
             df.write.mode("append").parquet(self._path("metrics"))
 
     def read_metrics(self) -> DataFrame:
-        if self.use_iceberg:
-            return self.spark.read.table(self._fqn("metrics"))
-        return self._read_parquet("metrics", METRICS_SCHEMA)
+        return self.read_table("metrics", METRICS_SCHEMA)
 
     def append_alerts(self, df: DataFrame) -> None:
         """Alert sink routed through the warehouse abstraction (Iceberg table
@@ -272,9 +280,7 @@ class Warehouse:
             df.write.mode("append").parquet(self._path("alerts"))
 
     def read_alerts(self) -> DataFrame:
-        if self.use_iceberg:
-            return self.spark.read.table(self._fqn("alerts"))
-        return self.spark.read.parquet(self._path("alerts"))
+        return self.read_table("alerts", ALERTS_SCHEMA)
 
     def append_audit(self, df: DataFrame) -> None:
         """Completion/validation audit rows — the notification analogue of
@@ -290,9 +296,7 @@ class Warehouse:
             df.write.mode("append").parquet(self._path("audit"))
 
     def read_audit(self) -> DataFrame:
-        if self.use_iceberg:
-            return self.spark.read.table(self._fqn("audit"))
-        return self._read_parquet("audit", AUDIT_SCHEMA)
+        return self.read_table("audit", AUDIT_SCHEMA)
 
     def completed_buckets(self, run_id: str) -> list[int]:
         """Buckets already checkpointed for this run (the resume set,

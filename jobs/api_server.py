@@ -76,14 +76,14 @@ def create_app(spark=None):
     def _read_alert_rows(wh):
         """Alerts rows, treating ONLY a missing alerts table as 'no alerts
         yet' — any other failure (broken path, schema corruption) must
-        propagate, not masquerade as an empty feed."""
+        propagate, not masquerade as an empty feed. The Parquet read pins
+        its schema, so a missing table already reads as empty; a missing
+        Iceberg table raises."""
         from pyspark.errors import AnalysisException
         try:
             return wh.read_alerts().collect()
         except AnalysisException as e:
-            msg = str(e)
-            if ("PATH_NOT_FOUND" in msg or "TABLE_OR_VIEW_NOT_FOUND" in msg
-                    or "UNABLE_TO_INFER_SCHEMA" in msg):
+            if "TABLE_OR_VIEW_NOT_FOUND" in str(e):
                 return []  # clean run with zero alerts writes no table
             raise
 

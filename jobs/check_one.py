@@ -3,7 +3,7 @@
 score a small uploaded document set NOW, in this process and without Spark,
 through the IDENTICAL scorer and rules the pipeline uses, and return the
 reference-shaped response dict (detected_issues / scores / severity /
-recommendations, severity cuts 0.9/0.8/0.6, ensemble selection threshold
+recommendations, ``decision.SEVERITY_CUTS``, ensemble selection threshold
 0.7, ['clean'] fallback).
 
 CLI:  python jobs/check_one.py --file docs.txt          # one document per line
@@ -56,7 +56,9 @@ def check_documents(texts: list[str], langs: list[str] | None = None,
     """
     import pandas as pd
 
-    from data_quality_autohealer_spark.operators.decision import decide_frame
+    from data_quality_autohealer_spark.operators.decision import (
+        SEVERITY_CUTS, decide_frame,
+    )
     from data_quality_autohealer_spark.operators.scoring import score_batch
     from data_quality_autohealer_spark.session import ARROW_BATCH_ROWS
 
@@ -77,9 +79,8 @@ def check_documents(texts: list[str], langs: list[str] | None = None,
     if not detected:
         detected = fired or ["clean"]
     max_score = max(scores.values()) if scores else 0.0
-    severity = ("critical" if max_score > 0.9 else
-                "high" if max_score > 0.8 else
-                "medium" if max_score > 0.6 else "low")
+    severity = next((sev for cut, sev in SEVERITY_CUTS if max_score > cut),
+                    "low")
     recommendations = [
         RECOMMENDATION_FOR_REASON.get(i, "No quality issues detected")
         for i in detected

@@ -1,5 +1,5 @@
-"""Corpus dedup pre-pass CLI: exact or near-dup (LSH→Jaccard→components)
-dedup of the pages table into a deduped pages table, with an audit row.
+"""Corpus dedup pre-pass CLI: dedup of the pages table into a deduped pages
+table, with an audit trail.
 
 At 100 TB dedup runs as its own pass BEFORE the quality filter (its unit is
 the whole corpus, not a bucket, so folding it into the bucket-resumable
@@ -10,25 +10,40 @@ Usage:
   python jobs/run_dedup.py --warehouse /tmp/wh --mode exact
   python jobs/run_dedup.py --warehouse /tmp/wh --mode neardup \
       --jaccard-threshold 0.5
-  python jobs/run_dedup.py --warehouse /tmp/wh --mode canonical
   python jobs/run_dedup.py --warehouse /tmp/wh --mode line \
       --min-line-docs 2
-
-Modes: ``exact`` keep-one per md5(text); ``canonical`` keep-one per
-normalized (case/punct/whitespace) text; ``neardup`` the full LSH →
-Jaccard → components chain; ``line`` rewrites each doc with corpus-wide
-duplicate lines (boilerplate) removed — doc count unchanged, the audit
-row carries lines_dropped; ``index`` persists the corpus's near-dup
-signature index (band buckets + hashed shingles); ``decontaminate``
-drops pages near-duplicating a previously-written index — the prior
-corpus's text is never re-read; ``full`` (VERDICT r05 #6) runs the whole
-hygiene stack in the canonical order — exact → line → substring →
-neardup — materializing each stage and recording a per-stage audit trail
-whose counts reconcile exactly to the input:
-
   python jobs/run_dedup.py --warehouse /wh --mode index
   python jobs/run_dedup.py --warehouse /wh --mode decontaminate \
       --pages-table pages_new --index-table signatures
+
+Every pages-producing mode is an ordered list of stages:
+
+  mode           stages
+  exact          exact
+  canonical      canonical
+  line           line
+  substring      substring
+  novelty        novelty
+  decontaminate  decontaminate
+  neardup        exact, neardup
+  full           exact, line, substring, neardup
+
+Stages: ``exact`` keeps one doc per md5(text); ``canonical`` one per
+normalized (case/punct/whitespace) text; ``line`` rewrites each doc with
+corpus-wide duplicate lines (boilerplate) removed — doc count unchanged,
+``lines_dropped`` reported; ``substring`` drops docs dominated by
+corpus-duplicated runs; ``novelty`` drops docs with too few corpus-novel
+n-grams; ``decontaminate`` drops docs near-duplicating a previously written
+signature index (the prior corpus's text is never re-read); ``neardup`` runs
+the LSH → Jaccard → components chain, keeping the min-id member of each
+cluster, or the best-scored one with ``--keep-best``. Exact runs before
+neardup because identical-text clusters are the worst LSH mega-buckets.
+
+Every stage but the last is materialized (persist + count) so each stage's
+counts are exact: stage k's docs_in is stage k-1's docs_out, and the input
+count is the output count plus every stage's removals. The last stage is
+written straight to the output table and counted from it. ``--mode index``
+writes the corpus's near-dup signature index instead of pages.
 """
 
 from __future__ import annotations
@@ -42,16 +57,132 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F  # noqa: E402
+
+from data_quality_autohealer_spark.operators import dedup  # noqa: E402
+
+# stages are called as ``stage(pages, args, held)`` and return the kept pages
+# and the stage's extra counts; frames appended to ``held`` are unpersisted
+# once the stage's output is materialized or written
+
+
+def _neardup_kwargs(a) -> dict:
+    return dict(text_col="text", id_col="url", shingle_n=a.shingle_n,
+                jaccard_n=a.jaccard_n, threshold=a.jaccard_threshold,
+                max_bucket_size=a.max_bucket_size)
+
+
+def _exact(df, a, held):
+    return dedup.exact_dedup(df, text_col="text", id_col="url"), {}
+
+
+def _canonical(df, a, held):
+    return dedup.canonical_dedup(df, text_col="text", id_col="url"), {}
+
+
+def _line(df, a, held):
+    ld = dedup.line_dedup(df, min_doc_count=a.min_line_docs,
+                          text_col="text", id_col="url",
+                          unit=a.unit).persist()
+    held.append(ld)
+    lines_dropped = int(ld.agg(F.sum("n_lines_dropped")).collect()[0][0]
+                        or 0)
+    # LEFT join: null-text docs never enter line_dedup's output and must
+    # pass through untouched (null is absence, never dropped)
+    kept = (df.join(ld.select("url", "text_deduped"), "url", "left")
+            .withColumn("text", F.coalesce("text_deduped", "text"))
+            .drop("text_deduped"))
+    return kept, {"lines_dropped": lines_dropped}
+
+
+def _substring(df, a, held):
+    # Lee et al. remediation at document granularity: heavy substring
+    # duplication marks templates/mirrors; dropping whole docs is the
+    # bucket-resume-safe operation. Blanks are absence and always survive
+    # (the summary only scores non-blank docs).
+    from data_quality_autohealer_spark.operators import contamination
+    heavy = (contamination.dup_substring_summary(
+        df, text_col="text", id_col="url", k=a.substring_k)
+        .where(F.col("dup_word_frac") > a.max_dup_word_frac)
+        .select("url"))
+    return df.join(heavy, "url", "left_anti"), {}
+
+
+def _novelty(df, a, held):
+    # corpus n-gram novelty below the floor: nearly every shingle also
+    # appears in other docs (mirrors, generated templates). Set-based,
+    # where substring needs contiguous runs. Null/whitespace docs are
+    # absence: their shared md5('') shingle would score novel_frac 0, so
+    # they never enter the boilerplate set.
+    boiler = (dedup.ngram_novelty(
+                  df.where(F.expr("trim(coalesce(text, '')) != ''")),
+                  text_col="text", id_col="url")
+              .where(F.col("novel_frac") < a.min_novelty)
+              .select("url"))
+    return df.join(boiler, "url", "left_anti"), {}
+
+
+def _decontaminate(df, a, held):
+    return dedup.decontaminate(
+        df, os.path.join(a.warehouse, a.index_table), **_neardup_kwargs(a)
+    ), {}
+
+
+def _neardup(df, a, held):
+    kwargs = _neardup_kwargs(a)
+    if not a.keep_best:
+        return dedup.neardup_dedup(df, **kwargs), {}
+    # quality-aware survivors: per cluster keep the member with the highest
+    # distilled-classifier score instead of min-id (clusters mix a clean
+    # page with boilerplate mirrors). The classifier trains on the corpus's
+    # own heuristic keep/drop labels — no model artifact needed.
+    from data_quality_autohealer_spark.operators import distill, scoring
+    scores = distill.distill_quality_classifier_fast(
+        scoring.with_quality_signals_batched(df), id_col="url",
+    ).select("url", "score_micro")
+    return dedup.neardup_dedup_keep_best(
+        df, scores, score_col="score_micro", **kwargs), {}
+
+
+STAGES = {"exact": _exact, "canonical": _canonical, "line": _line,
+          "substring": _substring, "novelty": _novelty,
+          "decontaminate": _decontaminate, "neardup": _neardup}
+
+MODES = {name: [name] for name in STAGES}
+MODES.update({"neardup": ["exact", "neardup"],
+              "full": ["exact", "line", "substring", "neardup"]})
+
+
+def run_stages(wh, pages, n_in: int, names: list[str], a) -> list[dict]:
+    """Run ``names`` in order over ``pages`` and write the last stage's
+    output to ``a.out_table``; returns one counts dict per stage."""
+    stages, cur, n_cur = [], pages, n_in
+    for i, name in enumerate(names):
+        held: list = []
+        out, extra = STAGES[name](cur, a, held)
+        if i < len(names) - 1:
+            out = out.persist()
+            n_out = out.count()
+        else:
+            out = out.drop("bucket")
+            wh.write_pages(out, table=a.out_table)
+            # pinned schema: no inference job, and an empty output reads
+            # as 0 rows
+            n_out = wh.read_table(a.out_table, out.schema).count()
+        for df in held + ([cur] if i else []):
+            df.unpersist()
+        stages.append({"stage": name, "docs_in": n_cur, "docs_out": n_out,
+                       "removed": n_cur - n_out, **extra})
+        cur, n_cur = out, n_out
+    return stages
+
 
 def main(argv: list[str] | None = None) -> dict:
     p = argparse.ArgumentParser()
     p.add_argument("--warehouse", required=True)
     p.add_argument("--pages-table", default="pages")
     p.add_argument("--out-table", default="pages_deduped")
-    p.add_argument("--mode", choices=["exact", "neardup", "canonical",
-                                      "line", "index", "decontaminate",
-                                      "substring", "novelty", "full"],
-                   default="exact")
+    p.add_argument("--mode", choices=[*MODES, "index"], default="exact")
     p.add_argument("--min-novelty", type=float, default=0.2,
                    help="--mode novelty drops docs whose corpus n-gram "
                         "novelty (ngram_novelty.novel_frac) is below this")
@@ -76,18 +207,16 @@ def main(argv: list[str] | None = None) -> dict:
                    help="dedup grain for --mode line: newline lines or "
                         "blank-line paragraphs (CCNet granularity)")
     p.add_argument("--keep-best", action="store_true",
-                   help="neardup mode: keep the highest-quality cluster "
-                        "member (distilled-classifier score, tie min id) "
-                        "instead of the min-id representative")
+                   help="neardup stage (modes neardup, full): keep the "
+                        "highest-quality cluster member (distilled-"
+                        "classifier score, tie min id) instead of the "
+                        "min-id representative")
     p.add_argument("--master", default=None)
     p.add_argument("--generate", type=int, default=0,
                    help="generate N synthetic pages into the warehouse first")
     args = p.parse_args(argv)
 
-    from pyspark.sql import functions as F
-
     from data_quality_autohealer_spark import synth
-    from data_quality_autohealer_spark.operators import dedup
     from data_quality_autohealer_spark.session import get_spark
     from data_quality_autohealer_spark.warehouse import AUDIT_SCHEMA, Warehouse
 
@@ -125,229 +254,36 @@ def main(argv: list[str] | None = None) -> dict:
         return {"mode": "index", "docs_in": n_in, "indexed": n_idx,
                 "index_path": idx_path, "sec": sec}
 
-    if args.mode == "full":
-        # the whole hygiene stack, canonical order (VERDICT r05 #6):
-        #   exact -> line -> substring -> neardup
-        # Exact first kills the LSH mega-buckets (identical text shares
-        # every band); line dedup next so boilerplate lines don't inflate
-        # substring/neardup similarity; substring drops template-dominated
-        # docs; neardup last over the already-thinned corpus. Each stage
-        # materializes (persist + count) so the audit trail reconciles
-        # EXACTLY: stage k's docs_in == stage k-1's docs_out, and
-        # n_in == docs_out_final + sum(removed).
-        from data_quality_autohealer_spark.operators import contamination
-        t0 = time.perf_counter()
-        stages = []
-        lines_dropped = 0
-
-        def _materialize(df):
-            df = df.persist()
-            return df, df.count()
-
-        cur, n_cur = pages.persist(), n_in
-        # 1. exact
-        nxt, n_nxt = _materialize(
-            dedup.exact_dedup(cur, text_col="text", id_col="url"))
-        stages.append({"stage": "exact", "docs_in": n_cur,
-                       "docs_out": n_nxt, "removed": n_cur - n_nxt})
-        cur.unpersist()
-        cur, n_cur = nxt, n_nxt
-        # 2. line (doc count unchanged; rewrites text; --unit paragraph
-        # swaps the grain)
-        ld = dedup.line_dedup(cur, min_doc_count=args.min_line_docs,
-                              text_col="text", id_col="url",
-                              unit=args.unit).persist()
-        lines_dropped = int(ld.agg(
-            F.sum("n_lines_dropped")).collect()[0][0] or 0)
-        # LEFT join: null-text docs never enter line_dedup's output and
-        # must pass through untouched (null is absence, never dropped)
-        nxt, n_nxt = _materialize(
-            cur.join(ld.select("url", "text_deduped"), "url", "left")
-               .withColumn("text", F.coalesce("text_deduped", "text"))
-               .drop("text_deduped"))
-        stages.append({"stage": "line", "docs_in": n_cur,
-                       "docs_out": n_nxt, "removed": n_cur - n_nxt,
-                       "lines_dropped": lines_dropped})
-        ld.unpersist()
-        cur.unpersist()
-        cur, n_cur = nxt, n_nxt
-        # 3. substring (drop template/mirror docs dominated by duplicated
-        # runs; blanks are absence and always survive — the summary only
-        # scores non-blank docs)
-        heavy = (contamination.dup_substring_summary(
-            cur, text_col="text", id_col="url", k=args.substring_k)
-            .where(F.col("dup_word_frac") > args.max_dup_word_frac)
-            .select("url"))
-        nxt, n_nxt = _materialize(cur.join(heavy, "url", "left_anti"))
-        stages.append({"stage": "substring", "docs_in": n_cur,
-                       "docs_out": n_nxt, "removed": n_cur - n_nxt})
-        cur.unpersist()
-        cur, n_cur = nxt, n_nxt
-        # 4. neardup — honors --keep-best (ADVICE r06: the flag was
-        # silently ignored in full mode): survivors by best distilled-
-        # classifier score over the already-thinned corpus, else min-id
-        kwargs4 = dict(text_col="text", id_col="url",
-                       shingle_n=args.shingle_n, jaccard_n=args.jaccard_n,
-                       threshold=args.jaccard_threshold,
-                       max_bucket_size=args.max_bucket_size)
-        if args.keep_best:
-            from data_quality_autohealer_spark.operators import (
-                distill, scoring,
-            )
-            scores4 = distill.distill_quality_classifier_fast(
-                scoring.with_quality_signals_batched(cur), id_col="url",
-            ).select("url", "score_micro")
-            stage4 = dedup.neardup_dedup_keep_best(
-                cur, scores4, score_col="score_micro", **kwargs4)
-        else:
-            stage4 = dedup.neardup_dedup(cur, **kwargs4)
-        nxt, n_nxt = _materialize(stage4.drop("bucket"))
-        stages.append({"stage": "neardup", "docs_in": n_cur,
-                       "docs_out": n_nxt, "removed": n_cur - n_nxt})
-        cur.unpersist()
-
-        wh.write_pages(nxt, table=args.out_table)
-        n_out = wh.read_pages(args.out_table).count()
-        nxt.unpersist()
-        sec = round(time.perf_counter() - t0, 2)
-        assert n_out == n_nxt, (n_out, n_nxt)
-        assert n_in == n_out + sum(s["removed"] for s in stages), \
-            (n_in, n_out, stages)  # stages partition the input
-        now = datetime.datetime.now()
-        wh.append_audit(spark.createDataFrame(
-            [(f"dedup-full-{s['stage']}", "dedup", s["docs_in"],
-              round(s["removed"] / max(s["docs_in"], 1), 6), "ok",
-              f"full-chain stage {i + 1}/4 {s['stage']}: "
-              f"{s['docs_in']} -> {s['docs_out']} docs", now)
-             for i, s in enumerate(stages)], AUDIT_SCHEMA))
-        return {"mode": "full", "docs_in": n_in, "docs_out": n_out,
-                "removed": n_in - n_out, "lines_dropped": lines_dropped,
-                "stages": stages, "sec": sec}
-
     t0 = time.perf_counter()
-    lines_dropped = None
-    cached = []  # unpersisted once the output table is written + counted
-    if args.mode == "exact":
-        deduped = dedup.exact_dedup(pages, text_col="text", id_col="url")
-    elif args.mode == "canonical":
-        deduped = dedup.canonical_dedup(pages, text_col="text",
-                                        id_col="url")
-    elif args.mode == "decontaminate":
-        # drop pages near-duplicating the STORED index (a prior corpus):
-        # ref text is never read — the index carries buckets + shingles.
-        # read_signature_index verifies the params sidecar and FAILS
-        # LOUDLY when it is absent (advice-r04: a skipped check is how a
-        # mismatched index silently flags nothing)
-        idx_path = os.path.join(args.warehouse, args.index_table)
-        index = dedup.read_signature_index(
-            spark, idx_path,
-            params=dedup.signature_index_params(
-                shingle_n=args.shingle_n, jaccard_n=args.jaccard_n))
-        flagged = dedup.neardup_against_index(
-            pages, index, text_col="text", id_col="url",
-            shingle_n=args.shingle_n, jaccard_n=args.jaccard_n,
-            threshold=args.jaccard_threshold,
-            max_bucket_size=args.max_bucket_size
-        ).select(F.col("new_id").alias("url")).distinct()
-        deduped = pages.join(flagged, "url", "left_anti")
-    elif args.mode == "substring":
-        # drop docs dominated by corpus-duplicated substrings (Lee et al.
-        # remediation at document granularity: heavy substring duplication
-        # marks templates/mirrors; span-level text surgery is left to a
-        # downstream rewrite since dropping whole docs is the
-        # bucket-resume-safe operation here)
-        from data_quality_autohealer_spark.operators import contamination
-        heavy = (contamination.dup_substring_summary(
-            pages, text_col="text", id_col="url", k=args.substring_k)
-            .where(F.col("dup_word_frac") > args.max_dup_word_frac)
-            .select("url"))
-        deduped = pages.join(heavy, "url", "left_anti")
-    elif args.mode == "novelty":
-        # drop boilerplate/template docs: corpus n-gram novelty below the
-        # floor means nearly every shingle also appears in other docs
-        # (mirror pages, generated templates). Complementary to substring
-        # mode: novelty is set-based (any shared shingle), substring
-        # requires contiguous runs.
-        # null/whitespace-only docs are ABSENCE, not boilerplate: their
-        # coalesced '' text collapses to the single md5('') shingle, so any
-        # two blanks would score novel_frac=0 and be silently dropped
-        # (advice-r05). Pre-filter them out of the boiler set (mirroring
-        # dup_substring_spans' non-blank gate) — blanks always survive.
-        boiler = (dedup.ngram_novelty(
-                      pages.where(F.expr("trim(coalesce(text, '')) != ''")),
-                      text_col="text", id_col="url")
-                  .where(F.col("novel_frac") < args.min_novelty)
-                  .select("url"))
-        deduped = pages.join(boiler, "url", "left_anti")
-    elif args.mode == "line":
-        ld = dedup.line_dedup(pages, min_doc_count=args.min_line_docs,
-                              text_col="text", id_col="url",
-                              unit=args.unit).persist()
-        cached.append(ld)
-        lines_dropped = int(ld.agg(
-            F.sum("n_lines_dropped")).collect()[0][0] or 0)
-        # LEFT join: null-text docs never enter line_dedup's output and
-        # must pass through untouched (null is absence, never dropped)
-        deduped = (pages
-                   .join(ld.select("url", "text_deduped"), "url", "left")
-                   .withColumn("text",
-                               F.coalesce("text_deduped", "text"))
-                   .drop("text_deduped"))
-    else:
-        # exact dedup FIRST: identical-text clusters are the worst LSH
-        # mega-buckets (every member shares every band); removing them
-        # upstream keeps the band self-join fan-out to genuine near-dups
-        exact = dedup.exact_dedup(pages, text_col="text", id_col="url")
-        exact = exact.persist()
-        cached.append(exact)
-        exact.count()
-        kwargs = dict(text_col="text", id_col="url",
-                      shingle_n=args.shingle_n, jaccard_n=args.jaccard_n,
-                      threshold=args.jaccard_threshold,
-                      max_bucket_size=args.max_bucket_size)
-        if args.keep_best:
-            # quality-aware survivors: per cluster keep the member with
-            # the highest distilled-classifier score instead of min-id
-            # (clusters mix a clean page with boilerplate mirrors). The
-            # classifier trains on the corpus's own heuristic keep/drop
-            # labels — deterministic, no model artifact needed.
-            from data_quality_autohealer_spark.operators import (
-                distill, scoring,
-            )
-            scores = distill.distill_quality_classifier_fast(
-                scoring.with_quality_signals_batched(exact), id_col="url",
-            ).select("url", "score_micro")
-            deduped = dedup.neardup_dedup_keep_best(
-                exact, scores, score_col="score_micro", **kwargs)
-        else:
-            deduped = dedup.neardup_dedup(exact, **kwargs)
-    wh.write_pages(deduped.drop("bucket"), table=args.out_table)
-    try:
-        n_out = wh.read_pages(args.out_table).count()
-    except Exception as e:  # pragma: no cover - exercised via CLI edge
-        # every doc removed (e.g. decontaminating a corpus against its own
-        # index): the empty parquet dir carries no schema to infer
-        if "UNABLE_TO_INFER_SCHEMA" not in str(e):
-            raise
-        n_out = 0
-    for df in cached:
-        df.unpersist()
+    stages = run_stages(wh, pages, n_in, MODES[args.mode], args)
     sec = round(time.perf_counter() - t0, 2)
+    n_out = stages[-1]["docs_out"]
+    for prev, nxt in zip(stages, stages[1:]):
+        assert nxt["docs_in"] == prev["docs_out"], stages
+    assert n_in == n_out + sum(s["removed"] for s in stages), \
+        (n_in, n_out, stages)  # stages partition the input
+    lines = [s["lines_dropped"] for s in stages if "lines_dropped" in s]
 
-    detail = f"{args.mode} dedup {n_in} -> {n_out} docs in {sec}s"
-    if lines_dropped is not None:
-        detail += f" ({lines_dropped} duplicate lines removed)"
-    audit = spark.createDataFrame(
-        [(f"dedup-{args.mode}", "dedup", n_in,
-          round(1.0 - n_out / max(n_in, 1), 6), "ok", detail,
-          datetime.datetime.now())], AUDIT_SCHEMA)
-    wh.append_audit(audit)
+    now = datetime.datetime.now()
+    if args.mode == "full":
+        rows = [(f"dedup-full-{s['stage']}", "dedup", s["docs_in"],
+                 round(s["removed"] / max(s["docs_in"], 1), 6), "ok",
+                 f"full-chain stage {i + 1}/{len(stages)} {s['stage']}: "
+                 f"{s['docs_in']} -> {s['docs_out']} docs", now)
+                for i, s in enumerate(stages)]
+    else:
+        detail = f"{args.mode} dedup {n_in} -> {n_out} docs in {sec}s"
+        if lines:
+            detail += f" ({sum(lines)} duplicate lines removed)"
+        rows = [(f"dedup-{args.mode}", "dedup", n_in,
+                 round(1.0 - n_out / max(n_in, 1), 6), "ok", detail, now)]
+    wh.append_audit(spark.createDataFrame(rows, AUDIT_SCHEMA))
 
     summary = {"mode": args.mode, "docs_in": n_in, "docs_out": n_out,
-               "removed": n_in - n_out, "sec": sec}
-    if lines_dropped is not None:
-        summary["lines_dropped"] = lines_dropped
-    return summary
+               "removed": n_in - n_out}
+    if lines:
+        summary["lines_dropped"] = sum(lines)
+    return {**summary, "stages": stages, "sec": sec}
 
 
 if __name__ == "__main__":

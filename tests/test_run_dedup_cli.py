@@ -1,9 +1,36 @@
-"""In-process tests for the run_dedup CLI's round-4 modes (canonical and
-line) — the exact/neardup modes are exercised by docs/SCALE.md runs."""
+"""In-process tests for every run_dedup CLI mode: outputs, summaries, the
+per-stage audit trail and the Spark jobs each mode runs."""
 
 import datetime
 
+import pytest
+
 from jobs import run_dedup
+
+_BOILER = "ACCEPT COOKIES AND SUBSCRIBE"
+_SHARED = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+           "lamda mu nu xi omicron pi rho sigma tau upsilon")
+_BASE = ("the cat sat on the mat and looked at the dog while it "
+         "rained outside all afternoon long")
+# one case per full-mode stage (see test_full_mode_runs_whole_stack...)
+FULL_ROWS = [
+    # exact pair -> one survives stage 1
+    ("http://x1/", "identical page text repeated verbatim elsewhere"),
+    ("http://x2/", "identical page text repeated verbatim elsewhere"),
+    # boilerplate line stripped in stage 2 (docs survive)
+    ("http://l1/", f"{_BOILER}\nreal content about parquet readers one"),
+    ("http://l2/", f"{_BOILER}\nreal content about stream watermarks"),
+    # template doc: one big corpus-duplicated run -> stage 3 drop
+    ("http://t1/", _SHARED),
+    ("http://t2/", _SHARED + " with a small tail"),
+    # near-dup pair (one word changed) -> stage 4 keeps one
+    ("http://n1/", _BASE),
+    ("http://n2/", _BASE.replace("looked", "stared")),
+    # unique + blank (absence; must survive every stage)
+    ("http://u1/", "a genuinely unique page discussing adaptive "
+                   "query execution in considerable depth"),
+    ("http://e1/", None),
+]
 
 
 def _pages(spark, rows):
@@ -12,6 +39,11 @@ def _pages(spark, rows):
         [(u, ts, b"", t, "en") for u, t in rows],
         "url string, warc_ts timestamp, html binary, text string, "
         "lang string")
+
+
+def _kept(wh):
+    return {r["url"] for r in
+            wh.read_pages("pages_deduped").select("url").collect()}
 
 
 def test_canonical_mode_keeps_one_per_normalized_text(spark, tmp_path):
@@ -259,30 +291,7 @@ def test_full_mode_runs_whole_stack_with_reconciled_stages(spark, tmp_path):
     from data_quality_autohealer_spark.warehouse import Warehouse
     wh_dir = str(tmp_path / "wh")
     wh = Warehouse(spark, wh_dir)
-    boiler = "ACCEPT COOKIES AND SUBSCRIBE"
-    shared = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-              "lamda mu nu xi omicron pi rho sigma tau upsilon")
-    base = ("the cat sat on the mat and looked at the dog while it "
-            "rained outside all afternoon long")
-    rows = [
-        # exact pair -> one survives stage 1
-        ("http://x1/", "identical page text repeated verbatim elsewhere"),
-        ("http://x2/", "identical page text repeated verbatim elsewhere"),
-        # boilerplate line stripped in stage 2 (docs survive)
-        ("http://l1/", f"{boiler}\nreal content about parquet readers one"),
-        ("http://l2/", f"{boiler}\nreal content about stream watermarks"),
-        # template doc: one big corpus-duplicated run -> stage 3 drop
-        ("http://t1/", shared),
-        ("http://t2/", shared + " with a small tail"),
-        # near-dup pair (one word changed) -> stage 4 keeps one
-        ("http://n1/", base),
-        ("http://n2/", base.replace("looked", "stared")),
-        # unique + blank (absence; must survive every stage)
-        ("http://u1/", "a genuinely unique page discussing adaptive "
-                       "query execution in considerable depth"),
-        ("http://e1/", None),
-    ]
-    wh.write_pages(_pages(spark, rows))
+    wh.write_pages(_pages(spark, FULL_ROWS))
     out = run_dedup.main(["--warehouse", wh_dir, "--mode", "full",
                           "--jaccard-threshold", "0.5",
                           "--max-dup-word-frac", "0.8"])
@@ -311,6 +320,50 @@ def test_full_mode_runs_whole_stack_with_reconciled_stages(spark, tmp_path):
     msgs = [r["message"] for r in wh.read_audit().collect()]
     for i, st in enumerate(["exact", "line", "substring", "neardup"]):
         assert any(f"stage {i + 1}/4 {st}" in m for m in msgs)
+
+
+@pytest.mark.parametrize("mode, stages, kept", [
+    # one keep per exact pair; everything else untouched
+    ("exact", ["exact"], {u for u, _ in FULL_ROWS} - {"http://x2/"}),
+    # exact pre-pass, then one keep per near-dup cluster (min id); the
+    # shared boilerplate line makes l1/l2 near-duplicates too
+    ("neardup", ["exact", "neardup"],
+     {u for u, _ in FULL_ROWS} - {"http://x2/", "http://l2/",
+                                  "http://n2/", "http://t2/"}),
+])
+def test_exact_and_neardup_modes(spark, tmp_path, mode, stages, kept):
+    from data_quality_autohealer_spark.warehouse import Warehouse
+    wh_dir = str(tmp_path / "wh")
+    wh = Warehouse(spark, wh_dir)
+    wh.write_pages(_pages(spark, FULL_ROWS))
+    out = run_dedup.main(["--warehouse", wh_dir, "--mode", mode])
+    assert _kept(wh) == kept
+    assert {k: out[k] for k in ("mode", "docs_in", "docs_out", "removed")} \
+        == {"mode": mode, "docs_in": 10, "docs_out": len(kept),
+            "removed": 10 - len(kept)}
+    assert [s["stage"] for s in out["stages"]] == stages
+    assert out["stages"][-1]["docs_out"] == len(kept)
+    [audit] = wh.read_audit().collect()
+    assert (audit["run_id"], audit["step"]) == (f"dedup-{mode}", "dedup")
+    assert audit["message"].startswith(
+        f"{mode} dedup 10 -> {len(kept)} docs in ")
+
+
+@pytest.mark.parametrize("mode", ["substring", "full"])
+def test_every_doc_removed_writes_empty_table(spark, tmp_path, mode):
+    """A stage that removes every doc (three pages of one template) leaves
+    an empty output table that counts as 0 docs in every mode."""
+    from data_quality_autohealer_spark.warehouse import Warehouse
+    wh_dir = str(tmp_path / "wh")
+    wh = Warehouse(spark, wh_dir)
+    wh.write_pages(_pages(spark, [(f"http://tp{i}/", _SHARED + f" page {i}")
+                                  for i in range(3)]))
+    out = run_dedup.main(["--warehouse", wh_dir, "--mode", mode,
+                          "--max-dup-word-frac", "0.5"])
+    assert out["docs_in"] == 3 and out["docs_out"] == 0
+    assert out["removed"] == 3
+    assert wh.read_table("pages_deduped",
+                         wh.read_pages().schema).count() == 0
 
 
 def test_novelty_mode_drops_template_docs(spark, tmp_path):
@@ -374,17 +427,54 @@ def test_neardup_keep_best_prefers_quality_over_min_id(spark, tmp_path):
         ("http://x2/", "!!! ??? ;;; ||| " * 6),
         ("http://n1/", None),
     ]
-    for flag, expect_survivor in ((["--keep-best"], "http://z9/"),
-                                  ([], "http://a0/")):
-        wh_dir = str(tmp_path / f"wh{'kb' if flag else 'min'}")
+    # full mode runs the same neardup stage last; a 1.0 substring cut
+    # keeps the cluster (z9 is one duplicated run) for it to rank
+    for i, (args, expect_survivor) in enumerate((
+            (["--mode", "neardup", "--keep-best"], "http://z9/"),
+            (["--mode", "neardup"], "http://a0/"),
+            (["--mode", "full", "--keep-best",
+              "--max-dup-word-frac", "1.0"], "http://z9/"))):
+        wh_dir = str(tmp_path / f"wh{i}")
         wh = Warehouse(spark, wh_dir)
         wh.write_pages(_pages(spark, rows))
-        out = run_dedup.main(["--warehouse", wh_dir, "--mode", "neardup",
-                              "--jaccard-threshold", "0.4", *flag])
-        kept = {r["url"] for r in
-                wh.read_pages("pages_deduped").select("url").collect()}
+        out = run_dedup.main(["--warehouse", wh_dir,
+                              "--jaccard-threshold", "0.4", *args])
+        kept = _kept(wh)
         other = "http://a0/" if expect_survivor == "http://z9/" \
             else "http://z9/"
-        assert expect_survivor in kept and other not in kept, (flag, kept)
+        assert expect_survivor in kept and other not in kept, (args, kept)
         assert "http://n1/" in kept            # null text passes through
-        assert out["docs_in"] == 8
+        assert out["docs_in"] == 8 and out["docs_out"] == 7
+        assert out["stages"][-1]["removed"] == 1
+
+
+# Spark jobs one run of each mode (default options) started over FULL_ROWS
+# in this suite's session (local[8], 8 shuffle partitions), measured before
+# the modes were built from one stage table: two runs each, equal except
+# neardup-keep-best (40, then 39; the larger is kept)
+PARENT_JOBS = {"exact": 11, "canonical": 11, "line": 17, "substring": 15,
+               "novelty": 15, "neardup": 33, "neardup-keep-best": 40,
+               "full": 54}
+
+
+def test_jobs_per_mode_at_most_parent(spark, tmp_path):
+    """Each mode starts no more Spark jobs than before; full mode, whose
+    last stage is no longer persisted and counted before the write,
+    strictly fewer."""
+    from data_quality_autohealer_spark.warehouse import Warehouse
+    wh_dir = str(tmp_path / "wh")
+    Warehouse(spark, wh_dir).write_pages(_pages(spark, FULL_ROWS))
+    sc = spark.sparkContext
+    jobs = {}
+    for name in PARENT_JOBS:
+        mode, *flags = name.split("-", 1)
+        group = f"test-dedup-jobs-{tmp_path.name}-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            run_dedup.main(["--warehouse", wh_dir, "--mode", mode,
+                            *(["--keep-best"] if flags else [])])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(jobs[m] <= PARENT_JOBS[m] for m in PARENT_JOBS), jobs
+    assert jobs["full"] < PARENT_JOBS["full"], jobs
