@@ -181,11 +181,11 @@ MAX_LANGID_BYTES = 512  # sample prefix; plenty for language ID (measured
 # 100% slice accuracy at 512B; 4× cheaper than 2 KiB)
 
 
-def _encode_batch(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+def _encode_batch(texts: list) -> tuple[np.ndarray, np.ndarray]:
     """Concatenate a batch's utf-8 bytes (prefix-capped). Returns
     (blob uint8[B], lens int64[n_docs])."""
     raw = [t.encode("utf-8")[:MAX_LANGID_BYTES] if isinstance(t, str) else b""
-           for t in texts.tolist()]
+           for t in texts]
     lens = np.fromiter((len(b) for b in raw), dtype=np.int64, count=len(raw))
     blob = np.frombuffer(b"".join(raw), dtype=np.uint8)
     return blob, lens
@@ -222,7 +222,15 @@ class LangIdModel:
 
     def predict_series(self, texts: pd.Series) -> pd.DataFrame:
         """Batch predict: columns ``lang_pred`` (str) and ``lang_conf``
-        (softmax probability of the argmax, rounded to 6dp).
+        (softmax probability of the argmax, rounded to 6dp)."""
+        pred, conf = self.predict_arrays(texts.tolist())
+        return pd.DataFrame(
+            {"lang_pred": pred, "lang_conf": conf}, index=texts.index
+        )
+
+    def predict_arrays(self, texts: list) -> tuple[np.ndarray, np.ndarray]:
+        """:meth:`predict_series` on a list, as ``(lang_pred, lang_conf)``:
+        an object array and a float64 array; a non-string entry is 'und'.
 
         Fully vectorized: one rolling-hash pass per n-gram order over the
         batch's concatenated bytes, doc-contiguous weight gather, per-doc
@@ -264,9 +272,7 @@ class LangIdModel:
         conf = np.round(p[np.arange(n_docs), best].astype(np.float64), 6)
         pred[empty] = "und"
         conf[empty] = 0.0
-        return pd.DataFrame(
-            {"lang_pred": pred, "lang_conf": conf}, index=texts.index
-        )
+        return pred, conf
 
 
 _MODEL: LangIdModel | None = None

@@ -91,14 +91,20 @@ class PerplexityModel:
         return cls(z["uni"], z["bi"], float(z["total"][0]))
 
     def log_perplexity_series(self, texts: pd.Series) -> pd.Series:
-        """Mean negative log-prob per word (natural log), rounded to 6dp.
+        """Mean negative log-prob per word (natural log), rounded to 6dp."""
+        return pd.Series(self.log_perplexity_array(texts.tolist()),
+                         index=texts.index, name="log_pplx")
+
+    def log_perplexity_array(self, texts: list) -> np.ndarray:
+        """:meth:`log_perplexity_series` on a list, as a float64 array; a
+        non-string entry scores 0.0.
 
         Vectorized across the batch: one flat token list, one hash pass, one
         gather per table, per-doc means via ``np.add.reduceat``.
         """
         tok_lists = [
             (t.lower().split()[:MAX_PPLX_WORDS] if isinstance(t, str) else [])
-            for t in texts.tolist()
+            for t in texts
         ]
         counts = np.fromiter((len(t) for t in tok_lists), dtype=np.int64,
                              count=len(tok_lists))
@@ -132,7 +138,7 @@ class PerplexityModel:
                 sums = np.add.reduceat(logp, offsets[nonempty])
                 out[nonempty] = -sums / counts[nonempty]
         out[counts == 0] = 0.0
-        return pd.Series(np.round(out, 6), index=texts.index, name="log_pplx")
+        return np.round(out, 6)
 
 
 _MODEL: PerplexityModel | None = None

@@ -16,7 +16,6 @@ from decimal import ROUND_HALF_UP, Decimal
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -95,14 +94,14 @@ class SparkOps(_Ops):
 
 
 class PandasOps(_Ops):
-    """Columns of ``frame`` as numpy arrays; no nulls expected (the callers
-    fill every claimed language)."""
+    """Columns of ``frame`` — a DataFrame or a dict of arrays — as numpy
+    arrays; no nulls expected (the callers fill every claimed language)."""
 
-    def __init__(self, frame: pd.DataFrame) -> None:
+    def __init__(self, frame) -> None:
         self._frame = frame
 
     def col(self, name: str) -> np.ndarray:
-        return self._frame[name].to_numpy()
+        return np.asarray(self._frame[name])
 
     @staticmethod
     def case(branches, otherwise):

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
 
 # Order matters: SSN before PHONE (both are digit-dash shapes), EMAIL first
@@ -29,11 +30,14 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 # Mild deterministic toxicity wordlist (placeholder lexicon; swap for a real
-# one in production via config). Lowercase; matched case-insensitively.
+# one in production via config). Lowercase; matched in any ASCII case.
 TOXICITY_WORDS: tuple[str, ...] = (
     "damn", "hell", "crap", "idiot", "moron", "stupid", "jerk", "loser",
 )
-TOX_PATTERN = r"(?i)\b(" + "|".join(TOXICITY_WORDS) + r")\b"
+# ASCII case classes, not (?i): RE2's (?i) folds U+017F (long s) to 's' and
+# U+212A (Kelvin sign) to 'k', Python's re.ASCII and Java's default do not.
+TOX_PATTERN = (r"\b(" + "|".join("".join(f"[{c}{c.upper()}]" for c in w)
+                                  for w in TOXICITY_WORDS) + r")\b")
 TOX_REPLACEMENT = "<TOX>"
 
 # re.ASCII: Python \b is Unicode-aware by default but RE2/DuckDB \b is
@@ -45,65 +49,64 @@ _COMPILED_PII = [(name, re.compile(pat, re.ASCII), repl)
                  for name, pat, repl in PII_PATTERNS]
 _COMPILED_TOX = re.compile(TOX_PATTERN, re.ASCII)
 
-PII_COUNT_COLS = ["n_email", "n_ssn", "n_phone", "n_ip"]
 
-
-# superset pre-filters: every PII pattern requires '@' (email) or a digit
-# (ssn/phone/ip); toxicity requires one of the wordlist stems. Documents
-# matching none of the triggers cannot match any pattern — they skip the 10
-# count/replace passes entirely. False positives just take the slow path and
+# superset pre-filter: every PII pattern requires '@' (email) or a digit
+# (ssn/phone/ip); toxicity requires one of the wordlist stems. A document
+# matching none of the triggers cannot match any pattern — it skips the 5
+# substitution passes entirely. False positives just take the slow path and
 # come out unchanged, so output equality is preserved.
-_DIGIT_RE = re.compile("[0-9]")
-_TOX_TRIGGER = re.compile("(?i)" + "|".join(TOXICITY_WORDS), re.ASCII)
+_SCREEN = re.compile("(?i)@|[0-9]|" + "|".join(TOXICITY_WORDS), re.ASCII)
+_PASSES = ([(pat, repl) for _, pat, repl in _COMPILED_PII]
+           + [(_COMPILED_TOX, TOX_REPLACEMENT)])
+SCRUB_COUNT_COLS = [f"n_{name}" for name, _, _ in PII_PATTERNS] + ["n_tox"]
 
 
-def _scrub_full(s: pd.Series) -> pd.DataFrame:
-    out = pd.DataFrame(index=s.index)
-    for name, pat, repl in _COMPILED_PII:
-        out[f"n_{name}"] = s.str.count(pat).astype("int64")
-        s = s.str.replace(pat, repl, regex=True)
-    out["n_tox"] = s.str.count(_COMPILED_TOX).astype("int64")
-    s = s.str.replace(_COMPILED_TOX, TOX_REPLACEMENT, regex=True)
-    out.insert(0, "scrubbed_text", s)
-    return out
+def scrub_columns(texts: list[str]) -> dict[str, np.ndarray]:
+    """Scrub a list of documents: ``scrubbed_text`` (object array) and the
+    :data:`SCRUB_COUNT_COLS` counts (int64 arrays); a missing (non-string)
+    text scrubs as ''.
+
+    One screen per document; only a document with a potential hit (a few %
+    of a web corpus) runs one ``subn`` per pattern, in pattern order, each
+    counting its matches in the text the previous pattern left. ``subn``
+    counts what ``findall`` counts because no pattern matches the empty
+    string.
+    """
+    out = as_texts(texts)
+    counts = [[0] * len(out) for _ in _PASSES]
+    screen = _SCREEN.search
+    for i, t in enumerate(out):
+        if not screen(t):
+            continue
+        for k, (pat, repl) in enumerate(_PASSES):
+            t, counts[k][i] = pat.subn(repl, t)
+        out[i] = t
+    return {"scrubbed_text": np.array(out, dtype=object),
+            **{c: np.array(n, dtype=np.int64)
+               for c, n in zip(SCRUB_COUNT_COLS, counts)}}
 
 
 def scrub_series(text: pd.Series) -> pd.DataFrame:
-    """Vectorized scrub of a batch of documents.
+    """:func:`scrub_columns` of a batch, aligned to the input index.
 
-    Returns a DataFrame with columns
-    ``scrubbed_text, n_email, n_ssn, n_phone, n_ip, n_tox`` aligned to the
-    input index. This exact function runs inside the Spark pandas UDF and
-    inside the oracle — byte-identical output by construction.
-
-    Fast path: one combined superset regex screens the batch; only documents
-    with a potential hit (a few % of a web corpus) run the 10 sequential
-    count/replace passes — clean documents pass through untouched (identical
-    output by definition: no pattern matched ⇒ all counts 0, text unchanged).
+    Columns ``scrubbed_text, n_email, n_ssn, n_phone, n_ip, n_tox``; a
+    missing text scrubs as ''. The same core runs inside the Spark pandas
+    UDF (through ``scoring.score_batch``) and inside the oracle —
+    byte-identical output by construction.
     """
-    s = text.fillna("")
-    hit = (s.str.contains("@", regex=False)
-           | s.str.contains(_DIGIT_RE, regex=True)
-           | s.str.contains(_TOX_TRIGGER, regex=True))
-    out = pd.DataFrame(index=s.index)
-    out["scrubbed_text"] = s
-    for name, _, _ in PII_PATTERNS:
-        out[f"n_{name}"] = 0
-    out["n_tox"] = 0
-    if hit.any():
-        sub = _scrub_full(s[hit])
-        out.loc[hit, sub.columns] = sub
-    for c in out.columns:
-        if c != "scrubbed_text":
-            out[c] = out[c].astype("int64")
-    return out
+    return pd.DataFrame(scrub_columns(text.tolist()), index=text.index)
+
+
+def as_texts(texts: list) -> list[str]:
+    """A new list of the batch's texts; a missing (non-string) entry is ''."""
+    return [t if isinstance(t, str) else "" for t in texts]
 
 
 def scrub_text(text: str) -> tuple[str, dict[str, int]]:
     """Single-string convenience twin of :func:`scrub_series` (tests)."""
     df = scrub_series(pd.Series([text]))
     row = df.iloc[0]
-    counts = {c: int(row[c]) for c in PII_COUNT_COLS + ["n_tox"]}
+    counts = {c: int(row[c]) for c in SCRUB_COUNT_COLS}
     return row["scrubbed_text"], counts
 
 

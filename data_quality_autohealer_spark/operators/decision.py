@@ -9,8 +9,8 @@ scoring UDF), each emitting a reason code; keep ⇔ no reason fired.
 
 Each rule is written once (``text_heuristics.gopher_rules``,
 :func:`model_rules`) over a ``rule_ops`` namespace: :func:`with_decision`
-renders it as Spark Columns, :func:`decide_frame` evaluates it on a pandas
-frame for the in-process API check.
+renders it as Spark Columns, :func:`decide_frame` evaluates it on numpy
+columns for the in-process API check.
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -99,20 +98,21 @@ def with_decision(df: DataFrame, include_model_rules: bool = True
             .withColumn("confidences", confidences))
 
 
-def decide_frame(scored: pd.DataFrame) -> pd.DataFrame:
-    """:func:`with_decision` (default thresholds) on a pandas frame of
-    ``score_batch`` output plus the claimed ``lang``: the same rules
-    evaluated on numpy. Returns ``keep``, ``reasons`` (sorted list of codes)
-    and ``confidences`` (dict rule -> score), indexed like ``scored``."""
+def decide_frame(scored) -> dict[str, list]:
+    """:func:`with_decision` (default thresholds) on the columns of
+    ``score_batch`` output plus the claimed ``lang`` — a DataFrame or a dict
+    of numpy arrays: the same rules evaluated on numpy. Returns one list
+    per output, in row order: ``keep`` (bool), ``reasons`` (sorted list of
+    codes) and ``confidences`` (dict rule -> score)."""
     o = PandasOps(scored)
     rules = {**th.gopher_rules(o), **model_rules(o)}
     codes = list(rules)
     fired = np.column_stack([f for f, _ in rules.values()]).astype(bool)
     conf = np.column_stack([c for _, c in rules.values()])
     order = sorted(range(len(codes)), key=codes.__getitem__)
-    return pd.DataFrame({
-        "keep": ~fired.any(axis=1),
+    return {
+        "keep": (~fired.any(axis=1)).tolist(),
         "reasons": [[codes[j] for j in order if row[j]]
                     for row in fired.tolist()],
         "confidences": [dict(zip(codes, row)) for row in conf.tolist()],
-    }, index=scored.index)
+    }

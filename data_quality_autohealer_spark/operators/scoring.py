@@ -8,19 +8,25 @@ Iterator[Series] -> Iterator[DataFrame] pandas UDF form so models are
 deserialized once per Python worker, not once per batch (the
 ``spark-submit --py-files``-friendly equivalent of a broadcast variable).
 
-Everything inside the UDF is numpy/pandas vectorized over the batch — no
-per-row Python (mandated by the rebuild's input contract).
+What is batched and what is not: langid and perplexity are numpy passes over
+the whole batch; the Gopher signals tokenize and count in one Python loop
+per document, and the scrub runs one regex screen per document (plus the
+substitution passes on the few that hit). Each kernel returns plain arrays,
+and :func:`score_batch` builds one DataFrame from them per batch.
 """
 
 from __future__ import annotations
 
+import re as _re
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -29,13 +35,8 @@ from pyspark.sql.types import (
 
 from ..functions import langid as _langid
 from ..functions import perplexity as _pplx
-from ..functions.scrub import scrub_series
-
-import re as _re
-
-from pyspark.sql.types import IntegerType
-
 from ..functions.rule_ops import round6
+from ..functions.scrub import as_texts, scrub_columns
 from ..functions.text_heuristics import _SYMBOL_CLASS, _WS_CHARS
 
 SCORE_SCHEMA = StructType([
@@ -67,7 +68,8 @@ _WS_RE = _re.compile("[" + _WS_CHARS + "]+")
 
 def heuristic_signal_batch(text: pd.Series, stopwords: tuple[str, ...]
                            ) -> pd.DataFrame:
-    """All 8 Gopher signals per batch, tokens split ONCE per document.
+    """All 8 Gopher signals per batch (:func:`_signal_arrays`), aligned to
+    the input index; a missing text scores as ''.
 
     Exact same semantics (and HALF_UP 6dp rounding) as the native column
     expressions in functions.text_heuristics — asserted equal in
@@ -76,8 +78,18 @@ def heuristic_signal_batch(text: pd.Series, stopwords: tuple[str, ...]
     interpreted mode ~50× slower than one batched Python pass (SURVEY §7.1.4);
     the native exprs remain the implementation for SQL-oracle-checked queries.
     """
+    return pd.DataFrame(_signal_arrays(text.tolist(), stopwords),
+                        index=text.index)
+
+
+def _signal_arrays(texts: list[str], stopwords: tuple[str, ...]
+                   ) -> dict[str, np.ndarray]:
+    """The 8 signal columns of SCORE_SCHEMA as numpy arrays (word_count and
+    distinct_stopwords int32, the rest float64), tokens split ONCE per
+    document; a missing text scores as ''."""
+    texts = as_texts(texts)
     stops = set(stopwords)
-    n_docs = len(text)
+    n_docs = len(texts)
     cols: dict[str, list] = {
         "word_count": [0] * n_docs, "mean_word_len": [0.0] * n_docs,
         "symbol_ratio": [0.0] * n_docs, "distinct_stopwords": [0] * n_docs,
@@ -89,7 +101,7 @@ def heuristic_signal_batch(text: pd.Series, stopwords: tuple[str, ...]
     alpha_search = _ALPHA_RE.search
     ascii_ws = _WS_CHARS  # the native exprs' exact whitespace set
     ws_split = _WS_RE.split
-    for i, t in enumerate(text.fillna("").tolist()):
+    for i, t in enumerate(texts):
         # tokenize exactly like the native twins: strip leading/trailing
         # ASCII whitespace, split on ASCII whitespace runs (NOT str.split(),
         # which also splits on Unicode whitespace like U+00A0/U+3000)
@@ -99,7 +111,8 @@ def heuristic_signal_batch(text: pd.Series, stopwords: tuple[str, ...]
         w = ws_split(t2)
         wc = len(w)
         cols["word_count"][i] = wc
-        nospace = len(t) - sum(1 for ch in t if ch in ascii_ws)
+        # _WS_CHARS are distinct single characters, so their counts add up
+        nospace = len(t) - sum(map(t.count, ascii_ws))
         cols["mean_word_len"][i] = round6(nospace / wc)
         cols["symbol_ratio"][i] = round6(len(sym_findall(t)) / wc)
         cols["distinct_stopwords"][i] = len(stops.intersection(w))
@@ -117,10 +130,9 @@ def heuristic_signal_batch(text: pd.Series, stopwords: tuple[str, ...]
                 continue
             distinct = len(set(zip(*(w[k:] for k in range(n)))))
             cols[f"dup_{n}gram_frac"][i] = round6(1.0 - distinct / total)
-    out = pd.DataFrame(cols, index=text.index)
-    out["word_count"] = out["word_count"].astype("int32")
-    out["distinct_stopwords"] = out["distinct_stopwords"].astype("int32")
-    return out
+    return {name: np.array(v, dtype=np.int32 if name in (
+        "word_count", "distinct_stopwords") else np.float64)
+            for name, v in cols.items()}
 
 SCORE_FIELDS = [f.name for f in SCORE_SCHEMA.fields]
 
@@ -151,10 +163,10 @@ def with_signal_columns_batched(df: DataFrame,
     native exprs remain for projection-shaped queries (their cost is pruned
     away) and as the engine-paired oracle twins."""
     from .distill import _spread
-    df = _spread(df).withColumn("_sig", signal_udf(F.col(text_col)))
-    for name in [f.name for f in SIGNAL_SCHEMA.fields]:
-        df = df.withColumn(name, F.col(f"_sig.{name}"))
-    return df.drop("_sig")
+    df = _spread(df)
+    rest = [c for c in df.columns if c not in SIGNAL_SCHEMA.fieldNames()]
+    return (df.select(*rest, signal_udf(F.col(text_col)).alias("_sig"))
+            .select(*rest, "_sig.*"))
 
 
 def with_quality_signals_batched(df: DataFrame,
@@ -172,24 +184,27 @@ MODEL_FIELDS = ["lang_pred", "lang_conf", "log_pplx", "scrubbed_text",
                 "n_email", "n_ssn", "n_phone", "n_ip", "n_tox"]
 
 
-def score_batch(text: pd.Series) -> pd.DataFrame:
-    """Score + scrub + signal one batch (columns in SCORE_SCHEMA order).
-    Shared verbatim by the Spark UDF and the pandas oracle, so model outputs
-    are identical by construction."""
+def score_columns(texts: list[str]) -> dict[str, np.ndarray]:
+    """Score + scrub + signal a list of texts: SCORE_FIELDS -> numpy array,
+    in SCORE_SCHEMA order and dtypes (object for strings); every kernel
+    scores a missing (non-string) text as ''."""
     from ..functions.text_heuristics import DEFAULT_THRESHOLDS
 
-    sig = heuristic_signal_batch(text, DEFAULT_THRESHOLDS.stopwords)
-    lang = _langid.get_model().predict_series(text)
-    pplx = _pplx.get_model().log_perplexity_series(text)
-    scrub = scrub_series(text)
-    out = sig.copy()
-    out["lang_pred"] = lang["lang_pred"]
-    out["lang_conf"] = lang["lang_conf"].astype("float64")
-    out["log_pplx"] = pplx.astype("float64")
-    out["scrubbed_text"] = scrub["scrubbed_text"]
-    for c in ["n_email", "n_ssn", "n_phone", "n_ip", "n_tox"]:
-        out[c] = scrub[c].astype("int64")
-    return out[SCORE_FIELDS]
+    cols = _signal_arrays(texts, DEFAULT_THRESHOLDS.stopwords)
+    cols["lang_pred"], cols["lang_conf"] = (
+        _langid.get_model().predict_arrays(texts))
+    cols["log_pplx"] = _pplx.get_model().log_perplexity_array(texts)
+    cols.update(scrub_columns(texts))
+    return cols
+
+
+def score_batch(text: pd.Series) -> pd.DataFrame:
+    """:func:`score_columns` of one batch as ONE DataFrame aligned to the
+    input index; a missing text scores as ''. Shared verbatim by the Spark
+    UDF and the pandas oracle (the in-process API check calls
+    :func:`score_columns`), so model outputs are identical by
+    construction."""
+    return pd.DataFrame(score_columns(text.tolist()), index=text.index)
 
 
 @F.pandas_udf(returnType=SCORE_SCHEMA)

@@ -45,27 +45,30 @@ def check_documents(texts: list[str], langs: list[str] | None = None,
     """Score ad-hoc documents in this process and return the
     reference-shaped response plus per-document decisions.
 
-    The pipeline's ``score_batch`` runs on chunks of one Arrow batch
-    (``session.ARROW_BATCH_ROWS`` rows, as the Spark UDF sees them), then
-    ``decision.decide_frame`` applies the rule functions that ``with_decision``
-    renders for Spark — so the reply matches ``score_pages`` with no Spark
-    job. The perplexity model is this process's: a drift-retrained artifact
+    The pipeline's scoring core (``scoring.score_columns``, which
+    ``score_batch`` wraps for the Spark UDF) runs on chunks of one Arrow
+    batch (``session.ARROW_BATCH_ROWS`` rows, as the Spark UDF sees them),
+    then ``decision.decide_frame`` applies the rule functions that
+    ``with_decision`` renders for Spark to those columns — so the reply
+    matches ``score_pages`` with no Spark job and no pandas frame. The
+    perplexity model is this process's: a drift-retrained artifact
     reaches the API only through its own ``DQA_PPLX_MODEL`` environment
     variable, not through ``spark.executorEnv``, which configures the batch
     pipeline's Python workers.
     """
-    import pandas as pd
+    import numpy as np
 
     from data_quality_autohealer_spark.operators.decision import (
         SEVERITY_CUTS, decide_frame,
     )
-    from data_quality_autohealer_spark.operators.scoring import score_batch
+    from data_quality_autohealer_spark.operators.scoring import score_columns
     from data_quality_autohealer_spark.session import ARROW_BATCH_ROWS
 
-    text = pd.Series(texts, dtype=object)
-    scored = pd.concat([score_batch(text.iloc[i:i + ARROW_BATCH_ROWS])
-                        for i in range(0, len(text), ARROW_BATCH_ROWS)])
-    scored["lang"] = langs or ["en"] * len(texts)
+    # no documents: one empty chunk, which decides to the 'clean' reply
+    chunks = [score_columns(texts[i:i + ARROW_BATCH_ROWS])
+              for i in range(0, len(texts) or 1, ARROW_BATCH_ROWS)]
+    scored = {c: np.concatenate([ch[c] for ch in chunks]) for c in chunks[0]}
+    scored["lang"] = np.array(langs or ["en"] * len(texts), dtype=object)
     decided = decide_frame(scored)
 
     scores: dict[str, float] = {}
@@ -92,7 +95,7 @@ def check_documents(texts: list[str], langs: list[str] | None = None,
         "severity": severity,
         "recommendations": recommendations,
         "documents": [
-            {"url": f"adhoc://doc/{i}", "keep": bool(keep),
+            {"url": f"adhoc://doc/{i}", "keep": keep,
              "reasons": reasons, "confidences": confidences,
              "scrubbed_text": scrubbed}
             for i, (keep, reasons, confidences, scrubbed) in enumerate(zip(

@@ -91,3 +91,32 @@ def test_pplx_model_comes_from_the_process_env(tmp_path):
     seed = check_documents([doc])["documents"][0]
     assert "perplexity" in seed["reasons"]
     assert "perplexity" not in override["reasons"]
+
+
+def test_no_documents_give_the_clean_reply():
+    assert check_documents([], [], "p0") == {
+        "pipeline_id": "p0",
+        "detected_issues": ["clean"],
+        "scores": {},
+        "severity": "low",
+        "recommendations": ["No quality issues detected"],
+        "documents": [],
+    }
+
+
+def test_chunks_past_one_arrow_batch_join_in_order():
+    """Past ARROW_BATCH_ROWS documents the check scores several chunks;
+    each document's decision is the one it gets in a chunk of its own."""
+    from data_quality_autohealer_spark.session import ARROW_BATCH_ROWS
+
+    pdf = synth.gen_pages_pdf(np.arange(ARROW_BATCH_ROWS + 3))
+    texts, langs = pdf["text"].tolist(), pdf["lang"].tolist()
+    docs = check_documents(texts, langs)["documents"]
+    head = check_documents(texts[:ARROW_BATCH_ROWS],
+                           langs[:ARROW_BATCH_ROWS])["documents"]
+    tail = check_documents(texts[ARROW_BATCH_ROWS:],
+                           langs[ARROW_BATCH_ROWS:])["documents"]
+    def no_url(ds):
+        return [{k: v for k, v in d.items() if k != "url"} for d in ds]
+
+    assert no_url(docs) == no_url(head + tail)

@@ -7,6 +7,8 @@ tokenizer (\\s semantics differ between Java/RE2/Python) and word-boundary
 
 import duckdb
 import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from data_quality_autohealer_spark.functions import scrub as scrub_mod
 from data_quality_autohealer_spark.functions import text_heuristics as th
@@ -117,3 +119,59 @@ def test_ascii_boundary_semantics():
     scrubbed, counts = scrub_mod.scrub_text("damnés")
     assert scrubbed == "<TOX>és"
     assert counts["n_tox"] == 1
+
+
+def _digits(n):
+    return st.text(alphabet="0123456789", min_size=n, max_size=n)
+
+
+def _mixed_case(word):
+    # each letter in either case; U+017F (long s) and U+212A (Kelvin sign)
+    # fold to 's'/'k' under Unicode case-insensitivity but not ASCII
+    variants = {"s": "sS\u017f", "k": "kK\u212a"}
+    return st.tuples(*[st.sampled_from(variants.get(c, c + c.upper()))
+                       for c in word]).map("".join)
+
+
+_EMAIL = st.one_of(
+    st.just("a@b.cc@d.ee"),
+    st.builds("{}@{}.{}".format,
+              st.text(alphabet="abcXYZ019._%+-", min_size=1, max_size=6),
+              st.text(alphabet="abcz09.-", min_size=1, max_size=6),
+              st.text(alphabet="abcXYZ", min_size=1, max_size=4)))
+_SSN = st.builds("{}-{}-{}".format, _digits(3), _digits(2), _digits(4))
+_SEP = st.sampled_from(["-", ".", " "])
+_PHONE = st.builds(
+    "{}{}{}{}{}{}{}{}".format,
+    st.sampled_from(["", "+1 ", "+1-", "1.", "+1.", "1 "]),
+    st.sampled_from(["", "("]), _digits(3), st.sampled_from(["", ")"]),
+    _SEP, _digits(3), _SEP, _digits(4))
+_DOTTED = st.integers(4, 5).flatmap(lambda n: st.lists(
+    st.text(alphabet="0123456789", min_size=1, max_size=3),
+    min_size=n, max_size=n).map(".".join))
+_TOX = st.sampled_from(scrub_mod.TOXICITY_WORDS).flatmap(_mixed_case)
+# ASCII and non-ASCII neighbours: é, ß, U+3000, NBSP, long s, Kelvin sign
+_NEIGHBOUR = st.sampled_from(
+    [" ", "  ", "\t", "\n", "x", "Z", "_", "7", ".", "-", "@", "(",
+     "\u00e9", "\u00df", "\u3000", "\u00a0", "\u017f", "\u212a"])
+_SCRUB_TEXT = st.lists(st.one_of(_EMAIL, _SSN, _PHONE, _DOTTED, _TOX,
+                                 _NEIGHBOUR), max_size=10).map("".join)
+
+
+@given(st.lists(_SCRUB_TEXT, min_size=1, max_size=8))
+@settings(max_examples=150, deadline=None)
+def test_scrub_matches_re2_on_generated_pii_and_toxicity(texts):
+    """scrub_series against its RE2 twin (duckdb_scrub_sql), which shares
+    no code with it: every count and the scrubbed bytes."""
+    py = scrub_mod.scrub_series(pd.Series(texts))
+    parts = scrub_mod.duckdb_scrub_sql("text")
+    cols = ["scrubbed_text"] + scrub_mod.SCRUB_COUNT_COLS
+    duck = duckdb.connect().execute(
+        "select " + ", ".join(f"{parts[c]} as {c}" for c in cols)
+        + " from (select unnest(?) as text, generate_subscripts(?, 1) as i)"
+        " order by i", [texts, texts]).fetchdf()
+    for i, t in enumerate(texts):
+        assert (py.loc[i, "scrubbed_text"].encode("utf-8")
+                == duck.loc[i, "scrubbed_text"].encode("utf-8")), repr(t)
+        for c in scrub_mod.SCRUB_COUNT_COLS:
+            assert int(py.loc[i, c]) == int(duck.loc[i, c]), (repr(t), c)
