@@ -13,9 +13,10 @@ swap md5 for xxhash64 (one line) — md5 keeps the cross-engine oracle honest.
 Scale notes:
   * exact dedup: one shuffle on the text hash — dedup on md5(text) (fixed
     width) rather than raw text so shuffle rows stay small.
-  * MinHash LSH: signatures are computed shuffle-free per partition (native
-    exprs); the only shuffle is the band-bucket groupBy, whose fan-in is the
-    duplicate-cluster size (bounded by construction).
+  * MinHash LSH: signatures and shingle hashes come from one Arrow pass per
+    doc (build_signature_index, shuffle-free); the only shuffle is the
+    band-bucket groupBy, whose fan-in is the duplicate-cluster size
+    (bounded by construction).
   * SimHash: explode(words) → two-level agg; partial aggregation is
     algebraic so map-side combine keeps the shuffle proportional to
     #distinct (doc, bit) pairs.
@@ -162,10 +163,9 @@ def _py_words(t: str | None) -> list[str]:
     return ws_re.split((t or "").strip(_WS_CHARS))
 
 
-def _py_gram_hashes(t: str | None, n: int, distinct: bool) -> list[int]:
+def _py_gram_hashes(w: list[str], n: int, distinct: bool) -> list[int]:
     """Python twin of _hashed_ngrams (distinct=True) / the _hashed_seq
-    positional variant (distinct=False)."""
-    w = _py_words(t)
+    positional variant (distinct=False), over _py_words output."""
     if len(w) < n:
         grams = [" ".join(w)]
     else:
@@ -189,7 +189,7 @@ def hashed_ngrams_batched_udf(n: int, distinct: bool = True):
     def _hg(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for text in batches:
             yield pd.Series(
-                [_py_gram_hashes(t, n, distinct) for t in text],
+                [_py_gram_hashes(_py_words(t), n, distinct) for t in text],
                 index=text.index)
 
     # nondeterministic: stop filter pushdown from cloning the Arrow node
@@ -210,37 +210,37 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def with_minhash_batched(df: DataFrame, text_col: str = "text", k: int = 8,
-                         shingle_n: int = 3) -> DataFrame:
-    """Batched twin of :func:`with_minhash`: shingle hashing AND the k
-    affine-min signatures in one Arrow crossing (exact int64 arithmetic —
-    a·(h mod 2³⁰)+b < 2⁵¹ never overflows), instead of one interpreted md5
-    per shingle plus k interpreted array-min scans per doc.  Signature
-    values are identical (tests/test_dedup_batched_twins.py); the lazy
-    native version stays for the projection-shaped minhash_signatures
-    query, whose cost count() prunes away."""
+def _signature_udf(k: int, shingle_n: int, jaccard_n: int):
+    """pandas UDF: text → struct<sigs, ngrams>, both array<long>, from ONE
+    tokenisation per doc: the k MinHash signatures of :func:`with_minhash`
+    (affine min over the distinct ``shingle_n``-gram hashes, exact int64
+    arithmetic — a·(h mod 2³⁰)+b < 2⁵¹ never overflows) and the distinct
+    ``jaccard_n``-gram hashes the Jaccard verify reads (the same list when
+    the two n agree).  Values equal the native builders
+    (tests/test_dedup_batched_twins.py); the lazy native with_minhash stays
+    for the projection-shaped minhash_signatures query, whose cost count()
+    prunes away."""
     import numpy as np
 
-    a_vec = np.array([_MH_A + 2 * i for i in range(k)], dtype=np.int64)
-    b_vec = np.array([_MH_B * (i + 1) for i in range(k)], dtype=np.int64)
+    a_vec = np.array([[_MH_A + 2 * i] for i in range(k)], dtype=np.int64)
+    b_vec = np.array([[_MH_B * (i + 1)] for i in range(k)], dtype=np.int64)
 
-    @F.pandas_udf("array<long>")
-    def _sigs(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.pandas_udf("sigs array<long>, ngrams array<long>")
+    def _sig(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for text in batches:
-            out = []
+            sigs, ngrams = [], []
             for t in text:
-                hs = np.array(_py_gram_hashes(t, shingle_n, True),
-                              dtype=np.int64) % _MH_MOD
-                sigs = (a_vec[:, None] * hs[None, :]
-                        + b_vec[:, None]) % _MH_PRIME
-                out.append(sigs.min(axis=1).tolist())
-            yield pd.Series(out, index=text.index)
+                w = _py_words(t)
+                hs = _py_gram_hashes(w, shingle_n, True)
+                h = np.array(hs, dtype=np.int64) % _MH_MOD
+                sigs.append(((a_vec * h + b_vec) % _MH_PRIME)
+                            .min(axis=1).tolist())
+                ngrams.append(hs if jaccard_n == shingle_n
+                              else _py_gram_hashes(w, jaccard_n, True))
+            yield pd.DataFrame({"sigs": sigs, "ngrams": ngrams},
+                               index=text.index)
 
-    df = _spread(df).withColumn(
-        "_sigarr", _sigs.asNondeterministic()(F.col(text_col)))
-    for i in range(k):
-        df = df.withColumn(f"sig_{i}", F.col("_sigarr")[i])
-    return df.drop("_sigarr")
+    return _sig.asNondeterministic()
 
 
 def band_exprs(k: int, rows_per_band: int, engine: str) -> list[str]:
@@ -525,62 +525,18 @@ def with_minhash(df: DataFrame, text_col: str = "text", k: int = 8,
 DEFAULT_MAX_BUCKET = 1000
 
 
-def lsh_candidate_prob(s: float, rows_per_band: int, bands: int) -> float:
-    """P(two docs with Jaccard ``s`` share at least one band) — the
-    standard S-curve 1 − (1 − s^r)^b (Leskovec et al., MMDS ch.3)."""
-    return 1.0 - (1.0 - s ** rows_per_band) ** bands
-
-
-def plan_lsh_bands(threshold: float, k: int = 8) -> dict:
-    """Pick (rows_per_band, bands) for a k-signature LSH at a target
-    Jaccard ``threshold``: among divisors r of k, minimize the distance
-    between the S-curve's steepest point (1/b)^(1/r) and the threshold.
-    Returns the plan plus the catch probability AT the threshold and the
-    false-candidate probability one notch (0.2) below — the two numbers
-    that justify a production (r, b) choice. Driver-side arithmetic only
-    (k is tiny); compose with :func:`minhash_lsh_pairs`."""
-    if not (0.0 < threshold < 1.0):
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    best = None
-    for r in range(1, k + 1):
-        if k % r:
-            continue
-        b = k // r
-        knee = (1.0 / b) ** (1.0 / r)
-        cand = {
-            "rows_per_band": r, "bands": b,
-            "knee": round(knee, 6),
-            "p_at_threshold": round(
-                lsh_candidate_prob(threshold, r, b), 6),
-            "p_below": round(
-                lsh_candidate_prob(max(threshold - 0.2, 0.0), r, b), 6),
-        }
-        if best is None or (abs(knee - threshold)
-                            < abs(best["knee"] - threshold)):
-            best = cand
-    return best
-
-
-def _stacked_buckets(df: DataFrame, text_col: str, id_col: str, k: int,
-                     rows_per_band: int, shingle_n: int,
-                     max_bucket_size: int | None) -> DataFrame:
-    """(id, band-bucket) rows: signatures → band keys → exploded stack,
-    with buckets above ``max_bucket_size`` dropped via a window count over
-    the same bucket key any downstream join shuffles on (exchange reused).
-    Sig columns stay staged (with_minhash runs the md5 pass once per doc).
-    """
+def _stack(index_df: DataFrame, id_col: str,
+           max_bucket_size: int | None) -> DataFrame:
+    """(id, bucket) rows of a :func:`build_signature_index` frame, with
+    buckets above ``max_bucket_size`` dropped via a window count over the
+    same bucket key any downstream join shuffles on (exchange reused).
+    explode_outer, because a plain explode gets an inferred size() > 0
+    filter re-evaluating every band md5 below it; buckets is never empty,
+    so the rows are the same."""
     from pyspark.sql.window import Window
 
-    sig = with_minhash_batched(df.select(id_col, text_col), text_col, k,
-                               shingle_n)
-    n_bands = k // rows_per_band
-    banded = sig.selectExpr(id_col, *band_exprs(k, rows_per_band, "spark"))
-    stacked = banded.select(
-        F.col(id_col),
-        F.explode(F.array(*[
-            F.concat(F.lit(f"{b}:"), F.col(f"band_{b}")) for b in range(n_bands)
-        ])).alias("bucket"),
-    )
+    stacked = index_df.select(F.col(id_col),
+                              F.explode_outer("buckets").alias("bucket"))
     if max_bucket_size is not None:
         w = Window.partitionBy("bucket")
         stacked = (stacked
@@ -588,6 +544,18 @@ def _stacked_buckets(df: DataFrame, text_col: str, id_col: str, k: int,
                    .where(F.col("_bsz") <= max_bucket_size)
                    .drop("_bsz"))
     return stacked
+
+
+def _lsh_pairs(index_df: DataFrame, id_col: str,
+               max_bucket_size: int | None) -> DataFrame:
+    """(id_a, id_b) with id_a < id_b: docs sharing a capped band bucket."""
+    stacked = _stack(index_df, id_col, max_bucket_size)
+    a, b = stacked.alias("a"), stacked.alias("b")
+    return (a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
+                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+            .select(F.col(f"a.{id_col}").alias("id_a"),
+                    F.col(f"b.{id_col}").alias("id_b"))
+            .distinct())
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
@@ -607,18 +575,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     shuffles on, so the exchange is reused (one shuffle, not two).
     ``max_bucket_size=None`` disables the cap (oracle/testing only).
     """
-    stacked = _stacked_buckets(df, text_col, id_col, k, rows_per_band,
-                               shingle_n, max_bucket_size)
-    a = stacked.alias("a")
-    b = stacked.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return pairs
+    return _lsh_pairs(
+        build_signature_index(df, text_col, id_col, k, rows_per_band,
+                              shingle_n, jaccard_n=shingle_n),
+        id_col, max_bucket_size)
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
@@ -649,6 +609,30 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     )
 
 
+def _verify(cand: DataFrame, left: DataFrame, right: DataFrame,
+            threshold: float) -> DataFrame:
+    """Jaccard verify of candidate pairs over hashed shingle sets.
+    ``cand``'s two columns name the pair's ids; ``left`` / ``right`` are
+    (id, ngrams) frames for the first / second id. Returns the pairs with
+    ``jaccard`` at/above ``threshold``.
+
+    The intersection SIZE is staged as a column referenced twice (numerator
+    + union-size identity |A∪B| = |A|+|B|−|A∩B|): one array pass per pair,
+    and the threshold filter inlines only cheap scalar arithmetic instead
+    of re-evaluating the array intersect under predicate pushdown."""
+    a_id, b_id = cand.columns
+    sized = (cand.join(left.toDF(a_id, "_ng_a"), a_id)
+             .join(right.toDF(b_id, "_ng_b"), b_id)
+             .select(a_id, b_id,
+                     F.size(F.array_intersect("_ng_a", "_ng_b")).alias("_i"),
+                     F.size("_ng_a").alias("_sa"),
+                     F.size("_ng_b").alias("_sb")))
+    jac = F.round(F.col("_i")
+                  / (F.col("_sa") + F.col("_sb") - F.col("_i")), 6)
+    return (sized.select(a_id, b_id, jac.alias("jaccard"))
+            .where(F.col("jaccard") >= threshold))
+
+
 def jaccard_verify_pairs(df: DataFrame, candidates: DataFrame,
                          text_col: str = "text", id_col: str = "doc_id",
                          n: int = 3, threshold: float = 0.5) -> DataFrame:
@@ -668,21 +652,7 @@ def jaccard_verify_pairs(df: DataFrame, candidates: DataFrame,
     ng = _spread(df).select(
         F.col(id_col),
         hashed_ngrams_batched_udf(n)(F.col(text_col)).alias("ngrams"))
-    a = ng.select(F.col(id_col).alias("id_a"), F.col("ngrams").alias("_ng_a"))
-    b = ng.select(F.col(id_col).alias("id_b"), F.col("ngrams").alias("_ng_b"))
-    # stage the intersection SIZE as a column referenced twice (numerator +
-    # union-size identity |A∪B| = |A|+|B|−|A∩B|): one array pass per pair,
-    # and the threshold filter inlines only cheap scalar arithmetic instead
-    # of re-evaluating the array intersect under predicate pushdown
-    sized = (candidates.join(a, "id_a").join(b, "id_b")
-             .select("id_a", "id_b",
-                     F.size(F.array_intersect("_ng_a", "_ng_b")).alias("_i"),
-                     F.size("_ng_a").alias("_sa"),
-                     F.size("_ng_b").alias("_sb")))
-    jac = F.round(F.col("_i")
-                  / (F.col("_sa") + F.col("_sb") - F.col("_i")), 6)
-    return (sized.select("id_a", "id_b", jac.alias("jaccard"))
-            .where(F.col("jaccard") >= threshold))
+    return _verify(candidates.select("id_a", "id_b"), ng, ng, threshold)
 
 
 def cross_corpus_neardup(new_df: DataFrame, ref_df: DataFrame,
@@ -693,42 +663,15 @@ def cross_corpus_neardup(new_df: DataFrame, ref_df: DataFrame,
                          max_bucket_size: int | None = DEFAULT_MAX_BUCKET
                          ) -> DataFrame:
     """Near-dups of NEW docs against a PRIOR corpus (decontaminating a new
-    crawl against data already in the training set): LSH band equi-join
-    BETWEEN the two corpora — never a self-join of their union, so cost
-    tracks shared buckets, and the new crawl (typically ≪ the accumulated
-    corpus) drives the join's small side — then hashed-shingle Jaccard
-    verify. Returns (new_id, ref_id, jaccard) pairs at/above threshold.
-
-    Bucket cap applies to the REFERENCE side (a mega-bucket there is
-    boilerplate the prior corpus should have exact-deduped) and to the new
-    side symmetrically, matching the DuckDB twin exactly.
-    """
-    sn = _stacked_buckets(new_df, text_col, id_col, k, rows_per_band,
-                          shingle_n, max_bucket_size).alias("n")
-    sr = _stacked_buckets(ref_df, text_col, id_col, k, rows_per_band,
-                          shingle_n, max_bucket_size).alias("r")
-    cand = (sn.join(sr, F.col("n.bucket") == F.col("r.bucket"))
-            .select(F.col(f"n.{id_col}").alias("new_id"),
-                    F.col(f"r.{id_col}").alias("ref_id"))
-            .distinct())
-
-    def _ngrams(df, out_id):
-        return _spread(df).select(
-            F.col(id_col).alias(out_id),
-            hashed_ngrams_batched_udf(jaccard_n)(F.col(text_col))
-            .alias(f"_ng_{out_id}"))
-
-    sized = (cand.join(_ngrams(new_df, "new_id"), "new_id")
-             .join(_ngrams(ref_df, "ref_id"), "ref_id")
-             .select("new_id", "ref_id",
-                     F.size(F.array_intersect("_ng_new_id", "_ng_ref_id"))
-                     .alias("_i"),
-                     F.size("_ng_new_id").alias("_sa"),
-                     F.size("_ng_ref_id").alias("_sb")))
-    jac = F.round(F.col("_i")
-                  / (F.col("_sa") + F.col("_sb") - F.col("_i")), 6)
-    return (sized.select("new_id", "ref_id", jac.alias("jaccard"))
-            .where(F.col("jaccard") >= threshold))
+    crawl against data already in the training set):
+    :func:`neardup_against_index` over the prior corpus's
+    :func:`build_signature_index`. Returns (new_id, ref_id, jaccard) pairs
+    at/above threshold."""
+    ref_index = build_signature_index(ref_df, text_col, id_col, k,
+                                      rows_per_band, shingle_n, jaccard_n)
+    return neardup_against_index(new_df, ref_index, text_col, id_col, k,
+                                 rows_per_band, shingle_n, jaccard_n,
+                                 threshold, max_bucket_size)
 
 
 def duckdb_cross_neardup_sql(new_sql: str, ref_sql: str,
@@ -792,25 +735,26 @@ def build_signature_index(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", k: int = 8,
                           rows_per_band: int = 2, shingle_n: int = 3,
                           jaccard_n: int = 3) -> DataFrame:
-    """Persistable near-dup INDEX of a corpus: one row per doc with its LSH
-    band buckets (array<string>) and hashed Jaccard shingle set
-    (array<bigint>). Write it as a table once per corpus wave; every later
-    decontamination pass (``neardup_against_index``) then runs against the
-    index — tens of bytes per doc — instead of re-tokenizing corpus text.
-    This is how incremental dedup actually runs at 10^12 docs: the text is
-    read once when a doc enters the corpus, never again.
+    """Near-dup INDEX of a corpus: one row per doc with its LSH band
+    buckets (array<string>) and hashed Jaccard shingle set (array<bigint>),
+    from one Arrow pass over the text (:func:`_signature_udf`). Every
+    near-dup operator reads this frame. Written as a table once per corpus
+    wave, it serves every later decontamination pass
+    (``neardup_against_index``) — tens of bytes per doc — instead of
+    re-tokenizing corpus text. This is how incremental dedup actually runs
+    at 10^12 docs: the text is read once when a doc enters the corpus,
+    never again.
 
     No bucket cap here — cap sizes depend on the FINAL corpus, so the cap
-    is applied at query time over the exploded index (same window-count
-    construction as _stacked_buckets, same semantics)."""
+    is applied at query time over the exploded index (:func:`_stack`)."""
     n_bands = k // rows_per_band
-    sig = with_minhash_batched(df.select(id_col, text_col), text_col, k,
-                               shingle_n)
-    banded = sig.selectExpr(id_col, text_col,
-                            *band_exprs(k, rows_per_band, "spark"))
-    return (banded.withColumn(
-                "ngrams",
-                hashed_ngrams_batched_udf(jaccard_n)(F.col(text_col)))
+    sig = _spread(df.select(id_col, text_col)).select(
+        id_col,
+        _signature_udf(k, shingle_n, jaccard_n)(F.col(text_col)).alias("_s"))
+    return (sig.selectExpr(id_col, "_s.ngrams as ngrams",
+                           *(f"_s.sigs[{i}] as sig_{i}" for i in range(k)))
+            .selectExpr(id_col, "ngrams",
+                        *band_exprs(k, rows_per_band, "spark"))
             .selectExpr(
                 id_col,
                 "array(" + ", ".join(
@@ -900,23 +844,6 @@ def read_signature_index(spark, path: str, params: dict | None = None,
     return df
 
 
-def _stacked_index_buckets(index_df: DataFrame, id_col: str,
-                           max_bucket_size: int | None) -> DataFrame:
-    """Explode a stored index's bucket arrays into the (id, bucket) stack
-    _stacked_buckets produces, with the identical query-time cap."""
-    from pyspark.sql.window import Window
-
-    stacked = index_df.select(F.col(id_col),
-                              F.explode("buckets").alias("bucket"))
-    if max_bucket_size is not None:
-        w = Window.partitionBy("bucket")
-        stacked = (stacked
-                   .withColumn("_bsz", F.count(F.lit(1)).over(w))
-                   .where(F.col("_bsz") <= max_bucket_size)
-                   .drop("_bsz"))
-    return stacked
-
-
 def neardup_against_index(new_df: DataFrame, index_df: DataFrame,
                           text_col: str = "text", id_col: str = "doc_id",
                           k: int = 8, rows_per_band: int = 2,
@@ -924,34 +851,25 @@ def neardup_against_index(new_df: DataFrame, index_df: DataFrame,
                           threshold: float = 0.5,
                           max_bucket_size: int | None = DEFAULT_MAX_BUCKET
                           ) -> DataFrame:
-    """cross_corpus_neardup with the reference side served ENTIRELY from a
-    stored :func:`build_signature_index` table — no reference text is read.
-    Pair set is identical to cross_corpus_neardup over the original corpus
-    with the same parameters (asserted in tests). Returns
+    """Near-dups of NEW docs against a :func:`build_signature_index` frame
+    of a prior corpus — no reference text is read. LSH band equi-join
+    BETWEEN the two sides — never a self-join of their union, so cost
+    tracks shared buckets, and the new crawl (typically ≪ the accumulated
+    corpus) drives the join's small side — then hashed-shingle Jaccard
+    verify. The bucket cap applies to each side separately (a mega-bucket
+    in the index is boilerplate the prior corpus should have exact-deduped),
+    matching the DuckDB twin of cross_corpus_neardup exactly. Returns
     (new_id, ref_id, jaccard) at/above threshold."""
-    sn = _stacked_buckets(new_df, text_col, id_col, k, rows_per_band,
-                          shingle_n, max_bucket_size).alias("n")
-    sr = _stacked_index_buckets(index_df, id_col, max_bucket_size).alias("r")
+    new_index = build_signature_index(new_df, text_col, id_col, k,
+                                      rows_per_band, shingle_n, jaccard_n)
+    sn = _stack(new_index, id_col, max_bucket_size).alias("n")
+    sr = _stack(index_df, id_col, max_bucket_size).alias("r")
     cand = (sn.join(sr, F.col("n.bucket") == F.col("r.bucket"))
             .select(F.col(f"n.{id_col}").alias("new_id"),
                     F.col(f"r.{id_col}").alias("ref_id"))
             .distinct())
-    new_ng = _spread(new_df).select(
-        F.col(id_col).alias("new_id"),
-        hashed_ngrams_batched_udf(jaccard_n)(F.col(text_col))
-        .alias("_ng_new"))
-    ref_ng = index_df.select(F.col(id_col).alias("ref_id"),
-                             F.col("ngrams").alias("_ng_ref"))
-    sized = (cand.join(new_ng, "new_id").join(ref_ng, "ref_id")
-             .select("new_id", "ref_id",
-                     F.size(F.array_intersect("_ng_new", "_ng_ref"))
-                     .alias("_i"),
-                     F.size("_ng_new").alias("_sa"),
-                     F.size("_ng_ref").alias("_sb")))
-    jac = F.round(F.col("_i")
-                  / (F.col("_sa") + F.col("_sb") - F.col("_i")), 6)
-    return (sized.select("new_id", "ref_id", jac.alias("jaccard"))
-            .where(F.col("jaccard") >= threshold))
+    return _verify(cand, new_index.select(id_col, "ngrams"),
+                   index_df.select(id_col, "ngrams"), threshold)
 
 
 def decontaminate(pages: DataFrame, index_path: str,
@@ -1133,6 +1051,22 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     return labels
 
 
+def _components(df: DataFrame, text_col: str, id_col: str,
+                threshold: float = 0.5,
+                max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
+                **sig_params) -> DataFrame:
+    """(id, comp) of the verified near-dup graph. The signature frame is
+    built ONCE and materialized with localCheckpoint (fresh blocks per call;
+    never persist — CLAUDE.md), so the band self-join and the verify both
+    read it and each doc's text crosses into Python once."""
+    index = build_signature_index(df, text_col, id_col,
+                                  **sig_params).localCheckpoint()
+    ng = index.select(id_col, "ngrams")
+    return connected_components(
+        _verify(_lsh_pairs(index, id_col, max_bucket_size), ng, ng,
+                threshold))
+
+
 def neardup_groups(df: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id", k: int = 8,
                    rows_per_band: int = 2, shingle_n: int = 3,
@@ -1143,11 +1077,9 @@ def neardup_groups(df: DataFrame, text_col: str = "text",
     Jaccard verify → connected components → one row per clustered doc with
     its cluster representative (min id) and cluster size. Docs in no
     near-dup cluster are omitted (they are their own representative)."""
-    cand = minhash_lsh_pairs(df, text_col, id_col, k, rows_per_band,
-                             shingle_n, max_bucket_size)
-    verified = jaccard_verify_pairs(df, cand, text_col, id_col,
-                                    jaccard_n, threshold)
-    comp = connected_components(verified)
+    comp = _components(df, text_col, id_col, threshold, max_bucket_size,
+                       k=k, rows_per_band=rows_per_band,
+                       shingle_n=shingle_n, jaccard_n=jaccard_n)
     sizes = comp.groupBy("comp").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size"))
     return (comp.join(sizes, "comp")
@@ -1159,10 +1091,10 @@ def neardup_dedup(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", **kwargs) -> DataFrame:
     """Keep one representative (min id) per near-dup cluster; pass through
     docs that belong to no cluster. The pipeline hook twin of
-    :func:`exact_dedup`."""
-    groups = neardup_groups(df, text_col, id_col, **kwargs)
-    drop = (groups.where(F.col(id_col) != F.col("rep_id"))
-            .select(id_col))
+    :func:`exact_dedup`; ``kwargs`` as in :func:`neardup_groups`."""
+    comp = _components(df, text_col, id_col, **kwargs)
+    drop = comp.where(F.col("id") != F.col("comp")).select(
+        F.col("id").alias(id_col))
     return df.join(drop, on=id_col, how="left_anti")
 
 

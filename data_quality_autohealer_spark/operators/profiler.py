@@ -239,30 +239,3 @@ def iqr_outliers(df: DataFrame, column: str,
         "outlier_rate",
         F.round(F.col("outlier_count") / F.col("row_count"), 6),
     )
-
-
-def distribution_distance(current: DataFrame, baseline: DataFrame,
-                          columns: list[str]) -> DataFrame:
-    """Mean-shift (|μc−μb|/σb) and variance ratio per column vs a baseline
-    frame (reference: spark_profiler.py:273-289). Two single-pass aggs +
-    a tiny crossJoin of two 1-row frames (no data shuffle)."""
-    def agg_stats(df, tag):
-        ex = []
-        for col in columns:
-            ex += [F.mean(col).alias(f"{col}__mean_{tag}"),
-                   F.stddev(col).alias(f"{col}__std_{tag}")]
-        return df.agg(*ex)
-
-    cur, base = agg_stats(current, "c"), agg_stats(baseline, "b")
-    joined = cur.crossJoin(base)
-    out = []
-    for col in columns:
-        mc, mb = F.col(f"{col}__mean_c"), F.col(f"{col}__mean_b")
-        sc, sb = F.col(f"{col}__std_c"), F.col(f"{col}__std_b")
-        out += [
-            F.round(F.abs(mc - mb) / F.when(sb > 0, sb).otherwise(F.lit(1.0)), 6)
-            .alias(f"{col}__mean_shift"),
-            F.round(F.when(sb > 0, sc / sb).otherwise(F.lit(None)), 6)
-            .alias(f"{col}__variance_ratio"),
-        ]
-    return joined.select(*out)

@@ -219,9 +219,10 @@ def run_filter(
             F.col("scrubbed_text").alias("text"),
             F.array_join("reasons", ",").alias("reasons_csv"),
         )
-        # 1) commit the data, 2) checkpoint the metrics LAST (crash between
-        # the two ⇒ the bucket is rescored on resume and its clean partition
-        # rewritten idempotently via dynamic partition overwrite).
+        # 1) commit the data, 2) append the alerts, 3) checkpoint the metrics
+        # LAST. A crash before the checkpoint rescores the bucket on resume:
+        # its clean partition is rewritten idempotently via dynamic partition
+        # overwrite, and alerts appended again collapse in read_alerts.
         wh.write_clean(kept, clean_table, run_id=run_id)
         # The summary and the alert count need the ≤num_buckets metric rows
         # on the driver; the checkpoint is written from those same rows, so
@@ -233,12 +234,12 @@ def run_filter(
             metrics_df = wh.spark.createDataFrame(
                 wh.spark.sparkContext.parallelize(metrics_rows, 1),
                 METRICS_SCHEMA)
-            wh.append_metrics(metrics_df)
             _, sev = alert_severity(PandasOps(
                 pd.DataFrame([r.asDict() for r in metrics_rows])))
             n_alerts = int(pd.notna(sev).sum())
             if n_alerts:
                 wh.append_alerts(quality_alerts(metrics_df))
+            wh.append_metrics(metrics_df)
         return {"run_id": run_id,
                 "docs_in": sum(r["docs_in"] for r in metrics_rows),
                 "docs_kept": sum(r["docs_kept"] for r in metrics_rows),

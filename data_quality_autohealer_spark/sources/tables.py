@@ -8,13 +8,7 @@ are explicit where inference would be lossy.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def read_csv(spark: SparkSession, path: str, schema: str | None = None

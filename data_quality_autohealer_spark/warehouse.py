@@ -280,7 +280,17 @@ class Warehouse:
             df.write.mode("append").parquet(self._path("alerts"))
 
     def read_alerts(self) -> DataFrame:
-        return self.read_table("alerts", ALERTS_SCHEMA)
+        """One row per (run_id, bucket, severity, drop_rate), keeping the
+        first payload: run_filter appends alerts before its metrics
+        checkpoint, so a resumed run that rescores a bucket appends the
+        same alert again, differing only in the payload's completed_at."""
+        from pyspark.sql.window import Window
+
+        first = Window.partitionBy(
+            "run_id", "bucket", "severity", "drop_rate").orderBy("payload")
+        return (self.read_table("alerts", ALERTS_SCHEMA)
+                .withColumn("_n", F.row_number().over(first))
+                .where(F.col("_n") == 1).drop("_n"))
 
     def append_audit(self, df: DataFrame) -> None:
         """Completion/validation audit rows — the notification analogue of

@@ -70,11 +70,26 @@ def test_simhash_batched_matches_native(spark):
 
 
 def test_minhash_batched_matches_native(spark):
+    """The one-pass signature UDF behind build_signature_index: its
+    signatures equal the native with_minhash, and its Jaccard shingle
+    hashes equal the native builder, both when the shingle and Jaccard n
+    agree (one gram list) and when they differ (two)."""
     for df in (_edge_df(spark), _docs(spark)):
         native = (dedup.with_minhash(df, "text", k=8, shingle_n=2)
-                  .drop("text").toPandas().sort_values("doc_id")
-                  .reset_index(drop=True))
-        batched = (dedup.with_minhash_batched(df, "text", k=8, shingle_n=2)
-                   .drop("text").toPandas().sort_values("doc_id")
-                   .reset_index(drop=True))
-        pd.testing.assert_frame_equal(native, batched)
+                  .withColumn("_w", F.expr(dedup._words("text", "spark")))
+                  .selectExpr(
+                      "doc_id", *(f"sig_{i}" for i in range(8)),
+                      *(dedup._hashed_ngrams("text", n, "spark", "_w")
+                        + f" as ng_{n}" for n in (2, 3)))
+                  .toPandas().sort_values("doc_id").reset_index(drop=True))
+        for jaccard_n in (2, 3):
+            batched = (df.select("doc_id", dedup._signature_udf(
+                    8, 2, jaccard_n)(F.col("text")).alias("s"))
+                .selectExpr("doc_id",
+                            *(f"s.sigs[{i}] as sig_{i}" for i in range(8)),
+                            "s.ngrams")
+                .toPandas().sort_values("doc_id").reset_index(drop=True))
+            pd.testing.assert_frame_equal(
+                native[batched.columns[:-1]], batched[batched.columns[:-1]])
+            for a, b in zip(native[f"ng_{jaccard_n}"], batched["ngrams"]):
+                assert list(a) == list(b)

@@ -582,27 +582,3 @@ def test_incremental_novelty_appended_multiwave_census(spark, tmp_path):
             for r in ngram_novelty_vs_census(
                 w3, build_ngram_census(w1.unionByName(w2))).collect()}
     assert got == want and len(got) > 0
-
-
-def test_plan_lsh_bands():
-    """Band planning: the S-curve knee lands nearest the target; the
-    production chain's (r=2, b=4) is exactly what a 0.5 target over k=8
-    signatures yields; catch probability at threshold beats the
-    false-candidate probability well below it."""
-    import pytest
-
-    from data_quality_autohealer_spark.operators.dedup import (
-        lsh_candidate_prob, plan_lsh_bands,
-    )
-
-    plan = plan_lsh_bands(0.5, k=8)
-    assert (plan["rows_per_band"], plan["bands"]) == (2, 4)
-    assert plan["p_at_threshold"] > 0.5 > plan["p_below"]
-    # monotone S-curve
-    ps = [lsh_candidate_prob(s / 10, 2, 4) for s in range(11)]
-    assert ps == sorted(ps) and ps[0] == 0.0 and ps[10] == 1.0
-    # high threshold -> more rows per band (sharper curve, fewer bands)
-    tight = plan_lsh_bands(0.9, k=8)
-    assert tight["rows_per_band"] > plan["rows_per_band"]
-    with pytest.raises(ValueError):
-        plan_lsh_bands(1.5)

@@ -139,3 +139,11 @@ def test_plans_md_regenerates_with_claimed_shapes(spark, tmp_path):
     assert "Join" in tr
     # broadcast dims
     assert "BroadcastHashJoin" in sections["top_customers"]
+    # LSH: one Arrow crossing and one bucket-cap window per self-join
+    # branch; no filter condition re-evaluates the band md5 keys
+    lsh = sections["minhash_lsh_pairs"]
+    assert lsh.count("ArrowEvalPython (") == 2
+    assert lsh.count("Window (") == 2
+    conditions = [ln for ln in lsh.splitlines()
+                  if ln.startswith("Condition")]
+    assert conditions and all("md5" not in ln for ln in conditions)

@@ -212,3 +212,95 @@ def test_quality_alerts(spark):
     assert 1 not in alerts           # 15% drop rate -> below medium cut
     assert alerts[2]["severity"] == "medium"
     assert '"docs_dropped":95' in alerts[0]["payload"]
+
+
+# -- crash points: a run killed at any sink resumes to a crash-free state ----
+
+def _crash_pages(spark):
+    """Synth pages plus as many symbol-soup pages: buckets drop a large
+    share, so a run appends alerts as well as clean rows and metrics."""
+    return synth.gen_pages_df(spark, N, num_partitions=4).unionByName(
+        _symbol_soup(spark, N))
+
+
+def _sink_state(w):
+    """Clean rows, metrics (minus completed_at) and alert keys, sorted."""
+    clean = sorted(tuple(r) for r in w.read_clean().collect())
+    metrics = sorted(
+        (r["run_id"], r["bucket"], r["docs_in"], r["docs_kept"],
+         r["docs_dropped"], sorted(r["rule_hits"].items()),
+         sorted(r["pii_scrubbed"].items()))
+        for r in w.read_metrics().collect())
+    alerts = sorted((r["run_id"], r["bucket"], r["severity"], r["drop_rate"])
+                    for r in w.read_alerts().collect())
+    return clean, metrics, alerts
+
+
+@pytest.fixture(scope="module")
+def crash_free(spark, tmp_path_factory):
+    w = Warehouse(spark, str(tmp_path_factory.mktemp("crash_free")),
+                  num_buckets=BUCKETS)
+    w.write_pages(_crash_pages(spark))
+    run_filter(w, "crash")
+    state = _sink_state(w)
+    clean, metrics, alerts = state
+    # one metrics row per (run, bucket), and the crash points are all live
+    assert [(m[0], m[1]) for m in metrics] == \
+        [("crash", b) for b in range(BUCKETS)]
+    assert clean and alerts
+    return state
+
+
+def _crash_warehouse(spark, tmp_path):
+    w = Warehouse(spark, str(tmp_path / "wh"), num_buckets=BUCKETS)
+    w.write_pages(_crash_pages(spark))
+    return w
+
+
+def _raise_on_call(monkeypatch, owner, name, nth):
+    """Make ``owner.name`` raise on its ``nth`` call only."""
+    real = getattr(owner, name)
+    calls = []
+
+    def flaky(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == nth:
+            raise RuntimeError(f"injected crash in {name}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, flaky)
+
+
+@pytest.mark.parametrize("method",
+                         ["write_clean", "append_alerts", "append_metrics"])
+def test_resume_after_sink_crash_matches_crash_free_run(
+        spark, tmp_path, monkeypatch, crash_free, method):
+    """A crash inside any sink of run_filter, then a resume, leaves the
+    clean rows, one metrics row per bucket and the alerts of a run that
+    never crashed: alerts are appended before the metrics checkpoint (the
+    reverse order lost them) and read_alerts collapses a rescored bucket's
+    repeat."""
+    w = _crash_warehouse(spark, tmp_path)
+    _raise_on_call(monkeypatch, Warehouse, method, 1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_filter(w, "crash")
+    run_filter(w, "crash")
+    assert _sink_state(w) == crash_free
+
+
+def test_resume_after_crash_between_waves_matches_crash_free_run(
+        spark, tmp_path, monkeypatch, crash_free):
+    """A crash after the first of two waves resumes with the second only
+    and ends in the crash-free state."""
+    from data_quality_autohealer_spark.plans import pipeline
+
+    w = _crash_warehouse(spark, tmp_path)
+    _raise_on_call(monkeypatch, pipeline, "run_filter", 2)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        pipeline.run_filter_in_waves(w, "crash", wave_buckets=BUCKETS // 2)
+    monkeypatch.undo()
+    summary = pipeline.run_filter_in_waves(w, "crash",
+                                           wave_buckets=BUCKETS // 2)
+    assert summary["buckets_skipped"] == BUCKETS // 2
+    assert summary["waves"] == 1
+    assert _sink_state(w) == crash_free

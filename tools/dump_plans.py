@@ -30,9 +30,10 @@ SHOWCASE = [
     ("time_range_join_events", "SortMergeJoin/ShuffledHashJoin on "
      "(user_id, bucket) — an interval join with no "
      "CartesianProduct/BroadcastNestedLoopJoin"),
-    ("minhash_lsh_pairs", "the md5 shingle pass staged ONCE (single "
-     "'aggregate(transform' per branch), window bucket-cap reusing the "
-     "self-join exchange"),
+    ("minhash_lsh_pairs", "one ArrowEvalPython per self-join branch "
+     "(signatures and shingle hashes from one tokenisation); the band md5 "
+     "keys computed once, in the Project over its output (no Filter "
+     "re-evaluates them); one Window bucket-cap per branch"),
     ("salted_event_stats", "two-phase salted aggregation: partial agg on "
      "(key, salt), final agg on key"),
     ("sequence_pack", "one Window exchange per lang; everything else is "
