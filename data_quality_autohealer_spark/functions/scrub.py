@@ -102,14 +102,6 @@ def as_texts(texts: list) -> list[str]:
     return [t if isinstance(t, str) else "" for t in texts]
 
 
-def scrub_text(text: str) -> tuple[str, dict[str, int]]:
-    """Single-string convenience twin of :func:`scrub_series` (tests)."""
-    df = scrub_series(pd.Series([text]))
-    row = df.iloc[0]
-    counts = {c: int(row[c]) for c in SCRUB_COUNT_COLS}
-    return row["scrubbed_text"], counts
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracle twins (RE2). Same patterns, same order, same replacements.
 # ---------------------------------------------------------------------------

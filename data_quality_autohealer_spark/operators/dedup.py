@@ -24,7 +24,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -666,9 +665,12 @@ def cross_corpus_neardup(new_df: DataFrame, ref_df: DataFrame,
     crawl against data already in the training set):
     :func:`neardup_against_index` over the prior corpus's
     :func:`build_signature_index`. Returns (new_id, ref_id, jaccard) pairs
-    at/above threshold."""
+    at/above threshold. The reference index is materialized like the
+    new side's (see :func:`neardup_against_index`): its stack and the
+    verify both read it."""
     ref_index = build_signature_index(ref_df, text_col, id_col, k,
-                                      rows_per_band, shingle_n, jaccard_n)
+                                      rows_per_band, shingle_n,
+                                      jaccard_n).localCheckpoint()
     return neardup_against_index(new_df, ref_index, text_col, id_col, k,
                                  rows_per_band, shingle_n, jaccard_n,
                                  threshold, max_bucket_size)
@@ -859,9 +861,15 @@ def neardup_against_index(new_df: DataFrame, index_df: DataFrame,
     verify. The bucket cap applies to each side separately (a mega-bucket
     in the index is boilerplate the prior corpus should have exact-deduped),
     matching the DuckDB twin of cross_corpus_neardup exactly. Returns
-    (new_id, ref_id, jaccard) at/above threshold."""
+    (new_id, ref_id, jaccard) at/above threshold.
+
+    The new side's index is materialized with localCheckpoint (as in
+    :func:`_components`), so its stack and the verify both read it and
+    each new doc's text crosses into Python once. ``index_df`` is used
+    as given: a stored index is a Parquet scan, and can be large."""
     new_index = build_signature_index(new_df, text_col, id_col, k,
-                                      rows_per_band, shingle_n, jaccard_n)
+                                      rows_per_band, shingle_n,
+                                      jaccard_n).localCheckpoint()
     sn = _stack(new_index, id_col, max_bucket_size).alias("n")
     sr = _stack(index_df, id_col, max_bucket_size).alias("r")
     cand = (sn.join(sr, F.col("n.bucket") == F.col("r.bucket"))
@@ -896,8 +904,7 @@ def decontaminate(pages: DataFrame, index_path: str,
     return pages.join(flagged, id_col, "left_anti")
 
 
-DEFAULT_CC_LOCAL_EDGES = int(os.environ.get(
-    "SPARK_GRAFT_CC_LOCAL_EDGES", "200000"))
+DEFAULT_CC_LOCAL_EDGES = 200_000
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 25,
@@ -933,7 +940,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25,
     to the corpus (~5k pairs at sf1.0), and each distributed round costs
     several scheduled jobs — pure overhead at that size. When the
     materialized pair count is at or below the cutoff (default
-    ``SPARK_GRAFT_CC_LOCAL_EDGES`` = 200k, a bounded driver fence of the
+    ``DEFAULT_CC_LOCAL_EDGES`` = 200k, a bounded driver fence of the
     same kind as the BPE word census and the distilled-classifier weight
     collect), the pairs are collected once and resolved with an exact
     driver-side union-find — identical (id, min-id comp) rows by

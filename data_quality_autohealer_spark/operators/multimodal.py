@@ -22,7 +22,6 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA_DDL = (
     "media_id bigint, kind string, blob binary, mime string"
@@ -71,14 +70,6 @@ class DecoderRegistry:
     @classmethod
     def get(cls, kind: str) -> Callable[[bytes], dict]:
         return cls._decoders[kind]
-
-    @classmethod
-    def has_real_codec(cls) -> bool:
-        """True once any real media decoder replaced a `_decode_real` stub
-        (the fake-image test decoder doesn't count): plan decisions that
-        only pay off for real kernels key off this."""
-        return any(fn is not _decode_real and kind != "fake-image"
-                   for kind, fn in cls._decoders.items())
 
 
 MEDIA_META_SCHEMA = (
@@ -156,45 +147,3 @@ def extract_media_features(df: DataFrame, dim: int = 16) -> DataFrame:
 
     return df.mapInPandas(
         _extract, schema="media_id bigint, kind string, feature array<double>")
-
-
-def sample_frames(df: DataFrame, every_n: int = 4,
-                  frame_bytes: int = 16) -> DataFrame:
-    """Frame-sampling stage: one input video blob → N sampled frame rows
-    (the 1→many mapInPandas shape real video pipelines need). Frames here
-    are deterministic payload slices (no codecs in this container); the
-    row-explosion plumbing, schema and batch handling are real."""
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                if blob is None:
-                    continue
-                b = bytes(blob)
-                n_frames = max(len(b) // frame_bytes, 1)
-                for f in range(0, n_frames, every_n):
-                    ids.append(mid)
-                    idxs.append(f)
-                    frames.append(b[f * frame_bytes:(f + 1) * frame_bytes])
-            yield pd.DataFrame({"media_id": pd.array(ids, dtype="int64"),
-                                "frame_idx": pd.array(idxs, dtype="int32"),
-                                "frame": frames})
-
-    return df.mapInPandas(
-        _sample, schema="media_id bigint, frame_idx int, frame binary")
-
-
-def resize_plan(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize stage plumbing: routes each blob through the registered decoder
-    + a resize kernel (NotImplementedError surfaces as decode_ok=false).
-
-    The media_id repartition (splitting hot partitions before a CPU-bound
-    kernel) only pays when a REAL codec is registered — while the kernel is
-    a stub it would shuffle the heaviest column for nothing, so the plan
-    stays narrow (zero Exchange; asserted in tests/test_operators.py)."""
-    src = (df.repartition("media_id")
-           if DecoderRegistry.has_real_codec() else df)
-    meta = extract_media_metadata(src)
-    return meta.withColumn("target_width", F.lit(target_w)) \
-               .withColumn("target_height", F.lit(target_h))

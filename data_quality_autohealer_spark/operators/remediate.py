@@ -20,17 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def with_action(scored: DataFrame) -> DataFrame:
-    """Attach the remediation action column: drop if any reason fired,
-    scrub if PII/tox were found (and nothing else fired), else keep."""
-    any_pii = (F.col("n_email") + F.col("n_ssn") + F.col("n_phone")
-               + F.col("n_ip") + F.col("n_tox")) > 0
-    action = (F.when(F.size("reasons") > 0, F.lit("drop"))
-              .when(any_pii, F.lit("scrub"))
-              .otherwise(F.lit("keep")))
-    return scored.withColumn("action", action)
-
-
 def impute_missing(df: DataFrame, numeric_strategy: str = "median"
                    ) -> DataFrame:
     """Median/mean impute for numeric columns, mode for strings — computed in

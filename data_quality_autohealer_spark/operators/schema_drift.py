@@ -16,12 +16,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
-def schema_fingerprint(df: DataFrame) -> str:
-    """md5 of the ordered column-name list (reference spark_profiler.py:44-46)."""
-    import hashlib
-    return hashlib.md5(",".join(df.columns).encode()).hexdigest()
-
-
 def diff_schemas(current: T.StructType, baseline: T.StructType) -> dict:
     """Missing / new / type-changed columns (spark_profiler.py:51-73)."""
     cur = {f.name: f.dataType.simpleString() for f in current.fields}

@@ -1,47 +1,24 @@
-"""Skew handling for per-host aggregations: explicit salting (north_rule)
-on top of AQE's runtime skew-join splitting.
+"""Two-phase salted aggregation: explicit salting (north_rule) on top of
+AQE's runtime skew-join splitting.
 
-Web corpora are Zipf-skewed by host (a handful of mega-hosts own a large
-share of URLs — the synthetic corpus reproduces this, synth.py Zipf s≈1.2).
-A plain ``groupBy(host)`` sends every row of a mega-host to one reducer.
-Two-phase salted aggregation bounds any single task at ~1/S of the hottest
-host:
+A plain ``groupBy(key)`` sends every row of a hot key to one reducer.
+Salting bounds any single task at ~1/S of the hottest key:
 
-  phase 1: groupBy(host, salt)  — salt = pmod(xxhash64(url), S)
-           partial aggregates spread over S reducers per host
-  phase 2: groupBy(host)        — combine S partials (tiny)
+  phase 1: groupBy(key, salt)  — salt = pmod(xxhash64(id), S)
+           partial aggregates spread over S reducers per key
+  phase 2: groupBy(key)        — combine S partials (tiny)
 
-Only algebraic aggregates (sum/count/min/max) can be salted this way;
-that is all the metrics rollup needs.
+Only algebraic aggregates (sum/count/min/max) can be salted this way. For
+those, map-side partial aggregation already absorbs key skew: a salted
+per-host rollup measured within noise of a plain ``groupBy``
+(docs/SCALE.md). Salting pays for aggregates whose state grows with the
+rows, where the partial aggregate cannot compress.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-HOST_RE = r"https?://([^/]+)/"
-
-
-def host_expr(url_col: str = "url"):
-    return F.regexp_extract(F.col(url_col), HOST_RE, 1)
-
-
-def per_host_metrics_salted(scored: DataFrame, num_salts: int = 16,
-                            url_col: str = "url") -> DataFrame:
-    """Per-host docs_in/docs_kept/drop_rate via two-phase salted aggregation."""
-    salted = scored.withColumn("_host", host_expr(url_col)).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(num_salts)))
-    partial = salted.groupBy("_host", "_salt").agg(
-        F.count(F.lit(1)).alias("_in"),
-        F.sum(F.col("keep").cast("long")).alias("_kept"),
-    )
-    return (partial.groupBy("_host")
-            .agg(F.sum("_in").alias("docs_in"),
-                 F.sum("_kept").alias("docs_kept"))
-            .withColumn("drop_rate", F.round(
-                1.0 - F.col("docs_kept") / F.col("docs_in"), 6))
-            .withColumnRenamed("_host", "host"))
 
 
 def salted_stats(df: DataFrame, key_col: str, value_col: str, id_col: str,
@@ -87,13 +64,3 @@ def duckdb_salted_stats_sql(table: str, key_col: str, value_col: str) -> str:
         group by {key_col}
     """
 
-
-def per_host_metrics_plain(scored: DataFrame,
-                           url_col: str = "url") -> DataFrame:
-    """Single-phase twin (for equivalence tests and unskewed inputs)."""
-    return (scored.withColumn("host", host_expr(url_col))
-            .groupBy("host")
-            .agg(F.count(F.lit(1)).alias("docs_in"),
-                 F.sum(F.col("keep").cast("long")).alias("docs_kept"))
-            .withColumn("drop_rate", F.round(
-                1.0 - F.col("docs_kept") / F.col("docs_in"), 6)))

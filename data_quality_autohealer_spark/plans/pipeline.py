@@ -39,18 +39,24 @@ SCORED_COLUMNS = [
 def score_pages(
     pages: DataFrame,
     include_model_rules: bool = True,
-    extra_cols: tuple[str, ...] = (),
+    c4: bool = False,
 ) -> DataFrame:
     """DataFrame → DataFrame scorer (pure function; identical code path for
     batch and Structured Streaming).
 
     Deliberately selects only the needed columns first so Parquet/Iceberg
-    column pruning drops ``html`` at the scan. ``extra_cols`` ride through
-    untouched (e.g. the C4 page flag the caller merges into the decision).
+    column pruning drops ``html`` at the scan.
+    ``c4``: apply the C4 line rules (functions/c4.py) BEFORE scoring —
+    signals and scrubbing run over the line-cleaned text — and merge the
+    page flag into the decision as reason code ``c4.page``. Both steps are
+    pure projections; the plan gains zero exchanges and no state store.
     """
+    if c4:
+        pages = c4_pre_clean(pages)
+    carried = ["_c4_keep"] if c4 else []
     have = set(pages.columns)
     cols = [c for c in ["url", "warc_ts", "text", "lang", "bucket",
-                        *extra_cols] if c in have]
+                        *carried] if c in have]
     df = pages.select(*cols)
     if include_model_rules:
         # ALL per-doc text signals ride in the one scoring UDF crossing
@@ -62,15 +68,15 @@ def score_pages(
         df = th.with_signal_columns(df, "text")
     df = dec.with_decision(df, include_model_rules=include_model_rules)
     have = set(df.columns)
-    return df.select("text", *[c for c in [*SCORED_COLUMNS, *extra_cols]
-                               if c in have])
+    df = df.select("text", *[c for c in [*SCORED_COLUMNS, *carried]
+                             if c in have])
+    return c4_merge_decision(df) if c4 else df
 
 
 def c4_pre_clean(pages: DataFrame) -> DataFrame:
     """Projection-only C4 stage (functions/c4.py): rewrite ``text`` to the
     line-cleaned form and carry the page flag as ``_c4_keep`` for
-    :func:`c4_merge_decision` after scoring. No shuffle, no state — safe
-    in batch AND Structured Streaming unchanged."""
+    :func:`c4_merge_decision` after scoring."""
     from ..functions import c4 as c4f
 
     return (c4f.with_c4(pages, "text")
@@ -91,6 +97,27 @@ def c4_merge_decision(scored: DataFrame) -> DataFrame:
         .otherwise(F.col("reasons")))
         .withColumn("keep", F.col("keep") & F.col("_c4_keep"))
         .drop("_c4_keep"))
+
+
+def clean_rows(scored: DataFrame) -> DataFrame:
+    """The kept documents of a :func:`score_pages` frame as the clean sinks
+    store them — ``run_filter``'s clean table and the streaming
+    ``kept_writer`` both write this projection: scrubbed text, reasons as
+    CSV, and ``bucket`` when the pages came from the warehouse table.
+
+    An 'und' CLAIM (WARC ingest: unlabeled pages) adopts the model's
+    predicted language, so downstream per-lang curation (export mixtures,
+    severity censuses) sees real languages; labeled corpora pass through
+    untouched."""
+    lang = (F.when((F.col("lang") == "und") & (F.col("lang_pred") != "und"),
+                   F.col("lang_pred"))
+            .otherwise(F.col("lang")))
+    return scored.where(F.col("keep")).select(
+        "url", "warc_ts", lang.alias("lang"),
+        *[c for c in ["bucket"] if c in scored.columns],
+        F.col("scrubbed_text").alias("text"),
+        F.array_join("reasons", ",").alias("reasons_csv"),
+    )
 
 
 def bucket_metrics(scored: DataFrame, run_id: str) -> DataFrame:
@@ -177,24 +204,14 @@ def run_filter(
     ``bucket_subset``: restrict this invocation to the given buckets (the
     wave unit used by :func:`run_filter_in_waves`); partition pruning makes
     the restriction a scan-level filter.
-    ``c4``: apply the C4 line rules (functions/c4.py) BEFORE scoring —
-    signals and scrubbing run over the line-cleaned text — and merge the
-    page flag into the decision as reason code ``c4.page``. Both steps are
-    pure projections; the plan gains zero exchanges.
+    ``c4``: the C4 line rules of :func:`score_pages`.
     """
     from pyspark import StorageLevel
 
     pages = wh.read_pages(pages_table)
     if bucket_subset is not None:
         pages = pages.where(F.col("bucket").isin(list(bucket_subset)))
-    todo = wh.resume_filter(pages, run_id)
-    extra: tuple[str, ...] = ()
-    if c4:
-        todo = c4_pre_clean(todo)
-        extra = ("_c4_keep",)
-    scored = score_pages(todo, extra_cols=extra)
-    if c4:
-        scored = c4_merge_decision(scored)
+    scored = score_pages(wh.resume_filter(pages, run_id), c4=c4)
     # prune columns NEITHER sink reads before materializing the cache —
     # the confidences map in particular is per-doc strings+doubles that
     # would be computed and cached for nothing (clean write needs
@@ -204,26 +221,11 @@ def run_filter(
     scored = scored.select(*needed)
     scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # an 'und' CLAIM (WARC ingest: unlabeled pages) adopts the model's
-        # predicted language in the clean table, so downstream per-lang
-        # curation (export mixtures, severity censuses) sees real languages;
-        # labeled corpora pass through untouched
-        lang_out = F.col("lang")
-        if "lang_pred" in scored.columns:
-            lang_out = (F.when((F.col("lang") == "und")
-                               & (F.col("lang_pred") != "und"),
-                               F.col("lang_pred"))
-                        .otherwise(F.col("lang")))
-        kept = scored.where(F.col("keep")).select(
-            "url", "warc_ts", lang_out.alias("lang"), "bucket",
-            F.col("scrubbed_text").alias("text"),
-            F.array_join("reasons", ",").alias("reasons_csv"),
-        )
         # 1) commit the data, 2) append the alerts, 3) checkpoint the metrics
         # LAST. A crash before the checkpoint rescores the bucket on resume:
         # its clean partition is rewritten idempotently via dynamic partition
         # overwrite, and alerts appended again collapse in read_alerts.
-        wh.write_clean(kept, clean_table, run_id=run_id)
+        wh.write_clean(clean_rows(scored), clean_table)
         # The summary and the alert count need the ≤num_buckets metric rows
         # on the driver; the checkpoint is written from those same rows, so
         # it holds exactly what the summary reports. One slice: one task
@@ -315,39 +317,6 @@ def run_filter_in_waves(
         total["alerts"] += summary["alerts"]
         total["waves"] += 1
     return total
-
-
-def metrics_drift(wh: Warehouse, run_id: str, baseline_run_id: str
-                  ) -> DataFrame:
-    """Per-bucket drift of the CURRENT run's metrics vs a baseline run —
-    the reference's baseline-vs-current comparison (spark_profiler.py:261-289)
-    re-expressed over the metrics table: broadcast join of two ≤num_buckets
-    frames (no data scan), drop-rate delta and per-rule hit-rate deltas.
-    """
-    def slim(rid, tag):
-        m = wh.read_metrics().where(F.col("run_id") == rid)
-        return m.select(
-            "bucket",
-            (F.col("docs_dropped") / F.greatest(F.col("docs_in"), F.lit(1)))
-            .alias(f"drop_rate_{tag}"),
-            F.col("docs_in").alias(f"docs_in_{tag}"),
-            F.col("rule_hits").alias(f"hits_{tag}"),
-        )
-
-    cur, base = slim(run_id, "cur"), slim(baseline_run_id, "base")
-    j = cur.join(F.broadcast(base), "bucket", "left")
-    # per-rule hit-rate delta: map_zip_with over the union of rule keys
-    delta = F.expr(
-        "map_zip_with(hits_cur, coalesce(hits_base, map()), "
-        "(k, c, b) -> round(coalesce(c, 0) / greatest(docs_in_cur, 1) "
-        "- coalesce(b, 0) / greatest(coalesce(docs_in_base, 0), 1), 6))")
-    return j.select(
-        "bucket",
-        F.round(F.col("drop_rate_cur")
-                - F.coalesce("drop_rate_base", F.lit(0.0)), 6)
-        .alias("drop_rate_delta"),
-        delta.alias("rule_hit_rate_delta"),
-    )
 
 
 def _run_drop_rate(wh: Warehouse, run_id: str) -> float:

@@ -43,8 +43,7 @@ def get_spark(
         # stays at its default while the runtime one — which only fires on
         # real sizes — covers dimension-sized sides up to 64 MB (well under
         # executor memory on any sane cluster; override via extra_conf)
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-                os.environ.get("SPARK_GRAFT_AQE_BROADCAST", "64m"))
+        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))

@@ -5,8 +5,10 @@ Reference analogue: the Kafka producer/consumer loop
 kafka_consumer.py:107-150) — JSON events over 3 topics with a synchronous
 flush per message (the reference's throughput ceiling). Re-expressed on
 Spark Structured Streaming: the scorer is the SAME ``DataFrame → DataFrame``
-function used in batch (plans.pipeline.score_pages), so batch/stream parity
-is by construction; micro-batches replace per-message flushes.
+function used in batch (plans.pipeline.score_pages, ``c4=`` included) and the
+clean sink writes the same projection (plans.pipeline.clean_rows), so
+batch/stream parity is by construction; micro-batches replace per-message
+flushes.
 
 Sources/sinks are parameterized: files (testable in this sandbox), Kafka
 (`readStream.format("kafka")` + from_json, documented path), or memory/rate
@@ -19,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.pipeline import score_pages
+from ..plans.pipeline import clean_rows
 from ..synth import PAGES_SCHEMA_DDL
 
 
@@ -102,28 +104,13 @@ def stream_pages_from_kafka(spark: SparkSession, brokers: str,
     return decode_kafka_frame(raw)
 
 
-def scored_stream(pages_stream: DataFrame, c4: bool = False) -> DataFrame:
-    """Apply the identical batch scorer to a streaming frame. ``c4``
-    composes the same projection-only C4 pre-clean + decision merge as
-    ``run_filter(c4=True)`` — both stages are stateless projections, so
-    the streaming plan gains no state store and stream ≡ batch holds by
-    construction (asserted in tests/test_streaming.py)."""
-    if not c4:
-        return score_pages(pages_stream)
-    from ..plans.pipeline import c4_merge_decision, c4_pre_clean
-
-    scored = score_pages(c4_pre_clean(pages_stream),
-                         extra_cols=("_c4_keep",))
-    return c4_merge_decision(scored)
-
-
 def kept_writer(scored: DataFrame, out_path: str, checkpoint: str):
-    """Append kept documents to a parquet sink with exactly-once via the
-    streaming checkpoint (the streaming twin of the metrics-table resume)."""
-    kept = scored.where(F.col("keep")).select(
-        "url", "warc_ts", "lang",
-        F.col("scrubbed_text").alias("text"),
-    )
+    """Append the kept documents of a :func:`score_pages` stream to a
+    parquet sink with exactly-once via the streaming checkpoint (the
+    streaming twin of the metrics-table resume). The rows are
+    ``run_filter``'s clean rows (:func:`clean_rows`), as
+    ``(url, warc_ts, lang, text)``."""
+    kept = clean_rows(scored).select("url", "warc_ts", "lang", "text")
     return (kept.writeStream.format("parquet")
             .option("path", out_path)
             .option("checkpointLocation", checkpoint)

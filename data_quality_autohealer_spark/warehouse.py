@@ -1,13 +1,12 @@
 """Iceberg-style warehouse layer: bucketed tables + metrics/lineage + resume.
 
-Reference analogues:
-  * schema registry JSON manifest
-    (/root/reference/src/remediation/airflow_dags/schema_drift_remediation.py:92-107)
-  * Kafka metrics topic (src/streaming/kafka_producer.py:36-109) → here an
-    append-only METRICS TABLE, one row per (run_id, bucket), which doubles as
-    the resume checkpoint (north_rule: "checkpoints per-partition lineage +
-    rule-hit metrics ... so a killed job resumes without rescoring completed
-    partitions").
+Reference analogue: the Kafka metrics topic
+(src/streaming/kafka_producer.py:36-109) → here an append-only METRICS
+TABLE, one row per (run_id, bucket), which doubles as the resume checkpoint
+(north_rule: "checkpoints per-partition lineage + rule-hit metrics ... so a
+killed job resumes without rescoring completed partitions"). Tables carry
+no manifest: the bucket count is the reader's ``num_buckets``, and the
+partition directories are the table's layout.
 
 When a real Iceberg catalog is configured (``spark.sql.catalog.<name>`` +
 runtime jar), tables are created with
@@ -25,10 +24,7 @@ decorrelates skewed hosts across buckets (host-level Zipf skew lands evenly).
 
 from __future__ import annotations
 
-import json
 import os
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -155,8 +151,6 @@ class Warehouse:
                 df.withColumn("bucket", bucket_expr("url", self.num_buckets)))
             (out.write.mode(mode).partitionBy("bucket")
                 .parquet(self._path(table)))
-            self._write_manifest(table, {"num_buckets": self.num_buckets,
-                                         "partition_spec": "bucket(url)"})
 
     def upsert_pages(self, new_df: DataFrame, table: str = "pages") -> dict:
         """Incremental re-crawl ingest: latest ``warc_ts`` per url wins
@@ -221,26 +215,20 @@ class Warehouse:
             return df.withColumn("bucket", bucket_expr("url", self.num_buckets))
         return self.spark.read.parquet(self._path(table))
 
-    def write_clean(self, df: DataFrame, table: str = "pages_clean",
-                    run_id: str | None = None) -> None:
+    def write_clean(self, df: DataFrame,
+                    table: str = "pages_clean") -> None:
         """Idempotent per-bucket append: overwrite the bucket partitions
         being written (dynamic partition overwrite) so a resumed run can
         rewrite a half-written bucket safely."""
         if self.use_iceberg:
             fqn = self._fqn(table)
-            if run_id is None:
+            # the first write must CREATE the table: overwritePartitions()
+            # alone fails with table-not-found on a fresh catalog
+            if not self.spark.catalog.tableExists(fqn):
                 (df.writeTo(fqn).using("iceberg")
-                   .partitionedBy(F.col("bucket")).createOrReplace())
+                   .partitionedBy(F.col("bucket")).create())
             else:
-                # first run of a run_id must CREATE the table — write_pages /
-                # append_metrics both do, but overwritePartitions() alone
-                # fails with table-not-found on a fresh catalog
-                if not self.spark.catalog.tableExists(fqn):
-                    (df.writeTo(fqn).using("iceberg")
-                       .partitionedBy(F.col("bucket")).create())
-                else:
-                    # idempotent per-bucket rewrite on resume
-                    df.writeTo(fqn).overwritePartitions()
+                df.writeTo(fqn).overwritePartitions()
         else:
             (df.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
@@ -326,15 +314,3 @@ class Warehouse:
         done = self.completed_buckets(run_id)
         return pages.where(~F.col("bucket").isin(done)) if done else pages
 
-    # -- manifest --------------------------------------------------------------
-
-    def _write_manifest(self, table: str, extra: dict) -> None:
-        manifest = {
-            "table": table,
-            "format": "parquet-bucketed",
-            "snapshot_id": uuid.uuid4().hex,
-            "created_unix": int(time.time()),
-            **extra,
-        }
-        with open(os.path.join(self.root, f"_manifest_{table}.json"), "w") as f:
-            json.dump(manifest, f, indent=2)

@@ -159,10 +159,10 @@ def test_write_pages_append_mode_appends(wh):
 
 def test_write_clean_first_run_creates_then_resume_overwrites(wh):
     fake, w = wh
-    # fresh catalog: run_id path must CREATE (overwritePartitions alone
+    # fresh catalog: the write must CREATE (overwritePartitions alone
     # fails with table-not-found)
     fake.tables_exist = False
-    w.write_clean(FakeDF(fake), run_id="r1")
+    w.write_clean(FakeDF(fake))
     assert fake.log[0] == ("tableExists", "ice.wh.pages_clean")
     kind, fqn, verb, using, part, ops = fake.log[1]
     assert (fqn, verb, using) == ("ice.wh.pages_clean", "create", "iceberg")
@@ -170,16 +170,8 @@ def test_write_clean_first_run_creates_then_resume_overwrites(wh):
     # resumed run against an existing table: idempotent per-bucket rewrite
     fake.log.clear()
     fake.tables_exist = True
-    w.write_clean(FakeDF(fake), run_id="r1")
-    assert fake.log[1][1:3] == ("ice.wh.pages_clean", "overwritePartitions")
-
-
-def test_write_clean_no_run_id_replaces_whole_table(wh):
-    fake, w = wh
     w.write_clean(FakeDF(fake))
-    kind, fqn, verb, using, part, ops = fake.log[0]
-    assert (fqn, verb, using) == ("ice.wh.pages_clean", "createOrReplace",
-                                  "iceberg")
+    assert fake.log[1][1:3] == ("ice.wh.pages_clean", "overwritePartitions")
 
 
 def test_append_metrics_ddl_and_append(wh):

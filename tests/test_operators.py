@@ -139,21 +139,6 @@ def test_multimodal_features_feed_similarity(spark):
     assert ids == {0, 3, 6}
 
 
-def test_multimodal_frame_sampling(spark):
-    rows = [(1, "video", bytes(range(128)), "video/fake"),
-            (2, "video", bytes(16), "video/fake"),
-            (3, "video", None, "video/fake")]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA_DDL)
-    frames = multimodal.sample_frames(df, every_n=2, frame_bytes=16)
-    got = frames.toPandas()
-    # blob 1: 128 bytes / 16 = 8 frames, every 2nd → 4; blob 2: 1 frame;
-    # null blob → no rows
-    per = got.groupby("media_id").size().to_dict()
-    assert per == {1: 4, 2: 1}
-    f0 = got[(got.media_id == 1) & (got.frame_idx == 0)]["frame"].iloc[0]
-    assert bytes(f0) == bytes(range(16))
-
-
 def test_embedding_near_dup_fast_matches_exact(embeddings, spark):
     df, base = embeddings
     from data_quality_autohealer_spark.operators.similarity import (
@@ -212,30 +197,6 @@ def test_profile_empty_frame(spark):
     from data_quality_autohealer_spark.plans.pipeline import score_pages
     empty = spark.createDataFrame([], "url string, text string, lang string")
     assert score_pages(empty).count() == 0
-
-
-def test_resize_plan_no_shuffle_while_kernel_stubbed(spark):
-    """VERDICT r03 carry-over: the media_id repartition shuffled full blobs
-    into a stub kernel. With no real codec registered the plan must stay
-    narrow (zero Exchange); registering one brings the split back."""
-    rows = [(i, "fake-image", multimodal.make_fake_image(i, 8, 6),
-             "image/fake") for i in range(4)]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA_DDL)
-    out = multimodal.resize_plan(df, 32, 32)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    got = out.collect()
-    assert all(r["target_width"] == 32 and r["target_height"] == 32
-               and r["decode_ok"] for r in got)
-    multimodal.DecoderRegistry.register(
-        "image", lambda b: {"width": 1, "height": 1, "channels": 1})
-    try:
-        plan2 = (multimodal.resize_plan(df, 32, 32)
-                 ._jdf.queryExecution().executedPlan().toString())
-        assert "Exchange" in plan2
-    finally:
-        multimodal.DecoderRegistry.register("image", multimodal._decode_real)
-        assert not multimodal.DecoderRegistry.has_real_codec()
 
 
 def test_ann_recall_quantified_on_real_table(spark):

@@ -9,7 +9,7 @@ import pyspark.sql.functions as F
 
 from data_quality_autohealer_spark import synth
 from data_quality_autohealer_spark.operators.schema_drift import (
-    SchemaRegistry, diff_schemas, schema_fingerprint,
+    SchemaRegistry, diff_schemas,
 )
 from data_quality_autohealer_spark.plans.pipeline import score_pages
 
@@ -110,7 +110,6 @@ def test_schema_drift(spark, tmp_path):
     assert chk["new_columns"] == ["v"]
     c = spark.createDataFrame([("1", "x")], "id string, s string")
     assert reg.check("t", c)["type_changed_columns"] == ["id"]
-    assert schema_fingerprint(a) != schema_fingerprint(b)
 
 
 def test_plans_md_regenerates_with_claimed_shapes(spark, tmp_path):

@@ -1,23 +1,9 @@
-"""Remediation helpers: action mapping (M7), impute, quarantine, winsorize,
-coerce (reference DAG semantics re-expressed as Spark transforms)."""
+"""Remediation helpers: impute, quarantine, winsorize, coerce (reference
+DAG semantics re-expressed as Spark transforms)."""
 
 import pyspark.sql.functions as F
 
-from data_quality_autohealer_spark import synth
 from data_quality_autohealer_spark.operators import remediate
-from data_quality_autohealer_spark.plans.pipeline import score_pages
-
-
-def test_action_mapping(spark):
-    pages = synth.gen_pages_df(spark, 1000, num_partitions=4)
-    scored = remediate.with_action(score_pages(pages))
-    rows = scored.groupBy("action").count().collect()
-    actions = {r["action"]: r["count"] for r in rows}
-    assert set(actions) <= {"keep", "drop", "scrub"}
-    assert actions.get("drop", 0) > 0 and actions.get("scrub", 0) > 0
-    # scrub rows are kept rows with PII/tox found
-    bad = scored.where((F.col("action") == "scrub") & ~F.col("keep")).count()
-    assert bad == 0
 
 
 def test_impute_missing(spark):

@@ -1,40 +1,7 @@
-"""CSV/JSONL source+sink round-trips (reference S2/S3: pd.read_csv /
-df.to_csv edges in quality_service.py:65, outlier_remediation.py:100-104)
-and the drift-retrained perplexity-model env override."""
+"""The drift-retrained perplexity-model env override and the --py-files
+package zip."""
 
 import os
-
-import pytest
-
-from data_quality_autohealer_spark.sources import tables
-
-
-def test_csv_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, "alpha", 1.5), (2, "beta", -0.25), (3, None, 0.0)],
-        "id long, name string, score double")
-    path = str(tmp_path / "csv_out")
-    tables.write_csv(df, path)
-    back = tables.read_csv(spark, path,
-                           schema="id long, name string, score double")
-    rows = {r["id"]: (r["name"], r["score"]) for r in back.collect()}
-    assert rows == {1: ("alpha", 1.5), 2: ("beta", -0.25), 3: (None, 0.0)}
-
-
-def test_csv_infer_schema(spark, tmp_path):
-    df = spark.createDataFrame([(1, "x")], "id long, s string")
-    path = str(tmp_path / "csv_inf")
-    tables.write_csv(df, path)
-    back = tables.read_csv(spark, path)
-    assert back.collect()[0]["id"] == 1
-
-
-def test_jsonl_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-    path = str(tmp_path / "jsonl")
-    df.write.json(path)
-    back = tables.read_jsonl(spark, path, schema="id long, s string")
-    assert {r["id"] for r in back.collect()} == {1, 2}
 
 
 def test_perplexity_model_env_override(tmp_path):

@@ -6,8 +6,11 @@ import time
 import pyspark.sql.functions as F
 
 from data_quality_autohealer_spark import synth
-from data_quality_autohealer_spark.plans.pipeline import score_pages
+from data_quality_autohealer_spark.plans.pipeline import (
+    run_filter, score_pages,
+)
 from data_quality_autohealer_spark.streaming import stream_filter
+from data_quality_autohealer_spark.warehouse import Warehouse
 
 N = 800
 
@@ -22,7 +25,7 @@ def test_stream_matches_batch(spark, tmp_path):
     stream = stream_filter.stream_pages_from_files(spark, src,
                                                    max_files_per_trigger=2)
     assert stream.isStreaming
-    scored = stream_filter.scored_stream(stream)
+    scored = score_pages(stream)
     q = stream_filter.kept_writer(scored, out, ckpt).start()
     try:
         deadline = time.time() + 120
@@ -44,8 +47,7 @@ def test_windowed_host_metrics_plan(spark, tmp_path):
     src = str(tmp_path / "src2")
     synth.gen_pages_df(spark, 200, num_partitions=2).write.parquet(src)
     stream = stream_filter.stream_pages_from_files(spark, src)
-    agg = stream_filter.windowed_host_metrics(
-        stream_filter.scored_stream(stream))
+    agg = stream_filter.windowed_host_metrics(score_pages(stream))
     assert agg.isStreaming
     assert {"window", "host", "docs_in", "docs_kept"} <= set(agg.columns)
 
@@ -107,8 +109,7 @@ def test_stateful_host_quality_matches_batch(spark, tmp_path):
     synth.gen_pages_df(spark, 400, num_partitions=2).write.parquet(src)
     stream = stream_filter.stream_pages_from_files(spark, src,
                                                    max_files_per_trigger=1)
-    st = stream_filter.stateful_host_quality(
-        stream_filter.scored_stream(stream))
+    st = stream_filter.stateful_host_quality(score_pages(stream))
     assert st.isStreaming
     batch = score_pages(spark.read.parquet(src)).withColumn(
         "host", F.regexp_extract("url", r"https?://([^/]+)/", 1))
@@ -145,8 +146,7 @@ def test_windowed_host_metrics_executes(spark, tmp_path):
     synth.gen_pages_df(spark, 400, num_partitions=2).write.parquet(src)
     stream = stream_filter.stream_pages_from_files(spark, src)
     agg = stream_filter.windowed_host_metrics(
-        stream_filter.scored_stream(stream), watermark="1 minute",
-        window="1 hour")
+        score_pages(stream), watermark="1 minute", window="1 hour")
     q = (agg.writeStream.format("memory").queryName("host_metrics")
          .outputMode("append").start())
     try:
@@ -280,8 +280,7 @@ def test_kafka_wire_decode_feeds_scorer_in_streaming(spark, tmp_path):
     stream_filter.encode_kafka_frame(pages).write.parquet(wire_dir)
     raw = (spark.readStream.schema(stream_filter.KAFKA_WIRE_DDL)
            .parquet(wire_dir))
-    scored = stream_filter.scored_stream(
-        stream_filter.decode_kafka_frame(raw))
+    scored = score_pages(stream_filter.decode_kafka_frame(raw))
     q = (scored.writeStream.format("memory").queryName("kafka_decode_t")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -326,12 +325,8 @@ def test_stream_dedup_matches_batch_distinct(spark, tmp_path):
 
 def test_c4_stream_matches_batch(spark, tmp_path):
     """The C4 pre-clean + decision merge are stateless projections, so
-    scored_stream(c4=True) ≡ the batch c4 composition on the same files
-    (incl. a lorem page dropped with reason c4.page in BOTH paths)."""
-    from data_quality_autohealer_spark.plans.pipeline import (
-        c4_merge_decision, c4_pre_clean,
-    )
-
+    score_pages(stream, c4=True) ≡ the batch c4 composition on the same
+    files (incl. a lorem page dropped with reason c4.page in BOTH paths)."""
     src = str(tmp_path / "c4src")
     out = str(tmp_path / "c4out")
     ckpt = str(tmp_path / "c4ckpt")
@@ -351,7 +346,7 @@ def test_c4_stream_matches_batch(spark, tmp_path):
 
     stream = stream_filter.stream_pages_from_files(spark, src,
                                                    max_files_per_trigger=2)
-    scored = stream_filter.scored_stream(stream, c4=True)
+    scored = score_pages(stream, c4=True)
     q = stream_filter.kept_writer(scored, out, ckpt).start()
     try:
         q.processAllAvailable()
@@ -359,9 +354,7 @@ def test_c4_stream_matches_batch(spark, tmp_path):
         q.stop()
 
     got = spark.read.parquet(out)
-    batch = c4_merge_decision(
-        score_pages(c4_pre_clean(spark.read.parquet(src)),
-                    extra_cols=("_c4_keep",)))
+    batch = score_pages(spark.read.parquet(src), c4=True)
     expected = batch.where("keep")
     assert got.count() == expected.count() > 0
     assert got.select("url").exceptAll(expected.select("url")).count() == 0
@@ -371,3 +364,38 @@ def test_c4_stream_matches_batch(spark, tmp_path):
     assert not lorem_row["keep"]
     assert "c4.page" in list(lorem_row["reasons"])
     assert got.where(F.col("url") == u_lorem).count() == 0
+
+
+def test_stream_clean_rows_match_run_filter_with_und_claims(spark, tmp_path):
+    """The streaming sink writes run_filter's clean rows: an 'und' claim
+    adopts the predicted language in both paths (the sink used to keep
+    'und'), and a real claim passes through unchanged."""
+    src = str(tmp_path / "und_src")
+    pages = synth.gen_pages_df(spark, 400, num_partitions=2).withColumn(
+        "lang", F.when(F.xxhash64("url") % 3 == 0, F.lit("und"))
+        .otherwise(F.col("lang")))
+    pages.write.parquet(src)
+    pages = spark.read.parquet(src)
+    claims = {r["url"]: r["lang"] for r in pages.select("url", "lang")
+              .collect()}
+
+    wh = Warehouse(spark, str(tmp_path / "und_wh"), num_buckets=4)
+    wh.write_pages(pages)
+    run_filter(wh, "und1")
+    cols = ["url", "warc_ts", "lang", "text"]
+    batch = {tuple(r) for r in wh.read_clean().select(*cols).collect()}
+
+    out, ckpt = str(tmp_path / "und_out"), str(tmp_path / "und_ckpt")
+    stream = stream_filter.stream_pages_from_files(spark, src)
+    q = stream_filter.kept_writer(score_pages(stream), out, ckpt).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {tuple(r) for r in spark.read.parquet(out).select(*cols).collect()}
+
+    assert got == batch
+    kept_und = [r for r in batch if claims[r[0]] == "und"]
+    kept_real = [r for r in batch if claims[r[0]] != "und"]
+    assert kept_und and all(r[2] != "und" for r in kept_und)
+    assert kept_real and all(r[2] == claims[r[0]] for r in kept_real)

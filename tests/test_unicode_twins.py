@@ -116,9 +116,9 @@ def test_ascii_boundary_semantics():
     # RE2 \b is ASCII-only: 'damnés' HAS a boundary after 'damn'. With
     # re.ASCII the Python path agrees (Unicode \b would see é as a word char
     # and skip the match).
-    scrubbed, counts = scrub_mod.scrub_text("damnés")
-    assert scrubbed == "<TOX>és"
-    assert counts["n_tox"] == 1
+    out = scrub_mod.scrub_columns(["damnés"])
+    assert out["scrubbed_text"][0] == "<TOX>és"
+    assert out["n_tox"][0] == 1
 
 
 def _digits(n):

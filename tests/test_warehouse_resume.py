@@ -178,17 +178,6 @@ def test_run_filter_in_waves(wh, spark):
     assert again["docs_in"] == 0 and again["buckets_skipped"] == BUCKETS
 
 
-def test_metrics_drift_per_bucket(wh, spark):
-    from data_quality_autohealer_spark.plans.pipeline import metrics_drift
-    run_filter(wh, "d1")
-    run_filter(wh, "d2")  # identical corpus → zero drift everywhere
-    rows = metrics_drift(wh, "d2", "d1").collect()
-    assert {r["bucket"] for r in rows} == set(range(BUCKETS))
-    for r in rows:
-        assert r["drop_rate_delta"] == 0.0
-        assert all(v == 0.0 for v in r["rule_hit_rate_delta"].values())
-
-
 def test_bucket_assignment_is_stable(wh, spark):
     a = wh.read_pages().select("url", "bucket")
     b = wh.read_pages().select(
