@@ -57,9 +57,7 @@ def entry(spark: SparkSession) -> DataFrame:
     (tests/test_pipeline_parity.py: F1 = 1.0 across 9 quality slices).
     """
     docs = _docs(spark, SF001)
-    df = with_model_scores(docs, "text")  # emits signal + model columns
-    from data_quality_autohealer_spark.operators.decision import with_decision
-    df = with_decision(df)
+    df = with_model_scores(docs)  # signal + model columns and the decision
     return df.select(
         "doc_id", "lang", "word_count", "lang_pred", "log_pplx",
         F.array_join("reasons", ",").alias("reasons_csv"), "keep",
@@ -339,7 +337,7 @@ def _q_simhash(spark, sf_dir):
 
 
 def _q_pii_scrub(spark, sf_dir):
-    df = with_model_scores(_docs(spark, sf_dir), "text")
+    df = with_model_scores(_docs(spark, sf_dir))
     return df.select("doc_id", "scrubbed_text",
                      "n_email", "n_ssn", "n_phone", "n_ip", "n_tox")
 
@@ -601,7 +599,9 @@ def _q_neardup_via_index(spark, sf_dir):
     # is asserted identical to the oracle-checked cross_corpus_neardup in
     # tests/test_neardup_chain.py). Round-4 — SURVEY §2.13 V15.
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    index = dedup.build_signature_index(docs.where("doc_id % 3 = 0"))
+    # checkpointed: the band join and the verify each read it
+    index = dedup.build_signature_index(
+        docs.where("doc_id % 3 = 0")).localCheckpoint()
     return dedup.neardup_against_index(
         docs.where("doc_id % 3 != 0"), index,
         threshold=_CROSS_NEARDUP_THRESHOLD)
@@ -1760,12 +1760,12 @@ def _q_multimodal_features_ann(spark, sf_dir):
 
 
 def _q_langid_model(spark, sf_dir):
-    df = with_model_scores(_docs(spark, sf_dir).select("doc_id", "text"))
+    df = with_model_scores(_docs(spark, sf_dir))
     return df.select("doc_id", "lang_pred", "lang_conf")
 
 
 def _q_perplexity_model(spark, sf_dir):
-    df = with_model_scores(_docs(spark, sf_dir).select("doc_id", "text"))
+    df = with_model_scores(_docs(spark, sf_dir))
     return df.select("doc_id", "log_pplx")
 
 
@@ -1785,10 +1785,7 @@ def _q_lsh_ann(spark, sf_dir):
 
 
 def _q_pipeline_full(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    df = with_model_scores(docs, "text")
-    from data_quality_autohealer_spark.operators.decision import with_decision
-    df = with_decision(df)
+    df = with_model_scores(_docs(spark, sf_dir))
     return df.select("doc_id", "keep",
                      F.array_join("reasons", ",").alias("reasons_csv"))
 
@@ -1805,15 +1802,13 @@ def _pages_from_docs(docs: DataFrame) -> DataFrame:
 
 
 def _q_pipeline_heuristic(spark, sf_dir):
-    # the END-TO-END pipeline decision path (plans/pipeline.py score_pages:
-    # column-pruned select → signal columns → ensemble decision → scored
-    # projection), heuristics-only so every signal has a DuckDB twin and the
-    # full pipeline is HASH-checked, not just rows-only.
+    # the heuristic half of the pipeline decision over the pages shape:
+    # native signal columns → Spark-rendered Gopher rules → reasons/keep,
+    # heuristics-only so every signal has a DuckDB twin and the decision is
+    # HASH-checked, not just rows-only.
     # Reference anchor: ensemble decision loop ensemble_classifier.py:91-139
     # inside run_auto_healing.py:16-131.
-    from data_quality_autohealer_spark.plans.pipeline import score_pages
-    scored = score_pages(_pages_from_docs(_docs(spark, sf_dir)),
-                         include_model_rules=False)
+    scored = th.with_quality_signals(_pages_from_docs(_docs(spark, sf_dir)))
     return scored.select(
         "url", "bucket", "lang", "word_count",
         F.array_join("reasons", ",").alias("reasons_csv"), "keep")
@@ -2033,7 +2028,8 @@ def _q_decontaminate_chain(spark, sf_dir):
     ref = docs.where("doc_id % 3 = 0")
     new = docs.where("doc_id % 3 != 0")
     exact_kept = bloom.decontaminate_bloom(new, ref, "text")
-    index = dedup.build_signature_index(ref)
+    # checkpointed: the band join and the verify each read it
+    index = dedup.build_signature_index(ref).localCheckpoint()
     fuzzy_flagged = (dedup.neardup_against_index(
         exact_kept, index, threshold=_CROSS_NEARDUP_THRESHOLD)
         .select(F.col("new_id").alias("doc_id")).distinct()

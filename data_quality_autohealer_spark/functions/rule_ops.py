@@ -1,12 +1,13 @@
 """One statement of each decision rule, two evaluators.
 
 A rule is written once as Python over an ops namespace ``o`` and returns
-``(fired, confidence)``. :data:`SPARK` renders it as pyspark ``Column``
-expressions (the batch and streaming decision); :class:`PandasOps` evaluates
-the same code on the numpy columns of a pandas frame (the in-process API
-decision). ``Column`` and numpy arrays already share ``< > <= >= == != & |``
-and arithmetic; the few operations they spell differently — column access,
-CASE WHEN, least/greatest and Spark's 6dp rounding — are the ops below.
+``(fired, confidence)``. :class:`PandasOps` evaluates it on numpy columns
+for every document decision (``decision.decide_frame``); :data:`SPARK`
+renders it as pyspark ``Column`` expressions (``with_quality_signals`` and
+its batched twin, ``alert_severity``, the parity test). ``Column`` and
+numpy arrays already share ``< > <= >= == != & |`` and arithmetic; the few
+operations they spell differently — column access, CASE WHEN,
+least/greatest and Spark's 6dp rounding — are the ops below.
 """
 
 from __future__ import annotations
@@ -95,7 +96,8 @@ class SparkOps(_Ops):
 
 class PandasOps(_Ops):
     """Columns of ``frame`` — a DataFrame or a dict of arrays — as numpy
-    arrays; no nulls expected (the callers fill every claimed language)."""
+    arrays; no nulls expected (``scoring.score_and_decide`` decides a null
+    claim as 'und')."""
 
     def __init__(self, frame) -> None:
         self._frame = frame

@@ -3,14 +3,14 @@
 Reference analogue: multi-label ensemble with confidence threshold
 (/root/reference/src/detectors/ensemble_classifier.py:91-139, threshold 0.7)
 and issue→action mapping (src/streaming/kafka_consumer.py:96-105). Here the
-"ensemble" is the union of Gopher heuristic rules (native exprs,
-text_heuristics.py) and model rules (langid / perplexity / toxicity from the
-scoring UDF), each emitting a reason code; keep ⇔ no reason fired.
+"ensemble" is the union of Gopher heuristic rules
+(``text_heuristics.gopher_rules``) and model rules (langid / perplexity /
+toxicity from the scoring UDF), each emitting a reason code; keep ⇔ no
+reason fired.
 
-Each rule is written once (``text_heuristics.gopher_rules``,
-:func:`model_rules`) over a ``rule_ops`` namespace: :func:`with_decision`
-renders it as Spark Columns, :func:`decide_frame` evaluates it on numpy
-columns for the in-process API check.
+Each rule is written once over a ``rule_ops`` namespace; :func:`decide_frame`
+evaluates them on numpy columns for every document decision
+(``scoring.score_and_decide``: the scoring UDF and the API check).
 """
 
 from __future__ import annotations
@@ -18,11 +18,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions import text_heuristics as th
-from ..functions.rule_ops import SPARK, PandasOps
+from ..functions.rule_ops import PandasOps
 
 
 @dataclass(frozen=True)
@@ -60,8 +58,9 @@ def model_rules(o) -> dict:
     pred, claimed, conf = c("lang_pred"), c("lang"), c("lang_conf")
     pplx, tox = c("log_pplx"), c("n_tox")
     # no mismatch when either side is 'und': the model abstaining, or the
-    # claim being absent (WARC ingest stamps 'und' — the predicted language
-    # is adopted downstream, not judged against the stamp)
+    # claim being absent (WARC ingest stamps 'und', and a null claim decides
+    # as 'und' — the predicted language is adopted downstream, not judged
+    # against the stamp)
     langid = ((pred != claimed) & (pred != "und") & (claimed != "und")
               & (conf >= mt.min_lang_conf))
     perplexity = pplx > mt.max_log_pplx
@@ -75,35 +74,12 @@ def model_rules(o) -> dict:
     }
 
 
-def with_decision(df: DataFrame, include_model_rules: bool = True
-                  ) -> DataFrame:
-    """Attach ``reasons`` (sorted array of codes), ``keep`` (bool) and
-    ``confidences`` (map rule→score, 0.0 when the rule did not fire).
-
-    Expects heuristic signal columns (text_heuristics.spark_signal_exprs) and,
-    when ``include_model_rules``, scoring-UDF columns to be present. Each
-    rule is rendered once; reasons and confidences share its ``(fired,
-    confidence)`` pair.
-    """
-    rules = th.gopher_rules(SPARK)
-    if include_model_rules:
-        rules.update(model_rules(SPARK))
-    reasons = th.spark_reasons_expr(
-        {code: fired for code, (fired, _) in rules.items()})
-    confidences = F.map_from_arrays(
-        F.array(*[F.lit(code) for code in rules]),
-        F.array(*[conf for _, conf in rules.values()]))
-    return (df.withColumn("reasons", reasons)
-            .withColumn("keep", F.size("reasons") == 0)
-            .withColumn("confidences", confidences))
-
-
 def decide_frame(scored) -> dict[str, list]:
-    """:func:`with_decision` (default thresholds) on the columns of
-    ``score_batch`` output plus the claimed ``lang`` — a DataFrame or a dict
-    of numpy arrays: the same rules evaluated on numpy. Returns one list
-    per output, in row order: ``keep`` (bool), ``reasons`` (sorted list of
-    codes) and ``confidences`` (dict rule -> score)."""
+    """Every rule (default thresholds) on the columns of ``score_columns``
+    output plus the claimed ``lang`` (no nulls) — a DataFrame or a dict of
+    numpy arrays. Returns one list per output, in row order: ``keep``
+    (bool), ``reasons`` (sorted list of codes) and ``confidences`` (dict
+    rule -> score)."""
     o = PandasOps(scored)
     rules = {**th.gopher_rules(o), **model_rules(o)}
     codes = list(rules)

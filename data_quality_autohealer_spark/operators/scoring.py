@@ -1,18 +1,20 @@
-"""Model scoring + scrubbing as ONE Arrow-batched pandas UDF.
+"""Model scoring + scrubbing + decision as ONE Arrow-batched pandas UDF.
 
 Reference analogue: the ensemble's detector sweep
 (/root/reference/src/detectors/ensemble_classifier.py:91-139) — run every
-model, collect scores. The reference did this per-profile on the driver; here
-it runs executor-side, once per Arrow record batch, via the
-Iterator[Series] -> Iterator[DataFrame] pandas UDF form so models are
-deserialized once per Python worker, not once per batch (the
-``spark-submit --py-files``-friendly equivalent of a broadcast variable).
+model, collect scores, apply the threshold. The reference did this
+per-profile on the driver; here it runs executor-side, once per Arrow
+record batch, via the Iterator[tuple[Series, Series]] -> Iterator[DataFrame]
+pandas UDF form (text and claimed lang in) so models are deserialized once
+per Python worker, not once per batch (the ``spark-submit
+--py-files``-friendly equivalent of a broadcast variable).
 
 What is batched and what is not: langid and perplexity are numpy passes over
 the whole batch; the Gopher signals tokenize and count in one Python loop
 per document, and the scrub runs one regex screen per document (plus the
 substitution passes on the few that hit). Each kernel returns plain arrays,
-and :func:`score_batch` builds one DataFrame from them per batch.
+``decision.decide_frame`` decides on them, and one DataFrame is built per
+batch.
 """
 
 from __future__ import annotations
@@ -25,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -38,6 +42,7 @@ from ..functions import perplexity as _pplx
 from ..functions.rule_ops import round6
 from ..functions.scrub import as_texts, scrub_columns
 from ..functions.text_heuristics import _SYMBOL_CLASS, _WS_CHARS
+from .decision import decide_frame
 
 SCORE_SCHEMA = StructType([
     StructField("word_count", IntegerType()),
@@ -146,7 +151,7 @@ def _signals_only(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         yield heuristic_signal_batch(text, DEFAULT_THRESHOLDS.stopwords)
 
 
-# nondeterministic for the same reason as score_and_scrub_udf: stop filter
+# nondeterministic for the same reason as score_udf: stop filter
 # pushdown from cloning the ArrowEvalPython node (guide §4.4)
 signal_udf = _signals_only.asNondeterministic()
 
@@ -200,30 +205,54 @@ def score_columns(texts: list[str]) -> dict[str, np.ndarray]:
 
 def score_batch(text: pd.Series) -> pd.DataFrame:
     """:func:`score_columns` of one batch as ONE DataFrame aligned to the
-    input index; a missing text scores as ''. Shared verbatim by the Spark
-    UDF and the pandas oracle (the in-process API check calls
-    :func:`score_columns`), so model outputs are identical by
+    input index; a missing text scores as ''. The pandas oracle scores
+    through it, and the scoring UDF and the in-process API check through
+    :func:`score_and_decide`, so model outputs are identical by
     construction."""
     return pd.DataFrame(score_columns(text.tolist()), index=text.index)
 
 
-@F.pandas_udf(returnType=SCORE_SCHEMA)
-def _score_and_scrub(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+DECIDED_SCHEMA = StructType([
+    *SCORE_SCHEMA.fields,
+    StructField("reasons", ArrayType(StringType())),
+    StructField("keep", BooleanType()),
+])
+
+
+def score_and_decide(texts: list, langs: list
+                     ) -> tuple[dict[str, np.ndarray], dict[str, list]]:
+    """:func:`score_columns`, then ``decision.decide_frame`` against the
+    claimed ``langs``: the scoring UDF's and the API check's one evaluator.
+    A null claim (a Kafka frame without the field) decides as 'und', as
+    under Spark's null semantics; only the decision sees that 'und'."""
+    cols = score_columns(texts)
+    claimed = np.array([lg if isinstance(lg, str) else "und" for lg in langs],
+                       dtype=object)
+    return cols, decide_frame({**cols, "lang": claimed})
+
+
+@F.pandas_udf(returnType=DECIDED_SCHEMA)
+def _score_and_decide(batches: Iterator[tuple[pd.Series, pd.Series]]
+                      ) -> Iterator[pd.DataFrame]:
     # iterator form: get_model() trains/caches once per Python worker process
-    for text in batches:
-        yield score_batch(text)
+    for text, lang in batches:
+        cols, decided = score_and_decide(text.tolist(), lang.tolist())
+        yield pd.DataFrame({**cols, "reasons": decided["reasons"],
+                            "keep": decided["keep"]})
 
 
 # The UDF is pure, but we mark it non-deterministic so Catalyst neither
 # duplicates it when a downstream filter references its output (filter
 # pushdown was observed to clone the ArrowEvalPython node — scoring every
 # document TWICE) nor pushes predicates through it.
-score_and_scrub_udf = _score_and_scrub.asNondeterministic()
+score_udf = _score_and_decide.asNondeterministic()
 
 
-def with_model_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach flattened model-score columns via a single UDF crossing."""
-    rest = [c for c in df.columns if c not in SCORE_FIELDS]
-    return (df.select(*rest, score_and_scrub_udf(F.col(text_col))
+def with_model_scores(df: DataFrame) -> DataFrame:
+    """Attach the flattened kernel columns plus ``reasons`` (sorted codes)
+    and ``keep`` via a single UDF crossing over ``text`` and the claimed
+    ``lang``."""
+    rest = [c for c in df.columns if c not in DECIDED_SCHEMA.fieldNames()]
+    return (df.select(*rest, score_udf(F.col("text"), F.col("lang"))
                       .alias("_score"))
             .select(*rest, "_score.*"))

@@ -3,7 +3,7 @@ checkpoint, as ONE Spark job graph.
 
 Reference analogue: run_auto_healing.py:16-131 (generate → profile → detect →
 remediate → validate), re-expressed Spark-first. The scoring stage is
-shuffle-free (partition-parallel: native exprs + one Arrow UDF crossing);
+shuffle-free (partition-parallel: one Arrow UDF crossing scores and decides);
 the only shuffle is the per-bucket metrics groupBy. Column pruning matters:
 the scoring path never reads ``html`` (BINARY) — only url/text/lang/warc_ts
 reach the scan.
@@ -20,7 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import text_heuristics as th
 from ..functions.rule_ops import SPARK, PandasOps
 from ..operators import decision as dec
 from ..operators import scoring
@@ -32,17 +31,14 @@ SCORED_COLUMNS = [
     "alpha_word_frac", "dup_2gram_frac", "dup_3gram_frac", "dup_4gram_frac",
     "lang_pred", "lang_conf", "log_pplx",
     "n_email", "n_ssn", "n_phone", "n_ip", "n_tox",
-    "scrubbed_text", "reasons", "confidences", "keep",
+    "scrubbed_text", "reasons", "keep",
 ]
 
 
-def score_pages(
-    pages: DataFrame,
-    include_model_rules: bool = True,
-    c4: bool = False,
-) -> DataFrame:
+def score_pages(pages: DataFrame, c4: bool = False) -> DataFrame:
     """DataFrame → DataFrame scorer (pure function; identical code path for
-    batch and Structured Streaming).
+    batch and Structured Streaming): the one scoring UDF returns the kernel
+    columns, ``reasons`` and ``keep`` (``scoring.with_model_scores``).
 
     Deliberately selects only the needed columns first so Parquet/Iceberg
     column pruning drops ``html`` at the scan.
@@ -57,16 +53,11 @@ def score_pages(
     have = set(pages.columns)
     cols = [c for c in ["url", "warc_ts", "text", "lang", "bucket",
                         *carried] if c in have]
-    df = pages.select(*cols)
-    if include_model_rules:
-        # ALL per-doc text signals ride in the one scoring UDF crossing
-        # (tokens split once per doc in batched Python — ~50× cheaper than
-        # Spark's interpreted higher-order functions; native-expr twins are
-        # asserted equal in tests and used for SQL-oracle-checked queries)
-        df = scoring.with_model_scores(df, "text")
-    else:
-        df = th.with_signal_columns(df, "text")
-    df = dec.with_decision(df, include_model_rules=include_model_rules)
+    # ALL per-doc text signals and the decision ride in the one scoring UDF
+    # crossing (tokens split once per doc in batched Python — ~50× cheaper
+    # than Spark's interpreted higher-order functions; native-expr twins
+    # are asserted equal in tests and used for SQL-oracle-checked queries)
+    df = scoring.with_model_scores(pages.select(*cols))
     have = set(df.columns)
     df = df.select("text", *[c for c in [*SCORED_COLUMNS, *carried]
                              if c in have])
@@ -212,13 +203,6 @@ def run_filter(
     if bucket_subset is not None:
         pages = pages.where(F.col("bucket").isin(list(bucket_subset)))
     scored = score_pages(wh.resume_filter(pages, run_id), c4=c4)
-    # prune columns NEITHER sink reads before materializing the cache —
-    # the confidences map in particular is per-doc strings+doubles that
-    # would be computed and cached for nothing (clean write needs
-    # url/ts/lang/bucket/scrubbed/reasons; metrics needs bucket/keep/
-    # reasons/pii counts)
-    needed = [c for c in scored.columns if c not in ("confidences",)]
-    scored = scored.select(*needed)
     scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         # 1) commit the data, 2) append the alerts, 3) checkpoint the metrics

@@ -5,15 +5,15 @@ Reference analogue: the Kafka producer/consumer loop
 kafka_consumer.py:107-150) — JSON events over 3 topics with a synchronous
 flush per message (the reference's throughput ceiling). Re-expressed on
 Spark Structured Streaming: the scorer is the SAME ``DataFrame → DataFrame``
-function used in batch (plans.pipeline.score_pages, ``c4=`` included) and the
-clean sink writes the same projection (plans.pipeline.clean_rows), so
-batch/stream parity is by construction; micro-batches replace per-message
-flushes.
+function used in batch (plans.pipeline.score_pages, ``c4=`` included; a
+null claim decides as no claim) and the clean sink writes the same
+projection (plans.pipeline.clean_rows), so batch/stream parity is by
+construction; micro-batches replace per-message flushes.
 
-Sources/sinks are parameterized: files (testable in this sandbox), Kafka
-(`readStream.format("kafka")` + from_json, documented path), or memory/rate
-for tests. Watermarking on ``warc_ts`` bounds state for the optional
-windowed per-host metrics aggregation.
+Sources/sinks are parameterized: files (tested), Kafka (`readStream.format(
+"kafka")` + from_json; its reader chain is pinned by a recording fake), or
+memory/rate for tests. Watermarking on ``warc_ts`` bounds state for the
+optional windowed per-host metrics aggregation.
 """
 
 from __future__ import annotations
@@ -96,8 +96,8 @@ def stream_pages_from_kafka(spark: SparkSession, brokers: str,
                             topic: str) -> DataFrame:
     """Kafka source: JSON-encoded pages on ``topic`` (reference topic map,
     kafka_producer.py:23-27). Requires the spark-sql-kafka package on the
-    cluster (not present in this sandbox); the decode projection itself is
-    the broker-independent :func:`decode_kafka_frame`."""
+    cluster; the decode projection itself is the broker-independent
+    :func:`decode_kafka_frame`."""
     raw = (spark.readStream.format("kafka")
            .option("kafka.bootstrap.servers", brokers)
            .option("subscribe", topic).load())

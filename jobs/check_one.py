@@ -45,31 +45,30 @@ def check_documents(texts: list[str], langs: list[str] | None = None,
     """Score ad-hoc documents in this process and return the
     reference-shaped response plus per-document decisions.
 
-    The pipeline's scoring core (``scoring.score_columns``, which
-    ``score_batch`` wraps for the Spark UDF) runs on chunks of one Arrow
-    batch (``session.ARROW_BATCH_ROWS`` rows, as the Spark UDF sees them),
-    then ``decision.decide_frame`` applies the rule functions that
-    ``with_decision`` renders for Spark to those columns — so the reply
-    matches ``score_pages`` with no Spark job and no pandas frame. The
-    perplexity model is this process's: a drift-retrained artifact
-    reaches the API only through its own ``DQA_PPLX_MODEL`` environment
-    variable, not through ``spark.executorEnv``, which configures the batch
-    pipeline's Python workers.
+    The scoring UDF's evaluator (``scoring.score_and_decide``:
+    ``score_columns`` then ``decision.decide_frame``) runs on chunks of one
+    Arrow batch (``session.ARROW_BATCH_ROWS`` rows, as the Spark UDF sees
+    them) — so the reply matches ``score_pages`` with no Spark job and no
+    pandas frame. The perplexity model is this process's: a
+    drift-retrained artifact reaches the API only through its own
+    ``DQA_PPLX_MODEL`` environment variable, not through
+    ``spark.executorEnv``, which configures the batch pipeline's Python
+    workers.
     """
-    import numpy as np
-
-    from data_quality_autohealer_spark.operators.decision import (
-        SEVERITY_CUTS, decide_frame,
+    from data_quality_autohealer_spark.operators.decision import SEVERITY_CUTS
+    from data_quality_autohealer_spark.operators.scoring import (
+        score_and_decide,
     )
-    from data_quality_autohealer_spark.operators.scoring import score_columns
     from data_quality_autohealer_spark.session import ARROW_BATCH_ROWS
 
+    langs = langs or ["en"] * len(texts)
     # no documents: one empty chunk, which decides to the 'clean' reply
-    chunks = [score_columns(texts[i:i + ARROW_BATCH_ROWS])
+    chunks = [score_and_decide(texts[i:i + ARROW_BATCH_ROWS],
+                               langs[i:i + ARROW_BATCH_ROWS])
               for i in range(0, len(texts) or 1, ARROW_BATCH_ROWS)]
-    scored = {c: np.concatenate([ch[c] for ch in chunks]) for c in chunks[0]}
-    scored["lang"] = np.array(langs or ["en"] * len(texts), dtype=object)
-    decided = decide_frame(scored)
+    scrubbed = [t for cols, _ in chunks for t in cols["scrubbed_text"]]
+    decided = {k: [v for _, dec in chunks for v in dec[k]]
+               for k in ("keep", "reasons", "confidences")}
 
     scores: dict[str, float] = {}
     for confidences in decided["confidences"]:
@@ -100,7 +99,7 @@ def check_documents(texts: list[str], langs: list[str] | None = None,
              "scrubbed_text": scrubbed}
             for i, (keep, reasons, confidences, scrubbed) in enumerate(zip(
                 decided["keep"], decided["reasons"], decided["confidences"],
-                scored["scrubbed_text"]))
+                scrubbed))
         ],
     }
 

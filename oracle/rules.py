@@ -110,7 +110,8 @@ def reference_labels(
         fired["langid"] = (
             (scores["lang_pred"] != out["lang"])
             & (scores["lang_pred"] != "und")
-            & (out["lang"] != "und")
+            # an absent claim, 'und' or null, is not judged (model_rules)
+            & out["lang"].notna() & (out["lang"] != "und")
             & (scores["lang_conf"] >= mt.min_lang_conf)
         )
         fired["perplexity"] = scores["log_pplx"] > mt.max_log_pplx

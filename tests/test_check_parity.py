@@ -1,8 +1,11 @@
 """The in-process ``POST /quality/check`` path against the Spark pipeline:
-``check_documents`` (``score_batch`` + ``decision.decide_frame``) must return
-what ``score_pages`` (``with_model_scores`` + ``with_decision``) returns —
-keep, sorted reasons, every confidence and byte-identical scrubbed text —
-and the oracle's keep and reasons; concurrent calls must not interfere."""
+``check_documents`` must return what ``score_pages`` returns — keep, sorted
+reasons and byte-identical scrubbed text — and what the same rules rendered
+as Spark Columns (``rule_ops.SPARK``) give for reasons and every confidence
+over the scored frame, so the numpy evaluator both paths decide with stays
+checked against Spark's; and the oracle's keep and reasons. Null claims (a
+Kafka frame without the field) decide as Spark's null semantics do: as no
+claim. Concurrent calls must not interfere."""
 
 import sys
 import threading
@@ -12,32 +15,49 @@ import numpy as np
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from data_quality_autohealer_spark import synth
+from data_quality_autohealer_spark.functions import text_heuristics as th
 from data_quality_autohealer_spark.functions.rule_ops import (
+    SPARK,
     round6,
     round6_array,
 )
 from data_quality_autohealer_spark.functions.scrub import TOXICITY_WORDS
+from data_quality_autohealer_spark.operators.decision import model_rules
 from data_quality_autohealer_spark.plans.pipeline import score_pages
 from jobs.check_one import check_documents
 from oracle.rules import reference_labels
 
-LANGS = ["en", "de", "fr", "es", "it", "nl", "zh", "pt", "ru", "und"]
+LANGS = ["en", "de", "fr", "es", "it", "nl", "zh", "pt", "ru", "und", None]
 
 
-def _assert_parity(spark, texts: list[str], langs: list[str]) -> None:
+def _spark_rules():
+    """``(reasons, confidences)`` of every rule rendered as Spark Columns
+    over the scored frame's columns, the raw (possibly null) claim
+    included."""
+    rules = {**th.gopher_rules(SPARK), **model_rules(SPARK)}
+    reasons = th.spark_reasons_expr(
+        {code: fired for code, (fired, _) in rules.items()})
+    confidences = F.map_from_arrays(
+        F.array(*[F.lit(code) for code in rules]),
+        F.array(*[conf for _, conf in rules.values()]))
+    return reasons.alias("spark_reasons"), confidences.alias("confidences")
+
+
+def _assert_parity(spark, texts: list[str], langs: list[str | None]) -> None:
     got = check_documents(texts, langs)["documents"]
     urls = [f"adhoc://doc/{i}" for i in range(len(texts))]
     df = spark.createDataFrame(list(zip(urls, texts, langs)),
                                "url string, text string, lang string")
     want = {r["url"]: r for r in score_pages(df).select(
-        "url", "keep", "reasons", "confidences", "scrubbed_text").collect()}
+        "url", "keep", "reasons", "scrubbed_text", *_spark_rules()).collect()}
     assert [d["url"] for d in got] == urls
     for d in got:
         r = want[d["url"]]
         assert d["keep"] == r["keep"], d["url"]
-        assert d["reasons"] == sorted(r["reasons"]), d["url"]
+        assert d["reasons"] == r["reasons"] == r["spark_reasons"], d["url"]
         assert d["confidences"] == r["confidences"], d["url"]
         assert (d["scrubbed_text"].encode("utf-8")
                 == r["scrubbed_text"].encode("utf-8")), d["url"]
@@ -51,8 +71,10 @@ def test_synth_corpus_and_und_claims_match_spark(spark):
     pdf = synth.gen_pages_pdf(np.arange(300))
     texts = pdf["text"].tolist()
     langs = pdf["lang"].tolist()
-    # WARC ingest stamps every page 'und': the same texts, claim withheld
-    _assert_parity(spark, texts + texts[:60], langs + ["und"] * 60)
+    # WARC ingest stamps every page 'und', and a Kafka frame without the
+    # field decodes to a null claim: the same texts, claim withheld
+    _assert_parity(spark, texts + texts[:120],
+                   langs + ["und"] * 60 + [None] * 60)
 
 
 _VOCAB = (synth.gen_pages_pdf(np.arange(40))["text"].str.split().explode()

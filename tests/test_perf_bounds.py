@@ -59,3 +59,23 @@ def test_e2e_filter_throughput_floor(spark):
     kept = score_pages(pages).where("keep").count()
     dt = time.perf_counter() - t0
     assert kept > 0 and dt < 60.0, f"{dt:.1f}s for 20k docs"
+
+
+def test_score_pages_plan_building_py4j_calls(spark, monkeypatch):
+    """Driver cost of the scorer: building a second ``score_pages`` plan
+    (no job run) makes few py4j round trips. The rules are evaluated inside
+    the scoring UDF; rendering them as Spark Columns on every call took
+    about 1,500-1,900 calls."""
+    pages = synth.gen_pages_df(spark, 100, num_partitions=1)
+    score_pages(pages)
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    score_pages(pages)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 500, len(calls)

@@ -127,9 +127,10 @@ def test_plans_md_regenerates_with_claimed_shapes(spark, tmp_path):
         name = chunk.split("\n", 1)[0].strip()
         sections[name] = chunk.split("```")[1]  # the fenced plan only
     assert set(sections) == {n for n, _ in dump_plans.SHOWCASE}
-    # single UDF crossing, html pruned
+    # single UDF crossing, which also decides: no rule rendered in a Project
     sf = sections["synth_filter"]
     assert sf.count("ArrowEvalPython (") == 1  # one tree node
+    assert "map_from_arrays" not in sf and "CASE WHEN (word_count" not in sf
     # as-of: no join node anywhere in the plan
     assert "Join" not in sections["asof_join_events"]
     # range join: an equi-join, never a product

@@ -271,6 +271,58 @@ def test_kafka_wire_corrupt_frames_stream_equals_batch(spark, tmp_path):
     assert got == valid_urls | {partial_url}
 
 
+class _RecordingReadStream:
+    """``spark.readStream`` stand-in: records the reader calls and returns
+    a prepared Kafka-wire frame from ``load()``."""
+
+    def __init__(self, frame):
+        self.frame, self.calls = frame, []
+
+    def format(self, source):
+        self.calls.append(("format", source))
+        return self
+
+    def option(self, key, value):
+        self.calls.append(("option", key, value))
+        return self
+
+    def load(self):
+        self.calls.append(("load",))
+        return self.frame
+
+
+def test_kafka_source_contract(spark, monkeypatch):
+    """``stream_pages_from_kafka`` with no broker and no connector jar: the
+    reader chain it builds is ``format("kafka")``, the bootstrap servers and
+    the subscribed topic, then ``load()``; the loaded wire frame goes
+    straight into :func:`decode_kafka_frame` (corrupt frames dropped)."""
+    wire, valid_urls, partial_url = _mixed_wire_frames(spark)
+    reader = _RecordingReadStream(wire)
+    decoded_from = []
+    decode = stream_filter.decode_kafka_frame
+
+    def recording_decode(raw, *args, **kwargs):
+        decoded_from.append(raw)
+        return decode(raw, *args, **kwargs)
+
+    monkeypatch.setattr(stream_filter, "decode_kafka_frame", recording_decode)
+
+    class _Session:
+        readStream = reader
+
+    pages = stream_filter.stream_pages_from_kafka(
+        _Session(), "broker-1:9092,broker-2:9092", "data-quality-pages")
+    assert reader.calls == [
+        ("format", "kafka"),
+        ("option", "kafka.bootstrap.servers", "broker-1:9092,broker-2:9092"),
+        ("option", "subscribe", "data-quality-pages"),
+        ("load",),
+    ]
+    assert len(decoded_from) == 1 and decoded_from[0] is wire
+    assert pages.schema == decode(wire).schema
+    assert {r["url"] for r in pages.collect()} == valid_urls | {partial_url}
+
+
 def test_kafka_wire_decode_feeds_scorer_in_streaming(spark, tmp_path):
     """kafka-shaped frames → decode → the SAME batch scorer, end-to-end as
     a stream (file source standing in for the broker with the identical

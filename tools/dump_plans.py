@@ -18,8 +18,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # (query, what the plan proves)
 SHOWCASE = [
-    ("synth_filter", "one ArrowEvalPython node (the single UDF crossing), "
-     "html pruned from ReadSchema, zero Exchange"),
+    ("synth_filter", "one ArrowEvalPython node (the single UDF crossing, "
+     "over text and the claimed lang) that also returns the decision: "
+     "reasons and keep come out of the UDF, and no Project renders a "
+     "rule; html pruned from ReadSchema, zero Exchange"),
     ("quality_drop_summary", "conditional-sum aggregation: partial_ "
      "aggregates before the single-row exchange (map-side combine), no "
      "Generate/explode"),
@@ -79,7 +81,9 @@ def main(sf_dir: str | None = None, out_path: str = DEFAULT_OUT) -> str:
     import __spark_entry__ as entry_mod
     sf_dir = sf_dir or os.path.join(os.path.dirname(entry_mod.SF001),
                                     "sf0.01")
-    spark = get_spark(app_name="dump-plans")
+    # fixed cores: `_spread` repartitions to the default parallelism, which
+    # appears in the plans
+    spark = get_spark(app_name="dump-plans", master="local[8]")
     qs = entry_mod.queries()
     out = [
         "# Physical plans (generated by tools/dump_plans.py — do not edit)",
