@@ -74,21 +74,22 @@ def model_rules(o) -> dict:
     }
 
 
-def decide_frame(scored) -> dict[str, list]:
+def decide_frame(scored) -> dict:
     """Every rule (default thresholds) on the columns of ``score_columns``
     output plus the claimed ``lang`` (no nulls) — a DataFrame or a dict of
-    numpy arrays. Returns one list per output, in row order: ``keep``
-    (bool), ``reasons`` (sorted list of codes) and ``confidences`` (dict
-    rule -> score)."""
+    numpy arrays. Returns ``keep`` (list of bool) and ``reasons`` (list of
+    sorted code lists) in row order, and the confidences as one float
+    matrix (``confidences``, one row per document) whose columns follow
+    ``codes``; only the API reply reads them."""
     o = PandasOps(scored)
     rules = {**th.gopher_rules(o), **model_rules(o)}
     codes = list(rules)
     fired = np.column_stack([f for f, _ in rules.values()]).astype(bool)
-    conf = np.column_stack([c for _, c in rules.values()])
     order = sorted(range(len(codes)), key=codes.__getitem__)
     return {
         "keep": (~fired.any(axis=1)).tolist(),
         "reasons": [[codes[j] for j in order if row[j]]
                     for row in fired.tolist()],
-        "confidences": [dict(zip(codes, row)) for row in conf.tolist()],
+        "confidences": np.column_stack([c for _, c in rules.values()]),
+        "codes": codes,
     }

@@ -220,7 +220,7 @@ DECIDED_SCHEMA = StructType([
 
 
 def score_and_decide(texts: list, langs: list
-                     ) -> tuple[dict[str, np.ndarray], dict[str, list]]:
+                     ) -> tuple[dict[str, np.ndarray], dict]:
     """:func:`score_columns`, then ``decision.decide_frame`` against the
     claimed ``langs``: the scoring UDF's and the API check's one evaluator.
     A null claim (a Kafka frame without the field) decides as 'und', as

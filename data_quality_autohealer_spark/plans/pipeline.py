@@ -90,6 +90,13 @@ def c4_merge_decision(scored: DataFrame) -> DataFrame:
         .drop("_c4_keep"))
 
 
+# what run_filter's two sinks read of a scored frame: clean_rows and
+# bucket_metrics (the persisted frame holds these and nothing else)
+SINK_COLUMNS = ["url", "warc_ts", "lang", "lang_pred", "bucket",
+                "scrubbed_text", "reasons", "keep",
+                "n_email", "n_ssn", "n_phone", "n_ip"]
+
+
 def clean_rows(scored: DataFrame) -> DataFrame:
     """The kept documents of a :func:`score_pages` frame as the clean sinks
     store them — ``run_filter``'s clean table and the streaming
@@ -118,35 +125,28 @@ def bucket_metrics(scored: DataFrame, run_id: str) -> DataFrame:
     sums (one fixed-width counter per reason code), assembled into the map
     after aggregation. All sums are algebraic → map-side partial aggregation;
     shuffle volume is O(buckets × codes), independent of document count.
+    Each aggregate column is parsed from SQL text generated from
+    ``REASON_CODES``: one py4j call per column instead of one per
+    expression node.
     """
-    from ..operators.decision import REASON_CODES
+    def as_map(pairs):
+        keys = ", ".join(f"'{k}'" for k, _ in pairs)
+        return (f"map_from_arrays(array({keys}), "
+                f"array({', '.join(v for _, v in pairs)}))")
 
-    hit_sums = [
-        F.sum(F.array_contains("reasons", c).cast("long")).alias(f"_hit_{i}")
-        for i, c in enumerate(REASON_CODES)
-    ]
-    base = scored.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("docs_in"),
-        F.sum(F.col("keep").cast("long")).alias("docs_kept"),
-        F.sum((~F.col("keep")).cast("long")).alias("docs_dropped"),
-        F.map_from_arrays(
-            F.array(F.lit("email"), F.lit("ssn"), F.lit("phone"), F.lit("ip")),
-            F.array(F.sum("n_email"), F.sum("n_ssn"),
-                    F.sum("n_phone"), F.sum("n_ip")),
-        ).alias("pii_scrubbed"),
-        *hit_sums,
-    )
-    rule_hits = F.map_from_arrays(
-        F.array(*[F.lit(c) for c in REASON_CODES]),
-        F.array(*[F.col(f"_hit_{i}") for i in range(len(REASON_CODES))]),
-    )
-    return (
-        base.withColumn("rule_hits", rule_hits)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("completed_at", F.current_timestamp())
-        .select("run_id", "bucket", "docs_in", "docs_kept", "docs_dropped",
-                "rule_hits", "pii_scrubbed", "completed_at")
-    )
+    hits = [(c, f"sum(cast(array_contains(reasons, '{c}') as bigint))")
+            for c in dec.REASON_CODES]
+    pii = [(k, f"sum(n_{k})") for k in ("email", "ssn", "phone", "ip")]
+    aggs = ["count(1) AS docs_in",
+            "sum(cast(keep as bigint)) AS docs_kept",
+            "sum(cast(NOT keep as bigint)) AS docs_dropped",
+            f"{as_map(hits)} AS rule_hits",
+            f"{as_map(pii)} AS pii_scrubbed"]
+    return (scored.groupBy("bucket")
+            .agg(*[F.expr(e) for e in aggs])
+            .select(F.lit(run_id).alias("run_id"), "bucket", "docs_in",
+                    "docs_kept", "docs_dropped", "rule_hits", "pii_scrubbed",
+                    F.expr("current_timestamp() AS completed_at")))
 
 
 def alert_severity(o):
@@ -191,7 +191,11 @@ def run_filter(
     """Full run with resume. Returns summary counters.
 
     The scored frame shared by the two sinks (clean write + metrics) is
-    cached MEMORY_AND_DISK.
+    cached MEMORY_AND_DISK, narrowed to ``SINK_COLUMNS``. On a Parquet
+    warehouse a call runs only the clean write and the metrics collect as
+    Spark jobs (plus the alerts write when an alert fires): the pages read
+    is schema-pinned, and the resume set and the metrics checkpoint are
+    read and written with pyarrow on the driver.
     ``bucket_subset``: restrict this invocation to the given buckets (the
     wave unit used by :func:`run_filter_in_waves`); partition pruning makes
     the restriction a scan-level filter.
@@ -203,7 +207,7 @@ def run_filter(
     if bucket_subset is not None:
         pages = pages.where(F.col("bucket").isin(list(bucket_subset)))
     scored = score_pages(wh.resume_filter(pages, run_id), c4=c4)
-    scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
+    scored = scored.select(*SINK_COLUMNS).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         # 1) commit the data, 2) append the alerts, 3) checkpoint the metrics
         # LAST. A crash before the checkpoint rescores the bucket on resume:
@@ -212,20 +216,19 @@ def run_filter(
         wh.write_clean(clean_rows(scored), clean_table)
         # The summary and the alert count need the ≤num_buckets metric rows
         # on the driver; the checkpoint is written from those same rows, so
-        # it holds exactly what the summary reports. One slice: one task
-        # writes one metrics file.
+        # it holds exactly what the summary reports.
         metrics_rows = bucket_metrics(scored, run_id).collect()
         n_alerts = 0
         if metrics_rows:
-            metrics_df = wh.spark.createDataFrame(
-                wh.spark.sparkContext.parallelize(metrics_rows, 1),
-                METRICS_SCHEMA)
             _, sev = alert_severity(PandasOps(
                 pd.DataFrame([r.asDict() for r in metrics_rows])))
             n_alerts = int(pd.notna(sev).sum())
             if n_alerts:
-                wh.append_alerts(quality_alerts(metrics_df))
-            wh.append_metrics(metrics_df)
+                # one slice: one task writes one alerts file
+                wh.append_alerts(quality_alerts(wh.spark.createDataFrame(
+                    wh.spark.sparkContext.parallelize(metrics_rows, 1),
+                    METRICS_SCHEMA)))
+            wh.append_metrics(metrics_rows)
         return {"run_id": run_id,
                 "docs_in": sum(r["docs_in"] for r in metrics_rows),
                 "docs_kept": sum(r["docs_kept"] for r in metrics_rows),

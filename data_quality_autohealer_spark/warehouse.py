@@ -4,7 +4,9 @@ Reference analogue: the Kafka metrics topic
 (src/streaming/kafka_producer.py:36-109) → here an append-only METRICS
 TABLE, one row per (run_id, bucket), which doubles as the resume checkpoint
 (north_rule: "checkpoints per-partition lineage + rule-hit metrics ... so a
-killed job resumes without rescoring completed partitions"). Tables carry
+killed job resumes without rescoring completed partitions"). On the Parquet
+fallback the checkpoint is written and its resume set read with pyarrow on
+the driver, where the metric rows already are. Tables carry
 no manifest: the bucket count is the reader's ``num_buckets``, and the
 partition directories are the table's layout.
 
@@ -24,7 +26,9 @@ decorrelates skewed hosts across buckets (host-level Zipf skew lands evenly).
 
 from __future__ import annotations
 
+import datetime
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,6 +55,18 @@ METRICS_SCHEMA = T.StructType([
     T.StructField("completed_at", T.TimestampType()),
 ])
 
+# the pages table as every writer leaves it (write_pages, upsert_pages):
+# ``synth.PAGES_SCHEMA_DDL`` plus the ``bucket`` partition column
+PAGES_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("warc_ts", T.TimestampType()),
+    T.StructField("html", T.BinaryType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("lang", T.StringType()),
+    T.StructField("bucket", T.IntegerType()),
+])
+PAGE_COLUMNS = PAGES_SCHEMA.fieldNames()[:-1]
+
 # the clean table as run_filter writes it; ``bucket`` is the partition column
 CLEAN_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -70,6 +86,12 @@ ALERTS_SCHEMA = T.StructType([
     T.StructField("drop_rate", T.DoubleType()),
     T.StructField("payload", T.StringType()),
 ])
+
+
+def _metrics_arrow_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(METRICS_SCHEMA)
 
 
 def bucket_expr(url_col: str = "url", num_buckets: int = 64):
@@ -147,8 +169,8 @@ class Warehouse:
             writer = df.writeTo(self._fqn(table))
             (writer.replace() if mode == "overwrite" else writer.append())
         else:
-            out = self._clustered(
-                df.withColumn("bucket", bucket_expr("url", self.num_buckets)))
+            out = self._clustered(df.select(*PAGE_COLUMNS).withColumn(
+                "bucket", bucket_expr("url", self.num_buckets)))
             (out.write.mode(mode).partitionBy("bucket")
                 .parquet(self._path(table)))
 
@@ -189,7 +211,7 @@ class Warehouse:
                              table)
             return {"affected_buckets": self.num_buckets,
                     "total_buckets": self.num_buckets}
-        new_b = new_df.withColumn(
+        new_b = new_df.select(*PAGE_COLUMNS).withColumn(
             "bucket", bucket_expr("url", self.num_buckets))
         affected = sorted(r["bucket"] for r in
                           new_b.select("bucket").distinct().collect())
@@ -210,10 +232,15 @@ class Warehouse:
                 "total_buckets": self.num_buckets}
 
     def read_pages(self, table: str = "pages") -> DataFrame:
+        """The pages table. The Parquet fallback reads under the pinned
+        :data:`PAGES_SCHEMA` (no schema-inference job); unlike
+        :meth:`read_table`, a missing table raises rather than reading as
+        empty, so a mistyped table name fails instead of filtering an empty
+        corpus."""
         if self.use_iceberg:
             df = self.spark.read.table(self._fqn(table))
             return df.withColumn("bucket", bucket_expr("url", self.num_buckets))
-        return self.spark.read.parquet(self._path(table))
+        return self.spark.read.schema(PAGES_SCHEMA).parquet(self._path(table))
 
     def write_clean(self, df: DataFrame,
                     table: str = "pages_clean") -> None:
@@ -239,7 +266,14 @@ class Warehouse:
 
     # -- metrics / lineage / resume -------------------------------------------
 
-    def append_metrics(self, df: DataFrame) -> None:
+    def append_metrics(self, rows: list) -> None:
+        """Checkpoint metric rows already on the driver (``METRICS_SCHEMA``
+        rows, as ``bucket_metrics(...).collect()`` returns them).
+
+        Parquet fallback: no Spark job. pyarrow writes one file under a
+        dot-prefixed name, which every reader skips, and ``os.replace``
+        then publishes it whole, so a crash leaves no partial checkpoint.
+        Iceberg keeps the Spark append."""
         if self.use_iceberg:
             self.spark.sql(
                 f"CREATE TABLE IF NOT EXISTS {self._fqn('metrics')} "
@@ -248,9 +282,25 @@ class Warehouse:
                 f" pii_scrubbed map<string,bigint>, completed_at timestamp) "
                 f"USING iceberg"
             )
-            df.writeTo(self._fqn("metrics")).append()
-        else:
-            df.write.mode("append").parquet(self._path("metrics"))
+            (self.spark.createDataFrame(rows, METRICS_SCHEMA)
+                 .writeTo(self._fqn("metrics")).append())
+            return
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        # a collected timestamp is a naive datetime in this process's local
+        # time zone; pyarrow would take a naive value as UTC
+        utc = datetime.timezone.utc
+        table = pa.Table.from_pylist(
+            [{**r.asDict(), "completed_at": r["completed_at"].astimezone(utc)}
+             for r in rows],
+            schema=_metrics_arrow_schema())
+        path = self._path("metrics")
+        os.makedirs(path, exist_ok=True)
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        tmp = os.path.join(path, "." + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, name))
 
     def read_metrics(self) -> DataFrame:
         return self.read_table("metrics", METRICS_SCHEMA)
@@ -298,13 +348,22 @@ class Warehouse:
 
     def completed_buckets(self, run_id: str) -> list[int]:
         """Buckets already checkpointed for this run (the resume set,
-        ≤ num_buckets values), sorted. No Spark job while the metrics table
-        does not exist yet."""
+        ≤ num_buckets values), sorted. The Parquet fallback reads the two
+        columns with pyarrow on the driver: no Spark job."""
         if not self._exists("metrics"):
             return []
-        return sorted(r["bucket"] for r in self.read_metrics()
-                      .where(F.col("run_id") == run_id)
-                      .select("bucket").distinct().collect())
+        if self.use_iceberg:
+            return sorted(r["bucket"] for r in self.read_metrics()
+                          .where(F.col("run_id") == run_id)
+                          .select("bucket").distinct().collect())
+        import pyarrow.parquet as pq
+
+        # a directory read skips dot- and underscore-prefixed files, as
+        # Spark does: an unpublished checkpoint, _SUCCESS, checksums
+        done = pq.read_table(self._path("metrics"), columns=["bucket"],
+                             filters=[("run_id", "==", run_id)],
+                             schema=_metrics_arrow_schema())
+        return sorted(set(done.column("bucket").to_pylist()))
 
     def resume_filter(self, pages: DataFrame, run_id: str) -> DataFrame:
         """Drop completed buckets as a partition filter on the scan: the

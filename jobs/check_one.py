@@ -68,7 +68,11 @@ def check_documents(texts: list[str], langs: list[str] | None = None,
               for i in range(0, len(texts) or 1, ARROW_BATCH_ROWS)]
     scrubbed = [t for cols, _ in chunks for t in cols["scrubbed_text"]]
     decided = {k: [v for _, dec in chunks for v in dec[k]]
-               for k in ("keep", "reasons", "confidences")}
+               for k in ("keep", "reasons")}
+    codes = chunks[0][1]["codes"]
+    decided["confidences"] = [
+        dict(zip(codes, row)) for _, dec in chunks
+        for row in dec["confidences"].tolist()]
 
     scores: dict[str, float] = {}
     for confidences in decided["confidences"]:

@@ -168,7 +168,7 @@ def run_stages(wh, pages, n_in: int, names: list[str], a) -> list[dict]:
             wh.write_pages(out, table=a.out_table)
             # pinned schema: no inference job, and an empty output reads
             # as 0 rows
-            n_out = wh.read_table(a.out_table, out.schema).count()
+            n_out = wh.read_pages(a.out_table).count()
         for df in held + ([cur] if i else []):
             df.unpersist()
         stages.append({"stage": name, "docs_in": n_cur, "docs_out": n_out,

@@ -19,7 +19,6 @@ from data_quality_autohealer_spark.functions.rule_ops import (
     round6,
     round6_array,
 )
-from data_quality_autohealer_spark.functions.scrub import scrub_series
 from data_quality_autohealer_spark.functions.text_heuristics import (
     DEFAULT_THRESHOLDS,
     GopherThresholds,
@@ -30,7 +29,10 @@ from data_quality_autohealer_spark.operators.decision import (
     DEFAULT_MODEL_THRESHOLDS,
     ModelThresholds,
 )
-from data_quality_autohealer_spark.operators.scoring import score_batch
+from data_quality_autohealer_spark.operators.scoring import (
+    MODEL_FIELDS,
+    score_batch,
+)
 
 _ALPHA_RE = re.compile(r"[a-zA-Z]")
 _SYMBOL_RE = re.compile(_SYMBOL_CLASS)
@@ -81,7 +83,6 @@ def reference_labels(
     pdf: pd.DataFrame,
     th: GopherThresholds = DEFAULT_THRESHOLDS,
     mt: ModelThresholds = DEFAULT_MODEL_THRESHOLDS,
-    include_model_rules: bool = True,
 ) -> pd.DataFrame:
     """Oracle keep/drop + reasons + scrubbed text for a pages frame
     (columns: url, text, lang). Returns url-indexed frame with columns
@@ -102,24 +103,18 @@ def reference_labels(
     }
     out = pd.concat([pdf.reset_index(drop=True), sig.reset_index(drop=True)],
                     axis=1)
-    if include_model_rules:
-        from data_quality_autohealer_spark.operators.scoring import MODEL_FIELDS
-        scores = score_batch(pdf["text"]).reset_index(drop=True)[MODEL_FIELDS]
-        out = pd.concat([out, scores], axis=1)
-        fired = {k: v.reset_index(drop=True) for k, v in fired.items()}
-        fired["langid"] = (
-            (scores["lang_pred"] != out["lang"])
-            & (scores["lang_pred"] != "und")
-            # an absent claim, 'und' or null, is not judged (model_rules)
-            & out["lang"].notna() & (out["lang"] != "und")
-            & (scores["lang_conf"] >= mt.min_lang_conf)
-        )
-        fired["perplexity"] = scores["log_pplx"] > mt.max_log_pplx
-        fired["toxicity"] = scores["n_tox"] > mt.max_tox
-    else:
-        fired = {k: v.reset_index(drop=True) for k, v in fired.items()}
-        out = pd.concat(
-            [out, scrub_series(pdf["text"]).reset_index(drop=True)], axis=1)
+    scores = score_batch(pdf["text"]).reset_index(drop=True)[MODEL_FIELDS]
+    out = pd.concat([out, scores], axis=1)
+    fired = {k: v.reset_index(drop=True) for k, v in fired.items()}
+    fired["langid"] = (
+        (scores["lang_pred"] != out["lang"])
+        & (scores["lang_pred"] != "und")
+        # an absent claim, 'und' or null, is not judged (model_rules)
+        & out["lang"].notna() & (out["lang"] != "und")
+        & (scores["lang_conf"] >= mt.min_lang_conf)
+    )
+    fired["perplexity"] = scores["log_pplx"] > mt.max_log_pplx
+    fired["toxicity"] = scores["n_tox"] > mt.max_tox
     reasons = []
     fired_df = pd.DataFrame(fired)
     for _, row in fired_df.iterrows():

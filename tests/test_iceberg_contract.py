@@ -129,6 +129,10 @@ class FakeSpark:
         self.log.append(("sql", " ".join(ddl.split())))
         return FakeDF(self)
 
+    def createDataFrame(self, rows, schema):
+        self.log.append(("createDataFrame", len(rows), schema.fieldNames()))
+        return FakeDF(self)
+
 
 @pytest.fixture()
 def wh(spark):  # noqa: ARG001 - real session only backs Column objects
@@ -176,13 +180,18 @@ def test_write_clean_first_run_creates_then_resume_overwrites(wh):
 
 def test_append_metrics_ddl_and_append(wh):
     fake, w = wh
-    w.append_metrics(FakeDF(fake))
+    now = datetime.datetime.now()
+    w.append_metrics([("r", 1, 2, 1, 1, {"langid": 1}, {"email": 0}, now)])
     assert fake.log[0] == ("sql", (
         "CREATE TABLE IF NOT EXISTS ice.wh.metrics (run_id string, bucket "
         "int, docs_in bigint, docs_kept bigint, docs_dropped bigint, "
         "rule_hits map<string,bigint>, pii_scrubbed map<string,bigint>, "
         "completed_at timestamp) USING iceberg"))
-    assert fake.log[1][1:3] == ("ice.wh.metrics", "append")
+    # the collected rows become a frame under METRICS_SCHEMA, then append
+    assert fake.log[1] == ("createDataFrame", 1, [
+        "run_id", "bucket", "docs_in", "docs_kept", "docs_dropped",
+        "rule_hits", "pii_scrubbed", "completed_at"])
+    assert fake.log[2][1:3] == ("ice.wh.metrics", "append")
 
 
 @pytest.mark.parametrize("appender,table", [

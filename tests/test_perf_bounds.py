@@ -9,11 +9,18 @@ import time
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from data_quality_autohealer_spark import synth
 from data_quality_autohealer_spark.operators import profiler
 from data_quality_autohealer_spark.operators.scoring import score_batch
-from data_quality_autohealer_spark.plans.pipeline import score_pages
+from data_quality_autohealer_spark.plans.pipeline import (
+    bucket_metrics,
+    clean_rows,
+    run_filter,
+    score_pages,
+)
+from data_quality_autohealer_spark.warehouse import Warehouse
 
 
 def test_profile_100k_rows_under_reference_bound(spark):
@@ -61,13 +68,7 @@ def test_e2e_filter_throughput_floor(spark):
     assert kept > 0 and dt < 60.0, f"{dt:.1f}s for 20k docs"
 
 
-def test_score_pages_plan_building_py4j_calls(spark, monkeypatch):
-    """Driver cost of the scorer: building a second ``score_pages`` plan
-    (no job run) makes few py4j round trips. The rules are evaluated inside
-    the scoring UDF; rendering them as Spark Columns on every call took
-    about 1,500-1,900 calls."""
-    pages = synth.gen_pages_df(spark, 100, num_partitions=1)
-    score_pages(pages)
+def _count_py4j_calls(spark, monkeypatch, fn) -> int:
     client = spark.sparkContext._gateway._gateway_client
     send, calls = client.send_command, []
 
@@ -76,6 +77,59 @@ def test_score_pages_plan_building_py4j_calls(spark, monkeypatch):
         return send(*args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting)
+    try:
+        fn()
+    finally:
+        monkeypatch.undo()
+    return len(calls)
+
+
+def test_score_pages_plan_building_py4j_calls(spark, monkeypatch):
+    """Driver cost of the scorer: building a second ``score_pages`` plan
+    (no job run) makes few py4j round trips. The rules are evaluated inside
+    the scoring UDF; rendering them as Spark Columns on every call took
+    about 1,500-1,900 calls."""
+    pages = synth.gen_pages_df(spark, 100, num_partitions=1)
     score_pages(pages)
-    monkeypatch.undo()
-    assert 0 < len(calls) <= 500, len(calls)
+    calls = _count_py4j_calls(spark, monkeypatch, lambda: score_pages(pages))
+    assert 0 < calls <= 500, calls
+
+
+@pytest.fixture()
+def filter_wh(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"), num_buckets=8)
+    wh.write_pages(synth.gen_pages_df(spark, 1000, num_partitions=2))
+    return wh
+
+
+def test_run_filter_spark_jobs(spark, filter_wh):
+    """A second no-alert run_filter call on a Parquet warehouse runs only
+    the clean write and the metrics collect (two jobs under AQE): the pages
+    read infers no schema, and the resume set and the metrics checkpoint
+    go through pyarrow on the driver. The schema-inferred read, the resume
+    collect and the Spark metrics append made it 6."""
+    run_filter(filter_wh, "first")
+    sc = spark.sparkContext
+    sc.setJobGroup("run-filter-jobs", "second run_filter")
+    try:
+        summary = run_filter(filter_wh, "second")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("run-filter-jobs")
+    assert summary["docs_in"] == 1000 and summary["alerts"] == 0
+    assert 0 < len(jobs) <= 3, jobs
+
+
+def test_run_filter_plan_building_py4j_calls(spark, filter_wh, monkeypatch):
+    """Driver cost of the plans a run_filter call builds: the pages read,
+    the scorer, the clean projection and the metrics aggregate make few
+    py4j round trips on a second build. Built from one Column call per
+    expression node, the metrics aggregate alone took about 790."""
+    def build():
+        scored = score_pages(filter_wh.read_pages())
+        clean_rows(scored)
+        bucket_metrics(scored, "r")
+
+    build()
+    calls = _count_py4j_calls(spark, monkeypatch, build)
+    assert 0 < calls <= 600, calls

@@ -33,6 +33,8 @@ KEEP = {
     "simhash_native": "native twin the batched simhash is checked against",
     "reset_model_cache": "reloads the perplexity model after the model-path "
                          "override changes",
+    "scrub_series": "the scrub kernel the benchmark times "
+                    "(perfbench/kernels.py)",
 }
 
 

@@ -1,0 +1,154 @@
+"""The warehouse's pinned reads and driver-side writes on the Parquet
+fallback: every pages writer leaves a table that ``read_pages`` reads under
+``PAGES_SCHEMA`` with no Spark job, and the metrics checkpoint that
+``append_metrics`` writes with pyarrow reads back as the collected rows and
+is published whole or not at all."""
+
+import datetime
+import os
+import time
+
+import pytest
+from pyspark.errors import AnalysisException
+
+from data_quality_autohealer_spark import synth
+from data_quality_autohealer_spark.plans.pipeline import (
+    bucket_metrics,
+    run_filter,
+    score_pages,
+)
+from data_quality_autohealer_spark.warehouse import Warehouse
+
+
+def _jobs_of(spark, fn):
+    """``fn()``'s result and the Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup("warehouse-io", "jobs of one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup("warehouse-io")
+
+
+def _by_url(rows):
+    return sorted(rows, key=lambda r: r["url"])
+
+
+def _written_by_write_pages(spark, root):
+    wh = Warehouse(spark, root, num_buckets=8)
+    wh.write_pages(synth.gen_pages_df(spark, 300, num_partitions=2))
+    return wh, "pages"
+
+
+def _written_by_upsert_pages(spark, root):
+    from pyspark.sql import functions as F
+
+    wh = Warehouse(spark, root, num_buckets=8)
+    base = synth.gen_pages_df(spark, 300, num_partitions=2)
+    wh.upsert_pages(base)  # first delta: the create path
+    delta = (base.orderBy("url").limit(20)
+             .withColumn("warc_ts", F.col("warc_ts") + F.expr("interval 1 day"))
+             .withColumn("text", F.concat("text", F.lit(" v2"))))
+    wh.upsert_pages(delta)  # touched buckets rewritten
+    return wh, "pages"
+
+
+def _written_by_run_dedup(spark, root):
+    from jobs import run_dedup
+
+    wh = Warehouse(spark, root)
+    wh.write_pages(synth.gen_pages_df(spark, 300, num_partitions=2))
+    run_dedup.main(["--warehouse", root, "--mode", "exact"])
+    return wh, "pages_deduped"
+
+
+def _written_by_warc_ingest(spark, root):
+    import jobs.run_warc_ingest as ingest
+
+    ingest.main(["--warc", os.path.join(root, "crawl"), "--warehouse", root,
+                 "--num-buckets", "4", "--synth-segments", "2",
+                 "--docs-per-segment", "30"])
+    return Warehouse(spark, root, num_buckets=4), "pages"
+
+
+@pytest.mark.parametrize("writer", [
+    _written_by_write_pages, _written_by_upsert_pages,
+    _written_by_run_dedup, _written_by_warc_ingest,
+], ids=["write_pages", "upsert_pages", "run_dedup", "warc_ingest"])
+def test_every_pages_writer_reads_back_under_the_pinned_schema(
+        spark, tmp_path, writer):
+    """The pinned read builds its frame with no Spark job (a schema
+    inference is one) and returns the schema and rows Spark infers from
+    the files."""
+    wh, table = writer(spark, str(tmp_path / "wh"))
+    pinned, jobs = _jobs_of(spark, lambda: wh.read_pages(table))
+    assert jobs == []
+    inferred = spark.read.parquet(os.path.join(wh.root, table))
+    assert pinned.schema == inferred.schema
+    rows = _by_url(pinned.collect())
+    assert rows and rows == _by_url(inferred.collect())
+
+
+def test_missing_pages_table_raises(spark, tmp_path):
+    """A mistyped pages table is an error, never an empty corpus."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        wh.read_pages("no_such_pages")
+
+
+@pytest.fixture()
+def scored_wh(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"), num_buckets=4)
+    wh.write_pages(synth.gen_pages_df(spark, 200, num_partitions=2))
+    return wh
+
+
+@pytest.fixture()
+def pacific_time(monkeypatch):
+    """This process in a non-UTC zone: collected timestamps are naive
+    datetimes in local time, 7-8 hours from UTC."""
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_metrics_checkpoint_reads_back_the_collected_rows(
+        scored_wh, pacific_time):
+    rows = bucket_metrics(score_pages(scored_wh.read_pages()), "tz").collect()
+    assert rows and all(isinstance(r["completed_at"], datetime.datetime)
+                        for r in rows)
+    scored_wh.append_metrics(rows)
+    back = scored_wh.read_metrics().collect()
+    key = lambda r: r["bucket"]  # noqa: E731
+    assert sorted(back, key=key) == sorted(rows, key=key)
+    # one published file, no temporary left behind
+    names = os.listdir(os.path.join(scored_wh.root, "metrics"))
+    assert len(names) == 1 and names[0].startswith("part-") \
+        and names[0].endswith(".parquet"), names
+
+
+def test_crash_before_the_rename_publishes_no_checkpoint(
+        scored_wh, monkeypatch):
+    """A crash after pyarrow wrote the temporary file but before it was
+    renamed leaves nothing any reader sees; the next run scores every
+    bucket and publishes its checkpoint."""
+    rows = bucket_metrics(
+        score_pages(scored_wh.read_pages()), "crash").collect()
+
+    def crash(src, dst):
+        raise RuntimeError("injected crash before rename")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        scored_wh.append_metrics(rows)
+    monkeypatch.undo()
+    metrics = os.path.join(scored_wh.root, "metrics")
+    assert [n for n in os.listdir(metrics) if not n.startswith(".")] == []
+    assert scored_wh.read_metrics().count() == 0
+    assert scored_wh.completed_buckets("crash") == []
+    summary = run_filter(scored_wh, "crash")
+    assert summary["docs_in"] == 200
+    assert scored_wh.completed_buckets("crash") == [0, 1, 2, 3]

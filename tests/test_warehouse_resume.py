@@ -44,7 +44,7 @@ def test_resume_skips_completed_buckets(wh, spark):
     pages = wh.read_pages()
     part = pages.where(F.col("bucket") < 4)
     scored = score_pages(part)
-    wh.append_metrics(bucket_metrics(scored, "run2"))
+    wh.append_metrics(bucket_metrics(scored, "run2").collect())
 
     todo = wh.resume_filter(pages, "run2")
     todo_buckets = {r["bucket"] for r in todo.select("bucket").distinct().collect()}
