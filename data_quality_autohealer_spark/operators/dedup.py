@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import forget_zip_finders
+
 # ---------------------------------------------------------------------------
 # shared expression builders (Spark SQL + DuckDB SQL from one definition)
 # ---------------------------------------------------------------------------
@@ -238,6 +240,7 @@ def _signature_udf(k: int, shingle_n: int, jaccard_n: int):
                               else _py_gram_hashes(w, jaccard_n, True))
             yield pd.DataFrame({"sigs": sigs, "ngrams": ngrams},
                                index=text.index)
+        forget_zip_finders()
 
     return _sig.asNondeterministic()
 

@@ -42,6 +42,7 @@ from ..functions import perplexity as _pplx
 from ..functions.rule_ops import round6
 from ..functions.scrub import as_texts, scrub_columns
 from ..functions.text_heuristics import _SYMBOL_CLASS, _WS_CHARS
+from ..session import forget_zip_finders
 from .decision import decide_frame
 
 SCORE_SCHEMA = StructType([
@@ -239,6 +240,7 @@ def _score_and_decide(batches: Iterator[tuple[pd.Series, pd.Series]]
         cols, decided = score_and_decide(text.tolist(), lang.tolist())
         yield pd.DataFrame({**cols, "reasons": decided["reasons"],
                             "keep": decided["keep"]})
+    forget_zip_finders()
 
 
 # The UDF is pure, but we mark it non-deterministic so Catalyst neither

@@ -16,8 +16,10 @@ read, and the plan has no join.
 
 from __future__ import annotations
 
+import datetime
+
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from ..functions.rule_ops import SPARK, PandasOps
@@ -106,15 +108,15 @@ def clean_rows(scored: DataFrame) -> DataFrame:
     An 'und' CLAIM (WARC ingest: unlabeled pages) adopts the model's
     predicted language, so downstream per-lang curation (export mixtures,
     severity censuses) sees real languages; labeled corpora pass through
-    untouched."""
-    lang = (F.when((F.col("lang") == "und") & (F.col("lang_pred") != "und"),
-                   F.col("lang_pred"))
-            .otherwise(F.col("lang")))
-    return scored.where(F.col("keep")).select(
-        "url", "warc_ts", lang.alias("lang"),
+    untouched. The projection is SQL text: a few py4j calls, not one per
+    expression node."""
+    return scored.where("keep").selectExpr(
+        "url", "warc_ts",
+        "CASE WHEN lang = 'und' AND lang_pred != 'und' THEN lang_pred"
+        " ELSE lang END AS lang",
         *[c for c in ["bucket"] if c in scored.columns],
-        F.col("scrubbed_text").alias("text"),
-        F.array_join("reasons", ",").alias("reasons_csv"),
+        "scrubbed_text AS text",
+        "array_join(reasons, ',') AS reasons_csv",
     )
 
 
@@ -145,8 +147,18 @@ def bucket_metrics(scored: DataFrame, run_id: str) -> DataFrame:
     return (scored.groupBy("bucket")
             .agg(*[F.expr(e) for e in aggs])
             .select(F.lit(run_id).alias("run_id"), "bucket", "docs_in",
-                    "docs_kept", "docs_dropped", "rule_hits", "pii_scrubbed",
-                    F.expr("current_timestamp() AS completed_at")))
+                    "docs_kept", "docs_dropped", "rule_hits", "pii_scrubbed"))
+
+
+def collect_metrics(scored: DataFrame, run_id: str) -> list[Row]:
+    """:func:`bucket_metrics` on the driver as ``METRICS_SCHEMA`` rows, all
+    stamped with one ``completed_at`` taken after the collect (a naive
+    local datetime, as a collected timestamp is). Not stamped in the plan:
+    the optimizer folds ``current_timestamp()`` into a literal that codegen
+    inlines, so every call would compile the aggregate's classes anew."""
+    rows = bucket_metrics(scored, run_id).collect()
+    now = datetime.datetime.now()
+    return [Row(**r.asDict(), completed_at=now) for r in rows]
 
 
 def alert_severity(o):
@@ -217,7 +229,7 @@ def run_filter(
         # The summary and the alert count need the ≤num_buckets metric rows
         # on the driver; the checkpoint is written from those same rows, so
         # it holds exactly what the summary reports.
-        metrics_rows = bucket_metrics(scored, run_id).collect()
+        metrics_rows = collect_metrics(scored, run_id)
         n_alerts = 0
         if metrics_rows:
             _, sev = alert_severity(PandasOps(
@@ -289,10 +301,8 @@ def run_filter_in_waves(
     before the append rescored everything). At 10^12 docs an orchestrator
     issues waves anyway; this makes one driver invocation do it.
     """
-    pages = wh.read_pages(pages_table)
     done = set(wh.completed_buckets(run_id))
-    todo = sorted({r["bucket"] for r in
-                   pages.select("bucket").distinct().collect()} - done)
+    todo = sorted(set(wh.page_buckets(pages_table)) - done)
     total = {"run_id": run_id, "docs_in": 0, "docs_kept": 0, "alerts": 0,
              "waves": 0, "buckets_skipped": len(done)}
     for lo in range(0, len(todo), wave_buckets):

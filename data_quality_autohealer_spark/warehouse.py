@@ -242,6 +242,17 @@ class Warehouse:
             return df.withColumn("bucket", bucket_expr("url", self.num_buckets))
         return self.spark.read.schema(PAGES_SCHEMA).parquet(self._path(table))
 
+    def page_buckets(self, table: str = "pages") -> list[int]:
+        """The buckets a pages table holds, sorted. The Parquet fallback
+        lists the table's ``bucket=N`` directories on the driver: no Spark
+        job scans the pages files."""
+        if self.use_iceberg:
+            return sorted(r["bucket"] for r in self.read_pages(table)
+                          .select("bucket").distinct().collect())
+        return sorted(int(name[len("bucket="):])
+                      for name in os.listdir(self._path(table))
+                      if name.startswith("bucket="))
+
     def write_clean(self, df: DataFrame,
                     table: str = "pages_clean") -> None:
         """Idempotent per-bucket append: overwrite the bucket partitions
@@ -268,7 +279,7 @@ class Warehouse:
 
     def append_metrics(self, rows: list) -> None:
         """Checkpoint metric rows already on the driver (``METRICS_SCHEMA``
-        rows, as ``bucket_metrics(...).collect()`` returns them).
+        rows, as ``pipeline.collect_metrics`` returns them).
 
         Parquet fallback: no Spark job. pyarrow writes one file under a
         dot-prefixed name, which every reader skips, and ``os.replace``

@@ -13,7 +13,7 @@ from pyspark.errors import AnalysisException
 
 from data_quality_autohealer_spark import synth
 from data_quality_autohealer_spark.plans.pipeline import (
-    bucket_metrics,
+    collect_metrics,
     run_filter,
     score_pages,
 )
@@ -117,7 +117,7 @@ def pacific_time(monkeypatch):
 
 def test_metrics_checkpoint_reads_back_the_collected_rows(
         scored_wh, pacific_time):
-    rows = bucket_metrics(score_pages(scored_wh.read_pages()), "tz").collect()
+    rows = collect_metrics(score_pages(scored_wh.read_pages()), "tz")
     assert rows and all(isinstance(r["completed_at"], datetime.datetime)
                         for r in rows)
     scored_wh.append_metrics(rows)
@@ -135,8 +135,7 @@ def test_crash_before_the_rename_publishes_no_checkpoint(
     """A crash after pyarrow wrote the temporary file but before it was
     renamed leaves nothing any reader sees; the next run scores every
     bucket and publishes its checkpoint."""
-    rows = bucket_metrics(
-        score_pages(scored_wh.read_pages()), "crash").collect()
+    rows = collect_metrics(score_pages(scored_wh.read_pages()), "crash")
 
     def crash(src, dst):
         raise RuntimeError("injected crash before rename")

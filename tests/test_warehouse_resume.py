@@ -9,7 +9,7 @@ import pytest
 
 from data_quality_autohealer_spark import synth
 from data_quality_autohealer_spark.plans.pipeline import (
-    bucket_metrics, run_filter, score_pages, validate_run,
+    collect_metrics, run_filter, score_pages, validate_run,
 )
 from data_quality_autohealer_spark.warehouse import Warehouse
 
@@ -44,7 +44,7 @@ def test_resume_skips_completed_buckets(wh, spark):
     pages = wh.read_pages()
     part = pages.where(F.col("bucket") < 4)
     scored = score_pages(part)
-    wh.append_metrics(bucket_metrics(scored, "run2").collect())
+    wh.append_metrics(collect_metrics(scored, "run2"))
 
     todo = wh.resume_filter(pages, "run2")
     todo_buckets = {r["bucket"] for r in todo.select("bucket").distinct().collect()}
@@ -176,6 +176,23 @@ def test_run_filter_in_waves(wh, spark):
     # resume after waves: nothing left
     again = run_filter_in_waves(wh, "w1", wave_buckets=3)
     assert again["docs_in"] == 0 and again["buckets_skipped"] == BUCKETS
+
+
+def test_wave_buckets_are_listed_without_a_spark_job(wh, spark):
+    """The buckets run_filter_in_waves walks are the pages table's
+    partition directories, listed on the driver: the Spark query it ran
+    before (select distinct bucket: 2 jobs scanning every pages file)
+    gives the same set."""
+    sc = spark.sparkContext
+    sc.setJobGroup("wave-buckets", "list the pages buckets")
+    try:
+        buckets = wh.page_buckets()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("wave-buckets")) == []
+    assert buckets == sorted(r["bucket"] for r in wh.read_pages()
+                             .select("bucket").distinct().collect())
+    assert buckets == list(range(BUCKETS))
 
 
 def test_bucket_assignment_is_stable(wh, spark):
