@@ -4,7 +4,8 @@ A rule is written once as Python over an ops namespace ``o`` and returns
 ``(fired, confidence)``. :class:`PandasOps` evaluates it on numpy columns
 for every document decision (``decision.decide_frame``); :data:`SPARK`
 renders it as pyspark ``Column`` expressions (``with_quality_signals`` and
-its batched twin, ``alert_severity``, the parity test). ``Column`` and
+its batched twin, ``alert_severity``, the parity test), and :data:`SQL` as
+SQL text (``pipeline.clean_lang`` in ``clean_rows``). ``Column`` and
 numpy arrays already share ``< > <= >= == != & |`` and arithmetic; the few
 operations they spell differently — column access, CASE WHEN,
 least/greatest and Spark's 6dp rounding — are the ops below.
@@ -94,10 +95,42 @@ class SparkOps(_Ops):
         return F.round(x, 6)
 
 
+class _Sql(str):
+    """A SQL expression as text; ``== != &`` build larger ones."""
+
+    def _op(self, op: str, other) -> _Sql:
+        if not isinstance(other, _Sql):
+            other = "'" + str(other).replace("'", "''") + "'"
+        return _Sql(f"({self} {op} {other})")
+
+    def __eq__(self, other):
+        return self._op("=", other)
+
+    def __ne__(self, other):
+        return self._op("!=", other)
+
+    def __and__(self, other):
+        return self._op("AND", other)
+
+
+class SqlOps:
+    """Renders a rule as Spark SQL text, for a projection that must stay a
+    few py4j calls (one ``selectExpr``): the same rule rendered as
+    ``Column`` objects costs one call per expression node. Column access,
+    ``== != &`` against columns and string literals, and CASE WHEN only."""
+
+    col = staticmethod(_Sql)
+
+    @staticmethod
+    def case(branches, otherwise):
+        whens = " ".join(f"WHEN {c} THEN {v}" for c, v in branches)
+        return _Sql(f"CASE {whens} ELSE {otherwise} END")
+
+
 class PandasOps(_Ops):
     """Columns of ``frame`` — a DataFrame or a dict of arrays — as numpy
-    arrays; no nulls expected (``scoring.score_and_decide`` decides a null
-    claim as 'und')."""
+    arrays; the decision rules expect no nulls (``scoring.score_and_decide``
+    decides a null claim as 'und')."""
 
     def __init__(self, frame) -> None:
         self._frame = frame
@@ -122,3 +155,4 @@ class PandasOps(_Ops):
 
 
 SPARK = SparkOps()
+SQL = SqlOps()

@@ -36,7 +36,7 @@ REASON_CODES = [
     "gopher.word_count", "gopher.mean_word_length", "gopher.symbol_ratio",
     "gopher.stopwords", "gopher.alpha_ratio", "gopher.dup_ngram",
     "langid", "perplexity", "toxicity",
-    "c4.page",   # merged post-decision by run_filter(c4=True)
+    "c4.page",   # merged post-decision: score_and_decide(page_keep=)
 ]
 
 # the reference's severity cuts, highest first (kafka_consumer.py:83-94):

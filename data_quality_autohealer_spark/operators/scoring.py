@@ -220,41 +220,69 @@ DECIDED_SCHEMA = StructType([
 ])
 
 
-def score_and_decide(texts: list, langs: list
+def score_and_decide(texts: list, langs: list, page_keep: list | None = None
                      ) -> tuple[dict[str, np.ndarray], dict]:
     """:func:`score_columns`, then ``decision.decide_frame`` against the
-    claimed ``langs``: the scoring UDF's and the API check's one evaluator.
+    claimed ``langs``: the one evaluator of the scoring UDF, of
+    ``run_filter``'s scoring tasks and of the API check.
     A null claim (a Kafka frame without the field) decides as 'und', as
-    under Spark's null semantics; only the decision sees that 'und'."""
+    under Spark's null semantics; only the decision sees that 'und'.
+    ``page_keep``: the C4 page flag of each text (``functions/c4.py``); a
+    flagged page gains reason code ``c4.page`` (sorted in) and is dropped."""
     cols = score_columns(texts)
     claimed = np.array([lg if isinstance(lg, str) else "und" for lg in langs],
                        dtype=object)
-    return cols, decide_frame({**cols, "lang": claimed})
+    decided = decide_frame({**cols, "lang": claimed})
+    if page_keep is not None:
+        for i in np.flatnonzero(~np.asarray(page_keep, dtype=bool)):
+            decided["reasons"][i] = sorted([*decided["reasons"][i], "c4.page"])
+            decided["keep"][i] = False
+    return cols, decided
 
 
-@F.pandas_udf(returnType=DECIDED_SCHEMA)
-def _score_and_decide(batches: Iterator[tuple[pd.Series, pd.Series]]
-                      ) -> Iterator[pd.DataFrame]:
+def _decided_frames(batches):
     # iterator form: get_model() trains/caches once per Python worker process
-    for text, lang in batches:
-        cols, decided = score_and_decide(text.tolist(), lang.tolist())
+    for text, lang, *page_keep in batches:
+        cols, decided = score_and_decide(
+            text.tolist(), lang.tolist(),
+            page_keep[0].tolist() if page_keep else None)
         yield pd.DataFrame({**cols, "reasons": decided["reasons"],
                             "keep": decided["keep"]})
     forget_zip_finders()
 
 
-# The UDF is pure, but we mark it non-deterministic so Catalyst neither
-# duplicates it when a downstream filter references its output (filter
+@F.pandas_udf(returnType=DECIDED_SCHEMA)
+def _score_and_decide(batches: Iterator[tuple[pd.Series, pd.Series]]
+                      ) -> Iterator[pd.DataFrame]:
+    yield from _decided_frames(batches)
+
+
+@F.pandas_udf(returnType=DECIDED_SCHEMA)
+def _score_and_decide_c4(
+        batches: Iterator[tuple[pd.Series, pd.Series, pd.Series]]
+) -> Iterator[pd.DataFrame]:
+    yield from _decided_frames(batches)
+
+
+# The UDFs are pure, but we mark them non-deterministic so Catalyst neither
+# duplicates one when a downstream filter references its output (filter
 # pushdown was observed to clone the ArrowEvalPython node — scoring every
 # document TWICE) nor pushes predicates through it.
 score_udf = _score_and_decide.asNondeterministic()
+score_udf_c4 = _score_and_decide_c4.asNondeterministic()
 
 
-def with_model_scores(df: DataFrame) -> DataFrame:
+def with_model_scores(df: DataFrame, page_keep: str | None = None
+                      ) -> DataFrame:
     """Attach the flattened kernel columns plus ``reasons`` (sorted codes)
     and ``keep`` via a single UDF crossing over ``text`` and the claimed
-    ``lang``."""
-    rest = [c for c in df.columns if c not in DECIDED_SCHEMA.fieldNames()]
-    return (df.select(*rest, score_udf(F.col("text"), F.col("lang"))
-                      .alias("_score"))
+    ``lang`` (and the C4 page flag column ``page_keep``, consumed)."""
+    args = ["text", "lang"]
+    udf = score_udf
+    if page_keep:
+        args.append(page_keep)
+        udf = score_udf_c4
+    rest = [c for c in df.columns
+            if c not in DECIDED_SCHEMA.fieldNames() and c != page_keep]
+    return (df.select(*rest, udf(*[F.col(c) for c in args]).alias("_score"))
             .select(*rest, "_score.*"))

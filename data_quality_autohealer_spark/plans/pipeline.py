@@ -1,12 +1,14 @@
 """The end-to-end quality-filter pipeline: profile → detect → remediate →
-checkpoint, as ONE Spark job graph.
+checkpoint.
 
 Reference analogue: run_auto_healing.py:16-131 (generate → profile → detect →
 remediate → validate), re-expressed Spark-first. The scoring stage is
-shuffle-free (partition-parallel: one Arrow UDF crossing scores and decides);
-the only shuffle is the per-bucket metrics groupBy. Column pruning matters:
-the scoring path never reads ``html`` (BINARY) — only url/text/lang/warc_ts
-reach the scan.
+shuffle-free (partition-parallel: one Arrow crossing scores and decides).
+On a Parquet warehouse the scoring tasks also write the clean files and
+return per-bucket metric partials, so a run is one Spark job with no
+shuffle; the Iceberg path aggregates the metrics with one groupBy. Column
+pruning matters: the scoring path never reads ``html`` (BINARY) — only
+url/text/lang/warc_ts reach the scan.
 
 Resume: before scoring, the buckets already present in the metrics table
 for this run_id (at most ``num_buckets`` values, collected to the driver)
@@ -17,15 +19,22 @@ read, and the plan has no join.
 from __future__ import annotations
 
 import datetime
+import functools
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.rule_ops import SPARK, PandasOps
+from ..functions.rule_ops import SPARK, SQL, PandasOps
 from ..operators import decision as dec
 from ..operators import scoring
+from ..session import forget_zip_finders
 from ..warehouse import AUDIT_SCHEMA, METRICS_SCHEMA, Warehouse
+
+# the pages columns scoring reads (never ``html``)
+SCORING_INPUT = ["url", "warc_ts", "text", "lang", "bucket"]
 
 SCORED_COLUMNS = [
     "url", "warc_ts", "lang", "bucket",
@@ -45,31 +54,30 @@ def score_pages(pages: DataFrame, c4: bool = False) -> DataFrame:
     Deliberately selects only the needed columns first so Parquet/Iceberg
     column pruning drops ``html`` at the scan.
     ``c4``: apply the C4 line rules (functions/c4.py) BEFORE scoring —
-    signals and scrubbing run over the line-cleaned text — and merge the
-    page flag into the decision as reason code ``c4.page``. Both steps are
-    pure projections; the plan gains zero exchanges and no state store.
+    signals and scrubbing run over the line-cleaned text — and hand the
+    page flag to the scoring UDF, which merges it into the decision as
+    reason code ``c4.page``. The plan gains zero exchanges and no state
+    store.
     """
     if c4:
         pages = c4_pre_clean(pages)
     carried = ["_c4_keep"] if c4 else []
     have = set(pages.columns)
-    cols = [c for c in ["url", "warc_ts", "text", "lang", "bucket",
-                        *carried] if c in have]
+    cols = [c for c in [*SCORING_INPUT, *carried] if c in have]
     # ALL per-doc text signals and the decision ride in the one scoring UDF
     # crossing (tokens split once per doc in batched Python — ~50× cheaper
     # than Spark's interpreted higher-order functions; native-expr twins
     # are asserted equal in tests and used for SQL-oracle-checked queries)
-    df = scoring.with_model_scores(pages.select(*cols))
+    df = scoring.with_model_scores(pages.select(*cols),
+                                   page_keep="_c4_keep" if c4 else None)
     have = set(df.columns)
-    df = df.select("text", *[c for c in [*SCORED_COLUMNS, *carried]
-                             if c in have])
-    return c4_merge_decision(df) if c4 else df
+    return df.select("text", *[c for c in SCORED_COLUMNS if c in have])
 
 
 def c4_pre_clean(pages: DataFrame) -> DataFrame:
     """Projection-only C4 stage (functions/c4.py): rewrite ``text`` to the
-    line-cleaned form and carry the page flag as ``_c4_keep`` for
-    :func:`c4_merge_decision` after scoring."""
+    line-cleaned form and carry the page flag as ``_c4_keep`` for the
+    scoring (``scoring.score_and_decide(page_keep=)``)."""
     from ..functions import c4 as c4f
 
     return (c4f.with_c4(pages, "text")
@@ -79,86 +87,178 @@ def c4_pre_clean(pages: DataFrame) -> DataFrame:
                   "c4_drop_reason"))
 
 
-def c4_merge_decision(scored: DataFrame) -> DataFrame:
-    """Fold the carried C4 page flag into the decision: flagged pages get
-    reason code ``c4.page`` (sorted in) and ``keep`` goes false."""
-    return (scored.withColumn(
-        "reasons",
-        F.when(~F.col("_c4_keep"),
-               F.array_sort(F.array_union(
-                   "reasons", F.array(F.lit("c4.page")))))
-        .otherwise(F.col("reasons")))
-        .withColumn("keep", F.col("keep") & F.col("_c4_keep"))
-        .drop("_c4_keep"))
-
-
-# what run_filter's two sinks read of a scored frame: clean_rows and
-# bucket_metrics (the persisted frame holds these and nothing else)
+# what the Iceberg run_filter's two sinks read of a scored frame:
+# clean_rows and metric_partials (the persisted frame holds these only)
 SINK_COLUMNS = ["url", "warc_ts", "lang", "lang_pred", "bucket",
                 "scrubbed_text", "reasons", "keep",
                 "n_email", "n_ssn", "n_phone", "n_ip"]
 
+PII_KINDS = ("email", "ssn", "phone", "ip")
+
+
+def clean_lang(o):
+    """The language a clean row stores, over a ``rule_ops`` namespace: an
+    'und' CLAIM (WARC ingest: unlabeled pages) adopts the model's predicted
+    language, so downstream per-lang curation (export mixtures, severity
+    censuses) sees real languages; any other claim, null included, passes
+    through. Rendered as SQL text by :func:`clean_rows`, evaluated on numpy
+    in ``run_filter``'s scoring tasks."""
+    lang, pred = o.col("lang"), o.col("lang_pred")
+    return o.case([((lang == "und") & (pred != "und"), pred)], lang)
+
 
 def clean_rows(scored: DataFrame) -> DataFrame:
     """The kept documents of a :func:`score_pages` frame as the clean sinks
-    store them — ``run_filter``'s clean table and the streaming
-    ``kept_writer`` both write this projection: scrubbed text, reasons as
-    CSV, and ``bucket`` when the pages came from the warehouse table.
-
-    An 'und' CLAIM (WARC ingest: unlabeled pages) adopts the model's
-    predicted language, so downstream per-lang curation (export mixtures,
-    severity censuses) sees real languages; labeled corpora pass through
-    untouched. The projection is SQL text: a few py4j calls, not one per
-    expression node."""
+    store them — the Iceberg ``run_filter``'s clean table and the streaming
+    ``kept_writer`` both write this projection: :func:`clean_lang`,
+    scrubbed text, reasons as CSV, and ``bucket`` when the pages came from
+    the warehouse table. The projection is SQL text: a few py4j calls, not
+    one per expression node."""
     return scored.where("keep").selectExpr(
-        "url", "warc_ts",
-        "CASE WHEN lang = 'und' AND lang_pred != 'und' THEN lang_pred"
-        " ELSE lang END AS lang",
+        "url", "warc_ts", f"{clean_lang(SQL)} AS lang",
         *[c for c in ["bucket"] if c in scored.columns],
         "scrubbed_text AS text",
         "array_join(reasons, ',') AS reasons_csv",
     )
 
 
-def bucket_metrics(scored: DataFrame, run_id: str) -> DataFrame:
-    """Per-bucket lineage + rule-hit metrics (the checkpoint rows).
+def metric_partials(scored: DataFrame) -> DataFrame:
+    """Per-bucket sums of a scored frame in the partial-row shape that
+    :func:`bucket_metrics` adds up: ``docs_in``, ``docs_kept``, and
+    ``rule_hits`` / ``pii_scrubbed`` as arrays of counts in
+    ``REASON_CODES`` / :data:`PII_KINDS` order.
 
     ONE shuffle (groupBy bucket), no row explosion: rule hits are conditional
-    sums (one fixed-width counter per reason code), assembled into the map
-    after aggregation. All sums are algebraic → map-side partial aggregation;
-    shuffle volume is O(buckets × codes), independent of document count.
-    Each aggregate column is parsed from SQL text generated from
-    ``REASON_CODES``: one py4j call per column instead of one per
-    expression node.
+    sums (one fixed-width counter per reason code). All sums are algebraic →
+    map-side partial aggregation; shuffle volume is O(buckets × codes),
+    independent of document count. Each aggregate column is parsed from SQL
+    text: one py4j call per column instead of one per expression node.
     """
-    def as_map(pairs):
-        keys = ", ".join(f"'{k}'" for k, _ in pairs)
-        return (f"map_from_arrays(array({keys}), "
-                f"array({', '.join(v for _, v in pairs)}))")
-
-    hits = [(c, f"sum(cast(array_contains(reasons, '{c}') as bigint))")
-            for c in dec.REASON_CODES]
-    pii = [(k, f"sum(n_{k})") for k in ("email", "ssn", "phone", "ip")]
+    hits = ", ".join(f"sum(cast(array_contains(reasons, '{c}') as bigint))"
+                     for c in dec.REASON_CODES)
+    pii = ", ".join(f"sum(n_{k})" for k in PII_KINDS)
     aggs = ["count(1) AS docs_in",
             "sum(cast(keep as bigint)) AS docs_kept",
-            "sum(cast(NOT keep as bigint)) AS docs_dropped",
-            f"{as_map(hits)} AS rule_hits",
-            f"{as_map(pii)} AS pii_scrubbed"]
-    return (scored.groupBy("bucket")
-            .agg(*[F.expr(e) for e in aggs])
-            .select(F.lit(run_id).alias("run_id"), "bucket", "docs_in",
-                    "docs_kept", "docs_dropped", "rule_hits", "pii_scrubbed"))
+            f"array({hits}) AS rule_hits",
+            f"array({pii}) AS pii_scrubbed"]
+    return scored.groupBy("bucket").agg(*[F.expr(e) for e in aggs])
+
+
+def bucket_metrics(partials: list, run_id: str) -> list[Row]:
+    """Per-bucket lineage + rule-hit metrics (the checkpoint rows,
+    ``METRICS_SCHEMA``), summed on the driver from partial rows —
+    ``run_filter``'s scoring tasks return one per bucket run, and
+    :func:`metric_partials` one per bucket. All rows are stamped with one
+    ``completed_at`` (a naive local datetime, as a collected timestamp is),
+    taken on the driver: stamped in a plan, ``current_timestamp()`` is
+    folded into a literal that codegen inlines, so every call would compile
+    the plan's classes anew."""
+    sums: dict[int, list] = {}
+    for p in partials:
+        s = sums.setdefault(p["bucket"], [0, 0, [0] * len(dec.REASON_CODES),
+                                          [0] * len(PII_KINDS)])
+        s[0] += p["docs_in"]
+        s[1] += p["docs_kept"]
+        s[2] = [a + b for a, b in zip(s[2], p["rule_hits"])]
+        s[3] = [a + b for a, b in zip(s[3], p["pii_scrubbed"])]
+    now = datetime.datetime.now()
+    return [Row(run_id=run_id, bucket=b, docs_in=n, docs_kept=k,
+                docs_dropped=n - k,
+                rule_hits=dict(zip(dec.REASON_CODES, hits)),
+                pii_scrubbed=dict(zip(PII_KINDS, pii)), completed_at=now)
+            for b, (n, k, hits, pii) in sorted(sums.items())]
 
 
 def collect_metrics(scored: DataFrame, run_id: str) -> list[Row]:
-    """:func:`bucket_metrics` on the driver as ``METRICS_SCHEMA`` rows, all
-    stamped with one ``completed_at`` taken after the collect (a naive
-    local datetime, as a collected timestamp is). Not stamped in the plan:
-    the optimizer folds ``current_timestamp()`` into a literal that codegen
-    inlines, so every call would compile the aggregate's classes anew."""
-    rows = bucket_metrics(scored, run_id).collect()
-    now = datetime.datetime.now()
-    return [Row(**r.asDict(), completed_at=now) for r in rows]
+    """The checkpoint rows of a scored frame through Spark SQL: the
+    :func:`metric_partials` aggregate, collected, then
+    :func:`bucket_metrics`."""
+    return bucket_metrics(metric_partials(scored).collect(), run_id)
+
+
+# one row per bucket run of a scoring task (_score_and_stage)
+PARTIAL_SCHEMA = T.StructType([
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("docs_in", T.LongType()),
+    T.StructField("docs_kept", T.LongType()),
+    T.StructField("rule_hits", T.ArrayType(T.LongType())),
+    T.StructField("pii_scrubbed", T.ArrayType(T.LongType())),
+    T.StructField("file", T.StringType()),
+])
+
+
+def _score_and_stage(staging: str, batches):
+    """``mapInArrow`` body of the Parquet ``run_filter``: score each Arrow
+    batch of pages and stage its kept rows (:func:`_stage_batch`), then
+    yield the task's partial rows, one per run of same-bucket pages: its
+    counts, rule hits, PII sums and the file its kept rows went to."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..warehouse import StagedBucketWriter
+
+    writer = StagedBucketWriter(staging)
+    runs: list[dict] = []
+    try:
+        for batch in batches:
+            _stage_batch(batch, writer, runs)
+        if runs:
+            runs[-1]["file"] = writer.close()
+    finally:
+        writer.close()  # after a failure: a file no partial row names
+    if runs:
+        yield pa.RecordBatch.from_pylist(runs,
+                                         to_arrow_schema(PARTIAL_SCHEMA))
+    forget_zip_finders()
+
+
+def _stage_batch(batch, writer, runs: list[dict]) -> None:
+    """Score and decide one Arrow batch of pages
+    (``scoring.score_and_decide``), write its kept rows as clean rows with
+    ``writer``, and add its counts to ``runs``: a page of another bucket
+    than the last run's starts a new run and ends the last run's file."""
+    import pyarrow as pa
+
+    langs = batch.column("lang").to_pylist()
+    page_keep = (batch.column("_c4_keep").to_pylist()
+                 if "_c4_keep" in batch.schema.names else None)
+    cols, decided = scoring.score_and_decide(
+        batch.column("text").to_pylist(), langs, page_keep)
+    reasons = decided["reasons"]
+    kept = np.flatnonzero(decided["keep"])
+    lang = clean_lang(PandasOps({"lang": np.array(langs, dtype=object),
+                                 "lang_pred": cols["lang_pred"]}))
+    clean = pa.table({
+        "url": batch.column("url").take(kept).cast(pa.string()),
+        "warc_ts": batch.column("warc_ts").take(kept)
+                        .cast(pa.timestamp("us", tz="UTC")),
+        "lang": pa.array(lang[kept], pa.string()),
+        "text": pa.array(cols["scrubbed_text"][kept], pa.string()),
+        "reasons_csv": pa.array([",".join(reasons[i]) for i in kept],
+                                pa.string()),
+    })
+    buckets = batch.column("bucket").to_numpy()
+    cuts = [0, *(np.flatnonzero(np.diff(buckets)) + 1), len(buckets)]
+    for lo, hi in zip(cuts, cuts[1:]):
+        bucket = int(buckets[lo])
+        if not runs or runs[-1]["bucket"] != bucket:
+            if runs:
+                runs[-1]["file"] = writer.close()
+            runs.append({"bucket": bucket, "docs_in": 0, "docs_kept": 0,
+                         "rule_hits": [0] * len(dec.REASON_CODES),
+                         "pii_scrubbed": [0] * len(PII_KINDS),
+                         "file": None})
+        run = runs[-1]
+        k_lo, k_hi = np.searchsorted(kept, [lo, hi])
+        run["docs_in"] += hi - lo
+        run["docs_kept"] += int(k_hi - k_lo)
+        if k_hi > k_lo:
+            writer.write(bucket, clean.slice(k_lo, k_hi - k_lo))
+        for codes in reasons[lo:hi]:
+            for c in codes:
+                run["rule_hits"][dec.REASON_CODES.index(c)] += 1
+        for j, k in enumerate(PII_KINDS):
+            run["pii_scrubbed"][j] += int(cols[f"n_{k}"][lo:hi].sum())
 
 
 def alert_severity(o):
@@ -202,49 +302,75 @@ def run_filter(
 ) -> dict:
     """Full run with resume. Returns summary counters.
 
-    The scored frame shared by the two sinks (clean write + metrics) is
-    cached MEMORY_AND_DISK, narrowed to ``SINK_COLUMNS``. On a Parquet
-    warehouse a call runs only the clean write and the metrics collect as
-    Spark jobs (plus the alerts write when an alert fires): the pages read
-    is schema-pinned, and the resume set and the metrics checkpoint are
-    read and written with pyarrow on the driver.
+    On a Parquet warehouse a call is ONE Spark job (two when an alert
+    fires): the pages read is schema-pinned, the resume set and the metrics
+    checkpoint are read and written with pyarrow on the driver, and each
+    scoring task writes its own clean files and returns its metric partials
+    (:func:`_score_and_stage`), which ``Warehouse.write_clean`` publishes
+    and :func:`bucket_metrics` adds up. On Iceberg, the scored frame is
+    cached for two Spark sinks: :func:`clean_rows` and
+    :func:`collect_metrics`.
     ``bucket_subset``: restrict this invocation to the given buckets (the
     wave unit used by :func:`run_filter_in_waves`); partition pruning makes
     the restriction a scan-level filter.
     ``c4``: the C4 line rules of :func:`score_pages`.
     """
-    from pyspark import StorageLevel
-
     pages = wh.read_pages(pages_table)
     if bucket_subset is not None:
         pages = pages.where(F.col("bucket").isin(list(bucket_subset)))
-    scored = score_pages(wh.resume_filter(pages, run_id), c4=c4)
-    scored = scored.select(*SINK_COLUMNS).persist(StorageLevel.MEMORY_AND_DISK)
+    pages = wh.resume_filter(pages, run_id)
+    # 1) commit the data, 2) append the alerts, 3) checkpoint the metrics
+    # LAST. A crash before the checkpoint rescores the bucket on resume:
+    # its clean partition is rewritten idempotently, and alerts appended
+    # again collapse in read_alerts. The summary, the alerts and the
+    # checkpoint all come from the same ≤num_buckets metric rows.
+    sinks = _spark_sinks if wh.use_iceberg else _task_sinks
+    metrics_rows = sinks(wh, pages, run_id, clean_table, c4)
+    n_alerts = 0
+    if metrics_rows:
+        _, sev = alert_severity(PandasOps(
+            pd.DataFrame([r.asDict() for r in metrics_rows])))
+        n_alerts = int(pd.notna(sev).sum())
+        if n_alerts:
+            # one slice: one task writes one alerts file
+            wh.append_alerts(quality_alerts(wh.spark.createDataFrame(
+                wh.spark.sparkContext.parallelize(metrics_rows, 1),
+                METRICS_SCHEMA)))
+        wh.append_metrics(metrics_rows)
+    return {"run_id": run_id,
+            "docs_in": sum(r["docs_in"] for r in metrics_rows),
+            "docs_kept": sum(r["docs_kept"] for r in metrics_rows),
+            "alerts": n_alerts}
+
+
+def _task_sinks(wh: Warehouse, pages: DataFrame, run_id: str,
+                           clean_table: str, c4: bool) -> list[Row]:
+    """The Parquet sinks of :func:`run_filter`: one Spark job, in
+    ``Warehouse.write_clean``, whose tasks score, stage the clean files and
+    return the metric partials (:func:`_score_and_stage`)."""
+    if c4:
+        pages = c4_pre_clean(pages)
+    staging = wh.clean_staging(clean_table, run_id)
+    staged = pages.select(*SCORING_INPUT, *(["_c4_keep"] if c4 else [])
+                          ).mapInArrow(functools.partial(_score_and_stage,
+                                                         staging),
+                                       PARTIAL_SCHEMA)
+    return bucket_metrics(wh.write_clean(staged, clean_table, staging),
+                          run_id)
+
+
+def _spark_sinks(wh: Warehouse, pages: DataFrame, run_id: str,
+                           clean_table: str, c4: bool) -> list[Row]:
+    """The Iceberg sinks of :func:`run_filter`: the scored frame, cached
+    MEMORY_AND_DISK and narrowed to ``SINK_COLUMNS``, feeds the clean write
+    and then the metrics collect."""
+    from pyspark import StorageLevel
+
+    scored = (score_pages(pages, c4=c4).select(*SINK_COLUMNS)
+              .persist(StorageLevel.MEMORY_AND_DISK))
     try:
-        # 1) commit the data, 2) append the alerts, 3) checkpoint the metrics
-        # LAST. A crash before the checkpoint rescores the bucket on resume:
-        # its clean partition is rewritten idempotently via dynamic partition
-        # overwrite, and alerts appended again collapse in read_alerts.
         wh.write_clean(clean_rows(scored), clean_table)
-        # The summary and the alert count need the ≤num_buckets metric rows
-        # on the driver; the checkpoint is written from those same rows, so
-        # it holds exactly what the summary reports.
-        metrics_rows = collect_metrics(scored, run_id)
-        n_alerts = 0
-        if metrics_rows:
-            _, sev = alert_severity(PandasOps(
-                pd.DataFrame([r.asDict() for r in metrics_rows])))
-            n_alerts = int(pd.notna(sev).sum())
-            if n_alerts:
-                # one slice: one task writes one alerts file
-                wh.append_alerts(quality_alerts(wh.spark.createDataFrame(
-                    wh.spark.sparkContext.parallelize(metrics_rows, 1),
-                    METRICS_SCHEMA)))
-            wh.append_metrics(metrics_rows)
-        return {"run_id": run_id,
-                "docs_in": sum(r["docs_in"] for r in metrics_rows),
-                "docs_kept": sum(r["docs_kept"] for r in metrics_rows),
-                "alerts": n_alerts}
+        return collect_metrics(scored, run_id)
     finally:
         scored.unpersist()
 

@@ -28,7 +28,9 @@ from __future__ import annotations
 
 import datetime
 import os
+import shutil
 import uuid
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,6 +94,45 @@ def _metrics_arrow_schema():
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(METRICS_SCHEMA)
+
+
+def _part_name() -> str:
+    return f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+
+
+class StagedBucketWriter:
+    """Task side of the Parquet clean write (:meth:`Warehouse.write_clean`):
+    appends Arrow tables of clean rows (``CLEAN_SCHEMA`` without
+    ``bucket``; ``warc_ts`` as UTC microseconds) to one file under
+    ``staging/bucket=N/``. One file is open at a time: :meth:`close` ends
+    it, and the next :meth:`write` starts a new one, so a bucket seen again
+    gets a new file."""
+
+    def __init__(self, staging: str) -> None:
+        self.staging = staging
+        self._writer = self._name = None
+
+    def write(self, bucket: int, rows) -> None:
+        import pyarrow.parquet as pq
+
+        if self._writer is None:
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            folder = os.path.join(self.staging, f"bucket={bucket}")
+            os.makedirs(folder, exist_ok=True)
+            self._name = _part_name()
+            self._writer = pq.ParquetWriter(
+                os.path.join(folder, self._name),
+                to_arrow_schema(T.StructType(CLEAN_SCHEMA.fields[:-1])))
+        self._writer.write_table(rows)
+
+    def close(self) -> str | None:
+        """End the open file; its name, or None when nothing was written."""
+        name = self._name
+        if self._writer is not None:
+            self._writer.close()
+        self._writer = self._name = None
+        return name
 
 
 def bucket_expr(url_col: str = "url", num_buckets: int = 64):
@@ -253,11 +294,33 @@ class Warehouse:
                       for name in os.listdir(self._path(table))
                       if name.startswith("bucket="))
 
-    def write_clean(self, df: DataFrame,
-                    table: str = "pages_clean") -> None:
-        """Idempotent per-bucket append: overwrite the bucket partitions
-        being written (dynamic partition overwrite) so a resumed run can
-        rewrite a half-written bucket safely."""
+    def clean_staging(self, table: str, run_id: str) -> str:
+        """An empty staging directory for one ``run_id``'s clean files on
+        the Parquet fallback: dot-prefixed inside the clean table, so no
+        reader lists it. What a killed call with the same ``run_id`` left
+        there is removed first."""
+        path = os.path.join(self._path(table),
+                            ".staging-" + quote(run_id, safe=""))
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        return path
+
+    def write_clean(self, df: DataFrame, table: str = "pages_clean",
+                    staging: str | None = None) -> list | None:
+        """Idempotent per-bucket write: the buckets written replace their
+        partitions (dynamic partition overwrite), so a resumed run can
+        rewrite a half-written bucket safely; a bucket with no row written
+        is left alone.
+
+        Iceberg: ``df`` holds the clean rows; Spark writes them.
+        Parquet fallback: ``df`` is a frame whose tasks write the clean
+        files themselves with :class:`StagedBucketWriter` under ``staging``
+        (:meth:`clean_staging`) and return rows with a ``bucket`` and the
+        ``file`` name written for it (null when none). Collecting them is
+        the call's one Spark job. Only the files those rows name are then
+        published, bucket by bucket in bucket order, so a failed task
+        attempt's file never is; the staging directory is removed last. The
+        collected rows are returned."""
         if self.use_iceberg:
             fqn = self._fqn(table)
             # the first write must CREATE the table: overwritePartitions()
@@ -267,10 +330,29 @@ class Warehouse:
                    .partitionedBy(F.col("bucket")).create())
             else:
                 df.writeTo(fqn).overwritePartitions()
-        else:
-            (df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket").parquet(self._path(table)))
+            return None
+        rows = df.collect()
+        named: dict[int, set[str]] = {}
+        for r in rows:
+            if r["file"] is not None:
+                named.setdefault(r["bucket"], set()).add(r["file"])
+        for bucket in sorted(named):
+            self._publish_bucket(table, staging, bucket, named[bucket])
+        shutil.rmtree(staging)
+        return rows
+
+    def _publish_bucket(self, table: str, staging: str, bucket: int,
+                        files: set[str]) -> None:
+        """Replace the clean table's ``bucket=N`` directory with its staged
+        one, after deleting every staged file not in ``files``."""
+        name = f"bucket={bucket}"
+        staged = os.path.join(staging, name)
+        for f in os.listdir(staged):
+            if f not in files:
+                os.remove(os.path.join(staged, f))
+        dest = os.path.join(self._path(table), name)
+        shutil.rmtree(dest, ignore_errors=True)
+        os.rename(staged, dest)
 
     def read_clean(self, table: str = "pages_clean") -> DataFrame:
         return self.read_table(table, CLEAN_SCHEMA)
@@ -308,7 +390,7 @@ class Warehouse:
             schema=_metrics_arrow_schema())
         path = self._path("metrics")
         os.makedirs(path, exist_ok=True)
-        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        name = _part_name()
         tmp = os.path.join(path, "." + name)
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(path, name))

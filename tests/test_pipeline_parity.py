@@ -116,3 +116,50 @@ def test_run_filter_null_and_und_claims_match_oracle(spark, tmp_path):
     assert summary["docs_in"] == len(pdf)
     assert summary["docs_kept"] == len(want)
     assert got == want
+
+
+def test_task_partials_match_the_spark_sql_sinks(spark, tmp_path):
+    """On a Parquet warehouse the scoring tasks count the metrics and build
+    the clean rows themselves; the Iceberg path gets both from Spark SQL
+    (``collect_metrics`` and ``clean_rows`` over ``score_pages``). The two
+    agree on pages with 'und' and null claims, C4 re-lined text (with a
+    ``c4.page`` drop) and a bucket where every page is dropped."""
+    from data_quality_autohealer_spark.warehouse import Warehouse, bucket_expr
+
+    pdf = synth.gen_pages_pdf(np.arange(800))
+    pdf["text"] = [t[:120] + ".\n" + t[120:240] + ".\n" + t[240:] + "."
+                   for t in pdf["text"]]
+    pdf.loc[7, "text"] += "\nlorem ipsum dolor sit amet."
+    lang = pdf["lang"].astype(object).to_numpy()
+    lang[1::5] = "und"
+    lang[::7] = None
+    pdf["lang"] = lang
+    buckets = {r["url"]: r["b"] for r in spark.createDataFrame(pdf[["url"]])
+               .select("url", bucket_expr("url", 4).alias("b")).collect()}
+    soup = pdf["url"].map(buckets) == 3
+    pdf.loc[soup, "text"] = "### {} => ~~ @@ |||| ^^^ " * 10
+    wh = Warehouse(spark, str(tmp_path / "wh"), num_buckets=4)
+    wh.write_pages(spark.createDataFrame(pdf, synth.PAGES_SCHEMA_DDL))
+
+    pipeline.run_filter(wh, "tasks", c4=True)
+    scored = pipeline.score_pages(wh.read_pages(), c4=True)
+
+    def metric_keys(rows):
+        return sorted((r["bucket"], r["docs_in"], r["docs_kept"],
+                       r["docs_dropped"], sorted(r["rule_hits"].items()),
+                       sorted(r["pii_scrubbed"].items())) for r in rows)
+
+    got = metric_keys(wh.read_metrics().collect())
+    assert got == metric_keys(pipeline.collect_metrics(scored, "tasks"))
+    by_bucket = {m[0]: m for m in got}
+    assert by_bucket[3][1] > 0 and by_bucket[3][2] == 0
+    assert sum(dict(m[4])["c4.page"] for m in got) > 0
+
+    cols = ["url", "warc_ts", "lang", "text", "reasons_csv", "bucket"]
+    clean = sorted(tuple(r) for r in wh.read_clean().select(*cols).collect())
+    assert clean == sorted(tuple(r) for r in pipeline.clean_rows(scored)
+                           .select(*cols).collect())
+    claims = dict(zip(pdf["url"], lang))
+    assert any(claims[r[0]] is None and r[2] is None for r in clean)
+    assert any(claims[r[0]] == "und" and r[2] not in (None, "und")
+               for r in clean)

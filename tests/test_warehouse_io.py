@@ -151,3 +151,23 @@ def test_crash_before_the_rename_publishes_no_checkpoint(
     summary = run_filter(scored_wh, "crash")
     assert summary["docs_in"] == 200
     assert scored_wh.completed_buckets("crash") == [0, 1, 2, 3]
+
+
+def test_clean_warc_ts_round_trips_in_another_time_zone(
+        scored_wh, pacific_time):
+    """The scoring tasks write the clean ``warc_ts`` with pyarrow as UTC
+    microseconds (Spark's writer used INT96). Read back by Spark in a
+    process at TZ=America/Los_Angeles, and read raw with pyarrow, each
+    clean row carries its page's instant."""
+    import pyarrow.parquet as pq
+
+    run_filter(scored_wh, "tz")
+    pages = {r["url"]: r["warc_ts"] for r in
+             scored_wh.read_pages().select("url", "warc_ts").collect()}
+    clean = scored_wh.read_clean().select("url", "warc_ts").collect()
+    assert clean and all(r["warc_ts"] == pages[r["url"]] for r in clean)
+    raw = pq.read_table(os.path.join(scored_wh.root, "pages_clean"),
+                        columns=["url", "warc_ts"]).to_pylist()
+    utc = datetime.timezone.utc
+    assert len(raw) == len(clean)
+    assert all(r["warc_ts"] == pages[r["url"]].astimezone(utc) for r in raw)

@@ -96,9 +96,10 @@ def _symbol_soup(spark, n):
 
 
 def test_run_filter_cost(wh, spark):
-    """One run_filter is 6 Spark jobs at most (listing, resume and alert
-    checks run none), leaves one file per bucket in pages and pages_clean,
-    and appends exactly one metrics file."""
+    """One no-alert run_filter is one Spark job (listing, resume, alert
+    checks and the metrics checkpoint run none), leaves one file per
+    bucket in pages and pages_clean, no checksum file and no staging
+    directory, and appends exactly one metrics file."""
     root = wh.root
     pages_files = _parquet_files(os.path.join(root, "pages"))
     assert len(pages_files) == BUCKETS and set(pages_files.values()) == {1}
@@ -109,13 +110,41 @@ def test_run_filter_cost(wh, spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("run-filter-cost")
-    assert summary["docs_in"] == N
-    assert 0 < len(jobs) <= 6, jobs
+    assert summary["docs_in"] == N and summary["alerts"] == 0
+    assert len(jobs) == 1, jobs
     clean_files = _parquet_files(os.path.join(root, "pages_clean"))
     assert len(clean_files) <= BUCKETS and set(clean_files.values()) == {1}
+    names = [n for _, dirs, files in os.walk(os.path.join(root, "pages_clean"))
+             for n in dirs + files]
+    assert not [n for n in names if n.startswith(".") or n.endswith(".crc")]
     assert _parquet_files(os.path.join(root, "metrics")) == {".": 1}
     run_filter(wh, "cost-2")
     assert _parquet_files(os.path.join(root, "metrics")) == {".": 2}
+
+
+def test_buckets_spanning_arrow_batches_keep_one_file(wh, spark):
+    """A bucket whose pages arrive over several Arrow batches of a task is
+    still one clean file, with the rows a one-batch-per-bucket run
+    writes."""
+    run_filter(wh, "big-batches", clean_table="clean_big")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
+    try:
+        run_filter(wh, "small-batches", clean_table="clean_small")
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    files = _parquet_files(os.path.join(wh.root, "clean_small"))
+    assert len(files) == BUCKETS and set(files.values()) == {1}
+    assert sorted(wh.read_clean("clean_small").collect()) == \
+        sorted(wh.read_clean("clean_big").collect())
+
+    def metrics(run_id):
+        return sorted((m["bucket"], m["docs_in"], m["docs_kept"],
+                       sorted(m["rule_hits"].items()),
+                       sorted(m["pii_scrubbed"].items()))
+                      for m in wh.read_metrics()
+                      .where(F.col("run_id") == run_id).collect())
+
+    assert metrics("small-batches") == metrics("big-batches")
 
 
 def test_all_dropped_run_validates_zero_docs(wh, spark):
@@ -309,4 +338,62 @@ def test_resume_after_crash_between_waves_matches_crash_free_run(
                                            wave_buckets=BUCKETS // 2)
     assert summary["buckets_skipped"] == BUCKETS // 2
     assert summary["waves"] == 1
+    assert _sink_state(w) == crash_free
+
+
+@pytest.mark.parametrize("nth", [1, BUCKETS // 2 + 1],
+                         ids=["before_any_publish", "after_half_published"])
+def test_resume_after_publish_crash_matches_crash_free_run(
+        spark, tmp_path, monkeypatch, crash_free, nth):
+    """A crash after the scoring job, before the first bucket's files are
+    published or after half of them, leaves the staged files where no
+    reader looks: the clean table shows the published buckets only. The
+    next call with the run_id removes the staging directory and ends in
+    the crash-free state."""
+    w = _crash_warehouse(spark, tmp_path)
+    _raise_on_call(monkeypatch, Warehouse, "_publish_bucket", nth)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_filter(w, "crash")
+    monkeypatch.undo()
+    clean_dir = os.path.join(w.root, "pages_clean")
+    assert [n for n in os.listdir(clean_dir) if n.startswith(".")] == \
+        [".staging-crash"]
+    published = {int(n[len("bucket="):]) for n in os.listdir(clean_dir)
+                 if n.startswith("bucket=")}
+    assert len(published) == nth - 1
+    crash_clean = crash_free[0]
+    assert sorted(tuple(r) for r in w.read_clean().collect()) == \
+        [r for r in crash_clean if r[-1] in published]
+    run_filter(w, "crash")
+    assert [n for n in os.listdir(clean_dir) if n.startswith(".")] == []
+    assert _sink_state(w) == crash_free
+
+
+def test_unnamed_staged_file_is_never_published(
+        spark, tmp_path, monkeypatch, crash_free):
+    """A staged file that no successful task's row names, as a failed task
+    attempt leaves one, is deleted instead of published."""
+    import pyarrow as pa
+
+    from data_quality_autohealer_spark.warehouse import StagedBucketWriter
+
+    w = _crash_warehouse(spark, tmp_path)
+    real = Warehouse.clean_staging
+
+    def with_failed_attempt(self, table, run_id):
+        staging = real(self, table, run_id)
+        writer = StagedBucketWriter(staging)
+        writer.write(0, pa.table({
+            "url": ["http://failed.attempt/0"],
+            "warc_ts": pa.array([datetime.datetime(2026, 1, 1)],
+                                pa.timestamp("us", tz="UTC")),
+            "lang": ["en"], "text": ["half-written"], "reasons_csv": [""]}))
+        writer.close()
+        return staging
+
+    monkeypatch.setattr(Warehouse, "clean_staging", with_failed_attempt)
+    run_filter(w, "crash")
+    # bucket 0 was published, with the named file only
+    assert _parquet_files(os.path.join(w.root, "pages_clean"))["bucket=0"] \
+        == 1
     assert _sink_state(w) == crash_free
