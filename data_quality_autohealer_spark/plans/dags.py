@@ -380,8 +380,8 @@ def build_crawl_to_mix_dag() -> DAG:
                            ctx.get("docs_per_segment", 200))
         wh = Warehouse(spark, ctx["warehouse_dir"],
                        num_buckets=ctx.get("num_buckets", 16))
-        wh.write_pages(warc_to_pages(read_warc(spark, ctx["crawl_dir"])))
-        return {"wh": wh, "pages_in": wh.read_pages().count()}
+        return {"wh": wh, "pages_in": wh.write_pages(
+            warc_to_pages(read_warc(spark, ctx["crawl_dir"])))}
 
     def filt(ctx):
         from .pipeline import run_filter
@@ -450,10 +450,9 @@ def build_incremental_crawl_dag() -> DAG:
         wh = Warehouse(spark, ctx["warehouse_dir"],
                        num_buckets=ctx.get("num_buckets", 16))
         run = ctx.get("run_id", "wave")
-        wh.write_pages(warc_to_pages(read_warc(spark, ctx["crawl_dir"])),
-                       table=f"pages_raw_{run}")
-        return {"wh": wh, "run": run,
-                "pages_in": wh.read_pages(f"pages_raw_{run}").count()}
+        return {"wh": wh, "run": run, "pages_in": wh.write_pages(
+            warc_to_pages(read_warc(spark, ctx["crawl_dir"])),
+            table=f"pages_raw_{run}")}
 
     def decontaminate(ctx):
         from ..operators import dedup
@@ -476,9 +475,8 @@ def build_incremental_crawl_dag() -> DAG:
                 threshold=ctx.get("jaccard_threshold", 0.5))
         else:
             kept = raw  # wave 1: nothing to decontaminate against
-        wh.write_pages(kept, table=f"pages_{run}")
         return {"index_path": idx_path,
-                "pages_novel": wh.read_pages(f"pages_{run}").count()}
+                "pages_novel": wh.write_pages(kept, table=f"pages_{run}")}
 
     def filt(ctx):
         from .pipeline import run_filter

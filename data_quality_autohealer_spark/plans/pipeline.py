@@ -4,11 +4,10 @@ checkpoint.
 Reference analogue: run_auto_healing.py:16-131 (generate → profile → detect →
 remediate → validate), re-expressed Spark-first. The scoring stage is
 shuffle-free (partition-parallel: one Arrow crossing scores and decides).
-On a Parquet warehouse the scoring tasks also write the clean files and
-return per-bucket metric partials, so a run is one Spark job with no
-shuffle; the Iceberg path aggregates the metrics with one groupBy. Column
-pruning matters: the scoring path never reads ``html`` (BINARY) — only
-url/text/lang/warc_ts reach the scan.
+The scoring tasks also stage the clean files and return per-bucket metric
+partials, so a run is one Spark job with no shuffle on either engine.
+Column pruning matters: the scoring path never reads ``html`` (BINARY) —
+only url/text/lang/warc_ts reach the scan.
 
 Resume: before scoring, the buckets already present in the metrics table
 for this run_id (at most ``num_buckets`` values, collected to the driver)
@@ -26,12 +25,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.rule_ops import SPARK, SQL, PandasOps
 from ..operators import decision as dec
 from ..operators import scoring
 from ..session import forget_zip_finders
-from ..warehouse import AUDIT_SCHEMA, METRICS_SCHEMA, Warehouse
+from ..warehouse import (
+    METRICS_SCHEMA, StagedBucketWriter, Warehouse, bucket_runs,
+)
 
 # the pages columns scoring reads (never ``html``)
 SCORING_INPUT = ["url", "warc_ts", "text", "lang", "bucket"]
@@ -87,12 +89,6 @@ def c4_pre_clean(pages: DataFrame) -> DataFrame:
                   "c4_drop_reason"))
 
 
-# what the Iceberg run_filter's two sinks read of a scored frame:
-# clean_rows and metric_partials (the persisted frame holds these only)
-SINK_COLUMNS = ["url", "warc_ts", "lang", "lang_pred", "bucket",
-                "scrubbed_text", "reasons", "keep",
-                "n_email", "n_ssn", "n_phone", "n_ip"]
-
 PII_KINDS = ("email", "ssn", "phone", "ip")
 
 
@@ -108,12 +104,12 @@ def clean_lang(o):
 
 
 def clean_rows(scored: DataFrame) -> DataFrame:
-    """The kept documents of a :func:`score_pages` frame as the clean sinks
-    store them — the Iceberg ``run_filter``'s clean table and the streaming
-    ``kept_writer`` both write this projection: :func:`clean_lang`,
-    scrubbed text, reasons as CSV, and ``bucket`` when the pages came from
-    the warehouse table. The projection is SQL text: a few py4j calls, not
-    one per expression node."""
+    """The kept documents of a :func:`score_pages` frame as the streaming
+    ``kept_writer`` stores them, the same rows ``run_filter``'s scoring
+    tasks stage: :func:`clean_lang`, scrubbed text, reasons as CSV, and
+    ``bucket`` when the pages came from the warehouse table. The
+    projection is SQL text: a few py4j calls, not one per expression
+    node."""
     return scored.where("keep").selectExpr(
         "url", "warc_ts", f"{clean_lang(SQL)} AS lang",
         *[c for c in ["bucket"] if c in scored.columns],
@@ -122,37 +118,16 @@ def clean_rows(scored: DataFrame) -> DataFrame:
     )
 
 
-def metric_partials(scored: DataFrame) -> DataFrame:
-    """Per-bucket sums of a scored frame in the partial-row shape that
-    :func:`bucket_metrics` adds up: ``docs_in``, ``docs_kept``, and
-    ``rule_hits`` / ``pii_scrubbed`` as arrays of counts in
-    ``REASON_CODES`` / :data:`PII_KINDS` order.
-
-    ONE shuffle (groupBy bucket), no row explosion: rule hits are conditional
-    sums (one fixed-width counter per reason code). All sums are algebraic →
-    map-side partial aggregation; shuffle volume is O(buckets × codes),
-    independent of document count. Each aggregate column is parsed from SQL
-    text: one py4j call per column instead of one per expression node.
-    """
-    hits = ", ".join(f"sum(cast(array_contains(reasons, '{c}') as bigint))"
-                     for c in dec.REASON_CODES)
-    pii = ", ".join(f"sum(n_{k})" for k in PII_KINDS)
-    aggs = ["count(1) AS docs_in",
-            "sum(cast(keep as bigint)) AS docs_kept",
-            f"array({hits}) AS rule_hits",
-            f"array({pii}) AS pii_scrubbed"]
-    return scored.groupBy("bucket").agg(*[F.expr(e) for e in aggs])
-
-
 def bucket_metrics(partials: list, run_id: str) -> list[Row]:
     """Per-bucket lineage + rule-hit metrics (the checkpoint rows,
-    ``METRICS_SCHEMA``), summed on the driver from partial rows —
-    ``run_filter``'s scoring tasks return one per bucket run, and
-    :func:`metric_partials` one per bucket. All rows are stamped with one
-    ``completed_at`` (a naive local datetime, as a collected timestamp is),
-    taken on the driver: stamped in a plan, ``current_timestamp()`` is
-    folded into a literal that codegen inlines, so every call would compile
-    the plan's classes anew."""
+    ``METRICS_SCHEMA``), summed on the driver from the partial rows
+    ``run_filter``'s scoring tasks return, one per bucket a task scored:
+    ``docs_in``, ``docs_kept``, and ``rule_hits`` / ``pii_scrubbed`` as
+    lists of counts in ``REASON_CODES`` / :data:`PII_KINDS` order. All rows
+    are stamped with one ``completed_at`` (a naive local datetime, as a
+    collected timestamp is), taken on the driver: stamped in a plan,
+    ``current_timestamp()`` is folded into a literal that codegen inlines,
+    so every call would compile the plan's classes anew."""
     sums: dict[int, list] = {}
     for p in partials:
         s = sums.setdefault(p["bucket"], [0, 0, [0] * len(dec.REASON_CODES),
@@ -169,14 +144,7 @@ def bucket_metrics(partials: list, run_id: str) -> list[Row]:
             for b, (n, k, hits, pii) in sorted(sums.items())]
 
 
-def collect_metrics(scored: DataFrame, run_id: str) -> list[Row]:
-    """The checkpoint rows of a scored frame through Spark SQL: the
-    :func:`metric_partials` aggregate, collected, then
-    :func:`bucket_metrics`."""
-    return bucket_metrics(metric_partials(scored).collect(), run_id)
-
-
-# one row per bucket run of a scoring task (_score_and_stage)
+# one row per bucket of a scoring task (_score_and_stage)
 PARTIAL_SCHEMA = T.StructType([
     T.StructField("bucket", T.IntegerType()),
     T.StructField("docs_in", T.LongType()),
@@ -188,35 +156,33 @@ PARTIAL_SCHEMA = T.StructType([
 
 
 def _score_and_stage(staging: str, batches):
-    """``mapInArrow`` body of the Parquet ``run_filter``: score each Arrow
-    batch of pages and stage its kept rows (:func:`_stage_batch`), then
-    yield the task's partial rows, one per run of same-bucket pages: its
-    counts, rule hits, PII sums and the file its kept rows went to."""
+    """``mapInArrow`` body of ``run_filter``: score each Arrow batch of
+    pages and stage its kept rows (:func:`_stage_batch`), then yield the
+    task's partial rows, one per bucket: its counts, rule hits, PII sums
+    and the file its kept rows went to (null when none was kept)."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from ..warehouse import StagedBucketWriter
 
     writer = StagedBucketWriter(staging)
-    runs: list[dict] = []
+    counts: dict[int, dict] = {}
     try:
         for batch in batches:
-            _stage_batch(batch, writer, runs)
-        if runs:
-            runs[-1]["file"] = writer.close()
+            _stage_batch(batch, writer, counts)
+        for s in writer.close():
+            counts[s["bucket"]].update(docs_kept=s["rows"], file=s["file"])
     finally:
-        writer.close()  # after a failure: a file no partial row names
-    if runs:
-        yield pa.RecordBatch.from_pylist(runs,
-                                         to_arrow_schema(PARTIAL_SCHEMA))
+        writer.close()  # after a failure: files no partial row names
+    if counts:
+        yield pa.RecordBatch.from_pylist(
+            [{"bucket": b, **c} for b, c in sorted(counts.items())],
+            to_arrow_schema(PARTIAL_SCHEMA))
     forget_zip_finders()
 
 
-def _stage_batch(batch, writer, runs: list[dict]) -> None:
+def _stage_batch(batch, writer: StagedBucketWriter,
+                 counts: dict[int, dict]) -> None:
     """Score and decide one Arrow batch of pages
     (``scoring.score_and_decide``), write its kept rows as clean rows with
-    ``writer``, and add its counts to ``runs``: a page of another bucket
-    than the last run's starts a new run and ends the last run's file."""
+    ``writer``, and add its per-bucket counts to ``counts``."""
     import pyarrow as pa
 
     langs = batch.column("lang").to_pylist()
@@ -228,7 +194,8 @@ def _stage_batch(batch, writer, runs: list[dict]) -> None:
     kept = np.flatnonzero(decided["keep"])
     lang = clean_lang(PandasOps({"lang": np.array(langs, dtype=object),
                                  "lang_pred": cols["lang_pred"]}))
-    clean = pa.table({
+    buckets = batch.column("bucket").to_numpy()
+    writer.write_runs(buckets[kept], pa.table({
         "url": batch.column("url").take(kept).cast(pa.string()),
         "warc_ts": batch.column("warc_ts").take(kept)
                         .cast(pa.timestamp("us", tz="UTC")),
@@ -236,29 +203,18 @@ def _stage_batch(batch, writer, runs: list[dict]) -> None:
         "text": pa.array(cols["scrubbed_text"][kept], pa.string()),
         "reasons_csv": pa.array([",".join(reasons[i]) for i in kept],
                                 pa.string()),
-    })
-    buckets = batch.column("bucket").to_numpy()
-    cuts = [0, *(np.flatnonzero(np.diff(buckets)) + 1), len(buckets)]
-    for lo, hi in zip(cuts, cuts[1:]):
-        bucket = int(buckets[lo])
-        if not runs or runs[-1]["bucket"] != bucket:
-            if runs:
-                runs[-1]["file"] = writer.close()
-            runs.append({"bucket": bucket, "docs_in": 0, "docs_kept": 0,
-                         "rule_hits": [0] * len(dec.REASON_CODES),
-                         "pii_scrubbed": [0] * len(PII_KINDS),
-                         "file": None})
-        run = runs[-1]
-        k_lo, k_hi = np.searchsorted(kept, [lo, hi])
-        run["docs_in"] += hi - lo
-        run["docs_kept"] += int(k_hi - k_lo)
-        if k_hi > k_lo:
-            writer.write(bucket, clean.slice(k_lo, k_hi - k_lo))
+    }))
+    for bucket, lo, hi in bucket_runs(buckets):
+        c = counts.setdefault(bucket, {
+            "docs_in": 0, "docs_kept": 0, "file": None,
+            "rule_hits": [0] * len(dec.REASON_CODES),
+            "pii_scrubbed": [0] * len(PII_KINDS)})
+        c["docs_in"] += hi - lo
         for codes in reasons[lo:hi]:
-            for c in codes:
-                run["rule_hits"][dec.REASON_CODES.index(c)] += 1
+            for code in codes:
+                c["rule_hits"][dec.REASON_CODES.index(code)] += 1
         for j, k in enumerate(PII_KINDS):
-            run["pii_scrubbed"][j] += int(cols[f"n_{k}"][lo:hi].sum())
+            c["pii_scrubbed"][j] += int(cols[f"n_{k}"][lo:hi].sum())
 
 
 def alert_severity(o):
@@ -302,14 +258,13 @@ def run_filter(
 ) -> dict:
     """Full run with resume. Returns summary counters.
 
-    On a Parquet warehouse a call is ONE Spark job (two when an alert
-    fires): the pages read is schema-pinned, the resume set and the metrics
-    checkpoint are read and written with pyarrow on the driver, and each
-    scoring task writes its own clean files and returns its metric partials
-    (:func:`_score_and_stage`), which ``Warehouse.write_clean`` publishes
-    and :func:`bucket_metrics` adds up. On Iceberg, the scored frame is
-    cached for two Spark sinks: :func:`clean_rows` and
-    :func:`collect_metrics`.
+    The scoring job runs inside ``Warehouse.write_clean``: each scoring
+    task stages its own clean files and returns its metric partials
+    (:func:`_score_and_stage`), which ``write_clean`` publishes (Parquet)
+    or hands to one Iceberg write, and :func:`bucket_metrics` adds up. On
+    a Parquet warehouse a call is ONE Spark job (two when an alert fires):
+    the pages read is schema-pinned, and the resume set and the metrics
+    checkpoint are read and written with pyarrow on the driver.
     ``bucket_subset``: restrict this invocation to the given buckets (the
     wave unit used by :func:`run_filter_in_waves`); partition pruning makes
     the restriction a scan-level filter.
@@ -319,13 +274,20 @@ def run_filter(
     if bucket_subset is not None:
         pages = pages.where(F.col("bucket").isin(list(bucket_subset)))
     pages = wh.resume_filter(pages, run_id)
+    if c4:
+        pages = c4_pre_clean(pages)
+    staging = wh.clean_staging(clean_table, run_id)
+    staged = pages.select(*SCORING_INPUT, *(["_c4_keep"] if c4 else [])
+                          ).mapInArrow(functools.partial(_score_and_stage,
+                                                         staging),
+                                       PARTIAL_SCHEMA)
     # 1) commit the data, 2) append the alerts, 3) checkpoint the metrics
     # LAST. A crash before the checkpoint rescores the bucket on resume:
     # its clean partition is rewritten idempotently, and alerts appended
     # again collapse in read_alerts. The summary, the alerts and the
     # checkpoint all come from the same ≤num_buckets metric rows.
-    sinks = _spark_sinks if wh.use_iceberg else _task_sinks
-    metrics_rows = sinks(wh, pages, run_id, clean_table, c4)
+    metrics_rows = bucket_metrics(
+        wh.write_clean(staged, clean_table, staging), run_id)
     n_alerts = 0
     if metrics_rows:
         _, sev = alert_severity(PandasOps(
@@ -343,38 +305,6 @@ def run_filter(
             "alerts": n_alerts}
 
 
-def _task_sinks(wh: Warehouse, pages: DataFrame, run_id: str,
-                           clean_table: str, c4: bool) -> list[Row]:
-    """The Parquet sinks of :func:`run_filter`: one Spark job, in
-    ``Warehouse.write_clean``, whose tasks score, stage the clean files and
-    return the metric partials (:func:`_score_and_stage`)."""
-    if c4:
-        pages = c4_pre_clean(pages)
-    staging = wh.clean_staging(clean_table, run_id)
-    staged = pages.select(*SCORING_INPUT, *(["_c4_keep"] if c4 else [])
-                          ).mapInArrow(functools.partial(_score_and_stage,
-                                                         staging),
-                                       PARTIAL_SCHEMA)
-    return bucket_metrics(wh.write_clean(staged, clean_table, staging),
-                          run_id)
-
-
-def _spark_sinks(wh: Warehouse, pages: DataFrame, run_id: str,
-                           clean_table: str, c4: bool) -> list[Row]:
-    """The Iceberg sinks of :func:`run_filter`: the scored frame, cached
-    MEMORY_AND_DISK and narrowed to ``SINK_COLUMNS``, feeds the clean write
-    and then the metrics collect."""
-    from pyspark import StorageLevel
-
-    scored = (score_pages(pages, c4=c4).select(*SINK_COLUMNS)
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    try:
-        wh.write_clean(clean_rows(scored), clean_table)
-        return collect_metrics(scored, run_id)
-    finally:
-        scored.unpersist()
-
-
 def validate_run(
     wh: Warehouse,
     run_id: str,
@@ -390,8 +320,6 @@ def validate_run(
     Appends one audit row (the notification artifact) and returns it as a
     dict. One full scan of the clean table; the agg is a 1-row fence.
     """
-    import datetime
-
     clean = wh.read_clean(clean_table)
     rescored = score_pages(clean)
     row = rescored.agg(
@@ -404,10 +332,9 @@ def validate_run(
     status = "ok" if drop_rate <= tolerance else "degraded"
     message = (f"revalidated {docs} kept docs; re-drop rate {drop_rate}"
                f" (tolerance {tolerance})")
-    audit = wh.spark.createDataFrame(
-        [(run_id, "validate_remediation", docs, float(drop_rate), status,
-          message, datetime.datetime.now())], AUDIT_SCHEMA)
-    wh.append_audit(audit)
+    wh.append_audit([(run_id, "validate_remediation", docs,
+                      float(drop_rate), status, message,
+                      datetime.datetime.now())])
     return {"run_id": run_id, "docs_validated": docs,
             "revalidation_drop_rate": drop_rate, "status": status}
 
@@ -468,7 +395,6 @@ def drift_retrain(
     partitionings) and persist the artifact next to the warehouse for
     ``spark-submit --py-files`` shipping. Appends an audit row either way.
     """
-    import datetime
     import os
 
     from ..functions.perplexity import PerplexityModel
@@ -477,11 +403,10 @@ def drift_retrain(
     base = _run_drop_rate(wh, baseline_run_id)
     drift = round(abs(cur - base), 6)
     if drift <= shift_threshold:
-        audit = wh.spark.createDataFrame(
-            [(run_id, "drift_retrain", 0, float(drift), "skipped",
-              f"drop-rate shift {drift} <= threshold {shift_threshold}",
-              datetime.datetime.now())], AUDIT_SCHEMA)
-        wh.append_audit(audit)
+        wh.append_audit([(run_id, "drift_retrain", 0, float(drift),
+                          "skipped",
+                          f"drop-rate shift {drift} <= threshold "
+                          f"{shift_threshold}", datetime.datetime.now())])
         return {"run_id": run_id, "retrained": False, "drift": drift}
 
     sample = (wh.read_clean(clean_table)
@@ -493,11 +418,10 @@ def drift_retrain(
     os.makedirs(model_dir, exist_ok=True)
     path = os.path.join(model_dir, f"pplx_{run_id}.npz")
     model.save(path)
-    audit = wh.spark.createDataFrame(
-        [(run_id, "drift_retrain", len(texts), float(drift), "retrained",
-          f"drop-rate shift {drift} > {shift_threshold}; retrained LM on "
-          f"{len(texts)} docs -> {path}",
-          datetime.datetime.now())], AUDIT_SCHEMA)
-    wh.append_audit(audit)
+    wh.append_audit([(run_id, "drift_retrain", len(texts), float(drift),
+                      "retrained",
+                      f"drop-rate shift {drift} > {shift_threshold}; "
+                      f"retrained LM on {len(texts)} docs -> {path}",
+                      datetime.datetime.now())])
     return {"run_id": run_id, "retrained": True, "drift": drift,
             "model_path": path, "sample_docs": len(texts)}

@@ -13,11 +13,14 @@ partition directories are the table's layout.
 When a real Iceberg catalog is configured (``spark.sql.catalog.<name>`` +
 runtime jar), tables are created with
 ``CREATE TABLE ... USING iceberg PARTITIONED BY (bucket(N, url))`` and written
-via ``writeTo().append()``. In this sandbox (no Iceberg jar) the layer falls
+through ``writeTo()``. In this sandbox (no Iceberg jar) the layer falls
 back transparently to hash-bucketed Parquet: a materialized
 ``bucket = pmod(xxhash64(url), N)`` column used as the physical partition
 column — the same pruning/co-location semantics Iceberg's bucket transform
-provides. All call sites are engine-agnostic.
+provides. Every Parquet bucketed table has one writer: tasks stage each
+bucket's file with pyarrow (:class:`StagedBucketWriter`), and the driver
+publishes the files they name once the job has succeeded, so a failed job
+leaves the table as it was. All call sites are engine-agnostic.
 
 Scale notes: bucket count N is the unit of parallelism for resume and metrics
 (at 10^12 docs choose N ~ 10k-100k so each bucket is a few GB); xxhash64(url)
@@ -27,14 +30,19 @@ decorrelates skewed hosts across buckets (host-level Zipf skew lands evenly).
 from __future__ import annotations
 
 import datetime
+import functools
 import os
 import shutil
 import uuid
 from urllib.parse import quote
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from .session import forget_zip_finders
 
 AUDIT_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType(), False),
@@ -90,10 +98,12 @@ ALERTS_SCHEMA = T.StructType([
 ])
 
 
-def _metrics_arrow_schema():
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(METRICS_SCHEMA)
+# one row per bucket a staging task wrote: the file and its row count
+STAGED_SCHEMA = T.StructType([
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("file", T.StringType()),
+    T.StructField("rows", T.LongType()),
+])
 
 
 def _part_name() -> str:
@@ -101,38 +111,73 @@ def _part_name() -> str:
 
 
 class StagedBucketWriter:
-    """Task side of the Parquet clean write (:meth:`Warehouse.write_clean`):
-    appends Arrow tables of clean rows (``CLEAN_SCHEMA`` without
-    ``bucket``; ``warc_ts`` as UTC microseconds) to one file under
-    ``staging/bucket=N/``. One file is open at a time: :meth:`close` ends
-    it, and the next :meth:`write` starts a new one, so a bucket seen again
-    gets a new file."""
+    """Task side of every Parquet bucketed write (pages and clean): writes
+    Arrow tables of one bucket's rows (no ``bucket`` column; timestamps as
+    UTC microseconds) with pyarrow to one file per bucket under
+    ``staging/bucket=N/``, opened with the bucket's first rows and kept
+    open until :meth:`close`, so a bucket seen again adds to its file."""
 
     def __init__(self, staging: str) -> None:
         self.staging = staging
-        self._writer = self._name = None
+        self._open: dict[int, list] = {}  # bucket -> [file, writer, rows]
 
     def write(self, bucket: int, rows) -> None:
         import pyarrow.parquet as pq
 
-        if self._writer is None:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
+        if bucket not in self._open:
             folder = os.path.join(self.staging, f"bucket={bucket}")
             os.makedirs(folder, exist_ok=True)
-            self._name = _part_name()
-            self._writer = pq.ParquetWriter(
-                os.path.join(folder, self._name),
-                to_arrow_schema(T.StructType(CLEAN_SCHEMA.fields[:-1])))
-        self._writer.write_table(rows)
+            name = _part_name()
+            self._open[bucket] = [name, pq.ParquetWriter(
+                os.path.join(folder, name), rows.schema), 0]
+        entry = self._open[bucket]
+        entry[1].write_table(rows)
+        entry[2] += rows.num_rows
 
-    def close(self) -> str | None:
-        """End the open file; its name, or None when nothing was written."""
-        name = self._name
-        if self._writer is not None:
-            self._writer.close()
-        self._writer = self._name = None
-        return name
+    def write_runs(self, buckets: np.ndarray, rows) -> None:
+        """Write ``rows``, whose bucket numbers are ``buckets``, one run of
+        same-bucket rows at a time."""
+        for bucket, lo, hi in bucket_runs(buckets):
+            self.write(bucket, rows.slice(lo, hi - lo))
+
+    def close(self) -> list[dict]:
+        """End every open file; one ``STAGED_SCHEMA`` dict per bucket."""
+        staged = [{"bucket": b, "file": name, "rows": n}
+                  for b, (name, _, n) in sorted(self._open.items())]
+        for _, writer, _ in self._open.values():
+            writer.close()
+        self._open = {}
+        return staged
+
+
+def bucket_runs(buckets: np.ndarray) -> list[tuple[int, int, int]]:
+    """``(bucket, lo, hi)`` of each run of equal values in ``buckets``."""
+    if not len(buckets):
+        return []
+    cuts = [0, *(np.flatnonzero(np.diff(buckets)) + 1), len(buckets)]
+    return [(int(buckets[lo]), lo, hi) for lo, hi in zip(cuts, cuts[1:])]
+
+
+def _stage_pages(staging: str, batches):
+    """``mapInArrow`` body of the Parquet pages write: stage each Arrow
+    batch of pages (``PAGES_SCHEMA``) by bucket, then yield the task's
+    ``STAGED_SCHEMA`` rows."""
+    import pyarrow as pa
+
+    schema = to_arrow_schema(T.StructType(PAGES_SCHEMA.fields[:-1]))
+    writer = StagedBucketWriter(staging)
+    try:
+        for batch in batches:
+            rows = pa.Table.from_batches([batch])
+            writer.write_runs(rows.column("bucket").to_numpy(),
+                              rows.drop_columns("bucket").cast(schema))
+        staged = writer.close()
+    finally:
+        writer.close()  # after a failure: files no row names
+    if staged:
+        yield pa.RecordBatch.from_pylist(staged,
+                                         to_arrow_schema(STAGED_SCHEMA))
+    forget_zip_finders()
 
 
 def bucket_expr(url_col: str = "url", num_buckets: int = 64):
@@ -189,17 +234,30 @@ class Warehouse:
 
     @staticmethod
     def _clustered(df: DataFrame) -> DataFrame:
-        """Each bucket in one task, rows url-sorted: the partitioned write
-        then leaves one url-sorted file per bucket (the sort also satisfies
-        the writer's own ordering on ``bucket``, so it adds no second sort)."""
+        """Each bucket in one task, rows url-sorted: the staged write then
+        leaves one url-sorted file per bucket."""
         return df.repartition("bucket").sortWithinPartitions("bucket", "url")
 
-    def write_pages(self, df: DataFrame, table: str = "pages",
-                    mode: str = "overwrite") -> None:
-        """Bucketed pages write. Parquet fallback: one url-sorted file per
-        bucket, so a scan task holds whole buckets and the clean write that
-        follows it also leaves one file per bucket, with no shuffle of its
-        own; sorted urls also shrink the columnar encoding."""
+    def _write_staged(self, df: DataFrame, table: str) -> list:
+        """The Parquet pages write of ``df`` (``PAGE_COLUMNS`` and
+        ``bucket``): one Spark job whose tasks stage the clustered rows
+        (:func:`_stage_pages`), then the publish of every bucket they
+        wrote. The collected ``STAGED_SCHEMA`` rows are returned."""
+        staging = self.clean_staging(table, "pages")
+        rows = (self._clustered(df.select(*PAGE_COLUMNS, "bucket"))
+                .mapInArrow(functools.partial(_stage_pages, staging),
+                            STAGED_SCHEMA).collect())
+        self._publish(table, staging, rows)
+        return rows
+
+    def write_pages(self, df: DataFrame, table: str = "pages") -> int:
+        """Bucketed pages overwrite; returns the number of rows written.
+        Parquet fallback: one url-sorted file per bucket, so a scan task
+        holds whole buckets and the clean write that follows it also leaves
+        one file per bucket; sorted urls also shrink the columnar encoding.
+        Every written bucket is published, then the buckets the new data
+        lacks are removed (an empty ``df`` leaves an empty table). A failed
+        job leaves the table as it was."""
         if self.use_iceberg:
             self.spark.sql(
                 f"CREATE TABLE IF NOT EXISTS {self._fqn(table)} "
@@ -207,30 +265,32 @@ class Warehouse:
                 f"lang string) USING iceberg "
                 f"PARTITIONED BY (bucket({self.num_buckets}, url))"
             )
-            writer = df.writeTo(self._fqn(table))
-            (writer.replace() if mode == "overwrite" else writer.append())
-        else:
-            out = self._clustered(df.select(*PAGE_COLUMNS).withColumn(
-                "bucket", bucket_expr("url", self.num_buckets)))
-            (out.write.mode(mode).partitionBy("bucket")
-                .parquet(self._path(table)))
+            df.writeTo(self._fqn(table)).replace()
+            return self.spark.read.table(self._fqn(table)).count()
+        rows = self._write_staged(
+            df.withColumn("bucket", bucket_expr("url", self.num_buckets)),
+            table)
+        kept = {f"bucket={r['bucket']}" for r in rows}
+        for name in os.listdir(self._path(table)):
+            if name.startswith("bucket=") and name not in kept:
+                shutil.rmtree(os.path.join(self._path(table), name))
+        return sum(r["rows"] for r in rows)
 
     def upsert_pages(self, new_df: DataFrame, table: str = "pages") -> dict:
         """Incremental re-crawl ingest: latest ``warc_ts`` per url wins
         (ties prefer the incoming row). Only the bucket partitions TOUCHED
-        by incoming urls are rewritten — dynamic partition overwrite, so
-        merge cost tracks the delta's bucket footprint, not table size
-        (at 65,536 buckets a 0.1% recrawl rewrites ~0.1% of partitions
-        unless its urls are spread; content-addressed bucketing means a
-        host-focused recrawl stays focused).
+        by incoming urls are rewritten, so merge cost tracks the delta's
+        bucket footprint, not table size (at 65,536 buckets a 0.1% recrawl
+        rewrites ~0.1% of partitions unless its urls are spread;
+        content-addressed bucketing means a host-focused recrawl stays
+        focused).
 
-        Parquet fallback note: the merged frame is clustered like
-        :meth:`write_pages` (one file per rewritten bucket) and
-        localCheckpoint'ed before the write because the job reads the same
-        path it overwrites (Spark refuses self-overwrite through lineage).
-        The checkpoint is bounded: affected buckets only. On Iceberg this is
-        ``MERGE INTO``/overwritePartitions against a snapshot — no
-        checkpoint needed.
+        Parquet fallback: the merged frame goes through the staged pages
+        write (one file per rewritten bucket), which publishes only the
+        touched buckets. The job reads the files it replaces, and the
+        publish runs after it has finished, so no checkpoint of the merge
+        is needed. On Iceberg this is ``overwritePartitions`` against a
+        snapshot.
         """
         from pyspark.sql.window import Window
 
@@ -265,10 +325,7 @@ class Warehouse:
             latest.drop("bucket").writeTo(self._fqn(table)) \
                 .overwritePartitions()
         else:
-            snap = self._clustered(latest).localCheckpoint(eager=True)
-            (snap.write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("bucket").parquet(self._path(table)))
+            self._write_staged(latest, table)
         return {"affected_buckets": len(affected),
                 "total_buckets": self.num_buckets}
 
@@ -294,44 +351,51 @@ class Warehouse:
                       for name in os.listdir(self._path(table))
                       if name.startswith("bucket="))
 
-    def clean_staging(self, table: str, run_id: str) -> str:
-        """An empty staging directory for one ``run_id``'s clean files on
-        the Parquet fallback: dot-prefixed inside the clean table, so no
-        reader lists it. What a killed call with the same ``run_id`` left
-        there is removed first."""
+    def clean_staging(self, table: str, key: str) -> str:
+        """An emptied staging directory inside ``table`` for one writer
+        (``key``: a ``run_filter`` call's run_id, or ``pages`` for the pages
+        writers): dot-prefixed, so no reader lists it. What a killed call
+        with the same key left there is removed first."""
         path = os.path.join(self._path(table),
-                            ".staging-" + quote(run_id, safe=""))
+                            ".staging-" + quote(key, safe=""))
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path)
         return path
 
-    def write_clean(self, df: DataFrame, table: str = "pages_clean",
-                    staging: str | None = None) -> list | None:
-        """Idempotent per-bucket write: the buckets written replace their
-        partitions (dynamic partition overwrite), so a resumed run can
-        rewrite a half-written bucket safely; a bucket with no row written
-        is left alone.
-
-        Iceberg: ``df`` holds the clean rows; Spark writes them.
-        Parquet fallback: ``df`` is a frame whose tasks write the clean
-        files themselves with :class:`StagedBucketWriter` under ``staging``
-        (:meth:`clean_staging`) and return rows with a ``bucket`` and the
-        ``file`` name written for it (null when none). Collecting them is
-        the call's one Spark job. Only the files those rows name are then
-        published, bucket by bucket in bucket order, so a failed task
-        attempt's file never is; the staging directory is removed last. The
-        collected rows are returned."""
-        if self.use_iceberg:
-            fqn = self._fqn(table)
-            # the first write must CREATE the table: overwritePartitions()
-            # alone fails with table-not-found on a fresh catalog
-            if not self.spark.catalog.tableExists(fqn):
-                (df.writeTo(fqn).using("iceberg")
-                   .partitionedBy(F.col("bucket")).create())
-            else:
-                df.writeTo(fqn).overwritePartitions()
-            return None
+    def write_clean(self, df: DataFrame, table: str, staging: str) -> list:
+        """Idempotent per-bucket clean write: the buckets written replace
+        their partitions, so a resumed run can rewrite a half-written bucket
+        safely; a bucket with no row written is left alone. ``df``'s tasks
+        stage the files (:class:`StagedBucketWriter` under ``staging``) and
+        return rows naming each bucket's ``file`` (null when none);
+        collecting them is the call's one Spark job. Parquet: the named
+        files are published (:meth:`_publish`). Iceberg: they go to one
+        ``writeTo`` (``create()`` on a new table, ``overwritePartitions()``
+        after). The collected rows are returned."""
         rows = df.collect()
+        if not self.use_iceberg:
+            self._publish(table, staging, rows)
+            return rows
+        files = [os.path.join(staging, f"bucket={r['bucket']}", r["file"])
+                 for r in rows if r["file"] is not None]
+        clean = (self.spark.read.schema(CLEAN_SCHEMA)
+                 .option("basePath", staging).parquet(*files) if files
+                 else self.spark.createDataFrame([], CLEAN_SCHEMA))
+        fqn = self._fqn(table)
+        # the first write must CREATE the table: overwritePartitions()
+        # alone fails with table-not-found on a fresh catalog
+        if not self.spark.catalog.tableExists(fqn):
+            (clean.writeTo(fqn).using("iceberg")
+                  .partitionedBy(F.col("bucket")).create())
+        else:
+            clean.writeTo(fqn).overwritePartitions()
+        shutil.rmtree(staging)
+        return rows
+
+    def _publish(self, table: str, staging: str, rows: list) -> None:
+        """Publish the staged files ``rows`` name (``bucket``, ``file``),
+        bucket by bucket in bucket order, then remove the staging
+        directory."""
         named: dict[int, set[str]] = {}
         for r in rows:
             if r["file"] is not None:
@@ -339,12 +403,11 @@ class Warehouse:
         for bucket in sorted(named):
             self._publish_bucket(table, staging, bucket, named[bucket])
         shutil.rmtree(staging)
-        return rows
 
     def _publish_bucket(self, table: str, staging: str, bucket: int,
                         files: set[str]) -> None:
-        """Replace the clean table's ``bucket=N`` directory with its staged
-        one, after deleting every staged file not in ``files``."""
+        """Replace the table's ``bucket=N`` directory with its staged one,
+        after deleting every staged file not in ``files``."""
         name = f"bucket={bucket}"
         staged = os.path.join(staging, name)
         for f in os.listdir(staged):
@@ -359,41 +422,47 @@ class Warehouse:
 
     # -- metrics / lineage / resume -------------------------------------------
 
-    def append_metrics(self, rows: list) -> None:
-        """Checkpoint metric rows already on the driver (``METRICS_SCHEMA``
-        rows, as ``pipeline.collect_metrics`` returns them).
-
-        Parquet fallback: no Spark job. pyarrow writes one file under a
-        dot-prefixed name, which every reader skips, and ``os.replace``
-        then publishes it whole, so a crash leaves no partial checkpoint.
-        Iceberg keeps the Spark append."""
-        if self.use_iceberg:
-            self.spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {self._fqn('metrics')} "
-                f"(run_id string, bucket int, docs_in bigint, docs_kept bigint,"
-                f" docs_dropped bigint, rule_hits map<string,bigint>,"
-                f" pii_scrubbed map<string,bigint>, completed_at timestamp) "
-                f"USING iceberg"
-            )
-            (self.spark.createDataFrame(rows, METRICS_SCHEMA)
-                 .writeTo(self._fqn("metrics")).append())
-            return
+    def _append_rows(self, table: str, rows: list,
+                     schema: T.StructType) -> None:
+        """Parquet fallback append of rows already on the driver (tuples or
+        Rows in ``schema``'s field order): no Spark job. pyarrow writes one
+        file under a dot-prefixed name, which every reader skips, and
+        ``os.replace`` then publishes it whole, so a crash leaves no partial
+        append."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         # a collected timestamp is a naive datetime in this process's local
         # time zone; pyarrow would take a naive value as UTC
         utc = datetime.timezone.utc
-        table = pa.Table.from_pylist(
-            [{**r.asDict(), "completed_at": r["completed_at"].astimezone(utc)}
-             for r in rows],
-            schema=_metrics_arrow_schema())
-        path = self._path("metrics")
+        names = schema.fieldNames()
+        arrow = pa.Table.from_pylist(
+            [{k: v.astimezone(utc) if isinstance(v, datetime.datetime)
+              else v for k, v in zip(names, r)} for r in rows],
+            schema=to_arrow_schema(schema))
+        path = self._path(table)
         os.makedirs(path, exist_ok=True)
         name = _part_name()
         tmp = os.path.join(path, "." + name)
-        pq.write_table(table, tmp)
+        pq.write_table(arrow, tmp)
         os.replace(tmp, os.path.join(path, name))
+
+    def append_metrics(self, rows: list) -> None:
+        """Checkpoint metric rows already on the driver (``METRICS_SCHEMA``
+        rows, as ``pipeline.bucket_metrics`` returns them) with
+        :meth:`_append_rows`. Iceberg keeps the Spark append."""
+        if not self.use_iceberg:
+            self._append_rows("metrics", rows, METRICS_SCHEMA)
+            return
+        self.spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {self._fqn('metrics')} "
+            f"(run_id string, bucket int, docs_in bigint, docs_kept bigint,"
+            f" docs_dropped bigint, rule_hits map<string,bigint>,"
+            f" pii_scrubbed map<string,bigint>, completed_at timestamp) "
+            f"USING iceberg"
+        )
+        (self.spark.createDataFrame(rows, METRICS_SCHEMA)
+             .writeTo(self._fqn("metrics")).append())
 
     def read_metrics(self) -> DataFrame:
         return self.read_table("metrics", METRICS_SCHEMA)
@@ -423,18 +492,21 @@ class Warehouse:
                 .withColumn("_n", F.row_number().over(first))
                 .where(F.col("_n") == 1).drop("_n"))
 
-    def append_audit(self, df: DataFrame) -> None:
-        """Completion/validation audit rows — the notification analogue of
-        the reference's send_completion_notification
-        (schema_drift_remediation.py:182-204)."""
-        if self.use_iceberg:
-            fqn = self._fqn("audit")
-            if not self.spark.catalog.tableExists(fqn):
-                df.writeTo(fqn).using("iceberg").create()
-            else:
-                df.writeTo(fqn).append()
+    def append_audit(self, rows: list) -> None:
+        """Completion/validation audit rows (``AUDIT_SCHEMA`` tuples) — the
+        notification analogue of the reference's
+        send_completion_notification (schema_drift_remediation.py:182-204).
+        Parquet fallback: :meth:`_append_rows`; Iceberg: a Spark
+        create/append."""
+        if not self.use_iceberg:
+            self._append_rows("audit", rows, AUDIT_SCHEMA)
+            return
+        df = self.spark.createDataFrame(rows, AUDIT_SCHEMA)
+        fqn = self._fqn("audit")
+        if not self.spark.catalog.tableExists(fqn):
+            df.writeTo(fqn).using("iceberg").create()
         else:
-            df.write.mode("append").parquet(self._path("audit"))
+            df.writeTo(fqn).append()
 
     def read_audit(self) -> DataFrame:
         return self.read_table("audit", AUDIT_SCHEMA)
@@ -455,7 +527,7 @@ class Warehouse:
         # Spark does: an unpublished checkpoint, _SUCCESS, checksums
         done = pq.read_table(self._path("metrics"), columns=["bucket"],
                              filters=[("run_id", "==", run_id)],
-                             schema=_metrics_arrow_schema())
+                             schema=to_arrow_schema(METRICS_SCHEMA))
         return sorted(set(done.column("bucket").to_pylist()))
 
     def resume_filter(self, pages: DataFrame, run_id: str) -> DataFrame:

@@ -42,8 +42,9 @@ neardup because identical-text clusters are the worst LSH mega-buckets.
 Every stage but the last is materialized (persist + count) so each stage's
 counts are exact: stage k's docs_in is stage k-1's docs_out, and the input
 count is the output count plus every stage's removals. The last stage is
-written straight to the output table and counted from it. ``--mode index``
-writes the corpus's near-dup signature index instead of pages.
+written straight to the output table, whose writer counts its rows.
+``--mode index`` writes the corpus's near-dup signature index instead of
+pages.
 """
 
 from __future__ import annotations
@@ -165,10 +166,7 @@ def run_stages(wh, pages, n_in: int, names: list[str], a) -> list[dict]:
             n_out = out.count()
         else:
             out = out.drop("bucket")
-            wh.write_pages(out, table=a.out_table)
-            # pinned schema: no inference job, and an empty output reads
-            # as 0 rows
-            n_out = wh.read_pages(a.out_table).count()
+            n_out = wh.write_pages(out, table=a.out_table)
         for df in held + ([cur] if i else []):
             df.unpersist()
         stages.append({"stage": name, "docs_in": n_cur, "docs_out": n_out,
@@ -218,7 +216,7 @@ def main(argv: list[str] | None = None) -> dict:
 
     from data_quality_autohealer_spark import synth
     from data_quality_autohealer_spark.session import get_spark
-    from data_quality_autohealer_spark.warehouse import AUDIT_SCHEMA, Warehouse
+    from data_quality_autohealer_spark.warehouse import Warehouse
 
     spark = get_spark(app_name=f"dqa-dedup-{args.mode}", master=args.master)
     wh = Warehouse(spark, args.warehouse)
@@ -246,11 +244,9 @@ def main(argv: list[str] | None = None) -> dict:
                 shingle_n=args.shingle_n, jaccard_n=args.jaccard_n))
         n_idx = spark.read.parquet(idx_path).count()
         sec = round(time.perf_counter() - t0, 2)
-        audit = spark.createDataFrame(
-            [("dedup-index", "dedup", n_in, 0.0, "ok",
-              f"signature index over {n_idx} docs in {sec}s",
-              datetime.datetime.now())], AUDIT_SCHEMA)
-        wh.append_audit(audit)
+        wh.append_audit([("dedup-index", "dedup", n_in, 0.0, "ok",
+                          f"signature index over {n_idx} docs in {sec}s",
+                          datetime.datetime.now())])
         return {"mode": "index", "docs_in": n_in, "indexed": n_idx,
                 "index_path": idx_path, "sec": sec}
 
@@ -277,7 +273,7 @@ def main(argv: list[str] | None = None) -> dict:
             detail += f" ({sum(lines)} duplicate lines removed)"
         rows = [(f"dedup-{args.mode}", "dedup", n_in,
                  round(1.0 - n_out / max(n_in, 1), 6), "ok", detail, now)]
-    wh.append_audit(spark.createDataFrame(rows, AUDIT_SCHEMA))
+    wh.append_audit(rows)
 
     summary = {"mode": args.mode, "docs_in": n_in, "docs_out": n_out,
                "removed": n_in - n_out}

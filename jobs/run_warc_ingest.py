@@ -138,8 +138,7 @@ def main(argv: list[str] | None = None) -> dict:
     pages = warc_to_pages(records, text_extract=args.text_extract,
                           drop_noindex=not args.keep_noindex)
     wh = Warehouse(spark, args.warehouse, num_buckets=args.num_buckets)
-    wh.write_pages(pages, args.pages_table)
-    summary["pages_written"] = wh.read_pages(args.pages_table).count()
+    summary["pages_written"] = wh.write_pages(pages, args.pages_table)
     return summary
 
 

@@ -10,10 +10,13 @@ below are exactly what it receives.
 
 The fakes record; real pyspark Column/Window objects (bucket_expr,
 row_number) are constructed as usual — the ``spark`` fixture's JVM backs
-them — and simply ignored by the recorder.
+them — and simply ignored by the recorder. The ``run_filter`` test runs
+the staged scoring job on the real session and records only the catalog
+calls (``RecordingSession``).
 """
 
 import datetime
+import os
 
 import pytest
 
@@ -88,6 +91,9 @@ class FakeDF:
     def collect(self):
         return self.spark.scripted_collect
 
+    def count(self):
+        return len(self.spark.scripted_collect)
+
     def writeTo(self, fqn):
         return FakeWriter(self.spark.log, self, fqn)
 
@@ -113,8 +119,15 @@ class FakeReader:
         self.spark.log.append(("read.table", fqn))
         return FakeDF(self.spark)
 
-    def parquet(self, path):  # pragma: no cover
-        raise AssertionError("parquet read on the Iceberg branch")
+    def schema(self, schema):
+        return self
+
+    def option(self, key, value):
+        return self
+
+    def parquet(self, *paths):
+        self.spark.log.append(("read.parquet", paths))
+        return FakeDF(self.spark)
 
 
 class FakeSpark:
@@ -154,28 +167,31 @@ def test_write_pages_creates_bucket_partitioned_table_then_replaces(wh):
     # Iceberg's hidden bucket(16, url) transform owns the partitioning
 
 
-def test_write_pages_append_mode_appends(wh):
+def test_write_clean_first_run_creates_then_resume_overwrites(wh, tmp_path):
     fake, w = wh
-    w.write_pages(FakeDF(fake), table="pages_new", mode="append")
-    assert ("writeTo", "ice.wh.pages_new", "append", None, None, ()) \
-        == fake.log[1]
-
-
-def test_write_clean_first_run_creates_then_resume_overwrites(wh):
-    fake, w = wh
+    staging = tmp_path / "staging"
+    # the scoring tasks' rows: bucket 3 staged a file, bucket 5 kept none
+    fake.scripted_collect = Rows([{"bucket": 3, "file": "part-a.parquet"},
+                                  {"bucket": 5, "file": None}])
     # fresh catalog: the write must CREATE (overwritePartitions alone
     # fails with table-not-found)
     fake.tables_exist = False
-    w.write_clean(FakeDF(fake))
-    assert fake.log[0] == ("tableExists", "ice.wh.pages_clean")
-    kind, fqn, verb, using, part, ops = fake.log[1]
+    staging.mkdir()
+    w.write_clean(FakeDF(fake), "pages_clean", str(staging))
+    # only the named staged files are read and handed to the write
+    assert fake.log[0] == ("read.parquet",
+                           (str(staging / "bucket=3" / "part-a.parquet"),))
+    assert fake.log[1] == ("tableExists", "ice.wh.pages_clean")
+    kind, fqn, verb, using, part, ops = fake.log[2]
     assert (fqn, verb, using) == ("ice.wh.pages_clean", "create", "iceberg")
     assert "bucket" in part
+    assert not staging.exists()
     # resumed run against an existing table: idempotent per-bucket rewrite
     fake.log.clear()
     fake.tables_exist = True
-    w.write_clean(FakeDF(fake))
-    assert fake.log[1][1:3] == ("ice.wh.pages_clean", "overwritePartitions")
+    staging.mkdir()
+    w.write_clean(FakeDF(fake), "pages_clean", str(staging))
+    assert fake.log[2][1:3] == ("ice.wh.pages_clean", "overwritePartitions")
 
 
 def test_append_metrics_ddl_and_append(wh):
@@ -196,18 +212,25 @@ def test_append_metrics_ddl_and_append(wh):
 
 @pytest.mark.parametrize("appender,table", [
     (lambda w, df: w.append_alerts(df), "alerts"),
-    (lambda w, df: w.append_audit(df), "audit"),
+    (lambda w, df: w.append_audit(
+        [("r", "step", 1, 0.0, "ok", "m", datetime.datetime.now())]),
+     "audit"),
 ])
 def test_alert_audit_sinks_create_then_append(wh, appender, table):
     fake, w = wh
+
+    def catalog_calls():
+        # the audit rows become a frame first (createDataFrame)
+        return [e for e in fake.log if e[0] != "createDataFrame"]
+
     fake.tables_exist = False
     appender(w, FakeDF(fake))
-    assert fake.log[0] == ("tableExists", f"ice.wh.{table}")
-    assert fake.log[1][1:3] == (f"ice.wh.{table}", "create")
+    assert catalog_calls()[0] == ("tableExists", f"ice.wh.{table}")
+    assert catalog_calls()[1][1:3] == (f"ice.wh.{table}", "create")
     fake.log.clear()
     fake.tables_exist = True
     appender(w, FakeDF(fake))
-    assert fake.log[1][1:3] == (f"ice.wh.{table}", "append")
+    assert catalog_calls()[1][1:3] == (f"ice.wh.{table}", "append")
 
 
 def test_reads_route_through_catalog_tables(wh):
@@ -260,6 +283,8 @@ def test_upsert_fresh_catalog_falls_back_to_create_path(wh):
     assert fake.log[1][0] == "sql"
     assert "CREATE TABLE IF NOT EXISTS ice.wh.pages" in fake.log[1][1]
     assert fake.log[2][1:3] == ("ice.wh.pages", "replace")
+    # the rows written are counted from the table
+    assert fake.log[3] == ("read.table", "ice.wh.pages")
 
 
 def test_audit_frame_contract_smoke(spark):
@@ -278,3 +303,102 @@ def test_audit_frame_contract_smoke(spark):
     ddl_cols = ("run_id", "bucket", "docs_in", "docs_kept", "docs_dropped",
                 "rule_hits", "pii_scrubbed", "completed_at")
     assert tuple(f.name for f in m.schema.fields) == ddl_cols
+
+
+class RecordingSession:
+    """The real session, with the catalog calls of an Iceberg warehouse
+    recorded instead of run: every table is absent, a catalog read returns
+    ``pages``, DDL is logged, and ``writeTo`` (patched by
+    :func:`_record_writes`) keeps the rows it is handed."""
+
+    def __init__(self, spark, pages):
+        self._spark, self.pages = spark, pages
+        self.log, self.written = [], {}
+        self.catalog = self
+
+    def __getattr__(self, name):
+        return getattr(self._spark, name)
+
+    def tableExists(self, fqn):
+        self.log.append(("tableExists", fqn))
+        return False
+
+    def sql(self, ddl):
+        self.log.append(("sql", " ".join(ddl.split()[:6])))
+
+    @property
+    def read(self):
+        session, real = self, self._spark.read
+
+        class Reader:
+            def table(self, fqn):
+                session.log.append(("read.table", fqn))
+                return session.pages
+
+            def __getattr__(self, name):
+                return getattr(real, name)
+
+        return Reader()
+
+
+def _record_writes(monkeypatch, session):
+    class Writer:
+        def __init__(self, df, fqn):
+            self.df, self.fqn = df, fqn
+
+        def using(self, fmt):
+            return self
+
+        def partitionedBy(self, col):
+            return self
+
+        def _done(self, verb):
+            session.log.append(("writeTo", self.fqn, verb))
+            session.written[self.fqn] = self.df.collect()
+
+        def create(self):
+            self._done("create")
+
+        def append(self):
+            self._done("append")
+
+    monkeypatch.setattr(type(session._spark.range(1)), "writeTo",
+                        lambda df, fqn: Writer(df, fqn))
+
+
+def test_run_filter_stages_and_hands_the_named_files_to_iceberg(
+        spark, tmp_path, monkeypatch):
+    """On Iceberg ``run_filter`` runs the same staged scoring job as on
+    Parquet, over a pages scan that is not clustered by bucket, and hands
+    the staged clean files to one ``writeTo``: its rows, and the metrics
+    appended, equal the Parquet run's."""
+    from data_quality_autohealer_spark import synth
+    from data_quality_autohealer_spark.plans.pipeline import run_filter
+
+    parquet = Warehouse(spark, str(tmp_path / "parquet"), num_buckets=8)
+    parquet.write_pages(synth.gen_pages_df(spark, 600, num_partitions=2))
+    want = run_filter(parquet, "r")
+    clean = sorted(tuple(r) for r in parquet.read_clean().collect())
+
+    def metrics(rows):
+        return sorted(tuple(r)[:-1] for r in rows)  # minus completed_at
+
+    session = RecordingSession(
+        spark, parquet.read_pages().drop("bucket").repartition(3))
+    _record_writes(monkeypatch, session)
+    ice = Warehouse(session, str(tmp_path / "ice"), num_buckets=8,
+                    catalog="ice")
+    assert run_filter(ice, "r") == want
+    assert session.log == [
+        ("read.table", "ice.wh.pages"),
+        ("tableExists", "ice.wh.metrics"),
+        ("tableExists", "ice.wh.pages_clean"),
+        ("writeTo", "ice.wh.pages_clean", "create"),
+        ("sql", "CREATE TABLE IF NOT EXISTS ice.wh.metrics"),
+        ("writeTo", "ice.wh.metrics", "append"),
+    ]
+    assert sorted(tuple(r) for r in
+                  session.written["ice.wh.pages_clean"]) == clean
+    assert metrics(session.written["ice.wh.metrics"]) == \
+        metrics(parquet.read_metrics().collect())
+    assert os.listdir(tmp_path / "ice" / "pages_clean") == []

@@ -5,6 +5,7 @@ single-pass profiler beats the reference's per-column job storm by orders of
 magnitude; bounds here are kept at the reference's numbers so the test is an
 apples-to-apples 'matches-or-beats' gate, not a flaky micro-benchmark."""
 
+import functools
 import threading
 import time
 
@@ -15,9 +16,8 @@ import pytest
 from data_quality_autohealer_spark import synth
 from data_quality_autohealer_spark.operators import profiler
 from data_quality_autohealer_spark.operators.scoring import score_batch
+from data_quality_autohealer_spark.plans import pipeline
 from data_quality_autohealer_spark.plans.pipeline import (
-    clean_rows,
-    metric_partials,
     run_filter,
     score_pages,
 )
@@ -142,16 +142,17 @@ def test_run_filter_repeat_call_compiles_no_class(spark, filter_wh):
 
 
 def test_run_filter_plan_building_py4j_calls(spark, filter_wh, monkeypatch):
-    """Driver cost of the plans an Iceberg run_filter call builds (the
-    Parquet one builds only the scan and its mapInArrow): the pages read,
-    the scorer, the clean projection and the metrics aggregate make few
-    py4j round trips on a second build. Built from one Column call per
-    expression node, the metrics aggregate alone took about 790, and the
-    clean projection about 187 (14 as one selectExpr); 289 measured."""
+    """Driver cost of the plan a run_filter call builds: the pages read,
+    the resume filter and the scoring tasks' ``mapInArrow`` make few py4j
+    round trips on a second build. The Iceberg call's second plan (the
+    scorer, the clean projection and the metrics aggregate) made 289; built
+    from one Column call per expression node, the metrics aggregate alone
+    took about 790."""
     def build():
-        scored = score_pages(filter_wh.read_pages())
-        clean_rows(scored)
-        metric_partials(scored)
+        pages = filter_wh.resume_filter(filter_wh.read_pages(), "plan")
+        pages.select(*pipeline.SCORING_INPUT).mapInArrow(
+            functools.partial(pipeline._score_and_stage, "unused"),
+            pipeline.PARTIAL_SCHEMA)
 
     build()
     calls = _count_py4j_calls(spark, monkeypatch, build)

@@ -118,12 +118,14 @@ def test_run_filter_null_and_und_claims_match_oracle(spark, tmp_path):
     assert got == want
 
 
-def test_task_partials_match_the_spark_sql_sinks(spark, tmp_path):
-    """On a Parquet warehouse the scoring tasks count the metrics and build
-    the clean rows themselves; the Iceberg path gets both from Spark SQL
-    (``collect_metrics`` and ``clean_rows`` over ``score_pages``). The two
-    agree on pages with 'und' and null claims, C4 re-lined text (with a
-    ``c4.page`` drop) and a bucket where every page is dropped."""
+def test_task_partials_match_the_spark_sql_sinks(spark, tmp_path,
+                                                 scored_metric_rows):
+    """The scoring tasks count the metrics and build the clean rows
+    themselves. Their metrics equal per-bucket sums of ``score_pages``
+    rows counted here, and their clean rows the streaming sink's
+    ``clean_rows`` projection, on pages with 'und' and null claims, C4
+    re-lined text (with a ``c4.page`` drop) and a bucket where every page
+    is dropped."""
     from data_quality_autohealer_spark.warehouse import Warehouse, bucket_expr
 
     pdf = synth.gen_pages_pdf(np.arange(800))
@@ -150,7 +152,7 @@ def test_task_partials_match_the_spark_sql_sinks(spark, tmp_path):
                        sorted(r["pii_scrubbed"].items())) for r in rows)
 
     got = metric_keys(wh.read_metrics().collect())
-    assert got == metric_keys(pipeline.collect_metrics(scored, "tasks"))
+    assert got == metric_keys(scored_metric_rows(scored, "tasks"))
     by_bucket = {m[0]: m for m in got}
     assert by_bucket[3][1] > 0 and by_bucket[3][2] == 0
     assert sum(dict(m[4])["c4.page"] for m in got) > 0

@@ -50,15 +50,14 @@ def test_single_udf_node(spark):
     assert plan.count("ArrowEvalPython") <= 2  # 1 tree node + 1 detail entry
 
 
-def test_resume_is_a_partition_filter(spark, tmp_path):
+def test_resume_is_a_partition_filter(spark, tmp_path, scored_metric_rows):
     """Completed buckets leave the resumed plan as a scan partition filter:
     never read, no join, and no lineage on the metrics table."""
-    from data_quality_autohealer_spark.plans.pipeline import collect_metrics
     from data_quality_autohealer_spark.warehouse import Warehouse
     wh = Warehouse(spark, str(tmp_path / "wh"), num_buckets=8)
     wh.write_pages(synth.gen_pages_df(spark, 500, num_partitions=2))
     done = score_pages(wh.read_pages().where(F.col("bucket").isin(2, 5)))
-    wh.append_metrics(collect_metrics(done, "r1"))
+    wh.append_metrics(scored_metric_rows(done, "r1"))
     plan = _plan(wh.resume_filter(wh.read_pages(), "r1"))
     m = re.search(r"PartitionFilters: \[(.*)\]", plan)
     assert m and re.search(r"NOT bucket#\w+ IN \(2,5\)", m.group(1)), plan

@@ -9,7 +9,7 @@ import pytest
 
 from data_quality_autohealer_spark import synth
 from data_quality_autohealer_spark.plans.pipeline import (
-    collect_metrics, run_filter, score_pages, validate_run,
+    run_filter, score_pages, validate_run,
 )
 from data_quality_autohealer_spark.warehouse import Warehouse
 
@@ -39,12 +39,12 @@ def test_full_run_writes_clean_and_metrics(wh, spark):
     assert set(hits) >= {"gopher.word_count", "langid", "perplexity"}
 
 
-def test_resume_skips_completed_buckets(wh, spark):
+def test_resume_skips_completed_buckets(wh, spark, scored_metric_rows):
     # simulate a killed run: checkpoint metrics for buckets 0..3 only
     pages = wh.read_pages()
     part = pages.where(F.col("bucket") < 4)
     scored = score_pages(part)
-    wh.append_metrics(collect_metrics(scored, "run2"))
+    wh.append_metrics(scored_metric_rows(scored, "run2"))
 
     todo = wh.resume_filter(pages, "run2")
     todo_buckets = {r["bucket"] for r in todo.select("bucket").distinct().collect()}
