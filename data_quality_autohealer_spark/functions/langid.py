@@ -5,7 +5,7 @@ Reference analogue: the torch MLP detectors
 small learned classifier applied batch-wise. Rebuilt as a LINEAR model over
 hashed byte n-grams (the fastText recipe), trained closed-form (multinomial
 Naive Bayes ⇒ log-probability weight matrix, no SGD ⇒ fully deterministic),
-applied as pure numpy batch ops inside an Arrow-batched pandas UDF.
+applied as pure numpy batch ops inside the Arrow-batched scoring crossing.
 
 Scoring is vectorized across the WHOLE Arrow batch: all documents' utf-8
 bytes are concatenated once, n-gram hashes computed with numpy rolling

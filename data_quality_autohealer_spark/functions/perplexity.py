@@ -1,5 +1,5 @@
 """KenLM-style word n-gram language model with stupid backoff, for per-doc
-perplexity scoring inside Arrow-batched pandas UDFs.
+perplexity scoring inside the Arrow-batched scoring crossing.
 
 Reference analogue: the distribution-shift MLP detector
 (/root/reference/src/detectors/distribution_shift_detector.py:31-51) — a
@@ -144,7 +144,7 @@ class PerplexityModel:
 _MODEL: PerplexityModel | None = None
 
 # Env override so a drift-retrained artifact (pipeline.drift_retrain saves
-# <warehouse>/models/pplx_<run>.npz) is actually USED by the scoring UDF:
+# <warehouse>/models/pplx_<run>.npz) is actually USED by the scoring tasks:
 # set DQA_PPLX_MODEL on the session / spark-submit --conf
 # spark.executorEnv.DQA_PPLX_MODEL=... and every Python worker loads it
 # instead of training the embedded seed model.

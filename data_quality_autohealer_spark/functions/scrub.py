@@ -1,5 +1,5 @@
-"""PII + toxicity scrubbing — ONE implementation shared by the Spark pandas
-UDF and the pandas oracle, so scrubbed text is byte-identical by construction.
+"""PII + toxicity scrubbing — ONE implementation shared by the Spark scoring
+crossing and the pandas oracle, so scrubbed text is byte-identical by construction.
 
 Reference analogue: the quarantine/winsorize/coerce remediation steps
 (/root/reference/src/remediation/airflow_dags/outlier_remediation.py:89-137,
@@ -7,7 +7,7 @@ type_mismatch.py:79-94) — "fix the bad values, keep the row" — re-expressed 
 regex substitution over document text.
 
 Pattern constraints: every pattern must be valid and semantically identical in
-Python ``re`` (this module / the oracle / the Spark pandas UDF) AND RE2
+Python ``re`` (this module / the oracle / the Spark scoring) AND RE2
 (the DuckDB oracle twins in ``duckdb_scrub_sql``): no lookarounds, no
 backreferences, ASCII word boundaries only.
 """
@@ -90,8 +90,8 @@ def scrub_series(text: pd.Series) -> pd.DataFrame:
     """:func:`scrub_columns` of a batch, aligned to the input index.
 
     Columns ``scrubbed_text, n_email, n_ssn, n_phone, n_ip, n_tox``; a
-    missing text scrubs as ''. The same core runs inside the Spark pandas
-    UDF (through ``scoring.score_batch``) and inside the oracle —
+    missing text scrubs as ''. The same core runs inside the Spark scoring
+    (through ``scoring.score_columns``) and inside the oracle —
     byte-identical output by construction.
     """
     return pd.DataFrame(scrub_columns(text.tolist()), index=text.index)

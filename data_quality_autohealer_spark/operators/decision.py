@@ -5,12 +5,12 @@ Reference analogue: multi-label ensemble with confidence threshold
 and issue→action mapping (src/streaming/kafka_consumer.py:96-105). Here the
 "ensemble" is the union of Gopher heuristic rules
 (``text_heuristics.gopher_rules``) and model rules (langid / perplexity /
-toxicity from the scoring UDF), each emitting a reason code; keep ⇔ no
+toxicity from the scoring kernels), each emitting a reason code; keep ⇔ no
 reason fired.
 
 Each rule is written once over a ``rule_ops`` namespace; :func:`decide_frame`
 evaluates them on numpy columns for every document decision
-(``scoring.score_and_decide``: the scoring UDF and the API check).
+(``scoring.score_and_decide``: the Spark scoring and the API check).
 """
 
 from __future__ import annotations
@@ -46,7 +46,7 @@ SEVERITY_CUTS = ((0.9, "critical"), (0.8, "high"), (0.6, "medium"))
 
 
 def model_rules(o) -> dict:
-    """Reason code -> ``(fired, confidence)`` over scoring-UDF output
+    """Reason code -> ``(fired, confidence)`` over scoring-kernel output
     columns, written once over a ``rule_ops`` namespace (Spark Columns or
     numpy). Confidence ∈ [0,1] (reference ensemble's {issue: score} dict,
     ensemble_classifier.py:91-139): the langid rule reports the model's own

@@ -1,31 +1,31 @@
-"""Model scoring + scrubbing + decision as ONE Arrow-batched pandas UDF.
+"""Model scoring + scrubbing + decision in ONE Arrow crossing per batch.
 
 Reference analogue: the ensemble's detector sweep
 (/root/reference/src/detectors/ensemble_classifier.py:91-139) — run every
 model, collect scores, apply the threshold. The reference did this
 per-profile on the driver; here it runs executor-side, once per Arrow
-record batch, via the Iterator[tuple[Series, Series]] -> Iterator[DataFrame]
-pandas UDF form (text and claimed lang in) so models are deserialized once
-per Python worker, not once per batch (the ``spark-submit
+record batch, in ``mapInArrow`` tasks (:func:`with_batch_columns`, and
+``run_filter``'s through :func:`decide_batch`) so models are deserialized
+once per Python worker, not once per batch (the ``spark-submit
 --py-files``-friendly equivalent of a broadcast variable).
 
 What is batched and what is not: langid and perplexity are numpy passes over
 the whole batch; the Gopher signals tokenize and count in one Python loop
 per document, and the scrub runs one regex screen per document (plus the
 substitution passes on the few that hit). Each kernel returns plain arrays,
-``decision.decide_frame`` decides on them, and one DataFrame is built per
-batch.
+``decision.decide_frame`` decides on them, and one Arrow batch goes back.
 """
 
 from __future__ import annotations
 
+import functools
 import re as _re
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -145,22 +145,36 @@ SCORE_FIELDS = [f.name for f in SCORE_SCHEMA.fields]
 SIGNAL_SCHEMA = StructType(SCORE_SCHEMA.fields[:8])
 
 
-@F.pandas_udf(returnType=SIGNAL_SCHEMA)
-def _signals_only(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    from ..functions.text_heuristics import DEFAULT_THRESHOLDS
-    for text in batches:
-        yield heuristic_signal_batch(text, DEFAULT_THRESHOLDS.stopwords)
+def with_batch_columns(df: DataFrame, fields: StructType, compute,
+                       consumed: str | None = None) -> DataFrame:
+    """Append ``fields`` to the rows of ``df`` in ONE ``mapInArrow``
+    crossing: ``compute(batch)`` maps each field name to its values for one
+    Arrow batch. The other input columns pass through, except ``consumed``.
+    Catalyst never clones a ``mapInArrow`` node under a filter."""
+    rest = [f for f in df.schema.fields
+            if f.name not in fields.fieldNames() and f.name != consumed]
+    return df.mapInArrow(functools.partial(
+        _append_columns, [f.name for f in rest], fields, compute),
+        StructType([*rest, *fields.fields]))
 
 
-# nondeterministic for the same reason as score_udf: stop filter
-# pushdown from cloning the ArrowEvalPython node (guide §4.4)
-signal_udf = _signals_only.asNondeterministic()
+def _append_columns(rest: list[str], fields: StructType, compute, batches):
+    import pyarrow as pa
+
+    schema = to_arrow_schema(fields)
+    for batch in batches:
+        out = compute(batch)  # from_pandas: NaN is null, as in Spark's pandas
+        yield pa.RecordBatch.from_arrays(
+            [*map(batch.column, rest), *(pa.array(
+                out[f.name], f.type, from_pandas=True) for f in schema)],
+            names=[*rest, *schema.names])
+    forget_zip_finders()
 
 
 def with_signal_columns_batched(df: DataFrame,
                                 text_col: str = "text") -> DataFrame:
-    """The 8 Gopher signal columns via ONE Arrow crossing of
-    :func:`heuristic_signal_batch` — value-identical to
+    """The 8 Gopher signal columns of :func:`heuristic_signal_batch`,
+    appended by :func:`with_batch_columns` — value-identical to
     text_heuristics.with_signal_columns (asserted in
     tests/test_signal_twins.py) but ~15× faster at sf1.0 (guide §4.2: the
     native split/higher-order-function expressions run interpreted; the
@@ -169,10 +183,14 @@ def with_signal_columns_batched(df: DataFrame,
     native exprs remain for projection-shaped queries (their cost is pruned
     away) and as the engine-paired oracle twins."""
     from .distill import _spread
-    df = _spread(df)
-    rest = [c for c in df.columns if c not in SIGNAL_SCHEMA.fieldNames()]
-    return (df.select(*rest, signal_udf(F.col(text_col)).alias("_sig"))
-            .select(*rest, "_sig.*"))
+    return with_batch_columns(_spread(df), SIGNAL_SCHEMA,
+                              functools.partial(_signal_columns, text_col))
+
+
+def _signal_columns(text_col: str, batch) -> pd.DataFrame:
+    from ..functions.text_heuristics import DEFAULT_THRESHOLDS
+    return heuristic_signal_batch(batch.column(text_col).to_pandas(),
+                                  DEFAULT_THRESHOLDS.stopwords)
 
 
 def with_quality_signals_batched(df: DataFrame,
@@ -207,7 +225,7 @@ def score_columns(texts: list[str]) -> dict[str, np.ndarray]:
 def score_batch(text: pd.Series) -> pd.DataFrame:
     """:func:`score_columns` of one batch as ONE DataFrame aligned to the
     input index; a missing text scores as ''. The pandas oracle scores
-    through it, and the scoring UDF and the in-process API check through
+    through it, and the Spark scoring and the in-process API check through
     :func:`score_and_decide`, so model outputs are identical by
     construction."""
     return pd.DataFrame(score_columns(text.tolist()), index=text.index)
@@ -223,8 +241,8 @@ DECIDED_SCHEMA = StructType([
 def score_and_decide(texts: list, langs: list, page_keep: list | None = None
                      ) -> tuple[dict[str, np.ndarray], dict]:
     """:func:`score_columns`, then ``decision.decide_frame`` against the
-    claimed ``langs``: the one evaluator of the scoring UDF, of
-    ``run_filter``'s scoring tasks and of the API check.
+    claimed ``langs``: the one evaluator of the Spark scoring crossings
+    (through :func:`decide_batch`) and of the API check.
     A null claim (a Kafka frame without the field) decides as 'und', as
     under Spark's null semantics; only the decision sees that 'und'.
     ``page_keep``: the C4 page flag of each text (``functions/c4.py``); a
@@ -240,49 +258,24 @@ def score_and_decide(texts: list, langs: list, page_keep: list | None = None
     return cols, decided
 
 
-def _decided_frames(batches):
-    # iterator form: get_model() trains/caches once per Python worker process
-    for text, lang, *page_keep in batches:
-        cols, decided = score_and_decide(
-            text.tolist(), lang.tolist(),
-            page_keep[0].tolist() if page_keep else None)
-        yield pd.DataFrame({**cols, "reasons": decided["reasons"],
-                            "keep": decided["keep"]})
-    forget_zip_finders()
+def decide_batch(batch) -> tuple[dict[str, np.ndarray], dict]:
+    """:func:`score_and_decide` of one Arrow batch of pages: its ``text``,
+    claimed ``lang`` and C4 page flag ``_c4_keep`` (if the batch has it)."""
+    flags = (batch.column("_c4_keep").to_pylist()
+             if "_c4_keep" in batch.schema.names else None)
+    return score_and_decide(batch.column("text").to_pylist(),
+                            batch.column("lang").to_pylist(), flags)
 
 
-@F.pandas_udf(returnType=DECIDED_SCHEMA)
-def _score_and_decide(batches: Iterator[tuple[pd.Series, pd.Series]]
-                      ) -> Iterator[pd.DataFrame]:
-    yield from _decided_frames(batches)
+def _decided_columns(batch) -> dict:
+    cols, decided = decide_batch(batch)
+    return {**cols, **decided}  # its confidences and codes go unread
 
 
-@F.pandas_udf(returnType=DECIDED_SCHEMA)
-def _score_and_decide_c4(
-        batches: Iterator[tuple[pd.Series, pd.Series, pd.Series]]
-) -> Iterator[pd.DataFrame]:
-    yield from _decided_frames(batches)
-
-
-# The UDFs are pure, but we mark them non-deterministic so Catalyst neither
-# duplicates one when a downstream filter references its output (filter
-# pushdown was observed to clone the ArrowEvalPython node — scoring every
-# document TWICE) nor pushes predicates through it.
-score_udf = _score_and_decide.asNondeterministic()
-score_udf_c4 = _score_and_decide_c4.asNondeterministic()
-
-
-def with_model_scores(df: DataFrame, page_keep: str | None = None
-                      ) -> DataFrame:
+def with_model_scores(df: DataFrame) -> DataFrame:
     """Attach the flattened kernel columns plus ``reasons`` (sorted codes)
-    and ``keep`` via a single UDF crossing over ``text`` and the claimed
-    ``lang`` (and the C4 page flag column ``page_keep``, consumed)."""
-    args = ["text", "lang"]
-    udf = score_udf
-    if page_keep:
-        args.append(page_keep)
-        udf = score_udf_c4
-    rest = [c for c in df.columns
-            if c not in DECIDED_SCHEMA.fieldNames() and c != page_keep]
-    return (df.select(*rest, udf(*[F.col(c) for c in args]).alias("_score"))
-            .select(*rest, "_score.*"))
+    and ``keep`` (:func:`decide_batch`, through :func:`with_batch_columns`)
+    from ``text``, the claimed ``lang`` and, when ``df`` has it, the C4 page
+    flag column ``_c4_keep`` (consumed)."""
+    return with_batch_columns(df, DECIDED_SCHEMA, _decided_columns,
+                              consumed="_c4_keep")

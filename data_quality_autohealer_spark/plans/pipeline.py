@@ -50,28 +50,27 @@ SCORED_COLUMNS = [
 
 def score_pages(pages: DataFrame, c4: bool = False) -> DataFrame:
     """DataFrame → DataFrame scorer (pure function; identical code path for
-    batch and Structured Streaming): the one scoring UDF returns the kernel
-    columns, ``reasons`` and ``keep`` (``scoring.with_model_scores``).
+    batch and Structured Streaming): the one scoring crossing appends the
+    kernel columns, ``reasons`` and ``keep`` (``scoring.with_model_scores``).
 
     Deliberately selects only the needed columns first so Parquet/Iceberg
-    column pruning drops ``html`` at the scan.
+    column pruning drops ``html`` at the scan: every column below the
+    ``mapInArrow`` node crosses.
     ``c4``: apply the C4 line rules (functions/c4.py) BEFORE scoring —
     signals and scrubbing run over the line-cleaned text — and hand the
-    page flag to the scoring UDF, which merges it into the decision as
+    page flag to the scoring, which merges it into the decision as
     reason code ``c4.page``. The plan gains zero exchanges and no state
     store.
     """
     if c4:
         pages = c4_pre_clean(pages)
-    carried = ["_c4_keep"] if c4 else []
     have = set(pages.columns)
-    cols = [c for c in [*SCORING_INPUT, *carried] if c in have]
-    # ALL per-doc text signals and the decision ride in the one scoring UDF
+    # ALL per-doc text signals and the decision ride in the one scoring
     # crossing (tokens split once per doc in batched Python — ~50× cheaper
     # than Spark's interpreted higher-order functions; native-expr twins
     # are asserted equal in tests and used for SQL-oracle-checked queries)
-    df = scoring.with_model_scores(pages.select(*cols),
-                                   page_keep="_c4_keep" if c4 else None)
+    df = scoring.with_model_scores(
+        pages.select(*[c for c in [*SCORING_INPUT, "_c4_keep"] if c in have]))
     have = set(df.columns)
     return df.select("text", *[c for c in SCORED_COLUMNS if c in have])
 
@@ -79,7 +78,7 @@ def score_pages(pages: DataFrame, c4: bool = False) -> DataFrame:
 def c4_pre_clean(pages: DataFrame) -> DataFrame:
     """Projection-only C4 stage (functions/c4.py): rewrite ``text`` to the
     line-cleaned form and carry the page flag as ``_c4_keep`` for the
-    scoring (``scoring.score_and_decide(page_keep=)``)."""
+    scoring (``scoring.decide_batch``)."""
     from ..functions import c4 as c4f
 
     return (c4f.with_c4(pages, "text")
@@ -181,19 +180,15 @@ def _score_and_stage(staging: str, batches):
 def _stage_batch(batch, writer: StagedBucketWriter,
                  counts: dict[int, dict]) -> None:
     """Score and decide one Arrow batch of pages
-    (``scoring.score_and_decide``), write its kept rows as clean rows with
+    (``scoring.decide_batch``), write its kept rows as clean rows with
     ``writer``, and add its per-bucket counts to ``counts``."""
     import pyarrow as pa
 
-    langs = batch.column("lang").to_pylist()
-    page_keep = (batch.column("_c4_keep").to_pylist()
-                 if "_c4_keep" in batch.schema.names else None)
-    cols, decided = scoring.score_and_decide(
-        batch.column("text").to_pylist(), langs, page_keep)
+    cols, decided = scoring.decide_batch(batch)
     reasons = decided["reasons"]
     kept = np.flatnonzero(decided["keep"])
-    lang = clean_lang(PandasOps({"lang": np.array(langs, dtype=object),
-                                 "lang_pred": cols["lang_pred"]}))
+    lang = clean_lang(PandasOps({"lang": batch.column("lang").to_numpy(
+        zero_copy_only=False), "lang_pred": cols["lang_pred"]}))
     buckets = batch.column("bucket").to_numpy()
     writer.write_runs(buckets[kept], pa.table({
         "url": batch.column("url").take(kept).cast(pa.string()),
@@ -354,6 +349,8 @@ def run_filter_in_waves(
     before the append rescored everything). At 10^12 docs an orchestrator
     issues waves anyway; this makes one driver invocation do it.
     """
+    if wave_buckets < 1:
+        raise ValueError(f"wave_buckets must be >= 1, got {wave_buckets}")
     done = set(wh.completed_buckets(run_id))
     todo = sorted(set(wh.page_buckets(pages_table)) - done)
     total = {"run_id": run_id, "docs_in": 0, "docs_kept": 0, "alerts": 0,

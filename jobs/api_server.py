@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import argparse
 import io
+import math
 import os
 import sys
 import threading
@@ -125,8 +126,14 @@ def create_app(spark=None):
         wh_path = request.args.get("warehouse")
         if not wh_path:
             return jsonify({"error": "warehouse query param required"}), 400
-        poll_sec = float(request.args.get("poll_sec", 1.0))
-        max_ticks = int(request.args.get("max_ticks", 0))  # 0 = forever
+        try:  # before the session starts; sleep() raises on NaN, inf, < 0
+            poll_sec = float(request.args.get("poll_sec", 1.0))
+            max_ticks = int(request.args.get("max_ticks", 0))  # 0 = forever
+        except ValueError:
+            poll_sec = max_ticks = -1
+        if not (0 <= poll_sec < math.inf and max_ticks >= 0):
+            return jsonify({"error": "poll_sec must be a finite number >= 0 "
+                                     "and max_ticks an integer >= 0"}), 400
         wh = Warehouse(get_session(), wh_path)
 
         def gen():

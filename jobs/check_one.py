@@ -45,12 +45,12 @@ def check_documents(texts: list[str], langs: list[str] | None = None,
     """Score ad-hoc documents in this process and return the
     reference-shaped response plus per-document decisions.
 
-    The scoring UDF's evaluator (``scoring.score_and_decide``:
+    The Spark scoring's evaluator (``scoring.score_and_decide``:
     ``score_columns`` then ``decision.decide_frame``) runs on chunks of one
-    Arrow batch (``session.ARROW_BATCH_ROWS`` rows, as the Spark UDF sees
-    them) — so the reply matches ``score_pages`` with no Spark job and no
-    pandas frame. The perplexity model is this process's: a
-    drift-retrained artifact reaches the API only through its own
+    Arrow batch (``session.ARROW_BATCH_ROWS`` rows, as ``decide_batch`` sees
+    them in the ``mapInArrow`` tasks) — so the reply matches ``score_pages``
+    with no Spark job and no pandas frame. The perplexity model is this
+    process's: a drift-retrained artifact reaches the API only through its own
     ``DQA_PPLX_MODEL`` environment variable, not through
     ``spark.executorEnv``, which configures the batch pipeline's Python
     workers.

@@ -47,6 +47,8 @@ def main() -> None:
                         "the page flag into the decision (reason c4.page)")
     p.add_argument("--master", default=None)
     args = p.parse_args()
+    if args.wave_buckets < 0:
+        p.error("--wave-buckets must be >= 0 (0: no waves)")
 
     from data_quality_autohealer_spark import synth
     from data_quality_autohealer_spark.plans.pipeline import (

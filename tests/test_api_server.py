@@ -207,3 +207,24 @@ def test_check_needs_no_spark_session(monkeypatch, spark):
         r = c.get("/alerts", query_string={"warehouse": "/nonexistent/wh"})
         assert r.status_code == 200
     assert calls == [1]
+
+
+def test_alerts_stream_rejects_bad_poll_params(monkeypatch):
+    """/alerts/stream answers 400 for a poll_sec that is not a finite
+    number >= 0 or a max_ticks that is not an integer >= 0, before any
+    SparkSession starts (a NaN, infinite or negative poll_sec used to cut
+    the stream after the first tick, and a non-number answered 500)."""
+    from data_quality_autohealer_spark import session
+    from jobs.api_server import create_app
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    c = create_app(None).test_client()
+    for bad in ({"poll_sec": "abc"}, {"poll_sec": "-1"}, {"poll_sec": "nan"},
+                {"poll_sec": "inf"}, {"max_ticks": "x"},
+                {"max_ticks": "1.5"}, {"max_ticks": "-2"}):
+        r = c.get("/alerts/stream", query_string={"warehouse": "/wh", **bad})
+        assert r.status_code == 400, bad
+        assert "error" in r.get_json()

@@ -43,11 +43,13 @@ def test_filter_pushdown_reaches_scan(spark, tmp_path):
 
 
 def test_single_udf_node(spark):
-    """The scoring UDF must appear exactly once even under a keep-filter
-    (regression: filter pushdown used to clone the ArrowEvalPython node)."""
+    """The scoring crossing must appear exactly once even under a
+    keep-filter (regression: filter pushdown used to clone the
+    ArrowEvalPython node of the scoring UDF that preceded it)."""
     pages = synth.gen_pages_df(spark, 50, num_partitions=1)
     plan = _plan(score_pages(pages).where("keep"))
-    assert plan.count("ArrowEvalPython") <= 2  # 1 tree node + 1 detail entry
+    assert plan.count("MapInArrow") == 2, plan  # 1 tree node + 1 detail
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_resume_is_a_partition_filter(spark, tmp_path, scored_metric_rows):
@@ -126,9 +128,10 @@ def test_plans_md_regenerates_with_claimed_shapes(spark, tmp_path):
         name = chunk.split("\n", 1)[0].strip()
         sections[name] = chunk.split("```")[1]  # the fenced plan only
     assert set(sections) == {n for n, _ in dump_plans.SHOWCASE}
-    # single UDF crossing, which also decides: no rule rendered in a Project
+    # single crossing, which also decides: no rule rendered in a Project
     sf = sections["synth_filter"]
-    assert sf.count("ArrowEvalPython (") == 1  # one tree node
+    assert sf.count("MapInArrow (") == 1  # one tree node
+    assert "ArrowEvalPython" not in sf
     assert "map_from_arrays" not in sf and "CASE WHEN (word_count" not in sf
     # as-of: no join node anywhere in the plan
     assert "Join" not in sections["asof_join_events"]

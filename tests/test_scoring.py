@@ -1,6 +1,6 @@
-"""The frame contract of ``operators.scoring.score_batch``: the Arrow UDF
-(``SCORE_SCHEMA``), ``with_model_scores`` and the oracle rely on its column
-order, its dtypes and its index."""
+"""The frame contract of ``operators.scoring.score_batch``: the scoring
+crossing (``SCORE_SCHEMA``), ``with_model_scores`` and the oracle rely on
+its column order, its dtypes and its index."""
 
 import numpy as np
 import pandas as pd

@@ -207,6 +207,33 @@ def test_run_filter_in_waves(wh, spark):
     assert again["docs_in"] == 0 and again["buckets_skipped"] == BUCKETS
 
 
+def test_waves_below_one_bucket_are_refused(monkeypatch, tmp_path):
+    """A negative --wave-buckets is a parser error, before any session
+    starts; run_filter_in_waves refuses a wave below one bucket (a
+    negative one used to run no wave and report docs_in 0)."""
+    import sys
+
+    from data_quality_autohealer_spark import session
+    from data_quality_autohealer_spark.plans.pipeline import (
+        run_filter_in_waves,
+    )
+    from jobs import run_filter as cli
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "argv", [
+        "run_filter.py", "--warehouse", str(tmp_path / "wh"),
+        "--run-id", "r1", "--wave-buckets", "-1"])
+    with pytest.raises(SystemExit) as exit_:
+        cli.main()
+    assert exit_.value.code == 2
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="wave_buckets"):
+            run_filter_in_waves(None, "r1", wave_buckets=n)
+
+
 def test_wave_buckets_are_listed_without_a_spark_job(wh, spark):
     """The buckets run_filter_in_waves walks are the pages table's
     partition directories, listed on the driver: the Spark query it ran

@@ -3,7 +3,8 @@
 PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
 every task; under CPython 3.11/3.12 each cached ``zipimporter`` then
 re-reads its archive's directory. ``session.forget_zip_finders`` runs after
-the scoring and signature UDFs' last batch so the next task has none."""
+the last batch of the scoring crossing (``scoring.with_batch_columns``) and
+of the signature UDF, so the next task has none."""
 
 import os
 import subprocess
@@ -45,7 +46,8 @@ def test_forget_zip_finders_keeps_the_archive_importable(tmp_path):
 
 
 # One slot is one reused Python worker: the finder count the second job's
-# UDF sees is what the scoring task left behind (16 without the helper).
+# UDF sees is what the scoring task (score_pages: the one mapInArrow node of
+# scoring.with_batch_columns) left behind (16 without forget_zip_finders).
 _PROBE = textwrap.dedent("""
     import numpy as np
     from pyspark.sql import functions as F
@@ -55,7 +57,10 @@ _PROBE = textwrap.dedent("""
 
     spark = get_spark(master="local[1]", shuffle_partitions=1)
     pages = spark.createDataFrame(synth.gen_pages_pdf(np.arange(20)))
-    assert len(score_pages(pages).collect()) == 20
+    scored = score_pages(pages)
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "ArrowEvalPython" not in plan, plan
+    assert len(scored.collect()) == 20
 
     @F.pandas_udf("long")
     def zip_finders(ids):

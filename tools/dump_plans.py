@@ -18,10 +18,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # (query, what the plan proves)
 SHOWCASE = [
-    ("synth_filter", "one ArrowEvalPython node (the single UDF crossing, "
-     "over text and the claimed lang) that also returns the decision: "
-     "reasons and keep come out of the UDF, and no Project renders a "
-     "rule; html pruned from ReadSchema, zero Exchange"),
+    ("synth_filter", "one MapInArrow node (the single scoring crossing) "
+     "under the keep filter, never cloned, and no ArrowEvalPython: reasons "
+     "and keep come out of the crossing, and no Project renders a rule; "
+     "html projected away below it, zero Exchange"),
     ("quality_drop_summary", "conditional-sum aggregation: partial_ "
      "aggregates before the single-row exchange (map-side combine), no "
      "Generate/explode"),
@@ -99,8 +99,8 @@ def main(sf_dir: str | None = None, out_path: str = DEFAULT_OUT) -> str:
             from data_quality_autohealer_spark.plans.pipeline import (
                 score_pages,
             )
-            df = score_pages(synth.gen_pages_df(spark, 100,
-                                                num_partitions=1))
+            df = score_pages(synth.gen_pages_df(
+                spark, 100, num_partitions=1)).where("keep")
         else:
             df = qs[name](spark, sf_dir)
         buf = io.StringIO()
